@@ -8,6 +8,12 @@ is cached once and fanned out to the 6 sinks; the only shuffle in either
 pipeline is the reviews groupBy. Every step is a column expression — zero
 UDFs (SURVEY.md §2.9).
 
+Both DAGs use every core. Each CSV is parsed by Spark's multiLine parser
+over record-aligned chunks (sources/csv.read_multiline_csv), about one
+task per core instead of one task per file. After the first listings
+sink has materialized the cached frame, the other 5 publish concurrently,
+so their small write jobs share the executors instead of queueing.
+
 Deliberate divergences from the reference (SURVEY.md §1.2, recorded here
 once, encoded identically in the oracle SQL):
 - money is parsed ONCE to decimal(12,2) (`regexp_replace('[$,]','')`);
@@ -25,12 +31,16 @@ once, encoded identically in the oracle SQL):
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..checkpoint import hand_over, release
 from ..operators.merge import merge_array_accum, upsert_snapshot
 from ..sources.atomic import publish_parquet, read_published
+from ..sources.csv import read_multiline_csv
 from .schemas import (
     DOC_TEXT_COLUMNS,
     LISTINGS_RAW_SCHEMA,
@@ -57,51 +67,13 @@ def read_listings_csv(spark: SparkSession, path: str) -> DataFrame:
     (`escape='"'` — Spark's default backslash escape mis-parses
     `"{TV,""Cable TV""}"`), and t/f booleans (cast handles them).
 
-    Scale note: multiLine disables intra-file split, so one task parses
-    one file; the dump ships as many per-city files, which is where this
-    reader's parallelism comes from. For a single giant file use
-    :func:`read_listings_csv_splittable` — the re-chunk pre-pass that
-    makes the caveat a handled case.
+    Scale note: multiLine disables Spark's intra-file split, so the scan
+    reads record-aligned chunks that sources/csv.read_multiline_csv cuts
+    on the driver — about ``defaultParallelism`` tasks even for one file.
+    ``checkpoint.release`` of the returned frame deletes the chunks.
     """
-    raw = (
-        spark.read.option("header", True)
-        .option("multiLine", True)
-        .option("escape", '"')
-        .csv(path)
-    )
-    return _select_listings(raw)
-
-
-def _select_listings(raw: DataFrame) -> DataFrame:
-    missing = [f.name for f in LISTINGS_RAW_SCHEMA.fields if f.name not in raw.columns]
-    if missing:
-        raise ValueError(f"listings CSV lacks selected columns: {missing}")
-    return raw.select(
-        *[
-            F.col(f.name).try_cast(f.dataType).alias(f.name)
-            for f in LISTINGS_RAW_SCHEMA.fields
-        ]
-    )
-
-
-def read_listings_csv_splittable(
-    spark: SparkSession,
-    path: str,
-    stage_key: str = "listings_raw",
-    refresh: bool = True,
-) -> DataFrame:
-    """Scale variant of :func:`read_listings_csv`: one multiLine parse
-    lands the raw file as n-way parquet under the staging root
-    (sources/csv_rechunk.py), and the 61-column name-select + try_cast
-    runs over the splittable staged copy — a 1 TB single-file dump stops
-    being a one-core job after the one unavoidable parse pass.
-    ``refresh=False`` reuses the staged landing across runs."""
-    from ..sources.csv_rechunk import rechunk_multiline_csv
-
-    raw = rechunk_multiline_csv(
-        spark, path, stage_key=stage_key, refresh=refresh
-    )
-    return _select_listings(raw)
+    raw = read_multiline_csv(spark, path)
+    return hand_over(raw, _select_by_name(raw, LISTINGS_RAW_SCHEMA, "listings"))
 
 
 def read_reviews_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -111,23 +83,18 @@ def read_reviews_csv(spark: SparkSession, path: str) -> DataFrame:
     review `id` column the pipeline never uses, and comments contain
     quoted embedded newlines — positional schema application would
     misalign on the extra column, so select the 5 used columns by header
-    name and cast after.
+    name and cast after. Chunked and released like the listings scan.
     """
-    raw = (
-        spark.read.option("header", True)
-        .option("multiLine", True)
-        .option("escape", '"')
-        .option("encoding", "ISO-8859-1")
-        .csv(path)
-    )
-    missing = [f.name for f in REVIEWS_RAW_SCHEMA.fields if f.name not in raw.columns]
+    raw = read_multiline_csv(spark, path, encoding="ISO-8859-1")
+    return hand_over(raw, _select_by_name(raw, REVIEWS_RAW_SCHEMA, "reviews"))
+
+
+def _select_by_name(raw: DataFrame, schema, what: str) -> DataFrame:
+    missing = [f.name for f in schema.fields if f.name not in raw.columns]
     if missing:
-        raise ValueError(f"reviews CSV lacks selected columns: {missing}")
+        raise ValueError(f"{what} CSV lacks selected columns: {missing}")
     return raw.select(
-        *[
-            F.col(f.name).try_cast(f.dataType).alias(f.name)
-            for f in REVIEWS_RAW_SCHEMA.fields
-        ]
+        *[F.col(f.name).try_cast(f.dataType).alias(f.name) for f in schema.fields]
     )
 
 
@@ -257,23 +224,44 @@ def run_listings_etl(
     spark: SparkSession, csv_path: str, out_dir: str
 ) -> dict[str, DataFrame]:
     """The whole listings DAG as one job: read -> clean -> cache -> fan out
-    to 5 relational parquet tables + 1 document table. Daily-re-run
-    semantics = snapshot overwrite (exact parity with the reference's
-    replace-style upsert under full reloads).
+    to 5 relational parquet tables + 1 document table; returns each sink
+    as published. Daily-re-run semantics = snapshot overwrite (exact
+    parity with the reference's replace-style upsert under full reloads).
 
-    Each sink is an atomic publish: a crash mid-fan-out (the reference's
-    `retries=1` scenario, Airbnb_Listings_ETL.py:219-220) leaves every
-    already-published sink complete and every untouched sink at its
-    previous version — the retry re-runs the whole job and converges
+    The first sink's publish materializes the cached frame; the other 5
+    then publish concurrently, one thread each, and the call waits for
+    all of them before it raises the first error, so no publish is still
+    writing when it returns. The cache and the CSV chunks are freed
+    either way.
+
+    Each sink is an atomic publish with its own staging dir and commit
+    lock: a crash mid-fan-out (the reference's `retries=1` scenario,
+    Airbnb_Listings_ETL.py:219-220) leaves every sink either at its
+    previous version or at the new complete one — the retry re-runs the
+    whole job and converges
     (tests/test_airbnb_pipeline.py::test_listings_etl_retry_converges)."""
-    clean = clean_listings(read_listings_csv(spark, csv_path)).cache()
-    tables = split_tables(clean)
-    for name, t in tables.items():
-        publish_parquet(t, f"{out_dir}/{name}")
-    docs = build_listing_docs(clean)
-    publish_parquet(docs, f"{out_dir}/listings_docs")
-    tables["listings_docs"] = docs
-    return tables
+    raw = read_listings_csv(spark, csv_path)
+    clean = clean_listings(raw).cache()
+    sinks = {**split_tables(clean), "listings_docs": build_listing_docs(clean)}
+    (first, first_df), *rest = sinks.items()
+    try:
+        published = {first: _publish(spark, first_df, f"{out_dir}/{first}")}
+        with ThreadPoolExecutor(max_workers=len(rest)) as pool:
+            futures = {
+                n: pool.submit(_publish, spark, df, f"{out_dir}/{n}") for n, df in rest
+            }
+        # the pool's exit waited for every publish; result() raises the first error
+        published.update((n, f.result()) for n, f in futures.items())
+    finally:
+        clean.unpersist(blocking=True)
+        release(raw)
+    return published
+
+
+def _publish(spark: SparkSession, df: DataFrame, target: str) -> DataFrame:
+    """Publish ``df`` and return a frame over the version just written.
+    Its schema is known, so the read starts no footer-inference job."""
+    return spark.read.schema(df.schema).parquet(publish_parquet(df, target))
 
 
 def run_reviews_etl(
@@ -286,14 +274,18 @@ def run_reviews_etl(
     (sources/atomic.py) — a crash anywhere mid-run leaves the previous
     version published and readable. ``read_published`` returns None only
     for a never-published target; real read errors propagate instead of
-    being mistaken for a first run.
+    being mistaken for a first run. The CSV chunks are freed after the
+    publish.
     """
-    arrays = reviews_to_arrays(clean_reviews(read_reviews_csv(spark, csv_path)))
+    raw = read_reviews_csv(spark, csv_path)
+    arrays = reviews_to_arrays(clean_reviews(raw))
     target = f"{out_dir}/doc_reviews"
     base = read_published(spark, target)
     merged = arrays if base is None else merge_reviews_into_docs(base, arrays)
-    publish_parquet(merged, target)
-    return read_published(spark, target)
+    try:
+        return _publish(spark, merged, target)
+    finally:
+        release(raw)
 
 
 def upsert_table(base: DataFrame, updates: DataFrame) -> DataFrame:

@@ -278,6 +278,17 @@ def release(df: DataFrame) -> None:
                 return
 
 
+def hand_over(source: DataFrame, df: DataFrame) -> DataFrame:
+    """Move the storage tracked for ``source`` onto ``df``, a frame
+    derived from it, so that ``release(df)`` frees it; returns ``df``.
+    For readers that track their input files and return a projection."""
+    for pins in _PINS.values():
+        for i, (ref, releaser) in enumerate(pins):
+            if ref() is source:
+                pins[i] = (weakref.ref(df), releaser)
+    return df
+
+
 def release_pins(spark: SparkSession) -> int:
     """Free every pin tracked for this session; returns how many were
     released. Harness hook: call between queries once results are

@@ -158,9 +158,11 @@ def _source_splits(path: str, need: int) -> tuple[int, int]:
     or an unreadable footer must make ``fan_out`` a NO-OP — the old
     non-recursive listing returned (0, 0) for a partitioned directory,
     which fell through to ``repartition(1)`` and funneled the corpus
-    into one partition, the exact opposite of fan_out's purpose."""
+    into one partition, the exact opposite of fan_out's purpose. Only
+    successful probes are cached: a path that is not yet written (or
+    was briefly unreadable) is probed again on the next call."""
     cached = _SPLIT_CACHE.get(path)
-    if cached is not None and (cached[0] >= need or cached[0] < 0):
+    if cached is not None and cached[0] >= need:
         return cached
     try:
         import pyarrow.parquet as pq
@@ -178,7 +180,7 @@ def _source_splits(path: str, need: int) -> tuple[int, int]:
             if groups >= need:
                 break
     except Exception:  # noqa: BLE001 — unknown source => fan_out no-op
-        groups = rows = -1
+        return -1, -1
     _SPLIT_CACHE[path] = (groups, rows)
     return groups, rows
 

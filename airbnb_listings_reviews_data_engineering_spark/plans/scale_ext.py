@@ -194,17 +194,17 @@ FROM documents WHERE doc_id < 400
 
 @register("src_csv_multiline_split", oracle=_CSV_MULTILINE_SPLIT_SQL)
 def src_csv_multiline_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Splittable multiLine-CSV ingest via the re-chunk pre-pass
-    (sources/csv_rechunk.py — VERDICT r2 #5). The fixture turns every
+    """Splittable multiLine-CSV ingest via the record-aligned chunk reader
+    (sources/csv.read_multiline_csv). The fixture turns every
     document's spaces into embedded newlines, so every quoted field is
-    multi-line and the single-task multiLine parse is genuinely
-    exercised; the re-chunk lands it as n-way parquet, which is what
-    every downstream read scans — splittable even when the source was
-    ONE file. The single-task caveat of airbnb/etl.read_listings_csv is
-    thereby the handled case, not a docstring warning."""
+    multi-line and quote parity, not line count, must find the record
+    boundaries; the input is ONE Spark-written file (with its
+    ``_SUCCESS`` and ``.crc`` side files), which the reader cuts into
+    about ``defaultParallelism`` chunks that Spark's own multiLine
+    parser reads one task each."""
     from pyspark.sql import types as T
 
-    from ..sources.csv_rechunk import rechunk_multiline_csv
+    from ..sources.csv import read_multiline_csv
 
     tag = _sf_tag(sf_dir)
     staged_csv = os.path.join(staging_root(spark), f"docs_mlcsv_{tag}")
@@ -217,7 +217,7 @@ def src_csv_multiline_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
         )
     )
-    # ONE csv file -> the unsplittable worst case the re-chunk exists for
+    # ONE csv file -> the unsplittable worst case the chunk reader exists for
     docs.coalesce(1).write.mode("overwrite").option("header", True).option(
         "quote", '"'
     ).option("escape", '"').csv(staged_csv)
@@ -228,9 +228,9 @@ def src_csv_multiline_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("lang", T.StringType()),
         ]
     )
-    return rechunk_multiline_csv(
-        spark, staged_csv, schema, stage_key=f"docs_mlcsv_{tag}", partitions=8
-    ).select("doc_id", "text_nl", "lang")
+    return read_multiline_csv(spark, staged_csv, schema).select(
+        "doc_id", "text_nl", "lang"
+    )
 
 
 _THETA_ONLY_SQL = """

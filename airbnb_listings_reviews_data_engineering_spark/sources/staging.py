@@ -1,9 +1,10 @@
 """Configurable staging root for intermediate/exchange artifacts.
 
-CSV sinks, XCom-style transfer staging, splittable-CSV re-chunking and
-parquet-mode checkpoint pins all write intermediates somewhere. Locally
-that is the system tempdir; on a cluster every executor must see the
-same path, so the root has to be a dist-FS location (HDFS/S3/NFS).
+CSV sinks, XCom-style transfer staging, the record-aligned chunks of
+multiLine CSV reads (sources/csv.py) and parquet-mode checkpoint pins
+all write intermediates somewhere. Locally that is the system tempdir;
+on a cluster every executor must see the same path, so the root has to
+be a dist-FS location (HDFS/S3/NFS).
 
 Root selection (first match wins):
   1. Spark conf ``spark.airbnb.staging.root``

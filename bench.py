@@ -57,11 +57,11 @@ R3_ADDITIONS = [
 ]
 
 # round-4 breadth (VERDICT r3 #7): incremental dedup, the epoch-shuffle
-# decomposition, and the splittable multiLine-CSV re-chunk path
+# decomposition, and the splittable multiLine-CSV read path
 R4_ADDITIONS = [
     "dedup_incremental",  # batch-vs-corpus band join (daily-ingest shape)
     "shuffle_deterministic",  # range shuffle + local enumerate + prefix sums
-    "src_csv_multiline_split",  # quote-aware re-chunked multiLine CSV scan
+    "src_csv_multiline_split",  # quote-parity-chunked multiLine CSV scan
     "text_bpe_train",     # 6-round distributed BPE merge training
     "graph_pagerank",     # 3-round PageRank over the nation trade graph
     "funnel_stages",      # one-shuffle conversion funnel

@@ -232,11 +232,20 @@ def test_q6_day_count_defaults_to_one_without_digits(spark, clean):
     assert out[201] == 12
 
 
+def _cached_blocks(spark) -> int:
+    return sum(
+        i.numCachedPartitions()
+        for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    )
+
+
 def test_listings_etl_end_to_end(spark, raw_listings, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("airbnb_out"))
     csv_dir = str(tmp_path_factory.mktemp("airbnb_csv"))
     raw_listings.write.mode("overwrite").option("header", True).csv(csv_dir)
+    blocks = _cached_blocks(spark)
     tables = etl.run_listings_etl(spark, csv_dir, out)
+    assert _cached_blocks(spark) == blocks  # the cached clean frame is freed
     assert set(tables) == set(TABLE_SCHEMA) | {"listings_docs"}
     reloaded = spark.read.parquet(f"{out}/hotel_location")
     assert reloaded.count() == 9
@@ -249,38 +258,73 @@ def test_listings_etl_retry_converges(
     spark, raw_listings, tmp_path_factory, monkeypatch
 ):
     """inc_retry at the pipeline level (SURVEY §2.8; reference
-    Airbnb_Listings_ETL.py:219-220): the fan-out crashes after publishing
-    3 of 6 sinks; the Airflow-style retry re-runs the WHOLE job; every
-    sink must equal a clean single run."""
+    Airbnb_Listings_ETL.py:219-220): one publish of the concurrent
+    fan-out crashes. The call raises only after every other publish has
+    finished, leaves no staging dir behind, and leaves each sink at its
+    previous version or at the new complete one; the Airflow-style
+    retry re-runs the WHOLE job and every sink equals a clean single
+    run."""
+    import glob
+    import threading
+
+    from airbnb_listings_reviews_data_engineering_spark.sources.atomic import (
+        current_version,
+    )
+
+    sinks = [*TABLE_SCHEMA, "listings_docs"]
     csv_dir = str(tmp_path_factory.mktemp("retry_csv"))
     raw_listings.write.mode("overwrite").option("header", True).csv(csv_dir)
+    old_csv = str(tmp_path_factory.mktemp("retry_old_csv"))
+    raw_listings.filter(F.col("id") <= 3).write.mode("overwrite").option(
+        "header", True
+    ).csv(old_csv)
 
     ref_out = str(tmp_path_factory.mktemp("retry_ref"))
     etl.run_listings_etl(spark, csv_dir, ref_out)
 
+    def rows(path):
+        return sorted(map(str, spark.read.parquet(path).collect()))
+
     out = str(tmp_path_factory.mktemp("retry_out"))
+    etl.run_listings_etl(spark, old_csv, out)  # the previous day's snapshot
+    previous = {n: (current_version(f"{out}/{n}"), rows(f"{out}/{n}")) for n in sinks}
+
     real_publish = etl.publish_parquet
-    calls = {"n": 0}
+    lock = threading.Lock()
+    calls, finished = [], []
 
     def flaky_publish(df, target):
-        calls["n"] += 1
-        if calls["n"] == 4:
+        with lock:
+            calls.append(target)
+            n = len(calls)
+        if n == 4:
             raise RuntimeError("simulated executor loss mid-fan-out")
-        return real_publish(df, target)
+        version = real_publish(df, target)
+        with lock:
+            finished.append(target)
+        return version
 
     monkeypatch.setattr(etl, "publish_parquet", flaky_publish)
     with pytest.raises(RuntimeError, match="simulated"):
         etl.run_listings_etl(spark, csv_dir, out)
+    assert len(calls) == len(sinks)
+    assert sorted(finished) == sorted(calls[:3] + calls[4:])  # all the others
     monkeypatch.setattr(etl, "publish_parquet", real_publish)
+
+    for name in sinks:
+        path = f"{out}/{name}"
+        assert not glob.glob(f"{out}/.{name}_versions/.tmp-*"), name
+        version, old_rows = previous[name]
+        if path == calls[3]:  # the crashed sink keeps its previous version
+            assert current_version(path) == version and rows(path) == old_rows
+        else:  # every other sink holds the new complete version
+            assert current_version(path) != version, name
+            assert rows(path) == rows(f"{ref_out}/{name}"), name
 
     etl.run_listings_etl(spark, csv_dir, out)  # the retry
 
-    for name in [*TABLE_SCHEMA, "listings_docs"]:
-        got = spark.read.parquet(f"{out}/{name}")
-        want = spark.read.parquet(f"{ref_out}/{name}")
-        assert sorted(map(str, got.collect())) == sorted(
-            map(str, want.collect())
-        ), name
+    for name in sinks:
+        assert rows(f"{out}/{name}") == rows(f"{ref_out}/{name}"), name
 
 
 def test_reviews_etl_incremental(spark, tmp_path_factory):

@@ -311,3 +311,20 @@ def test_dynamic_partition_pruning_injected(spark, sf_dir):
     # on the fact scan's partition filters (the 100 TB star-join lever)
     plan = _plan(spark, sf_dir, "join_dynamic_partition_pruning")
     assert "dynamicpruning" in plan.lower(), plan[:2000]
+
+
+def test_source_splits_probes_again_after_a_failed_probe(tmp_path):
+    """A failed footer probe (path not written yet) is not cached: once
+    the path is readable, the next probe sees its row groups."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from airbnb_listings_reviews_data_engineering_spark.plans.registry import (
+        _source_splits,
+    )
+
+    p = tmp_path / "late"
+    assert _source_splits(str(p), 4) == (-1, -1)
+    p.mkdir()
+    pq.write_table(pa.table({"v": list(range(30))}), p / "part-0.parquet", row_group_size=10)
+    assert _source_splits(str(p), 4) == (3, 30)

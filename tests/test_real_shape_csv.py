@@ -240,9 +240,9 @@ def test_q1_through_q6_run_e2e(spark, clean, fixture_dirs):
 
 
 def test_splittable_reader_matches_direct_reader(spark, fixture_dirs, tmp_path):
-    """read_listings_csv_splittable must produce the SAME rows as the
-    direct multiLine reader (same 61-column select + try_cast), with the
-    raw landing staged as splittable parquet under the staging root."""
+    """read_listings_csv parses record-aligned chunks in several tasks;
+    it must produce the SAME rows as Spark's own multiLine read of the
+    unsplit file through the same 61-column select + try_cast."""
     from airbnb_listings_reviews_data_engineering_spark.sources.staging import (
         ROOT_CONF,
     )
@@ -250,10 +250,20 @@ def test_splittable_reader_matches_direct_reader(spark, fixture_dirs, tmp_path):
     listings, _ = fixture_dirs
     spark.conf.set(ROOT_CONF, str(tmp_path))
     try:
-        direct = etl.clean_listings(etl.read_listings_csv(spark, listings))
-        split = etl.clean_listings(
-            etl.read_listings_csv_splittable(spark, listings, stage_key="realshape")
+        whole = (
+            spark.read.option("header", True)
+            .option("multiLine", True)
+            .option("quote", '"')
+            .option("escape", '"')
+            .csv(listings)
         )
+        assert whole.rdd.getNumPartitions() == 1
+        direct = etl.clean_listings(
+            etl._select_by_name(whole, LISTINGS_RAW_SCHEMA, "listings")
+        )
+        raw = etl.read_listings_csv(spark, listings)
+        assert raw.rdd.getNumPartitions() > 1
+        split = etl.clean_listings(raw)
         d = sorted(map(tuple, direct.collect()))
         s = sorted(map(tuple, split.collect()))
         assert d == s
