@@ -25,7 +25,7 @@ Recorded divergences, implemented as the evident intent:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 QUIET = "(?i)quiet"
@@ -91,24 +91,39 @@ def q3_bnb_median_price(
 ) -> DataFrame:
     """Q3 (Airbnb_Analysis.py:84-97): B&B count + median price per city.
 
-    Scale-guarded median (functions/percentile.py): exact
-    percentile_cont(0.5) while every city's B&B count fits the
-    aggregation-buffer budget (it always does at reference scale, so
-    reference parity is preserved), flipping to approx_percentile past
-    the conf threshold — grouped-by-city exact percentile was the one
-    reference query shape that could OOM a 100x run."""
-    from ..functions.percentile import exact_fits, percentile_expr
-
+    The median is sort-based and exact at every scale: one window ranks
+    each city's non-null prices (``row_number`` ascending, nulls last,
+    next to the city's ``count`` of them), and the grouped pass keeps the
+    prices at ranks ``floor((n-1)/2)+1`` and ``ceil((n-1)/2)+1``. Their
+    mean ``0.5*lo + 0.5*hi`` is exactly Spark's ``percentile(x, 0.5)``
+    interpolation ``(higher-pos)*lo + (pos-lower)*hi``, and null for a
+    city without a non-null price. The window's sort spills instead of
+    buffering every value in an aggregation buffer, so no group is too
+    large for it and no probe has to choose between exact and sketched."""
     bnb = (
         hotel_location.join(hotel_facilities, "id")
         .join(price_info, "id")
         .filter(F.col("property_type") == "Bed & Breakfast")
         .withColumn("price_d", F.col("price").cast("double"))
     )
-    exact = exact_fits(bnb, ["city"], "price_d")
-    return bnb.groupBy("city").agg(
+    by_city = Window.partitionBy("city")
+    by_price = by_city.orderBy(F.col("price_d").asc_nulls_last())
+    pos = (F.count("price_d").over(by_city) - 1) / 2
+    ranked = bnb.select(
+        "city",
+        "property_type",
+        "price_d",
+        F.row_number().over(by_price).alias("rank"),
+        (F.floor(pos) + 1).alias("lo_rank"),
+        (F.ceil(pos) + 1).alias("hi_rank"),
+    )
+
+    def price_at(rank: str) -> F.Column:
+        return F.max(F.when(F.col("rank") == F.col(rank), F.col("price_d")))
+
+    return ranked.groupBy("city").agg(
         F.count("property_type").alias("bed_breakfast"),
-        percentile_expr(0.5, "price_d", exact).alias("median_price"),
+        (0.5 * price_at("lo_rank") + 0.5 * price_at("hi_rank")).alias("median_price"),
     )
 
 
@@ -116,21 +131,24 @@ def q4_house_cheaper_than_townhouse(
     hotel_location: DataFrame, hotel_facilities: DataFrame, price_info: DataFrame
 ) -> DataFrame:
     """Q4 (Airbnb_Analysis.py:99-122): cities where the average House price
-    is below the average Townhouse price — join of two grouped subqueries
-    + theta filter."""
-    joined = hotel_location.join(hotel_facilities, "id").join(price_info, "id")
+    is below the average Townhouse price.
 
-    def avg_by_city(ptype: str, alias: str) -> DataFrame:
-        return (
-            joined.filter(F.col("property_type") == ptype)
-            .groupBy("city")
-            .agg(F.avg(F.col("price").cast("double")).alias(alias))
-        )
-
-    h1 = avg_by_city("House", "avg1")
-    h2 = avg_by_city("Townhouse", "avg2")
+    The reference joins two grouped subqueries on city; here one grouped
+    pass computes both averages. A city with only one of the two types
+    has a null average, so the comparison drops it as the inner join
+    did, and null cities are filtered out as the join's null key would
+    drop them."""
+    price = F.col("price").cast("double")
+    ptype = F.col("property_type")
     return (
-        h1.join(h2, "city")
+        hotel_location.join(hotel_facilities, "id")
+        .join(price_info, "id")
+        .filter(ptype.isin("House", "Townhouse") & F.col("city").isNotNull())
+        .groupBy("city")
+        .agg(
+            F.avg(F.when(ptype == "House", price)).alias("avg1"),
+            F.avg(F.when(ptype == "Townhouse", price)).alias("avg2"),
+        )
         .filter(F.col("avg1") < F.col("avg2"))
         .select("city")
     )

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import hand_over, release
 from ..operators.merge import merge_array_accum, upsert_snapshot
-from ..sources.atomic import publish_parquet, read_published
+from ..sources.atomic import publish_parquet, read_published, read_version
 from ..sources.csv import read_multiline_csv
 from .schemas import (
     DOC_TEXT_COLUMNS,
@@ -259,9 +259,8 @@ def run_listings_etl(
 
 
 def _publish(spark: SparkSession, df: DataFrame, target: str) -> DataFrame:
-    """Publish ``df`` and return a frame over the version just written.
-    Its schema is known, so the read starts no footer-inference job."""
-    return spark.read.schema(df.schema).parquet(publish_parquet(df, target))
+    """Publish ``df`` and return a frame over the version just written."""
+    return read_version(spark, publish_parquet(df, target))
 
 
 def run_reviews_etl(

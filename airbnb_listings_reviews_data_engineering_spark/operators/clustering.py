@@ -140,10 +140,11 @@ def _lloyd(v: DataFrame, id_col: str, k: int, iters: int, dims: int | None = Non
         # LAZY pin: the plan is truncated at pin time either way (the
         # LogicalRDD replaces the round's lineage, so plan growth stays
         # linear — the failure mode connected_components documents), but
-        # materialization folds into the FIRST consuming job (the next
-        # round's pin or the caller's terminal action) instead of one
-        # standalone k-row job per round — `iters` fewer sequential
-        # barriers per training run (round 14, guide §1.2).
+        # a lazy pin starts no job, so the next round's pin does not
+        # materialize it either: every round runs inside the caller's
+        # terminal action instead of as one standalone k-row job per
+        # round — `iters` fewer sequential barriers per training run
+        # (round 14, guide §1.2).
         # Rounds are NOT released mid-loop: the final `assigned` lineage
         # still references the previous round's centroids; the session
         # harness frees all k-row pins via release_pins() after use.

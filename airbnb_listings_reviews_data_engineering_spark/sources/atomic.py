@@ -30,13 +30,18 @@ partition path; the pointer-swap shape is identical.
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 from pyspark.sql.utils import AnalysisException
 
 KEEP_VERSIONS = 2  # current + previous (cheap rollback / concurrent readers)
+
+# the footer key under which Spark's parquet writer stores the row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 FAILPOINT_ENV = "SPARK_GRAFT_ATOMIC_FAILPOINT"
 PID_MARKER = ".publisher.pid"
@@ -128,6 +133,44 @@ def list_versions(target_path: str) -> list[int]:
     )
 
 
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark schema stored in the footer of the directory's first
+    top-level ``*.parquet`` part file (names starting with ``_`` or ``.``
+    skipped), or None when there is none to use: no such file (a
+    partitioned directory keeps its files in subdirectories) or a footer
+    without Spark's key (a file another writer wrote). A footer that
+    cannot be read raises."""
+    import pyarrow.parquet as pq
+
+    with os.scandir(path) as it:
+        parts = sorted(
+            e.path
+            for e in it
+            if e.is_file()
+            and e.name.endswith(".parquet")
+            and not e.name.startswith(("_", "."))
+        )
+    if not parts:
+        return None
+    raw = (pq.read_metadata(parts[0]).metadata or {}).get(SPARK_SCHEMA_KEY)
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
+def read_version(spark: SparkSession, path: str) -> DataFrame:
+    """Read one version directory with the schema from its footer.
+
+    Spark's own parquet schema inference reads one footer too, but in a
+    one-task Spark job per read; here the driver reads the footer's
+    Spark-schema key with pyarrow and hands the schema to the reader, so
+    building the frame starts no job. Every part file of a version comes
+    from one ``df.write`` and carries the same schema. Without a usable
+    key (see ``_footer_schema``) it reads the way Spark does by default,
+    inferring the schema and any partition columns."""
+    schema = _footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def read_published(
     spark: SparkSession, target_path: str, version: int | None = None
 ) -> DataFrame | None:
@@ -139,11 +182,17 @@ def read_published(
     while new publishes land. Asking for a GC'd or unknown version
     raises.
 
+    The schema comes from the Spark-schema key in the version's first
+    part-file footer, read on the driver, so the read starts no Spark
+    job; a version whose top-level part files carry no such key
+    (written by another writer, or partitioned into subdirectories) is
+    read with Spark's own schema inference (``read_version``).
+
     Only the does-the-path-exist probe is allowed to return None
     (ADVICE r1: a broad `except Exception` here would treat corruption,
     permission errors, or transient IO as 'first run' and silently
     overwrite the base table with a single batch). Any error reading a
-    path that DOES exist propagates.
+    path that DOES exist, an unreadable footer included, propagates.
     """
     if version is not None:
         if version not in list_versions(target_path):
@@ -151,13 +200,13 @@ def read_published(
                 f"version {version} of {target_path} not on disk "
                 f"(retained: {list_versions(target_path)})"
             )
-        return spark.read.parquet(
-            os.path.join(_versions_dir(target_path), f"v_{version:010d}")
+        return read_version(
+            spark, os.path.join(_versions_dir(target_path), f"v_{version:010d}")
         )
     current = current_version(target_path)
     if current is None:
         return None
-    return spark.read.parquet(current)
+    return read_version(spark, current)
 
 
 def _migrate_plain_dir(target: str, versions: str) -> None:
@@ -385,5 +434,6 @@ __all__ = [
     "list_versions",
     "publish_parquet",
     "read_published",
+    "read_version",
     "stage_parquet",
 ]

@@ -194,6 +194,84 @@ def test_q2_q3_q4(clean):
     assert [r.city for r in q4] == ["Washington"]
 
 
+def _three_tables(spark, rows):
+    """hotel_location / hotel_facilities / price_info from
+    (id, city, property_type, price) rows, with the published types."""
+    df = spark.createDataFrame(
+        rows, "id long, city string, property_type string, price decimal(12,2)"
+    )
+    return (
+        df.select("id", "city"),
+        df.select("id", "property_type"),
+        df.select("id", "price"),
+    )
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_q3_median_equals_spark_exact_percentile(spark):
+    from decimal import Decimal
+
+    bnb, rows = "Bed & Breakfast", []
+    cities = {
+        "Odd": [200, 80, 120],  # median 120
+        "Even": [40, 10, 30, 20],  # median 25, interpolated
+        "Tied": [50, 50, 70, 90],  # lo == hi at the two middle ranks
+        "One": [99],
+        "AllNull": [None, None],  # counted, no median
+        "SomeNull": [None, 30, None, 10],  # median over non-null only
+        None: [5, 15],  # a null city is one group
+    }
+    for city, prices in cities.items():
+        for p in prices:
+            rows.append((len(rows), city, bnb,
+                         None if p is None else Decimal(p)))
+    rows.append((len(rows), "Odd", "House", Decimal(1)))  # not a B&B
+    loc, fac, price = _three_tables(spark, rows)
+
+    before = _next_job_id(spark)
+    q3 = analysis.q3_bnb_median_price(loc, fac, price)
+    assert _next_job_id(spark) == before, "building Q3 started a job"
+
+    got = {r.city: (r.bed_breakfast, r.median_price) for r in q3.collect()}
+    want = {
+        r.city: (r.n, r.median)
+        for r in loc.join(fac, "id").join(price, "id")
+        .filter(F.col("property_type") == bnb)
+        .groupBy("city")
+        .agg(
+            F.count("property_type").alias("n"),
+            F.expr("percentile(CAST(price AS DOUBLE), 0.5)").alias("median"),
+        )
+        .collect()
+    }
+    assert got == want
+    assert got["Even"] == (4, 25.0) and got["AllNull"] == (2, None)
+    assert got["SomeNull"] == (4, 20.0) and got[None] == (2, 10.0)
+
+
+def test_q4_single_pass_drops_null_city_and_one_type_cities(spark):
+    from decimal import Decimal
+
+    rows = [
+        (1, "Cheaper", "House", 100), (2, "Cheaper", "Townhouse", 300),
+        (3, "Dearer", "House", 250), (4, "Dearer", "Townhouse", 200),
+        (5, "OnlyHouses", "House", 10), (6, "OnlyHouses", "House", 20),
+        (7, None, "House", 1), (8, None, "Townhouse", 1000),  # null key
+        (9, "NullPrice", "House", None), (10, "NullPrice", "Townhouse", 5),
+        (11, "Cheaper", "Apartment", 1),
+    ]
+    loc, fac, price = _three_tables(spark, [
+        (i, c, t, None if p is None else Decimal(p)) for i, c, t, p in rows
+    ])
+    before = _next_job_id(spark)
+    q4 = analysis.q4_house_cheaper_than_townhouse(loc, fac, price)
+    assert _next_job_id(spark) == before, "building Q4 started a job"
+    assert [r.city for r in q4.collect()] == ["Cheaper"]
+
+
 def test_q5_park_museum(clean, docs_with_reviews):
     t = etl.split_tables(clean)
     out = analysis.q5_park_museum_counts(

@@ -14,6 +14,7 @@ from airbnb_listings_reviews_data_engineering_spark.sources.atomic import (
     list_versions,
     publish_parquet,
     read_published,
+    read_version,
 )
 
 
@@ -51,6 +52,70 @@ def test_read_published_raises_on_corrupt_target(spark, tmp_path):
         df.collect()
     # the raise must be the read failing, not the None-assert tripping
     assert "regressed to None" not in str(exc_info.value)
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _docs_shaped(spark):
+    """The column shapes of the published document tables: an array of
+    structs, a nested struct, money decimals, a date, a timestamp and a
+    map."""
+    return spark.sql(
+        """SELECT id,
+                  named_struct('host_id', id * 10,
+                               'about', named_struct('text', 'hi', 'len', 2)) AS host_desc,
+                  array(named_struct('date', DATE'2020-01-01', 'reviewer_id', id,
+                                     'comments', 'ok')) AS reviews,
+                  CAST(id * 1.25 AS DECIMAL(12,2)) AS price,
+                  date_add(DATE'2020-01-02', CAST(id AS INT)) AS day,
+                  TIMESTAMP'2020-01-01 10:00:00' + make_interval(0, 0, 0, 0, id) AS ts,
+                  map('k', id) AS attrs
+           FROM range(6)"""
+    ).repartition(3)
+
+
+def test_read_published_starts_no_job_and_matches_spark_schema(spark, tmp_path):
+    target = str(tmp_path / "docs")
+    publish_parquet(_docs_shaped(spark), target)
+    publish_parquet(_docs_shaped(spark).filter("id < 4"), target)
+    v1 = os.path.join(os.path.dirname(current_version(target)), "v_0000000001")
+    for version, path, n in ((None, current_version(target), 4), (1, v1, 6)):
+        before = _next_job_id(spark)
+        df = read_published(spark, target, version=version)
+        assert _next_job_id(spark) == before, f"version={version} started a job"
+        spark_read = spark.read.parquet(path)
+        assert df.schema == spark_read.schema
+        assert df.orderBy("id").collect() == spark_read.orderBy("id").collect()
+        assert df.count() == n
+
+
+def test_read_published_falls_back_without_spark_footer_key(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # a plain directory another writer filled: no Spark schema in the footer
+    plain = tmp_path / "plain"
+    plain.mkdir()
+    pq.write_table(pa.table({"k": [1, 2, 3], "v": ["a", "b", "c"]}),
+                   plain / "part-0.parquet")
+    out = read_published(spark, str(plain))
+    assert out.schema == spark.read.parquet(str(plain)).schema
+    assert sorted(r.k for r in out.collect()) == [1, 2, 3]
+
+
+def test_read_version_falls_back_on_partitioned_directory(spark, tmp_path):
+    path = str(tmp_path / "parted")
+    _df(spark, "x", n=6).withColumn("g", F.col("k") % 2).write.partitionBy(
+        "g"
+    ).parquet(path)
+    out = read_version(spark, path)
+    assert out.schema == spark.read.parquet(path).schema
+    assert "g" in out.columns  # the partition column is inferred
+    assert sorted((r.k, r.g) for r in out.collect()) == [
+        (k, k % 2) for k in range(6)
+    ]
 
 
 def test_failed_write_leaves_previous_version_published(spark, tmp_path):
