@@ -38,7 +38,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoint import hand_over, release
-from ..operators.merge import merge_array_accum, upsert_snapshot
+from ..operators.merge import merge_array_accum
 from ..sources.atomic import publish_parquet, read_published, read_version
 from ..sources.csv import read_multiline_csv
 from .schemas import (
@@ -286,8 +286,3 @@ def run_reviews_etl(
     finally:
         release(raw)
 
-
-def upsert_table(base: DataFrame, updates: DataFrame) -> DataFrame:
-    """Row-level upsert keyed on id (insert_rows(upsert=True),
-    Airbnb_Listings_ETL.py:143-151) — set-oriented, one shuffle."""
-    return upsert_snapshot(base, updates, keys=["id"])

@@ -78,58 +78,6 @@ def drain_stage_plans(spark: SparkSession) -> list[tuple[str, str, int]]:
     return _STAGE_PLANS.pop(_session_key(spark), [])
 
 
-# Per-pin wall-clock capture (bench instrumentation, VERDICT r5 #7):
-# an EAGER pin blocks until its stage is materialized, so timing the
-# pin() call measures that stage's cost exactly — the per-stage anatomy
-# SCALING.md previously reconstructed ad hoc. Lazy pins record their
-# (near-zero) call time; their cost lands in the downstream action.
-_PIN_TIMING = False
-_PIN_TIMES: dict[int, list[tuple[str, float]]] = {}
-
-
-def record_pin_timings(enabled: bool) -> None:
-    """Toggle per-pin wall-clock capture (one perf_counter pair and a
-    list append per pin — cheap enough to leave on inside a timed
-    bench rep)."""
-    global _PIN_TIMING
-    _PIN_TIMING = enabled
-
-
-def drain_pin_timings(spark: SparkSession) -> list[tuple[str, float]]:
-    """Return and clear [(pin label, seconds)] recorded since the last
-    drain, in pin order."""
-    return _PIN_TIMES.pop(_session_key(spark), [])
-
-
-class timed_span:
-    """Context manager reporting an arbitrary stage's wall-clock through
-    the pin-timing channel (same drain, same bench pin_stages output).
-    Streaming fixtures use it to attribute cost the pin hook can't see —
-    landing-zone staging, the micro-batch run itself (VERDICT r7 #5:
-    stream_mv_merge's bench line was ~98 % un-attributed fixture setup).
-    No-op (beyond one perf_counter pair) unless record_pin_timings is
-    on, exactly like pin()."""
-
-    def __init__(self, spark: SparkSession, label: str):
-        self._spark = spark
-        self._label = label
-
-    def __enter__(self):
-        import time
-
-        self._t0 = time.perf_counter()
-        return self
-
-    def __exit__(self, *exc):
-        import time
-
-        if _PIN_TIMING:
-            _PIN_TIMES.setdefault(_session_key(self._spark), []).append(
-                (self._label, time.perf_counter() - self._t0)
-            )
-        return False
-
-
 class small_pin_floor:
     """Scope a lower AQE partition-coalescing floor around an EAGER pin
     of a small frame whose materialized layout feeds many compute-heavy
@@ -217,21 +165,6 @@ def pin(df: DataFrame, *, eager: bool = True, label: str = "pin") -> DataFrame:
             _STAGE_PLANS.setdefault(_session_key(spark), []).append(
                 (label, f"<capture failed: {e!r}>", 0)
             )
-    if not _PIN_TIMING:
-        return _pin_impl(df, spark, eager, label)
-    import time
-
-    t0 = time.perf_counter()
-    out = _pin_impl(df, spark, eager, label)
-    _PIN_TIMES.setdefault(_session_key(spark), []).append(
-        (label, time.perf_counter() - t0)
-    )
-    return out
-
-
-def _pin_impl(
-    df: DataFrame, spark: SparkSession, eager: bool, label: str
-) -> DataFrame:
     mode = checkpoint_mode(spark)
     if mode == "local":
         out = df.localCheckpoint(eager=eager)

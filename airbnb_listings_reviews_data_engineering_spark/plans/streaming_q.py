@@ -390,7 +390,6 @@ def stream_stateful_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     timer semantics, not just aggregates."""
     from datetime import datetime, timezone
 
-    from ..checkpoint import timed_span
     from ..streaming.ingest import stateful_admission
 
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "user_id")
@@ -411,10 +410,9 @@ def stream_stateful_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stable landing zone, staged once per (sf_dir, row count): the
     # measured work is the keyed-state drain, not three fixture parquet
     # writes per invocation (the stream_mv_merge amortization idiom)
-    with timed_span(spark, "ssa_stage_batches"):
-        stream_dir = _ensure_staged(
-            spark, "stream_stateful_admission", sf_dir, "events", _stage
-        )
+    stream_dir = _ensure_staged(
+        spark, "stream_stateful_admission", sf_dir, "events", _stage
+    )
     # the final no-data micro-batch is what flushes end-of-stream
     # timers; it is on by default — pinned here because the oracle
     # replays its firings (bseq 4)
@@ -458,9 +456,7 @@ def stream_stateful_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bounds, so bseq never crosses the Python boundary as a column
         derive_bseq_from_ts=True,
     )
-    with timed_span(spark, "ssa_drain"), _stateful_layout(
-        spark, sf_dir, "events"
-    ):
+    with _stateful_layout(spark, sf_dir, "events"):
         result = run_available_now(
             out, query_name="stream_stateful_admission", output_mode="update"
         )
@@ -551,7 +547,6 @@ def stream_session_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by user and dropped on every close, so the store tracks open
     sessions only — the soak-proven bound of stateful_admission
     applies unchanged."""
-    from ..checkpoint import timed_span
     from ..streaming.ingest import session_finalize
 
     ev = load(spark, sf_dir, "events").select(
@@ -573,10 +568,9 @@ def stream_session_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stable landing zone, staged once per (sf_dir, row count) — see
     # stream_stateful_admission
-    with timed_span(spark, "ssf_stage_batches"):
-        stream_dir = _ensure_staged(
-            spark, "stream_session_finalize", sf_dir, "events", _stage
-        )
+    stream_dir = _ensure_staged(
+        spark, "stream_session_finalize", sf_dir, "events", _stage
+    )
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     # event_id staged but not read — see stream_stateful_admission
     stream = (
@@ -589,9 +583,7 @@ def stream_session_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "0 seconds")
     )
     out = session_finalize(stream, gap_ms=_SSA_GAP_MS)
-    with timed_span(spark, "ssf_drain"), _stateful_layout(
-        spark, sf_dir, "events"
-    ):
+    with _stateful_layout(spark, sf_dir, "events"):
         result = run_available_now(
             out, query_name="stream_session_finalize", output_mode="update"
         )
@@ -917,7 +909,6 @@ def stream_mv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
 
-    from ..checkpoint import timed_span
     from ..sources.atomic import drop_published, publish_parquet, read_published
     from ..sources.staging import fs_delete
     from ..streaming.ingest import EVENTS_SCHEMA
@@ -959,17 +950,16 @@ def stream_mv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw = load(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
-        with timed_span(spark, "mv_fixture_stage"):
-            fs_delete(stream_dir)
-            for i in range(3):
-                _stage_batch(
-                    raw.filter(F.col("event_id") % 3 == i),
-                    stream_dir,
-                    f"batch_{i}.parquet",
-                    i,
-                )
-            with open(marker, "w") as f:
-                json.dump(want, f)
+        fs_delete(stream_dir)
+        for i in range(3):
+            _stage_batch(
+                raw.filter(F.col("event_id") % 3 == i),
+                stream_dir,
+                f"batch_{i}.parquet",
+                i,
+            )
+        with open(marker, "w") as f:
+            json.dump(want, f)
     # a fresh run every invocation: the previous MV (pointer symlink AND
     # its versions dir — fs_delete alone leaves the versions behind and
     # read_published would resurrect the stale MV as a merge base) and
@@ -1011,9 +1001,7 @@ def stream_mv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _stateful_layout: each foreachBatch delta groupBy + base merge
     # would otherwise shuffle into 32 near-empty partitions per batch
     # (AQE is off inside streaming queries); size to the feed instead
-    with timed_span(spark, "mv_stream_run"), _stateful_layout(
-        spark, sf_dir, "events"
-    ):
+    with _stateful_layout(spark, sf_dir, "events"):
         q = (
             stream.writeStream.foreachBatch(apply_batch)
             .option("checkpointLocation", ckpt)

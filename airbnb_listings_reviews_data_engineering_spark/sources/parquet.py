@@ -1,39 +1,16 @@
-"""Parquet source/sink — the engine's canonical storage.
+"""Maintenance of the engine's canonical parquet storage.
 
-Replaces the reference's Postgres heap tables + BSON documents with
-columnar storage: vectorized reads, min/max pruning, column pruning.
-The B-tree-on-id indexes (sql/create_*.sql) map to optional bucketBy,
-which pre-shuffles the repeated id-joins away.
+Published tables are read and written through ``sources/atomic.py``
+(versioned directories behind a pointer flip); this module holds
+small-files compaction, which rewrites a published table as a new
+version. The reference's B-tree-on-id indexes (sql/create_*.sql) have
+no counterpart here: nothing writes bucketed tables, and reads rely on
+parquet min/max and column pruning.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def write_bucketed_table(
-    df: DataFrame, name: str, bucket_col: str, num_buckets: int = 32
-) -> None:
-    """Bucketed managed table: co-locates later equi-joins on bucket_col
-    (the Spark analog of the reference's per-table id index)."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(num_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .format("parquet")
-        .saveAsTable(name)
-    )
+from pyspark.sql import SparkSession
 
 
 def compact_published(

@@ -1,12 +1,23 @@
 """Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE JSON line:
-  {"metric": "headline_total", "value": <sec>, "unit": "sec",
-   "queries": {"join_eq3": <sec>, ...}, "sf": <float>}
+Each key's full physical plan runs 3 times through the noop sink (no
+collect to the driver, no file writes), so a rep times scan + shuffle +
+compute. A key's number is the raw minimum of its 3 reps, in seconds:
+the least-interfered run of the same deterministic plan. Numbers are
+comparable only to runs on the same box; ``scripts/exit_gate.sh``
+compares them per key against ``scripts/bench_baseline.json``.
 
-Each query's full physical plan is executed via the noop sink (no
-collect-to-driver, no file writes) so the timing reflects scan + shuffle +
-compute — the part that matters at scale.
+Prints ONE JSON line (see ``final_line``):
+  {"metric": "headline_total", "value": <sec>, "unit": "sec", "sf": <float>,
+   "subtotal_r2_comparable": <sec>, "per_query_file": <path>,
+   "queries": {<costliest key>: <sec>, ...}, "queries_omitted": <n>,
+   "queries_omitted_sum": <sec>}
+
+and writes ``scripts/last_bench_queries.json`` (relative to the working
+directory): every key's seconds under ``queries`` and the Spark job
+count of its winning rep under ``jobs``.
+
+``SPARK_GRAFT_BENCH_ONLY=key1,key2`` times a subset of the headline.
 """
 
 from __future__ import annotations
@@ -18,269 +29,123 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from airbnb_listings_reviews_data_engineering_spark.checkpoint import (  # noqa: E402
-    drain_pin_timings,
-    record_pin_timings,
-    release_pins,
-)
+from airbnb_listings_reviews_data_engineering_spark.checkpoint import release_pins  # noqa: E402
 from airbnb_listings_reviews_data_engineering_spark.plans import all_queries  # noqa: E402
 from airbnb_listings_reviews_data_engineering_spark.session import get_spark  # noqa: E402
 
-# The round-1/2 comparable set — NAMED, not positional (ADVICE r3:
-# an index-based slice silently changes what subtotal_r2_comparable
-# measures on any insertion/reorder). Do not add to or reorder this
-# list; new coverage goes in the *_ADDITIONS lists below.
-R2_HEADLINE = [
-    "join_eq3",           # 3-way star join + agg (the reference's Q2-Q4 shape)
-    "join_semi_inlist",   # left-semi over regex doc match (Q1/Q5 shape)
-    "join_agg_agg",       # join of two grouped subqueries + theta filter (Q4)
-    "agg_percentile",     # exact median per group (Q3)
-    "agg_collect_struct", # array-of-structs accumulation (Mongo doc shape)
-    "filt_regex_and_or",  # multi-field regex conjunction (Q5 filter)
-    "dedup_exact",        # hash-groupBy dedup over documents
-    "dedup_minhash_lsh",  # shingle -> minhash -> band -> bucket join
-    "sim_cosine_topk",    # brute-force cosine top-k over embeddings
-    "sim_ivf_topk",       # IVF-cell-pruned ANN probe
-    "text_quality_score", # text-quality heuristics over documents
-    "stream_window_agg",  # tumbling-window event aggregation
-    "win_topk_per_group", # per-group top-k window
-    "join_asof",          # as-of join (union-window formulation)
-    "sessionize",         # gap-based sessionization
+# The round-1/2 comparable set, NAMED rather than sliced by position, so
+# subtotal_r2_comparable always measures the same 15 keys (ADVICE r3).
+COMPARABLE = (
+    "join_eq3", "join_semi_inlist", "join_agg_agg", "agg_percentile",
+    "agg_collect_struct", "filt_regex_and_or", "dedup_exact",
+    "dedup_minhash_lsh", "sim_cosine_topk", "sim_ivf_topk",
+    "text_quality_score", "stream_window_agg", "win_topk_per_group",
+    "join_asof", "sessionize",
+)
+
+# The 91 headline keys: the comparable set, then the later additions in
+# the order they joined. sim_ivfpq_apply times the IVF-PQ serving path;
+# its trainer is a once-per-corpus build step (SCALING.md).
+HEADLINE = list(COMPARABLE) + [
+    "dedup_ngram_jaccard", "sink_scd2", "sample_temperature", "sim_ivf_join",
+    "dedup_incremental", "shuffle_deterministic", "src_csv_multiline_split",
+    "text_bpe_train", "graph_pagerank", "funnel_stages", "mm_shard_manifest",
+    "geo_grid_join", "xform_quantile_bin", "cohort_retention",
+    "join_fuzzy_blocked", "diff_snapshots", "text_line_dedup",
+    "ml_linreg_normal", "stream_mv_merge", "text_novelty_score",
+    "sim_matryoshka_eval", "dq_temporal_consistency", "path_session_mining",
+    "dedup_semdedup", "ml_naive_bayes", "text_gopher_rules",
+    "pack_length_pairs", "win_match_recognize", "text_rouge_overlap",
+    "sample_dsir", "text_perplexity_bucket", "sample_doremi_weights",
+    "text_decontaminate", "sample_rho_loss", "split_leakage_audit",
+    "mm_phash_dedup", "eval_bradley_terry", "text_span_excise",
+    "pack_bin_ffd", "dedup_span_exact", "dedup_embedding_incremental",
+    "text_decontaminate_bloom", "pipeline_curation_funnel",
+    "sample_prototype_pruning", "stream_dedup_embedding",
+    "dedup_span_winnowed", "ml_logreg_gd", "mm_pair_dedup",
+    "stream_dedup_span", "ml_quality_distill", "dedup_components",
+    "sketch_countmin_heavy", "sketch_quantile_dyadic", "sim_ivfpq_apply",
+    "sketch_bloom_rollup", "profile_drift_ks", "text_unigram_lm_em",
+    "text_fim_transform", "dedup_canonical_text", "mm_decode_png",
+    "pipeline_dedup_policy", "mm_dhash_real", "mm_image_quality_filter",
+    "mm_audio_vad_segments", "pipeline_training_mixture",
+    "sample_contrastive_triplets", "ml_adaboost_stumps",
+    "text_kneser_ney_logprob", "sample_pareto_skyline", "eval_bleu_corpus",
+    "mm_audio_spectrogram", "mm_audio_vad_band", "mm_decode_gif",
+    "mm_gif_frame_sample", "stream_stateful_admission",
+    "stream_session_finalize",
 ]
 
-# round-3 breadth (VERDICT r2 #7): regression-track the r2 families
-R3_ADDITIONS = [
-    "dedup_ngram_jaccard",# AllPairs prefix-filtered exact-Jaccard pairs
-    "sink_scd2",          # type-2 history fold over the version layer
-    "sample_temperature", # temperature-weighted domain sampling
-    "sim_ivf_join",       # batch IVF ANN probe (multi-query, salted topk)
-]
+REPS = 3
+SIDECAR = "scripts/last_bench_queries.json"
+# Result collectors keep only a 2000-char stdout tail, newline included,
+# and parse the LAST JSON line.
+TAIL_CHARS = 2000
 
-# round-4 breadth (VERDICT r3 #7): incremental dedup, the epoch-shuffle
-# decomposition, and the splittable multiLine-CSV read path
-R4_ADDITIONS = [
-    "dedup_incremental",  # batch-vs-corpus band join (daily-ingest shape)
-    "shuffle_deterministic",  # range shuffle + local enumerate + prefix sums
-    "src_csv_multiline_split",  # quote-parity-chunked multiLine CSV scan
-    "text_bpe_train",     # 6-round distributed BPE merge training
-    "graph_pagerank",     # 3-round PageRank over the nation trade graph
-    "funnel_stages",      # one-shuffle conversion funnel
-    "mm_shard_manifest",  # range-partitioned byte cumsum shard manifest
-]
 
-# round-4 second wave: the data-quality/reconciliation and geospatial
-# families added this round — regression-track their heavy shapes
-R4B_ADDITIONS = [
-    "geo_grid_join",      # 3-degree grid-blocked 150 km radius self-join
-    "xform_quantile_bin", # range-partition prefix-sum decile binning
-    "cohort_retention",   # weekly cohort x activity-week matrix
-    "join_fuzzy_blocked", # noun-blocked Levenshtein record linkage
-    "diff_snapshots",     # full-outer snapshot reconciliation (cents)
-]
+def selected_keys() -> list[str]:
+    """HEADLINE, or the subset named in SPARK_GRAFT_BENCH_ONLY."""
+    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
+    if not only:
+        return list(HEADLINE)
+    wanted = {k for k in only.split(",") if k}
+    unknown = wanted - set(HEADLINE)
+    subset = [k for k in HEADLINE if k in wanted]
+    # fail loudly on typos / empty selections: a silently empty run
+    # prints a zero headline_total that reads like a measurement
+    # (ADVICE r7)
+    if unknown or not subset:
+        raise SystemExit(
+            f"SPARK_GRAFT_BENCH_ONLY selects no headline keys: "
+            f"unknown={sorted(unknown)}; headline keys are {HEADLINE}"
+        )
+    return subset
 
-# round-4 third wave: new families from the same round
-R4C_ADDITIONS = [
-    "text_line_dedup",    # cross-doc boilerplate-line removal (C4 step)
-    "ml_linreg_normal",   # one-pass closed-form OLS (exact moments)
-    "stream_mv_merge",    # streaming incremental MV maintenance
-]
 
-# round-4 final wave
-R4D_ADDITIONS = [
-    "text_novelty_score",   # batch 3-gram novelty vs the corpus gram set
-    "sim_matryoshka_eval",  # prefix-dims retrieval overlap curve
-    "dq_temporal_consistency",  # cross-table ship-before-order gate
-    "path_session_mining",  # sessionized click-path frequencies
-]
+def final_line(
+    timings: dict[str, float], sf: float, per_query_file: str | None
+) -> str:
+    """The last stdout line, newline included, at most TAIL_CHARS long.
 
-# round-5 breadth: the data-curation/selection family and the pattern
-# detector — the heavy shapes among this round's 16 additions
-R5_ADDITIONS = [
-    "dedup_semdedup",       # learned-cluster-blocked semantic dedup
-    "ml_naive_bayes",       # closed-form NB train+apply over the corpus
-    "text_gopher_rules",    # map-side quality-rule battery
-    "pack_length_pairs",    # global-rank complement packing
-    "win_match_recognize",  # gaps-and-islands row-pattern detection
-    "text_rouge_overlap",   # clipped-bigram pair overlap join
-]
+    ``queries`` holds the costliest keys, in descending cost at 2dp, so
+    a cut drops only the cheapest ones; ``queries_omitted`` and
+    ``queries_omitted_sum`` reconcile the cut against ``value``. Every
+    candidate line is serialized and measured, so no token width is
+    assumed: the longest cost-ordered prefix that fits is kept."""
+    by_cost = sorted(timings, key=lambda k: timings[k], reverse=True)
+    head = {
+        "metric": "headline_total",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "sf": sf,
+        "subtotal_r2_comparable": round(
+            sum(timings[k] for k in COMPARABLE if k in timings), 3
+        ),
+        "per_query_file": per_query_file,
+    }
+    for n in range(len(by_cost), -1, -1):
+        line = json.dumps(
+            {
+                **head,
+                "queries": {k: round(timings[k], 2) for k in by_cost[:n]},
+                "queries_omitted": len(by_cost) - n,
+                "queries_omitted_sum": round(
+                    sum(timings[k] for k in by_cost[n:]), 2
+                ),
+            },
+            separators=(",", ":"),
+        ) + "\n"
+        if len(line) <= TAIL_CHARS:
+            return line
+    raise ValueError("the final line's head alone exceeds the tail budget")
 
-# round-7 breadth: the importance-resampling and perplexity-bucket
-# additions (both corpus-scan + broadcast-model shapes)
-R7_ADDITIONS = [
-    "sample_dsir",          # hashed-bigram importance resample, Gumbel top-k
-    "text_perplexity_bucket",  # per-lang tercile split by broadcast cuts
-    "sample_doremi_weights",   # excess-loss domain reweighting (pinned scan)
-    "text_decontaminate",   # n-gram overlap vs broadcast eval-suite grams
-    "sample_rho_loss",      # reducible-holdout-loss top-N selection
-    "split_leakage_audit",  # cross-split near-dup leakage (minhash bands)
-    "mm_phash_dedup",       # map-side dHash signatures + pigeonhole bands
-    "eval_bradley_terry",   # one-pass match matrix + K-row MM rounds
-    "text_span_excise",     # positional gram explode + array rebuild
-    "pack_bin_ffd",         # grouped Arrow FFD sequence packing
-]
 
-# round-8 breadth: the exact-span excision family and the batch-vs-
-# corpus embedding admission join (both corpus-shuffle shapes)
-R8_ADDITIONS = [
-    "dedup_span_exact",     # positional gram postings -> dup-span excision
-    "dedup_embedding_incremental",  # batch vs corpus sign-LSH bucket join
-    "text_decontaminate_bloom",     # bloom-pruned exact eval-gram join
-    "pipeline_curation_funnel",     # one-pass 5-stage doc/token accounting
-    "sample_prototype_pruning",     # kmeans + per-cell difficulty-rank cap
-    "stream_dedup_embedding",       # stream-static bucket join admission
-    "dedup_span_winnowed",          # minimizer-sampled posting pair join
-    "ml_logreg_gd",                 # K unrolled exact-int64-gradient GD rounds
-]
-
-# round-9 breadth: the cross-modal composite, the admission form of
-# span dedup, the distillation chain, the log-rounds CC consumer, and
-# one representative of the bitwise sketch family
-R9_ADDITIONS = [
-    "mm_pair_dedup",        # dHash bands INTERSECT caption minhash bands
-    "stream_dedup_span",    # batch grams probed vs standing posting index
-    "ml_quality_distill",   # gopher labels -> 6 GD rounds -> holdout audit
-    "dedup_components",     # alternating-star CC (log-rounds contraction)
-    "sketch_countmin_heavy",  # d-exploded stream -> 12k-cell grid + probes
-]
-
-# round-10 breadth: the mergeable quantile sketch (its rollup twin and
-# streaming sibling are gate+test covered; the direct build is the
-# representative cost — the stream form pays 16 md5/row because leaf
-# pre-aggregation cannot chain before a streaming aggregate)
-R10_ADDITIONS = [
-    "sketch_quantile_dyadic",  # dyadic CM grid + 16-level fold descent
-    # r10 benched sim_ivfpq_topk (6.65 s — 9% of the headline); r11
-    # split it into trainer (topk: retrain + atomic artifact publish)
-    # and server (apply: consume pre-trained codebooks). The headline
-    # slot now times the SERVING path — the per-query cost a
-    # deployment pays; the trainer is a once-per-corpus build step
-    # whose cost is recorded in SCALING.md, and both keys stay in the
-    # oracle gate (VERDICT r10 #2).
-    "sim_ivfpq_apply",         # IVF cells -> PQ-coded ADC -> exact re-rank
-    "sketch_bloom_rollup",     # per-month filters, word-wise OR rollup
-    "profile_drift_ks",        # K-S from merged monthly quantile grids
-    "text_unigram_lm_em",      # 2-round hard-EM unigram tokenizer trainer
-]
-
-# round-11 breadth: the two new training-data transforms (both
-# single-scan shapes — they track the map-side/groupBy cost floor)
-R11_ADDITIONS = [
-    "text_fim_transform",    # PSM reordering, hash pivots, one projection
-    "dedup_canonical_text",  # normalize-then-hash dedup, one groupBy
-]
-
-# round-12 breadth: the real-codec decode map and the dedup-policy
-# composite (the three-policy chain with funnel accounting)
-R12_ADDITIONS = [
-    "mm_decode_png",          # zlib inflate + 5-filter unfilter, Arrow map
-    "pipeline_dedup_policy",  # canonical -> exact -> LSH -> soft weights
-    "mm_dhash_real",          # real-pixel dHash + brightness-twin hamming
-    "mm_image_quality_filter",  # blank/contrast gate on real pixel moments
-    "mm_audio_vad_segments",  # real-PCM RMS -> gaps-and-islands segments
-]
-
-# round-12 second wave: the training-order composite (mixture ->
-# shuffle -> pack -> manifest, the heaviest new shape), hard-mined
-# triplets (broadcast-anchor candidate join), and 3-round boosting
-# (corpus-rescan-per-round lazy chain)
-R12B_ADDITIONS = [
-    "pipeline_training_mixture",   # explode -> range shuffle -> pack
-    "sample_contrastive_triplets", # anchor-broadcast argmax mining
-    "ml_adaboost_stumps",          # 3 weighted-histogram boosting rounds
-    "text_kneser_ney_logprob",     # pair explode + vocab-bounded KN joins
-    "sample_pareto_skyline",       # scan + level groupBy + bounded cummax
-    "eval_bleu_corpus",            # clipped-gram pair joins + brevity
-]
-
-# round-13: the frequency-domain audio pair (integer STFT), the second
-# real image codec (pure-Python LZW — the heaviest per-row map of the
-# decode family), and the keyed-state-with-timers streaming composite
-# (4 sequential micro-batches + the no-data timer flush; the price is
-# micro-batch scheduling, an allowlist entry documents it)
-R13_ADDITIONS = [
-    "mm_audio_spectrogram",       # framed integer DFT, 1:1 Arrow map
-    "mm_audio_vad_band",          # band-gated VAD islands
-    "mm_decode_gif",              # LZW decode + palette, Arrow map
-    "mm_gif_frame_sample",        # animated-GIF multi-frame decode
-    "stream_stateful_admission",  # keyed state + event-time-timer TTL
-    "stream_session_finalize",    # emit-on-close sessions (gap + timer)
-]
-
-HEADLINE = (R2_HEADLINE + R3_ADDITIONS + R4_ADDITIONS + R4B_ADDITIONS
-            + R4C_ADDITIONS + R4D_ADDITIONS + R5_ADDITIONS + R7_ADDITIONS
-            + R8_ADDITIONS + R9_ADDITIONS + R10_ADDITIONS + R11_ADDITIONS
-            + R12_ADDITIONS + R12B_ADDITIONS + R13_ADDITIONS)
-
-# --- per-key time budget (VERDICT r10 #3) ------------------------------
-# No single headline key may exceed this many NORMALIZED seconds at
-# sf0.1 without a named allowlist entry saying why — the r10 headline
-# jump (one new 6.65 s key = 9% of the total) was only explainable
-# after manual attribution; this makes the next one fail the exit gate
-# instead. Budget applies to normalized seconds (host-load deflated) so
-# a busy box cannot flag a quiet-plan key.
-PER_KEY_BUDGET_SEC = 3.0
-# Allowlist entries are PER-KEY NUMERIC CEILINGS, not exemptions
-# (ADVICE r11: an unbounded entry re-opens the blind spot the budget
-# closes — an allowlisted key could regress to any duration unnoticed).
-# A key here may exceed the global budget up to ITS cap; beyond the cap
-# it violates like any other key. Rationale strings live in the
-# comments; the values are normalized seconds at sf0.1.
-PER_KEY_BUDGET_ALLOWLIST = {
-    # ANN serving composite: cell probe + per-query ADC maps + top-c
-    # exact re-rank over the published PQ-coded index; ~2.7 s quiet at
-    # sf0.1 (inside budget) — headroom because the chain is ~10 AQE
-    # stages of scheduling floor, which normalization under-corrects on
-    # a busy box (same mode that tripped mm_pair_dedup at 2.66 s quiet).
-    "sim_ivfpq_apply": 4.0,
-    # Cross-modal composite judged acceptable in the r10 plan audit:
-    # the fixture plants an (image, caption) pair per document so cost
-    # scales 1:1 with corpus; the caption leg is semi-join-reduced to
-    # image-band survivors (r9); steady-state ~2.7 s quiet.
-    "mm_pair_dedup": 4.0,
-    # dedup_components' r13 entry (4.0) is REMOVED in round 14: the
-    # connected-components rework collapsed the per-round barrier chain
-    # (pin+count+exceptAll -> ONE convergence-aggregate job per round,
-    # lazy pins), which was the burst-inflation mode the cap excused;
-    # the key now answers to the global 3.0 budget like any other
-    # (VERDICT r13 #9: shrink the allowlist by making keys cheap).
-    #
-    # The two keyed-state timer keys drain 4-5 SEQUENTIAL micro-batches
-    # plus the no-data timer flush — the cross-batch state/timer
-    # semantics ARE the thing being verified, and each micro-batch is
-    # ~1s of scheduling floor at any data size (state-partition sizing
-    # was tried and moved nothing; the batches cannot be parallelized
-    # by definition). Round 14 cut the per-key Python boundary work
-    # (~0.9 s/key measured A/B: template-copy output frames, 2-3 input
-    # columns instead of 4, vectorized SSF fold): quiet ~3.3-3.5 s at
-    # sf0.1, caps lowered 8.0 -> 6.5 (~2x quiet, the standard headroom
-    # ratio of this list).
-    "stream_stateful_admission": 6.5,
-    "stream_session_finalize": 6.5,
-}
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()  # noqa: SLF001
 
 
 def main() -> None:
-    # experiment hook (drift attribution, VERDICT r6 #7): restrict the
-    # run to a named subset, e.g. SPARK_GRAFT_BENCH_ONLY=r2 times the
-    # comparable set alone in a fresh session — isolating whether the
-    # r4->r6 subtotal drift is per-query or session-accumulation
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
-    global HEADLINE
-    if only == "r2":
-        HEADLINE = list(R2_HEADLINE)
-    elif only:
-        wanted = {k for k in only.split(",") if k}
-        unknown = wanted - set(HEADLINE)
-        subset = [k for k in HEADLINE if k in wanted]
-        # fail loudly on typos / empty selections: a silently empty run
-        # prints a zero headline_total that reads like a measurement
-        # (ADVICE r7)
-        if unknown or not subset:
-            raise SystemExit(
-                f"SPARK_GRAFT_BENCH_ONLY selects no headline keys: "
-                f"unknown={sorted(unknown)}; headline keys are {HEADLINE}"
-            )
-        HEADLINE = subset
+    keys = selected_keys()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     spark = get_spark()
@@ -292,260 +157,38 @@ def main() -> None:
     # measure scan/shuffle/compute throughput, not first-call compilation.
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
-        for key in HEADLINE:
+        for key in keys:
             try:
                 qs[key].fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
             except Exception:  # noqa: BLE001 — warm-up is best-effort
                 pass
         release_pins(spark)
 
-    # Host-load calibration probe (SCALING.md "bench-drift attribution"):
-    # cross-round drift on unchanged code measured as a UNIFORM ~1.1-1.2x
-    # multiplicative factor — shared-box background load. This fixed
-    # reference plan (scan + two-column agg over lineitem, no Python, no
-    # HOFs, plan unchanged across rounds) is timed the same min-of-N way;
-    # dividing any round's per-query numbers by the calibration ratio of
-    # the two rounds separates real regressions from a busy box.
-    calib_df = (
-        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg({"l_quantity": "sum", "l_extendedprice": "avg"})
-    )
-    calib = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        calib_df.write.format("noop").mode("overwrite").save()
-        calib = min(calib, time.perf_counter() - t0)
-
-    # second probe, COMPUTE-bound (round-9): a uniform 1.19x inflation
-    # on every unchanged key coexisted with a 1.04x scan-probe ratio —
-    # background CPU load that an IO/scan-shaped plan barely feels. An
-    # md5-per-row agg isolates the CPU axis; normalize compute-heavy
-    # keys (hashing, signatures, GD rounds) by THIS ratio instead.
-    calib_cpu_df = (
-        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-        .selectExpr(
-            "md5(concat(CAST(l_orderkey AS STRING), ':',"
-            " CAST(l_linenumber AS STRING))) AS h"
-        )
-        .selectExpr("count(DISTINCT substring(h, 1, 8)) AS n")
-    )
-    calib_cpu = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        calib_cpu_df.write.format("noop").mode("overwrite").save()
-        calib_cpu = min(calib_cpu, time.perf_counter() - t0)
-
-    # --- self-normalization (VERDICT r9 #1) --------------------------------
-    # The r9 artifact recorded once-per-run probes that both read QUIET
-    # (calib 0.164 vs r8 0.162; cpu 0.934) while every key slot inflated
-    # ~1.19x — transient load the run-start probes never saw. The fix is
-    # INTERLEAVING: both calibration probes bracket every key's reps, so
-    # each key gets a load measurement from ITS OWN time slot, and the
-    # per-key factor is the BUSIER axis: factor = clamp(max(r_scan,
-    # r_cpu), 1, 3), normalized = raw / factor. Rationale: contention
-    # observed on this box is sometimes CPU-shaped (r9: keys and the
-    # md5 probe both +19%, scan probe +4%) and sometimes memory-
-    # bandwidth-shaped (r10 build session: scan probe +30-60%, ALU
-    # probe flat), and every headline key both decodes parquet and
-    # computes, so the busier axis is the best single-slot estimate of
-    # what hit the key. Deflate-only (a quiet run is untouched — the
-    # normalization can never flatter a regression on a quiet box) and
-    # capped at 3x; both per-key ratios are emitted so the attribution
-    # is auditable. A key whose bottleneck axis was QUIET while the
-    # other was busy gets over-deflated — the cost of a single-slot
-    # estimate, bounded by the cap and visible in probe_ratios.
-    #
-    # Quiet references: the scan probe's plan is unchanged since r8 —
-    # its quiet value is the r8 driver artifact's 0.162 (re-confirmed
-    # 0.164 by the r9 driver run). The per-key CPU probe is a SMALL
-    # sibling of calibration_cpu_sec's plan (same md5+distinct shape
-    # over orders, ~1/4 the rows, ~0.44 s vs 0.96 s — cheap enough to
-    # run twice per key); its quiet value 0.42 was derived in the r10
-    # build session from 10 interleaved steady-state reps (mini/big =
-    # 0.413 at big = 0.956 quiet), discounted for the residual load
-    # visible in that window.
-    SCAN_REF = 0.162   # BENCH_r08 calibration_sec (same plan, same sf)
-    CPU_REF = 0.956    # SCALING.md round-9 quiet-window calibration_cpu
-    MINI_REF = 0.42    # small CPU probe quiet value (derivation above)
-    calib_mini_df = (
-        spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-        .selectExpr(
-            "md5(concat(CAST(o_orderkey AS STRING), ':',"
-            " CAST(o_custkey AS STRING))) AS h"
-        )
-        .selectExpr("count(DISTINCT substring(h, 1, 8)) AS n")
-    )
-    mini_min = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        calib_mini_df.write.format("noop").mode("overwrite").save()
-        mini_min = min(mini_min, time.perf_counter() - t0)
-    # refs hold only at the sf they were recorded at; elsewhere the
-    # factors pin to 1 and normalized == raw (flagged in the output)
-    refs_valid = abs(sf - 0.1) < 1e-9
-
-    def _probe(df) -> float:
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    # min-of-N per query (default 3 — VERDICT r11 #1b): the shared box
-    # has ~15-30 % run-to-run noise; the minimum is the least-interfered
-    # measurement of the same deterministic plan, which is what
-    # cross-round comparison wants. Reps are INTERLEAVED with both
-    # calibration probes (below), so every rep carries its own
-    # time-slot load estimate.
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     timings: dict[str, float] = {}
-    norm: dict[str, float] = {}
-    probe_lines: dict[str, list] = {}
-    # per-pin wall-clock from the winning rep (checkpoint.record_pin_timings,
-    # VERDICT r5 #7): an eager pin blocks until its stage materializes, so
-    # its call time IS that stage's cost — the per-stage anatomy SCALING.md
-    # uses for the expensive iterative keys
-    pin_lines: dict[str, list] = {}
-    record_pin_timings(True)
-    for key in HEADLINE:
+    jobs: dict[str, int] = {}
+    for key in keys:
         fn = qs[key].fn
         best = float("inf")
-        adj_mini = float("inf")
-        adj_scan = float("inf")
-        for _ in range(reps):
-            # bracket every rep with one sample of each probe; min-of-
-            # brackets matches the min-of-reps philosophy and tames
-            # single-sample spikes (observed 3x on a 0.2 s scan probe)
-            adj_scan = min(adj_scan, _probe(calib_df))
-            adj_mini = min(adj_mini, _probe(calib_mini_df))
-            drain_pin_timings(spark)  # discard leftovers
+        for _ in range(REPS):
+            j0 = _next_job_id(spark)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
-            pins = drain_pin_timings(spark)
             if dt < best:
                 best = dt
-                pin_lines[key] = [[lab, round(s, 3)] for lab, s in pins]
+                # every job the rep started, eager pins and streaming
+                # micro-batches included
+                jobs[key] = _next_job_id(spark) - j0
             release_pins(spark)  # free checkpoint blocks between reps
         timings[key] = round(best, 3)
-        r_cpu = adj_mini / MINI_REF if refs_valid else 1.0
-        r_scan = adj_scan / SCAN_REF if refs_valid else 1.0
-        norm[key] = round(best / min(3.0, max(1.0, r_cpu, r_scan)), 3)
-        probe_lines[key] = [round(r_cpu, 3), round(r_scan, 3)]
-    record_pin_timings(False)
 
-    # the named round-1/2 set gives the like-for-like subtotal for
-    # cross-round comparison; later additions widen coverage but
-    # inflate headline_total
-    r2_set = [k for k in R2_HEADLINE if k in timings]
-    top5 = sorted(timings, key=lambda k: timings[k], reverse=True)[:5]
-    budget_violations = {
-        k: v
-        for k, v in norm.items()
-        if v > PER_KEY_BUDGET_ALLOWLIST.get(k, PER_KEY_BUDGET_SEC)
-    }
-    summary = {
-        "metric": "headline_total",
-        "value": round(sum(timings.values()), 3),
-        "value_norm": round(sum(norm.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "subtotal_r2_comparable": round(
-            sum(timings[k] for k in r2_set), 3
-        ),
-        # sum of per-key NORMALIZED seconds — each key deflated by its
-        # own adjacent CPU-probe ratio (never inflated); this is the
-        # host-load-robust cross-round comparison line (VERDICT r9 #1)
-        "subtotal_r2_norm": round(sum(norm[k] for k in r2_set), 3),
-        # fixed reference plan, min of 3 — divide per-query
-        # numbers by the cross-round ratio of this line to
-        # normalize out host load (see SCALING.md)
-        "calibration_sec": round(calib, 3),
-        "calibration_cpu_sec": round(calib_cpu, 3),
-        # quiet-window references the normalization divides by, plus
-        # the per-run derived mini-probe reference (see comment above)
-        "calib_refs": {
-            "scan": SCAN_REF,
-            "cpu": CPU_REF,
-            "mini": MINI_REF,
-            "mini_run_min": round(mini_min, 3),
-            "valid": refs_valid,
-        },
-        # normalized-seconds overruns of PER_KEY_BUDGET_SEC with no
-        # allowlist entry; the exit gate goes RED on any entry here
-        "budget_violations": budget_violations,
-    }
-    # (pin label, seconds) per pinned stage of the 5 most
-    # expensive keys, from each key's winning rep — eager
-    # pins block, so these are real per-stage costs; probe_ratios =
-    # per-key [cpu_ratio, scan_ratio] from the interleaved probes
-    verbose = dict(
-        summary,
-        queries_norm=norm,
-        probe_ratios=probe_lines,
-        pin_stages={k: pin_lines[k] for k in top5 if pin_lines.get(k)},
-    )
-    print(json.dumps(verbose))
-    # The driver records only a 2000-char stdout TAIL and parses the
-    # LAST JSON line; every BENCH_r<=13 artifact has an empty per_query
-    # for exactly this reason (the full 91-key map at 3dp is ~2.5k chars
-    # and was printed on its own line, which the tail clipped —
-    # VERDICT r13 #1). The LAST line therefore carries the per-key map
-    # itself, 2dp, ordered by DESCENDING cost so a byte-budget cut drops
-    # only the cheapest keys: with the ~230-char head that is ~60+ of
-    # the 91 keys, covering >97% of the headline seconds.
-    # `queries_omitted`/`queries_omitted_sum` reconcile the cut against
-    # `value`; the COMPLETE maps (raw, normalized, probe ratios, pin
-    # stages) live in the verbose first line and in the
-    # `per_query_file` sidecar written next to the bench log.
-    def _fmt(v: float) -> str:
-        s = f"{v:.2f}"
-        return s.rstrip("0").rstrip(".") if "." in s else s
-
-    sidecar = "scripts/last_bench_queries.json"
+    sidecar: str | None = SIDECAR
     try:
         with open(sidecar, "w") as f:
-            json.dump(
-                {
-                    "queries": timings,
-                    "queries_norm": norm,
-                    "probe_ratios": probe_lines,
-                    "pin_stages": {
-                        k: pin_lines[k] for k in top5 if pin_lines.get(k)
-                    },
-                },
-                f,
-            )
+            json.dump({"queries": timings, "jobs": jobs}, f)
     except OSError:
-        sidecar = None  # bench output stays authoritative
-    head = dict(summary)
-    del head["queries"]
-    head["per_query_file"] = sidecar
-    by_cost = sorted(timings, key=lambda k: timings[k], reverse=True)
-    TAIL_BUDGET = 1900  # driver tail is 2000 chars; margin for the \n
-    base_len = len(json.dumps(head, separators=(",", ":")))
-    # fixed-cost fields of the final line beyond the head + entries:
-    # "queries":{...} plus the two reconciliation fields at max width
-    overhead = len('"queries":{},') + len('"queries_omitted":99,') + len(
-        '"queries_omitted_sum":999.99,'
-    )
-    budget = TAIL_BUDGET - base_len - overhead
-    kept: dict[str, float] = {}
-    used = 0
-    for k in by_cost:
-        entry = len(k) + 4 + len(_fmt(timings[k]))  # "k":v,
-        if used + entry > budget:
-            break
-        kept[k] = timings[k]
-        used += entry
-    omitted = [k for k in by_cost if k not in kept]
-    head["queries"] = {k: float(_fmt(kept[k])) for k in kept}
-    head["queries_omitted"] = len(omitted)
-    head["queries_omitted_sum"] = round(
-        sum(timings[k] for k in omitted), 2
-    )
-    print(json.dumps({"queries_norm": norm}, separators=(",", ":")))
-    print(json.dumps(head, separators=(",", ":")))
+        sidecar = None  # the final line stays authoritative
+    sys.stdout.write(final_line(timings, sf, sidecar))
 
 
 if __name__ == "__main__":

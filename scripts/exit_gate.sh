@@ -4,24 +4,26 @@
 # green AFTER its last code commit, in an order that keeps the bench
 # artifact trustworthy and couples the proof to HEAD mechanically:
 #
-#   0. refuse to run with uncommitted CODE (*.py/*.sh/*.sql) — the
-#      manifest must describe a commit, not a dirty tree
+#   0. refuse to run with uncommitted CODE (*.py/*.sh/*.sql) or an
+#      uncommitted bench baseline — the manifest must describe a
+#      commit, not a dirty tree
 #   1. idle-wait: block until 1-min loadavg is low enough that bench
 #      numbers mean something (or time out loudly)
 #   2. sf0.1 bench FIRST — before the mirror + 20-min pytest suite
-#      heat the box (r10/r11 recorded hot-box numbers) — full headline
-#      once + the comparable set twice more in fresh processes; the
-#      OFFICIAL number is the MEDIAN of the 3 subtotals (VERDICT r12
-#      #1: a single bounce draw can't be the number of record), with
-#      the per-key normalized budget and a consecutive-GATE agreement
-#      line
+#      heat the box — once; every key's raw min-of-3 seconds must stay
+#      within BENCH_MAX_RATIO of its entry in scripts/bench_baseline.json
+#      (the per-key median of idle runs' scripts/last_bench_queries.json
+#      taken on the box the gate runs on); a bench that fails or writes
+#      no sidecar is RED
 #   3. full oracle mirror at driver fidelity -> last_mirror_run.log
 #      (now with per-key wall times + top-10 slowest summary)
 #   4. COVERAGE.md regeneration + SURVEY.md key-index refresh
 #   5. survey completeness check
 #   6. full pytest
 #   7. fresh-process rotation age report (every key <= 2 rounds old)
-#   8. gate_manifest.json: git SHA + sha256 of both logs — the judge
+#   8. gate_manifest.json: git SHA + sha256 of both logs and of the
+#      baseline + the raw headline and the worst key's ratio to its
+#      baseline — the judge
 #      verifies the manifest's SHA is the round's last code commit and
 #      the committed logs hash to the manifest's digests; the gate goes
 #      RED if HEAD moved while it ran
@@ -35,10 +37,10 @@ TS_START=$(date -u +%Y-%m-%dT%H:%M:%SZ)
 echo "== exit gate: $TS_START @ ${SHA_START:0:10}"
 
 echo "== 0/8 clean-code check"
-DIRTY_CODE=$(git status --porcelain | grep -E '\.(py|sh|sql)$' || true)
+DIRTY_CODE=$(git status --porcelain | grep -E '(\.(py|sh|sql)|scripts/bench_baseline\.json)$' || true)
 if [ -n "$DIRTY_CODE" ]; then
   echo "$DIRTY_CODE"
-  echo "EXIT GATE RED: uncommitted code — commit before running the gate"
+  echo "EXIT GATE RED: uncommitted code or baseline — commit before running the gate"
   exit 1
 fi
 
@@ -60,44 +62,38 @@ PY
 done
 LOAD_AT_BENCH=$(cut -d' ' -f1 /proc/loadavg)
 
-echo "== 2/8 bench per-key budget (sf0.1; full headline once + comparable set 2 more times, official number = MEDIAN of the 3 subtotals — VERDICT r12 #1)"
-PREV_MEDIAN=$(python - <<'PY' 2>/dev/null
-import json
-m = json.load(open("scripts/gate_manifest.json"))
-print(m.get("bench_r2_median", m.get("bench_subtotal_r2_norm", "")))
-PY
-)
+# Largest per-key ratio (raw min-of-3 / baseline) the gate accepts.
+# The baseline is the per-key median of five idle runs of unchanged
+# code on a 4-core box; one of those runs reached 2.32x of it on a key
+# (src_csv_multiline_split, 0.69 s vs 0.30 s), so a tighter bound would
+# go RED on noise.
+BENCH_MAX_RATIO=2.5
+echo "== 2/8 bench vs same-box baseline (sf0.1; RED above ${BENCH_MAX_RATIO}x on any key)"
+# a stale sidecar or worst-key file must not stand in for this run's
+rm -f scripts/last_bench_queries.json /tmp/gate_bench_worst.json
 python bench.py 2>/dev/null | tee scripts/last_bench_run.log | tail -1
-for i in 1 2; do
-  echo "-- comparable-set rerun $i/2 (fresh process)"
-  SPARK_GRAFT_BENCH_ONLY=r2 python bench.py 2>/dev/null \
-    | tee "scripts/bench_gate_r2_run$i.log" | tail -1
-done
-python - "$PREV_MEDIAN" <<'PY' || { echo "EXIT GATE RED: per-key bench budget exceeded"; exit 1; }
-import json, statistics, sys
+rc=${PIPESTATUS[0]}
+[ "$rc" -eq 0 ] || { echo "EXIT GATE RED: bench exit $rc"; exit 1; }
+python - "$BENCH_MAX_RATIO" <<'PY' || { echo "EXIT GATE RED: bench sidecar missing or a key off its baseline"; exit 1; }
+import json, sys
 
-def head(path):
-    lines = [l for l in open(path) if l.strip().startswith("{")]
-    return json.loads(lines[-1])
-
-main = head("scripts/last_bench_run.log")
-viol = main.get("budget_violations", {})
-if viol:
-    print(f"budget violations (> normalized per-key cap): {viol}")
+limit = float(sys.argv[1])
+run = json.load(open("scripts/last_bench_queries.json"))["queries"]
+base = json.load(open("scripts/bench_baseline.json"))["queries"]
+if set(run) != set(base):
+    print(f"keys with no baseline entry: {sorted(set(run) - set(base))}; "
+          f"baseline keys not run: {sorted(set(base) - set(run))}")
     sys.exit(1)
-print("per-key budget ok (violations: none)")
-subs = [main.get("subtotal_r2_norm")] + [
-    head(f"scripts/bench_gate_r2_run{i}.log").get("subtotal_r2_norm")
-    for i in (1, 2)
-]
-med = round(statistics.median(subs), 3)
-print(f"comparable subtotals (3 fresh-process runs): {subs}; MEDIAN = {med}")
-prev = sys.argv[1]
-if prev:
-    delta = (med - float(prev)) / float(prev) * 100
-    tag = "ok (<=10%)" if abs(delta) <= 10 else "ABOVE the 10% agreement bar"
-    print(f"consecutive-GATE agreement: median {prev} -> {med} "
-          f"({delta:+.1f}%, {tag})")
+ratios = {k: run[k] / base[k] for k in run}
+worst = max(ratios, key=ratios.get)
+print(f"worst key {worst}: {run[worst]} s vs baseline {base[worst]} s "
+      f"({ratios[worst]:.3f}x, limit {limit}x)")
+json.dump({"key": worst, "ratio": round(ratios[worst], 3)},
+          open("/tmp/gate_bench_worst.json", "w"))
+over = {k: round(r, 3) for k, r in ratios.items() if r > limit}
+if over:
+    print(f"keys above the limit: {over}")
+    sys.exit(1)
 PY
 
 echo "== 3/8 full oracle mirror (sf0.01)"
@@ -130,7 +126,7 @@ if [ "$SHA_END" != "$SHA_START" ]; then
   echo "EXIT GATE RED: HEAD moved during the gate ($SHA_START -> $SHA_END) — re-run at the final commit"
   exit 1
 fi
-python - "$SHA_START" "$TS_START" "$LOAD_AT_BENCH" <<'PY'
+python - "$SHA_START" "$TS_START" "$LOAD_AT_BENCH" <<'PY' || { echo "EXIT GATE RED: manifest"; exit 1; }
 import hashlib, json, subprocess, sys, time
 
 def sha256(p):
@@ -138,12 +134,7 @@ def sha256(p):
 
 bench = [l for l in open("scripts/last_bench_run.log") if l.strip().startswith("{")]
 head = json.loads(bench[-1])
-import statistics
-r2_subs = [head.get("subtotal_r2_norm")]
-for i in (1, 2):
-    lines = [l for l in open(f"scripts/bench_gate_r2_run{i}.log")
-             if l.strip().startswith("{")]
-    r2_subs.append(json.loads(lines[-1]).get("subtotal_r2_norm"))
+worst = json.load(open("/tmp/gate_bench_worst.json"))
 age = 0
 for line in subprocess.run(
     [sys.executable, "scripts/mirror_rotate.py", "--report"],
@@ -157,17 +148,10 @@ manifest = {
     "loadavg_at_bench": float(sys.argv[3]),
     "mirror_log_sha256": sha256("scripts/last_mirror_run.log"),
     "bench_log_sha256": sha256("scripts/last_bench_run.log"),
-    "bench_r2_run_log_sha256": [
-        sha256(f"scripts/bench_gate_r2_run{i}.log") for i in (1, 2)
-    ],
-    "bench_subtotal_r2_norm": head.get("subtotal_r2_norm"),
-    # the round's OFFICIAL comparable number: median of 3 fresh-process
-    # subtotals (full-headline run + 2 comparable-set reruns) — a single
-    # tail-wind/bounce draw can no longer be the number of record
-    # (VERDICT r12 #1)
-    "bench_r2_subtotals": r2_subs,
-    "bench_r2_median": round(statistics.median(r2_subs), 3),
-    "bench_headline_norm": head.get("value_norm"),
+    "bench_baseline_sha256": sha256("scripts/bench_baseline.json"),
+    "bench_headline": head.get("value"),
+    "bench_worst_key": worst["key"],
+    "bench_worst_ratio": worst["ratio"],
     "pytest_tail": open("/tmp/gate_pytest_tail").read().strip().splitlines()[-1],
     "oldest_fresh_process_age_rounds": age,
 }
@@ -176,4 +160,4 @@ print(json.dumps(manifest, indent=1))
 PY
 
 echo "== exit gate GREEN: $(date -u +%Y-%m-%dT%H:%M:%SZ) @ ${SHA_START:0:10}"
-echo "   commit scripts/last_mirror_run.log scripts/last_bench_run.log scripts/gate_manifest.json (+ regenerated COVERAGE/SURVEY) in the round-close commit"
+echo "   commit scripts/last_mirror_run.log scripts/last_bench_run.log scripts/last_bench_queries.json scripts/gate_manifest.json (+ regenerated COVERAGE/SURVEY) in the round-close commit"

@@ -268,8 +268,6 @@ NESTED_LOOP_STAGE_ALLOWED = {
     ("text_unigram_lm_em", "ulm_cnt2"),
     ("text_unigram_encode_docs", "ulm_cnt1"),
     ("text_unigram_encode_docs", "ulm_cnt2"),
-    # 1-row max-month fold splitting the stored monthly grids
-    ("profile_drift_ks", "ks_side_grid"),
 }
 
 # stage plans allowed an unpartitioned WindowExec: (key, pin label),
