@@ -29,7 +29,7 @@ Mode selection (first match wins):
 Every pin is tracked per-session so harnesses can free executor storage
 between queries (``release_pins``) — repeated invocations in one session
 otherwise accumulate checkpoint blocks (bounded per-session, but real:
-182 registered queries × a few MB each adds up). Iterative loops release
+429 registered queries × a few MB each adds up). Iterative loops release
 the previous round's pin as soon as the next round is materialized
 (``release``). A released DataFrame must not be recomputed afterwards —
 its lineage was truncated; release only after the result is consumed.

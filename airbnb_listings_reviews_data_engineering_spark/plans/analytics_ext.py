@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..operators.ordered import ordered_scan
 from .registry import load, register
 
 # ------------------------------------------------------------- funnel
@@ -1032,8 +1033,8 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     (value, weight) order, integer weights so the half-total
     comparison is exact (cw*2 >= tw avoids the float half), and a
     min() to pick the crossing value. Same shape at any group count;
-    a single giant group falls back to xform_quantile_bin's global
-    decomposition."""
+    a single giant group falls back to ordered_scan's global running
+    sum."""
     li = load(spark, sf_dir, "lineitem")
     w = li.select(
         "l_returnflag",
@@ -1743,84 +1744,34 @@ def agg_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Pareto point: how few top customers cover 80 % of revenue —
     the concentration readout next to agg_gini_concentration's
     coefficient. The oracle states the spec as one global
-    descending-revenue cumsum; THIS plan is the EIGHTH user of the
-    range-partition + Arrow-local-cumsum + broadcast-prefix-offset
-    decomposition (repartitionByRange on (-cents, key) so descending
-    order maps to ascending ranges) — no single-partition window. The
-    crossing rank resolves with exact integer comparison
-    (cum*100 >= total*80, no float percentage)."""
-    import pandas as pd
-
+    descending-revenue cumsum; the plan takes the running revenue, the
+    rank and both totals from `ordered_scan`. The crossing rank
+    resolves with exact integer comparison (cum*100 >= total*80, no
+    float percentage)."""
     o = load(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias(
             "cents"
         )
     )
-    n_parts = 8
-    d = (
-        cust.select("o_custkey", "cents", (-F.col("cents")).alias("neg"))
-        .repartitionByRange(n_parts, "neg", "o_custkey")
-        .sortWithinPartitions("neg", "o_custkey")
-        .withColumn("pid", F.spark_partition_id())
-    )
-    from ..checkpoint import pin
-
-    d = pin(d, label="pareto_ranked")
-
-    def cum_local(batches):
-        seen_c = 0
-        seen_n = 0
-        for pdf in batches:
-            cum = pdf["cents"].cumsum() + seen_c
-            out = pd.DataFrame(
-                {
-                    "pid": pdf["pid"],
-                    "cents": pdf["cents"],
-                    "local_cum": cum,
-                    "local_rk": range(seen_n + 1, seen_n + 1 + len(pdf)),
-                }
-            )
-            seen_c = int(cum.iloc[-1]) if len(cum) else seen_c
-            seen_n += len(pdf)
-            yield out
-
-    local = d.mapInPandas(
-        cum_local, schema="pid int, cents long, local_cum long, local_rk long"
-    )
-    totals = d.groupBy("pid").agg(
-        F.sum("cents").alias("tc"), F.count("*").alias("tn")
-    )
-    w_off = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = totals.select(
-        "pid",
-        F.coalesce(F.sum("tc").over(w_off), F.lit(0)).alias("c_off"),
-        F.coalesce(F.sum("tn").over(w_off), F.lit(0)).alias("n_off"),
-    )
-    grand = totals.agg(
-        F.sum("tc").alias("total"), F.sum("tn").alias("n")
-    )
-    ranked = (
-        local.join(F.broadcast(offsets), "pid")
-        .select(
-            (F.col("c_off") + F.col("local_cum")).alias("cum"),
-            (F.col("n_off") + F.col("local_rk")).alias("rk"),
-        )
-        .crossJoin(F.broadcast(grand))
+    ranked = ordered_scan(
+        cust, [F.desc("cents"), F.asc("o_custkey")], ["cents"],
+        label="pareto_ranked",
     )
     return (
-        ranked.filter(F.col("cum") * 100 >= F.col("total") * _PARETO_TARGET)
-        .agg(
-            F.first("n").alias("n_customers"),
-            F.min("rk").alias("n_top"),
+        ranked.filter(
+            F.col("cum_cents") * 100 >= F.col("total_cents") * _PARETO_TARGET
         )
-        .crossJoin(F.broadcast(grand.select(F.col("n").alias("n2"))))
+        .agg(
+            F.max("n_rows").alias("n_customers"),
+            F.min("pos").alias("n_top"),
+        )
         .select(
             F.col("n_customers").cast("bigint").alias("n_customers"),
             F.col("n_top").cast("bigint").alias("n_top"),
-            F.round(F.col("n_top") / F.col("n2").cast("double"), 4).alias(
-                "customer_share"
-            ),
+            F.round(
+                F.col("n_top") / F.col("n_customers").cast("double"), 4
+            ).alias("customer_share"),
             F.round(F.lit(_PARETO_TARGET) / 100.0, 4).alias(
                 "revenue_share_target"
             ),

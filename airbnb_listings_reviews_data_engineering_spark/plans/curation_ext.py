@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import pin
 from ..functions.arrays import as_double_array, gram_positions
+from ..operators.ordered import ordered_scan
 from .registry import load, register
 
 # ---------------------------------------------------------------------------
@@ -461,55 +462,20 @@ def pack_length_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     folding approximation of best-fit-decreasing bin packing that
     loader-side context packing uses to cut padding waste (each pair
     targets a uniform token budget; an odd middle element packs
-    alone). The oracle states the spec as one global row_number; THIS
-    plan uses the repo's prefix-sum decomposition (shuffle_
-    deterministic / pack_token_shards): repartitionByRange on the sort
-    key + local Arrow enumeration + broadcast partition-count offsets —
-    no single-partition window. The pairing itself is an equi-join on
-    the complement rank (unique keys, no skew), and the 1-row corpus
-    count broadcasts. At 100 TB: one range shuffle + one hash join,
-    both on unique keys."""
-    import pandas as pd
-
-    n_parts = 8
-    d = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.size(F.split("text", " ")).alias("n_tok"))
-        .repartitionByRange(n_parts, F.desc("n_tok"), F.asc("doc_id"))
-        .sortWithinPartitions(F.desc("n_tok"), F.asc("doc_id"))
-        .withColumn("pid", F.spark_partition_id())
+    alone). The oracle states the spec as one global row_number; the
+    plan takes the rank and the corpus count from `ordered_scan`. The
+    pairing itself is an equi-join on the complement rank (unique keys,
+    no skew). At 100 TB: one range shuffle + one hash join, both on
+    unique keys."""
+    d = load(spark, sf_dir, "documents").select(
+        "doc_id", F.size(F.split("text", " ")).alias("n_tok")
     )
-    d = pin(d, label="pack_pairs_ranked")
-
-    def enumerate_local(batches):
-        seen = 0
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_tok": pdf["n_tok"],
-                    "pid": pdf["pid"],
-                    "local_pos": range(seen + 1, seen + 1 + len(pdf)),
-                }
-            )
-            seen += len(pdf)
-            yield out
-
-    local = d.mapInPandas(
-        enumerate_local, schema="doc_id long, n_tok int, pid int, local_pos long"
-    )
-    counts = d.groupBy("pid").agg(F.count("*").alias("cnt"))
-    w_off = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("offset")
-    )
-    total = counts.agg(F.sum("cnt").alias("n"))
     # pinned: both pairing sides read `ranked`; without the pin the
-    # Arrow enumeration and the 8-row offsets window execute twice
+    # offsets window and its join execute twice
     ranked = pin(
-        local.join(F.broadcast(offsets), "pid")
-        .select("doc_id", "n_tok", (F.col("offset") + F.col("local_pos")).alias("pos"))
-        .crossJoin(F.broadcast(total)),
+        ordered_scan(
+            d, [F.desc("n_tok"), F.asc("doc_id")], label="pack_pairs_ranked"
+        ).select("doc_id", "n_tok", "pos", F.col("n_rows").alias("n")),
         label="pack_pairs_pos",
     )
     a = ranked.select("doc_id", "n_tok", "pos", "n")
@@ -1818,58 +1784,23 @@ def ml_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity: AUC = (R_pos - n_pos(n_pos+1)/2) / (n_pos * n_neg), so
     the whole curve-integral collapses to ONE global rank and three
     integer sums — no threshold sweep, no curve materialization. The
-    global rank is the repo's SEVENTH user of the range-partition +
-    Arrow-local-enumerate + broadcast-prefix-offset decomposition
-    (shuffle_deterministic's shape — no single-partition window at
-    any SF); ties broken deterministically by (score, key) on both
-    engines, so the statistic is reproducible to the last ulp. Scores
-    are the same deterministic sigmoid ml_calibration_bins audits —
-    together they are the ranking-quality + calibration eval pair."""
-    import pandas as pd
-
+    global rank comes from `ordered_scan`; ties are broken
+    deterministically by (score, key) on both engines, so the statistic
+    is reproducible to the last ulp. Scores are the same deterministic
+    sigmoid ml_calibration_bins audits — together they are the
+    ranking-quality + calibration eval pair."""
     o = load(spark, sf_dir, "orders")
     p = F.round(
         1.0 / (1.0 + F.exp(-(F.col("o_totalprice") / 250000.0 - 1.0))), 6
     )
-    n_parts = 8
-    d = (
-        o.select(
-            "o_orderkey",
-            F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
-            p.alias("p"),
-        )
-        .repartitionByRange(n_parts, "p", "o_orderkey")
-        .sortWithinPartitions("p", "o_orderkey")
-        .withColumn("pid", F.spark_partition_id())
+    d = o.select(
+        "o_orderkey",
+        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
+        p.alias("p"),
     )
-    d = pin(d, label="auc_ranked")
-
-    def enumerate_local(batches):
-        seen = 0
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "y": pdf["y"],
-                    "pid": pdf["pid"],
-                    "local_pos": range(seen + 1, seen + 1 + len(pdf)),
-                }
-            )
-            seen += len(pdf)
-            yield out
-
-    local = d.mapInPandas(
-        enumerate_local, schema="y int, pid int, local_pos long"
-    )
-    counts = d.groupBy("pid").agg(F.count("*").alias("cnt"))
-    w_off = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("offset")
-    )
-    ranked = local.join(F.broadcast(offsets), "pid").select(
-        "y", (F.col("offset") + F.col("local_pos")).alias("rk")
-    )
+    ranked = ordered_scan(d, ["p", "o_orderkey"], label="auc_ranked")
     m = ranked.agg(
-        F.sum(F.when(F.col("y") == 1, F.col("rk")).otherwise(0)).alias(
+        F.sum(F.when(F.col("y") == 1, F.col("pos")).otherwise(0)).alias(
             "pos_ranksum"
         ),
         F.sum("y").alias("n_pos"),

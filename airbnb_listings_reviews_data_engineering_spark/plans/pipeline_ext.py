@@ -25,6 +25,7 @@ from ..operators import dedup as D
 from ..operators import multimodal as MM
 from ..operators import similarity as S
 from ..operators import text as TX
+from ..operators.ordered import ordered_scan
 from .registry import fan_out, load, register
 
 # --- shared corpus builders -------------------------------------------------
@@ -2971,52 +2972,18 @@ def mm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, shard, byte offset WITHIN the shard, length) — exactly what
     a loader needs to range-request one sample out of object storage.
 
-    The oracle states the spec as a single global byte cumsum; this plan
-    runs the scale decomposition (pack_token_shards' device, on bytes):
-    repartitionByRange(doc_id) + per-partition Arrow cumsum + a
-    broadcast n_parts-row prefix offset — no single-partition window
-    touches the corpus. The within-shard offset subtracts the shard's
-    min start via a window PARTITIONED by shard (per-shard state, scale
-    safe; shard count grows with bytes so it is never broadcast)."""
-    import pandas as pd
+    The oracle states the spec as a single global byte cumsum; the plan
+    takes it from `ordered_scan`. The within-shard offset subtracts the
+    shard's min start via a window PARTITIONED by shard (per-shard
+    state, scale safe; shard count grows with bytes so it is never
+    broadcast)."""
     from pyspark.sql import Window as W
 
-    n_parts = 8
-    d = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.octet_length("text").cast("bigint").alias("nb"))
-        .repartitionByRange(n_parts, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .withColumn("pid", F.spark_partition_id())
+    d = load(spark, sf_dir, "documents").select(
+        "doc_id", F.octet_length("text").cast("bigint").alias("nb")
     )
-    d = pin(d, label="mm_shard_manifest")
-
-    def cumsum_local(batches):
-        seen = 0
-        for pdf in batches:
-            cum = pdf["nb"].cumsum() + seen
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "pid": pdf["pid"],
-                    "nb": pdf["nb"],
-                    "local_cum": cum,
-                }
-            )
-            seen = int(cum.iloc[-1]) if len(cum) else seen
-
-    local = d.mapInPandas(
-        cumsum_local, schema="doc_id long, pid int, nb long, local_cum long"
-    )
-    totals = d.groupBy("pid").agg(F.sum("nb").alias("b"))
-    w_off = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = totals.select(
-        "pid", F.coalesce(F.sum("b").over(w_off), F.lit(0)).alias("poff")
-    )
-    s = local.join(F.broadcast(offsets), "pid").select(
-        "doc_id",
-        "nb",
-        (F.col("poff") + F.col("local_cum") - F.col("nb")).alias("strt"),
+    s = ordered_scan(d, ["doc_id"], ["nb"], label="mm_shard_manifest").select(
+        "doc_id", "nb", (F.col("cum_nb") - F.col("nb")).alias("strt")
     )
     s = s.withColumn(
         "shard", F.floor(F.col("strt") / _SHARD_BUDGET).cast("bigint")
@@ -3503,7 +3470,7 @@ def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     word's contribution lands in the ONE bucket where its min(doc_id)
     falls (one explode + one word-keyed min agg), and the cumulative
     sum runs over the #buckets-row frame only — allowlisted tiny
-    window, like the prefix-sum decompositions. Token counts ride the
+    window, like ordered_scan's offsets. Token counts ride the
     same explode."""
     w = load(spark, sf_dir, "documents").select(
         (F.col("doc_id") / 100).cast("bigint").alias("bucket"),

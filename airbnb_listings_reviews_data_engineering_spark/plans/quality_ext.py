@@ -22,9 +22,9 @@ transform tasks — made explicit, auditable, and scale-safe):
 - `split_kfold`: leakage-safe k-fold assignment by group hash;
 - `agg_heavy_hitters`: exact relative-frequency heavy hitters with a
   1-row broadcast total;
-- `xform_quantile_bin`: global-rank decile binning via the
-  range-partition + local-cumsum + broadcast-prefix-offset
-  decomposition (no single-partition window at any scale).
+- `xform_quantile_bin`: global-rank decile binning on
+  `operators/ordered.ordered_scan` (no single-partition window at any
+  scale).
 
 All oracles are exact ANSI SQL over the same parquet tables.
 """
@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import pin
 from ..functions.hashing import hash60, hash60_duckdb_sql
+from ..operators.ordered import ordered_scan
 from .registry import load, register
 
 # ---------------------------------------------------------------------------
@@ -683,55 +684,15 @@ FROM r GROUP BY 1
 def xform_quantile_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact decile (equal-FREQUENCY) binning — the feature-engineering
     quantile bucketizer. The oracle states the spec as a global
-    row_number + count window; THIS plan never runs a single-partition
-    pass: it is the same prefix-sum decomposition as
-    `shuffle_deterministic` — repartitionByRange(price, key) +
-    sortWithinPartitions splits the global price order across range
-    partitions, each partition enumerates locally (Arrow-batched narrow
-    op), and global rank = local rank + broadcast prefix offsets of the
-    per-partition counts; the bin total rides the same tiny offsets
-    frame (sum over ~n_parts rows). The only wide ops are the range
-    shuffle and the final per-decile aggregate — global ntile() would
-    move the entire table through ONE task."""
-    import pandas as pd
-
-    n_parts = 8
-    d = (
-        load(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice")
-        .repartitionByRange(n_parts, "o_totalprice", "o_orderkey")
-        .sortWithinPartitions("o_totalprice", "o_orderkey")
-        .withColumn("pid", F.spark_partition_id())
-    )
-    d = pin(d, label="quantile_bin")
-
-    def enumerate_local(batches):
-        seen = 0
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "pid": pdf["pid"],
-                    "o_totalprice": pdf["o_totalprice"],
-                    "local_pos": range(seen + 1, seen + 1 + len(pdf)),
-                }
-            )
-            seen += len(pdf)
-            yield out
-
-    local = d.mapInPandas(
-        enumerate_local, schema="pid int, o_totalprice double, local_pos long"
-    )
-    counts = d.groupBy("pid").agg(F.count("*").alias("cnt"))
-    w_off = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid",
-        F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("offset"),
-    ).crossJoin(F.broadcast(counts.agg(F.sum("cnt").alias("total"))))
-    rk = F.col("offset") + F.col("local_pos")
+    row_number + count window; the plan takes the rank and the count
+    from `ordered_scan`, so the only wide ops are its range shuffle and
+    the final per-decile aggregate — global ntile() would move the
+    entire table through ONE task."""
+    d = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     return (
-        local.join(F.broadcast(offsets), "pid")
+        ordered_scan(d, ["o_totalprice", "o_orderkey"], label="quantile_bin")
         .select(
-            F.floor(((rk - 1) * 10.0) / F.col("total"))
+            F.floor(((F.col("pos") - 1) * 10.0) / F.col("n_rows"))
             .cast("bigint")
             .alias("decile"),
             "o_totalprice",

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..checkpoint import pin
 
 from ..functions.hashing import hash60, hash60_duckdb_sql
+from ..operators.ordered import ordered_scan
 from .registry import load, register
 
 # ---------------------------------------------------------------------------
@@ -183,71 +184,16 @@ def pack_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~2000-token shards by running token count (shard = the budget bucket
     the doc STARTS in — every shard except the last holds >= 2000 tokens
     once its boundary doc lands). This is the sequence-packing shape of
-    LLM pretraining loaders.
-
-    The oracle states the spec as one global running sum; THIS plan never
-    runs a single-partition window (the r3 verdict's one weak plan). It
-    is the prefix-sum decomposition of the global cumsum — the same one
-    `shuffle_deterministic` uses for global row enumeration, applied to a
-    running TOKEN total: repartitionByRange(doc_id) +
-    sortWithinPartitions splits the global doc order across range
-    partitions; each partition computes its local running token sum
-    (Arrow-batched, order-preserving, narrow); the global cumsum is
-    local_cum + the prefix sum of preceding partitions' token TOTALS (a
-    partition-count-sized broadcast). The only wide ops are the range
-    shuffle and the final shard aggregation — exactly what a 100 TB
-    corpus pack requires.
+    LLM pretraining loaders. The oracle states the spec as one global
+    running sum; the plan takes it from `ordered_scan`.
     """
-    import pandas as pd
-
-    n_parts = 8
-    d = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.size(F.split("text", " ")).alias("n_tok"))
-        .repartitionByRange(n_parts, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .withColumn("pid", F.spark_partition_id())
-    )
-
-    def cumsum_local(batches):
-        seen = 0
-        for pdf in batches:
-            cum = pdf["n_tok"].cumsum() + seen
-            out = pd.DataFrame(
-                {
-                    "pid": pdf["pid"],
-                    "n_tok": pdf["n_tok"],
-                    "local_cum": cum,
-                }
-            )
-            seen = int(cum.iloc[-1]) if len(cum) else seen
-            yield out
-
-    # The cumsum runs on the LIVE range-shuffled frame (narrow, order
-    # preserved by sortWithinPartitions), and what gets pinned is its
-    # OUTPUT, with pid and local_cum baked in as data columns. Pinning
-    # the ranged input instead (the pre-r13 shape) was wrong in
-    # `parquet` checkpoint mode: the staged files are re-read under
-    # Spark's bin-packing, so one read partition could concatenate
-    # several original pids and the `seen` carry double-counted across
-    # the boundary (ADVICE r12). Downstream of this pin only layout-
-    # independent ops (groupBy pid, broadcast join) remain; the pin is
-    # still shared by the totals job and the shard aggregation.
-    local = pin(
-        d.mapInPandas(
-            cumsum_local, schema="pid int, n_tok int, local_cum long"
-        ),
-        label="pack_token_shards",
-    )
-    totals = local.groupBy("pid").agg(F.sum("n_tok").alias("tok"))
-    w_off = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = totals.select(
-        "pid", F.coalesce(F.sum("tok").over(w_off), F.lit(0)).alias("offset")
+    d = load(spark, sf_dir, "documents").select(
+        "doc_id", F.size(F.split("text", " ")).alias("n_tok")
     )
     return (
-        local.join(F.broadcast(offsets), "pid")
+        ordered_scan(d, ["doc_id"], ["n_tok"], label="pack_token_shards")
         .select(
-            ((F.col("offset") + F.col("local_cum") - F.col("n_tok")) / 2000)
+            ((F.col("cum_n_tok") - F.col("n_tok")) / 2000)
             .cast("bigint")
             .alias("shard"),
             "n_tok",
@@ -491,59 +437,18 @@ def shuffle_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded deterministic global shuffle — the per-epoch corpus
     reshuffle of a training loader. Order = hash60('ep<seed>:' || id):
     reproducible across retries and partitionings (no rand() state), a
-    new permutation per epoch seed.
-
-    The oracle states the spec as one global row_number; THIS plan never
-    runs a single-partition pass. It is the zipWithIndex decomposition:
-    repartitionByRange(hk) + sortWithinPartitions gives the total order
-    split across range partitions; each partition enumerates its rows
-    locally (Arrow-batched cumulative count, order-preserving narrow
-    op); global position = local position + the prefix sum of preceding
-    partitions' row counts (a partition-count-sized broadcast). The only
-    wide op is the range shuffle itself — exactly what 100 TB requires.
+    new permutation per epoch seed. The oracle states the spec as one
+    global row_number; the plan takes it from `ordered_scan`.
     """
-    import pandas as pd
-
-    n_parts = 8
     d = (
         load(spark, sf_dir, "documents")
         .select("doc_id")
         .withColumn(
             "hk", hash60(F.concat(F.lit("ep42:"), F.col("doc_id").cast("string")))
         )
-        .repartitionByRange(n_parts, "hk", "doc_id")
-        .sortWithinPartitions("hk", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
     )
-    # shared by the offsets job and the final projection: compute the
-    # range shuffle once; pin() tracks the blocks so the harness frees
-    # them between queries (release_pins) instead of accumulating
-    # per-invocation executor storage (ADVICE r2).
-    d = pin(d, label="epoch_shuffle")
-
-    def enumerate_local(batches):
-        seen = 0
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "pid": pdf["pid"],
-                    "local_pos": range(seen + 1, seen + 1 + len(pdf)),
-                }
-            )
-            seen += len(pdf)
-            yield out
-
-    local = d.mapInPandas(
-        enumerate_local, schema="doc_id long, pid int, local_pos long"
-    )
-    counts = d.groupBy("pid").agg(F.count("*").alias("cnt"))
-    w_off = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("offset")
-    )
-    return local.join(F.broadcast(offsets), "pid").select(
-        "doc_id", (F.col("offset") + F.col("local_pos")).alias("shuffle_pos")
+    return ordered_scan(d, ["hk", "doc_id"], label="epoch_shuffle").select(
+        "doc_id", F.col("pos").alias("shuffle_pos")
     )
 
 
@@ -713,69 +618,21 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric (0 = every order equal, ->1 = one order is all the
     revenue), via the sorted-rank identity
     G = sum((2*rank - n - 1) * x_rank) / (n * sum(x)). The oracle
-    states it as a global row_number; THIS plan runs the same
-    range-partition + Arrow-local-enumeration + broadcast-prefix-offset
-    decomposition as xform_quantile_bin — no single-partition window.
-    Everything accumulates in exact integers (cents x ranks; at >10^9
-    rows the weighted sum outgrows int64 — promote to DECIMAL(38,0),
-    same plan) and the one division happens at the end, so the
-    statistic is bitwise reproducible."""
-    import pandas as pd
-
-    n_parts = 8
-    d = (
-        load(spark, sf_dir, "orders")
-        .select(
-            "o_orderkey",
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c"),
-        )
-        .repartitionByRange(n_parts, "c", "o_orderkey")
-        .sortWithinPartitions("c", "o_orderkey")
-        .withColumn("pid", F.spark_partition_id())
+    states it as a global row_number; the plan takes the rank, n and
+    sum(x) from `ordered_scan`. Everything accumulates in exact
+    integers (cents x ranks; at >10^9 rows the weighted sum outgrows
+    int64 — promote to DECIMAL(38,0), same plan) and the one division
+    happens at the end, so the statistic is bitwise reproducible."""
+    d = load(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c"),
     )
-    d = pin(d, label="gini")
-
-    def enumerate_local(batches):
-        seen = 0
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "pid": pdf["pid"],
-                    "c": pdf["c"],
-                    "local_pos": range(seen + 1, seen + 1 + len(pdf)),
-                }
-            )
-            seen += len(pdf)
-            yield out
-
-    local = d.mapInPandas(
-        enumerate_local, schema="pid int, c long, local_pos long"
-    )
-    counts = d.groupBy("pid").agg(F.count("*").alias("cnt"))
-    w_off = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("offset")
-    ).crossJoin(
-        F.broadcast(
-            d.agg(F.count("*").alias("n"), F.sum("c").alias("s"))
-        )
-    )
-    rk = F.col("offset") + F.col("local_pos")
-    return (
-        local.join(F.broadcast(offsets), "pid")
-        .select(
-            "n",
-            "s",
-            ((2 * rk - F.col("n") - 1) * F.col("c")).alias("w"),
-        )
-        .groupBy()
-        .agg(
-            F.max("n").cast("bigint").alias("n_orders"),
-            F.round(F.max("s") / 100.0, 2).alias("total_price"),
-            F.round(
-                F.sum("w") / (F.max("n").cast("double") * F.max("s")), 6
-            ).alias("gini"),
-        )
+    n, s = F.max("n_rows"), F.max("total_c")
+    w = (2 * F.col("pos") - F.col("n_rows") - 1) * F.col("c")
+    return ordered_scan(d, ["c", "o_orderkey"], ["c"], label="gini").agg(
+        n.cast("bigint").alias("n_orders"),
+        F.round(s / 100.0, 2).alias("total_price"),
+        F.round(F.sum(w) / (n.cast("double") * s), 6).alias("gini"),
     )
 
 
@@ -1658,18 +1515,11 @@ def pipeline_training_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest the loader consumes: per sequence, its item/distinct-doc
     counts, token total, and domain diversity.
 
-    The oracle states steps 3-4 as one global window; THIS plan runs
-    the prefix-sum decomposition (the shuffle_deterministic /
-    pack_token_shards idiom): repartitionByRange on the shuffle key
-    splits the global order across range partitions, each partition
-    cumsums locally (Arrow-batched, order-preserving, narrow), and
-    global position = local cumsum + broadcast prefix totals. Wide ops:
-    the domain aggregate (tiny), the factor broadcast join, ONE range
-    shuffle, and the final per-sequence aggregation — the whole
-    training-order materialization costs one corpus shuffle at any
-    scale."""
-    import pandas as pd
-
+    The oracle states steps 3-4 as one global window; the plan takes
+    the running token sum from `ordered_scan`. Wide ops: the domain
+    aggregate (tiny), the factor broadcast join, ONE range shuffle, and
+    the final per-sequence aggregation — the whole training-order
+    materialization costs one corpus shuffle at any scale."""
     docs = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.substring("source", 4, 1).alias("domain"),
@@ -1731,57 +1581,13 @@ def pipeline_training_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     )
-    n_parts = 8
-    d = (
-        keyed.repartitionByRange(n_parts, "hk", "doc_id", "rep")
-        .sortWithinPartitions("hk", "doc_id", "rep")
-        .withColumn("pid", F.spark_partition_id())
-    )
-
-    def cumsum_local(batches):
-        seen = 0
-        for pdf in batches:
-            cum = pdf["n_tok"].cumsum() + seen
-            out = pd.DataFrame(
-                {
-                    "pid": pdf["pid"],
-                    "doc_id": pdf["doc_id"],
-                    "domain": pdf["domain"],
-                    "n_tok": pdf["n_tok"],
-                    "local_cum": cum,
-                }
-            )
-            seen = int(cum.iloc[-1]) if len(cum) else seen
-            yield out
-
-    # Cumsum on the LIVE ranged frame, pin the OUTPUT (pid + local_cum
-    # as data columns) — pinning the ranged input was layout-dependent
-    # in parquet checkpoint mode, where re-read bin-packing can merge
-    # pids in one read partition and the `seen` carry then crosses pid
-    # boundaries (ADVICE r12; same fix as pack_token_shards).
-    local = pin(
-        d.mapInPandas(
-            cumsum_local,
-            schema=(
-                "pid int, doc_id long, domain string, n_tok int,"
-                " local_cum long"
-            ),
-        ),
-        label="tmix_ranged",
-    )
-    totals = local.groupBy("pid").agg(F.sum("n_tok").alias("tok"))
-    w_off = W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = totals.select(
-        "pid", F.coalesce(F.sum("tok").over(w_off), F.lit(0)).alias("offset")
-    )
-    packed = local.join(F.broadcast(offsets), "pid").select(
+    packed = ordered_scan(
+        keyed, ["hk", "doc_id", "rep"], ["n_tok"], label="tmix_ranged"
+    ).select(
         "doc_id",
         "domain",
         "n_tok",
-        (
-            (F.col("offset") + F.col("local_cum") - F.col("n_tok"))
-            / _TMIX_SEQ_LEN
-        )
+        ((F.col("cum_n_tok") - F.col("n_tok")) / _TMIX_SEQ_LEN)
         .cast("bigint")
         .alias("seq_id"),
     )

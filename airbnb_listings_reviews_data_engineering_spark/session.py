@@ -57,9 +57,10 @@ def get_spark(
         # Local-harness split size: the sf0.1 tables are single sub-16MB
         # parquet files, so the cluster default (128m) leaves every scan
         # stage at parallelism 1 and serializes compute-heavy scans
-        # (md5-per-shingle in the dedup family). 512k splits them across
-        # the 32 local cores; a real cluster reading 100 TB keeps the
-        # 128m default (set SPARK_GRAFT_MAX_PARTITION_BYTES).
+        # (md5-per-shingle in the dedup family). 512k splits them into
+        # enough tasks to keep every local core busy; a real cluster
+        # reading 100 TB keeps the 128m default (set
+        # SPARK_GRAFT_MAX_PARTITION_BYTES).
         .config(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "512k"),

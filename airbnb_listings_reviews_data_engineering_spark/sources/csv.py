@@ -3,8 +3,7 @@
 Reference: pd.read_csv with inferred dtypes (Airbnb_Listings_ETL.py:23;
 Latin-1 read at Airbnb_Review_ETL.py:22) and df.to_csv result sinks
 (Airbnb_Analysis.py:65 etc.). Here: schema-checked reads (an inference
-pass over 100 TB is a full extra scan) and partitioned writes (a
-coalesce(1) CSV sink would serialize the job through one task).
+pass over 100 TB is a full extra scan).
 
 ``read_multiline_csv`` is the RFC-4180 multiLine reader both ETL DAGs
 use. Spark cannot split a multiLine file (a record boundary is not
@@ -41,25 +40,6 @@ _FIELD_EDGE[[_DELIM, _CR, _LF, _QUOTE]] = True
 # Hadoop picks a decompressor by file extension; a byte range of a
 # compressed file is not a CSV
 _COMPRESSED = (".gz", ".bz2", ".deflate", ".lz4", ".snappy", ".zst", ".xz", ".br")
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    header: bool = True,
-    encoding: str = "UTF-8",
-) -> DataFrame:
-    return spark.read.csv(path, header=header, schema=schema, encoding=encoding)
-
-
-def write_csv(df: DataFrame, path: str, header: bool = True, encoding: str = "UTF-8") -> None:
-    (
-        df.write.mode("overwrite")
-        .option("header", header)
-        .option("encoding", encoding)
-        .csv(path)
-    )
 
 
 def read_multiline_csv(

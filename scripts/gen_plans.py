@@ -23,11 +23,11 @@ SHOWCASE = [
     ("join_bloom_prefilter", "Bloom bit-array probe ahead of the exact semi-join; the ExistingRDD is the probe-then-join barrier (the probe stage runs inside it — see operators/bloomjoin.py)"),
     ("sim_ivf_join", "batch IVF ANN: map-side argmax cell assignment (no corpus window), broadcast probe-cell join, two-stage salted top-k"),
     ("funnel_stages", "one-shuffle conversion funnel: per-user array state, no event-table window"),
-    ("mm_shard_manifest", "range-partitioned byte cumsum + broadcast prefix offsets; per-shard window is PARTITIONED"),
+    ("mm_shard_manifest", "byte cumsum from operators/ordered.ordered_scan (the ExistingRDD is its pinned range-shuffled Arrow scan; 8-row offsets broadcast); per-shard window is PARTITIONED"),
     ("join_point_in_time", "SCD2 point-in-time lookup: keyed equi-join + validity post-filter"),
     ("join_dynamic_partition_pruning", "runtime dim-driven fact-partition skip: dynamicpruning subquery on the scan's PartitionFilters"),
     ("dedup_semdedup", "learned-cluster-blocked semantic dedup: broadcast centroid argmin, flat codegen cosine on the in-cell pair scan"),
-    ("ml_auc_exact", "exact rank-sum AUC: range shuffle + Arrow-local enumerate + broadcast offsets (no single-partition window)"),
+    ("ml_auc_exact", "exact rank-sum AUC: the global rank from operators/ordered.ordered_scan (pinned range-shuffled Arrow scan + 8-row offsets broadcast; no single-partition window)"),
     ("win_match_recognize", "row-pattern detection as gaps-and-islands: two entity-partitioned window passes + run-table self-join"),
     ("sample_dsir", "DSIR importance resample: ONE pinned doc-bucket scan, broadcast lambda table, Gumbel top-k via TakeOrderedAndProject"),
     ("eval_bradley_terry", "arena-strength MM fit: one match-log shuffle, then ALL 5 rounds as array expressions over one collected row (zero per-round exchanges)"),
@@ -47,7 +47,7 @@ SHOWCASE = [
     ("sim_ivfpq_apply", "IVF-PQ serving path: codebooks + PQ-coded corpus index read from the published artifacts (scans, not training/coding lineage), broadcast per-query ADC maps, top-c exact re-rank — raw vectors touched only for the survivor fetch"),
     ("text_fim_transform", "fill-in-the-middle reordering: ONE scan, one projection — hash-derived pivots, CASE-branched passthrough (no union re-scan), zero exchanges"),
     ("dedup_canonical_text", "canonicalized exact dedup: normalization expression + single groupBy on the canonical hash; fixture variants ride the same scan via per-row explode"),
-    ("pipeline_training_mixture", "training-order composite: mixture factors as a broadcast, guarded instance explode, ONE range shuffle, Arrow-local cumsum + 8-row offset broadcast, per-sequence rollup"),
+    ("pipeline_training_mixture", "training-order composite: mixture factors as a broadcast, guarded instance explode, ONE range shuffle with the running token sum from operators/ordered.ordered_scan, per-sequence rollup"),
     ("sample_contrastive_triplets", "hard triplet mining: 64-row anchor batch broadcast against the partitioned corpus, per-(anchor, side) argmax windows, pos/neg pivot join"),
     ("ml_adaboost_stumps", "3 boosting rounds: weighted histogram shuffles (map-side combine to <= 76 rows), TakeOrdered 1-row winners folded back as broadcasts, int64-quantized weights"),
     ("sample_influence_proxy", "gradient-alignment influence: pinned feature projection, int64 GD chain + 1-row holdout-gradient fold, map-side scoring, two TakeOrdered slices"),

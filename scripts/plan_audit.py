@@ -13,7 +13,7 @@ for scale anti-patterns:
   to ONE task ("No Partition Defined" warning); at 100 TB that is the
   whole table through a single thread. Allowed only where the window's
   input is a provably tiny fixed-cardinality frame (allowlist below:
-  per-range-partition offset frames of ~n_parts rows, per-domain count
+  ordered_scan's 8-row per-range-partition offsets, per-domain count
   frames of ~n_domains rows). Detected structurally (partitionSpec() on
   every WindowExec/WindowGroupLimitExec node), not textually.
 - In-memory relation fallbacks are fine (localCheckpoint shows as
@@ -89,7 +89,6 @@ NESTED_LOOP_ALLOWED = {
     "sample_negative_pairs",  # 1-row corpus count folded into the anchor side
     "dq_referential",    # crossJoins of paired ONE-row count aggregates
     "agg_heavy_hitters",  # crossJoin against the 1-row corpus total
-    "xform_quantile_bin",  # 1-row grand-total folded into the tiny offsets frame
     "profile_freshness",  # crossJoin against the 1-row global-max timestamp
     "profile_drift_tv",  # (source x vocab) grid: both sides tiny aggregates
     "sim_mips_topk",     # crossJoins against the 1-row max-norm and query row
@@ -98,11 +97,9 @@ NESTED_LOOP_ALLOWED = {
     "sim_matryoshka_eval",  # crossJoins against the 4-row dims set + 1-row query
     "profile_mutual_info",  # crossJoin against the 1-row contingency total
     "profile_benford",   # crossJoin against the 1-row digit total
-    "agg_gini_concentration",  # 1-row (n, sum) folded into the offsets frame
     "sim_hybrid_rrf",    # 1-row corpus stats + 1-row query vector crossJoins
     "dedup_semdedup",    # crossJoin against the k-row learned centroid table
     "sample_kcenter_coreset",  # crossJoins against 1-row chosen-center picks
-    "pack_length_pairs",  # 1-row corpus count folded into the ranked frame
     "ml_naive_bayes",    # crossJoins against the 5-row class and 1-row vocab stats
     "ml_logreg_gd",      # K crossJoins against the lazy-chain 1-row weight frame
     "ml_logreg_holdout",  # same lazy-chain weight frame + 1-row train count
@@ -131,7 +128,6 @@ NESTED_LOOP_ALLOWED = {
     "dedup_lsh_s_curve",  # 6-row config grid x 19-row similarity grid (no corpus)
     "ts_autocorrelation",  # 14-row lag grid x day table + 1-row moments
     "agg_rfm_segmentation",  # 1-row horizon + 3-value median cut folds
-    "agg_pareto_coverage",  # 1-row grand-total folds onto the ranked frame
     "ml_classifier_agreement",  # composes ml_naive_bayes (class/vocab folds)
     "sample_dsir",       # 1-row gram totals folded into the B=64-row lambda table
     "text_perplexity_bucket",  # text_unigram_logprob's 1-row corpus-total fold
@@ -161,23 +157,23 @@ NESTED_LOOP_ALLOWED = {
 # INPUT is a fixed-cardinality tiny frame (never the data table):
 UNPARTITIONED_WINDOW_ALLOWED = {
     "sample_temperature",    # share-of-total over #domains rows (~10)
-    "shuffle_deterministic",  # prefix-sum offsets over n_parts rows (8)
-    "pack_token_shards",     # prefix-sum token offsets over n_parts rows (8)
-    "mm_shard_manifest",     # prefix-sum byte offsets over n_parts rows (8)
-    "xform_quantile_bin",    # prefix-sum rank offsets over n_parts rows (8)
+    "shuffle_deterministic",  # ordered_scan offsets over its 8 range partitions
+    "pack_token_shards",     # ordered_scan offsets over its 8 range partitions
+    "mm_shard_manifest",     # ordered_scan offsets over its 8 range partitions
+    "xform_quantile_bin",    # ordered_scan offsets over its 8 range partitions
     "text_vocab_growth",     # vocab cumsum over #buckets rows (~corpus/100)
     "dq_anomaly_volume",     # trailing window over the #days daily rollup
-    "agg_gini_concentration",  # prefix-sum rank offsets over n_parts rows (8)
+    "agg_gini_concentration",  # ordered_scan offsets over its 8 range partitions
     "sim_hybrid_rrf",        # fusion ranks over the joined candidate set
-    "mm_reader_assignment",  # reuses mm_shard_manifest's offsets window
-    "ml_auc_exact",          # prefix-sum rank offsets over n_parts rows (8)
+    "mm_reader_assignment",  # reuses mm_shard_manifest's ordered_scan offsets
+    "ml_auc_exact",          # ordered_scan offsets over its 8 range partitions
     "ts_survival_km",        # log-space cumprod over the #churn-days table
     "win_rolling_corr",      # rolling moments over the day-grain table
-    "agg_pareto_coverage",   # prefix-sum offsets over n_parts rows (8)
+    "agg_pareto_coverage",   # ordered_scan offsets over its 8 range partitions
     "profile_drift_ks",      # argmax over the 256-boundary gap table
     "agg_dp_quantile",       # noisy + exact CDF prefixes over 256 buckets
     "text_unigram_lm_em",    # final rank over the pinned vocab table
-    "pipeline_training_mixture",  # prefix-sum offsets over n_parts rows (8)
+    "pipeline_training_mixture",  # ordered_scan offsets over its 8 range partitions
     "sample_pareto_skyline",  # strict cummax over the quantized level table
     #                           (<= ~1000 rows: bounded by the 3-dp value
     #                           domain, not the corpus)
@@ -273,7 +269,7 @@ NESTED_LOOP_STAGE_ALLOWED = {
 # stage plans allowed an unpartitioned WindowExec: (key, pin label),
 # window input provably tiny and fixed
 UNPARTITIONED_WINDOW_STAGE_ALLOWED = {
-    # 8-row range-partition offsets window inside the pinned ranked
+    # ordered_scan's 8-row offsets window inside the pinned ranked
     # frame (invisible pre-r6; was mis-allowlisted at key level, which
     # broke the final-plan tiny-window pin — VERDICT r6 #1)
     ("pack_length_pairs", "pack_pairs_pos"),

@@ -67,7 +67,7 @@ def test_query_matches_oracle(key, spark, duck):
         srows = sdf.collect()
         scols = sdf.columns
     finally:
-        # collected — free this query's checkpoint blocks so the 182-case
+        # collected — free this query's checkpoint blocks so the 429-case
         # sweep doesn't accumulate executor storage across cases
         release_pins(spark)
     if spec.oracle is None:

@@ -1,110 +1,13 @@
-"""Round-13 operators and regressions.
-
-Covers: the ADVICE-r12 parquet-checkpoint-mode prefix-sum regression
-(pack_token_shards / pipeline_training_mixture must be layout-independent
-after the pin round-trips through staged parquet).
+"""Round-13 operators and regressions: keyed-state admission TTL,
+audio spectrogram/VAD, GIF decode and frame sampling, and session
+finalization.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from airbnb_listings_reviews_data_engineering_spark.checkpoint import (
-    MODE_CONF,
-    pin,
-    release_pins,
-)
-from airbnb_listings_reviews_data_engineering_spark.plans import all_queries
-
 SF001 = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def parquet_mode(spark):
-    """Parquet checkpoint mode with file-scan confs that force the
-    re-read to BIN-PACK the staged per-partition files (the harness's
-    512k maxPartitionBytes otherwise gives every tiny file its own
-    partition, which masked the ADVICE-r12 bug locally; a cluster's
-    128m default + openCost packing is what exposes it)."""
-    release_pins(spark)
-    saved = {
-        "spark.sql.files.maxPartitionBytes": spark.conf.get(
-            "spark.sql.files.maxPartitionBytes"
-        ),
-        "spark.sql.files.openCostInBytes": spark.conf.get(
-            "spark.sql.files.openCostInBytes"
-        ),
-        "spark.sql.files.minPartitionNum": spark.conf.get(
-            "spark.sql.files.minPartitionNum", None
-        ),
-    }
-    spark.conf.set(MODE_CONF, "parquet")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
-    spark.conf.set("spark.sql.files.openCostInBytes", "0")
-    spark.conf.set("spark.sql.files.minPartitionNum", "1")
-    yield
-    spark.conf.unset(MODE_CONF)
-    for k, v in saved.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
-    release_pins(spark)
-
-
-def _sig(df):
-    cols = sorted(df.columns)
-    return sorted(
-        "|".join(str(r[c]) for c in cols) for r in df.collect()
-    )
-
-
-def test_parquet_reread_binpacks_range_partitions(spark, parquet_mode):
-    """The failure mechanism ADVICE r12 named: staging a small
-    range-partitioned frame as parquet and reading it back lets Spark
-    bin-pack the per-partition files (openCostInBytes dominates tiny
-    files), so ONE read partition concatenates several original range
-    partitions. Any operator that relies on the pinned frame still
-    being partitioned by its pre-pin layout is therefore wrong in
-    parquet mode — this test pins the mechanism itself so the
-    prefix-sum regression below can't silently stop testing it."""
-    d = (
-        spark.range(2000)
-        .repartitionByRange(8, "id")
-        .withColumn("pid", F.spark_partition_id())
-    )
-    staged = pin(d, label="binpack_probe")
-    assert staged.rdd.getNumPartitions() < 8
-    # and at least one read partition spans >1 original pid
-    mixed = (
-        staged.withColumn("rp", F.spark_partition_id())
-        .groupBy("rp")
-        .agg(F.countDistinct("pid").alias("n_pids"))
-        .agg(F.max("n_pids").alias("m"))
-        .collect()[0]["m"]
-    )
-    assert mixed > 1
-
-
-@pytest.mark.parametrize(
-    "key", ["pack_token_shards", "pipeline_training_mixture"]
-)
-def test_prefix_sum_keys_layout_independent_in_parquet_mode(
-    spark, key, parquet_mode
-):
-    """ADVICE r12 (medium): in parquet checkpoint mode the pre-r13 code
-    pinned the range-shuffled INPUT of the per-partition cumsum; on
-    re-read one partition could concatenate several pids and the
-    mapInPandas `seen` carry double-counted across the boundary. The
-    fix pins the cumsum OUTPUT (pid + local_cum as data columns), so
-    the result must be identical to local mode bit for bit."""
-    q = all_queries()[key].fn
-    in_parquet = _sig(q(spark, SF001))
-    release_pins(spark)
-    spark.conf.set(MODE_CONF, "local")
-    in_local = _sig(q(spark, SF001))
-    assert in_parquet == in_local
 
 
 # --- stream_stateful_admission (keyed state + event-time-timer TTL) ----------
