@@ -57,9 +57,11 @@ _PINS: dict[int, list[tuple[object, object]]] = {}
 # that runs inside a pin job (VERDICT r5 — the SemDedup assignment
 # shuffle hid exactly there). When recording is on, pin() snapshots each
 # input's formatted plan + its unpartitioned-window count BEFORE
-# materializing, and scripts/plan_audit.py lints those snapshots with
-# the same rules as the final plan. Off by default: plan compilation
-# isn't free and the capture is audit tooling, not the data path.
+# materializing, and scripts/plan_audit.audit lints those snapshots
+# with the same rules as the final plan — in the registry sweep
+# (tests/test_driver_oracle.py) and when scripts/plan_audit.py writes
+# the plan ledger. Off by default: plan compilation isn't free and the
+# capture is audit tooling, not the data path.
 _STAGE_RECORDING = False
 # session JVM id -> list[(label, formatted plan, n unpartitioned windows)]
 _STAGE_PLANS: dict[int, list[tuple[str, str, int]]] = {}

@@ -1,6 +1,8 @@
 """Physical-plan inspection helpers shared by the audit tooling.
 
-scripts/plan_audit.py lints every registered query's FINAL plan, but
+scripts/plan_audit.audit lints every registered query's FINAL plan (in
+the registry sweep, tests/test_driver_oracle.py, and when
+scripts/plan_audit.py writes the plan ledger), but
 ``pin()`` (checkpoint.py) truncates lineage — every stage that runs
 inside a pin job is invisible in the post-pin plan, which is exactly
 where round 5's SemDedup assignment shuffle hid (VERDICT r5 what's-wrong

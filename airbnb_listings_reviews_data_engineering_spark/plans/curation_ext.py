@@ -164,9 +164,9 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids collapse to ONE broadcast array row; the pick is
     ``array_min`` over ``struct(rounded d2, cid)`` — a pure column
     expression, no corpus shuffle and no per-vector window — verified
-    by tests/test_plan_audit.py::test_assignment_stages_stay_map_side,
-    which pins this key's pinned-stage exchange/window counts and
-    asserts no hashpartitioning(vec_id) in any recorded stage plan),
+    by the registry sweep, which pins this key's pinned-stage
+    exchange/window counts in scripts/plan_ledger.json and flags any
+    hashpartitioning(vec_id) in a recorded stage plan),
     and cosine >= 0.99 pairs are found ONLY inside a cluster. Per
     cluster: member count, dup-pair count, and how many vectors a
     keep-lowest-id policy would drop. At 100 TB k grows with the
@@ -816,7 +816,7 @@ def dedup_semdedup_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-cell pair work) by 2, NOT the corpus shuffle: assignment is a
     map-side ``slice(array_sort(struct(d2, cid)), 1, 2)`` over the ONE
     broadcast centroid-array row (zero exchanges, zero windows — the
-    pre-pin stage plan is pinned by tests/test_plan_audit.py), the
+    pre-pin stage plan is pinned by scripts/plan_ledger.json), the
     pair join still runs
     only within cells, and pairs found in both shared cells collapse
     with one DISTINCT. This is exactly sim_lsh_multiprobe's lever

@@ -46,13 +46,11 @@ class QuerySpec:
     fn: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB; None -> rows-only check
     # Spark side reads a scale knob from the parquet footers (SemDedup
-    # k, FFD group count). Cross-engine parity above gate scale used to
-    # be capped by ``gate_sf_max``; since round 11 such keys instead
-    # provide ``oracle_tmpl`` — a callable rendering the oracle SQL
-    # with the SAME footer-derived knob for a given sf_dir — so the
-    # local mirror hash-matches at every scale. ``oracle`` stays the
-    # gate-scale (sf0.01) rendering, which is what the driver runs.
-    gate_sf_max: float | None = None
+    # k, FFD group count): such keys provide ``oracle_tmpl`` — a
+    # callable rendering the oracle SQL with the SAME footer-derived
+    # knob for a given sf_dir — so the local mirror hash-matches at
+    # every scale. ``oracle`` stays the gate-scale (sf0.01) rendering,
+    # which is what the correctness gate runs.
     oracle_tmpl: Callable[[str], str] | None = None
 
     def oracle_for(self, sf_dir: str) -> str | None:
@@ -79,7 +77,6 @@ REGISTRY: dict[str, QuerySpec] = {}
 def register(
     key: str,
     oracle: str | None = None,
-    gate_sf_max: float | None = None,
     oracle_tmpl: Callable[[str], str] | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a driver-contract query under ``key``."""
@@ -91,7 +88,6 @@ def register(
             key=key,
             fn=fn,
             oracle=oracle,
-            gate_sf_max=gate_sf_max,
             oracle_tmpl=oracle_tmpl,
         )
         return fn
@@ -120,10 +116,10 @@ def lint_oracle_types(columns, types, key: str) -> list[str]:
     """Return lint errors for DuckDB result types no Spark plan can emit.
 
     ``columns``/``types`` are a DuckDB relation's ``.columns`` and
-    ``.types``. Both the local gate mirror (scripts/oracle_check.py) and
-    the pytest mirror (tests/test_driver_oracle.py) fail any oracle that
-    trips this, so a value-equal-but-type-divergent oracle can never
-    again pass locally while failing the driver's hasher.
+    ``.types``. The one per-key compare (scripts/oracle_check.check)
+    fails any oracle that trips this, so a value-equal-but-type-divergent
+    oracle can never again pass locally while failing the gate's
+    hasher.
     """
     errs = []
     for col, typ in zip(columns, types):

@@ -9,7 +9,7 @@
 #      commit, not a dirty tree
 #   1. idle-wait: block until 1-min loadavg is low enough that bench
 #      numbers mean something (or time out loudly)
-#   2. sf0.1 bench FIRST — before the mirror + 20-min pytest suite
+#   2. sf0.1 bench FIRST — before the mirror + pytest suite
 #      heat the box — once; every key's raw min-of-3 seconds must stay
 #      within BENCH_MAX_RATIO of its entry in scripts/bench_baseline.json
 #      (the per-key median of idle runs' scripts/last_bench_queries.json

@@ -27,26 +27,59 @@ Stage findings are tagged PIN[<label>]:<flag> and allowlisted per
 (key, pin label) — never per key (VERDICT r6 #4). Stage WindowExec
 nodes are counted partitioned-or-not (stage_windows): the r5/r6
 shuffle-assignment class was a PARTITIONED window, invisible to the
-unpartitioned counter; tests/test_plan_audit.py pins stage_windows==0
-and zero corpus-key hashpartitioning for every assignment-bearing key.
+unpartitioned counter. The map-side assignment keys are also held to a
+textual rule: no per-vector window anywhere, and no corpus shuffle on
+vec_id inside a pinned stage.
 
-Writes PLAN_AUDIT.md (one row per key: exchanges, python-eval mode,
-pinned-stage counts, flags). tests/test_plan_audit.py pins the
-allowlist — a new quadratic join or row-wise UDF fails CI, not review.
+``audit`` turns one built frame plus its drained stage plans into the
+key's plan shape (the LEDGER_FIELDS counts) and its flags. The registry
+sweep (tests/test_driver_oracle.py) audits every key from the same
+build it compares against the oracle, asserts no flags, and asserts the
+shape equals the key's entry in scripts/plan_ledger.json — any change
+to a plan's shape fails there until the ledger is regenerated.
 
-Usage: python scripts/plan_audit.py [sf_dir]
+Both the script and the sweep audit against an empty staging root: a
+key that serves a published artifact plans differently once the
+artifact exists (sim_ivfpq_apply trains and publishes — one more
+pinned stage — only on a cold start), so a ledger taken against a
+warm root would depend on what earlier runs left behind.
+
+Usage: python scripts/plan_audit.py
+  rebuilds every key at DEFAULT_SF_DIR, prints flags, and rewrites
+  scripts/plan_ledger.json; commit the ledger with the plan change.
 """
 
 from __future__ import annotations
 
+import json
+import re
 import sys
+from collections import Counter
+from pathlib import Path
 
 sys.path.insert(0, "/root/repo")
 
-from airbnb_listings_reviews_data_engineering_spark.plans import all_queries  # noqa: E402
-from airbnb_listings_reviews_data_engineering_spark.session import get_spark  # noqa: E402
+from airbnb_listings_reviews_data_engineering_spark import checkpoint as _ckpt  # noqa: E402
+from airbnb_listings_reviews_data_engineering_spark.planlint import (  # noqa: E402
+    formatted_plan,
+    unpartitioned_windows,
+)
 
+# the ledger is the plan shape at the sweep's scale (tests/conftest.py)
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
+LEDGER_PATH = Path(__file__).with_name("plan_ledger.json")
+LEDGER_FIELDS = (
+    "exchanges",
+    "arrow_python",
+    "nested_loop",
+    "unpart_win",
+    "max_rescan",
+    "max_pin_rescan",
+    "pinned_stages",
+    "stage_exchanges",
+    "stage_unpart_win",
+    "stage_windows",
+)
 
 # keys allowed to contain a nested-loop/cartesian join because one side is
 # provably tiny AND fixed-cardinality (does not grow with SF)
@@ -282,6 +315,28 @@ UNPARTITIONED_WINDOW_STAGE_ALLOWED = {
 }
 
 
+# The shuffle-assignment regression rule (VERDICT r6 #2/#3): every
+# assignment-bearing key must stay MAP-SIDE. A reintroduced crossJoin +
+# row_number()-over-partitionBy(vec_id) formulation shows as a
+# per-vector window and forces an Exchange hashpartitioning(vec_id) of
+# the whole corpus. A vec_id GROUPBY aggregation is legitimate (e.g.
+# multiprobe's per-vector count) — only the window is banned, and
+# pinned stages get the stricter rule of no vec_id shuffle at all.
+MAP_SIDE_ASSIGNMENT = {
+    "dedup_semdedup",
+    "dedup_semdedup_multiprobe",
+    "ml_kmeans",
+    "sim_ivf_join_learned",
+    "sim_pq_quantize",
+    "sim_ivf_topk",
+    "text_bpe_train",
+    "text_bpe_vocab",
+    "text_bpe_encode_docs",
+}
+PER_VECTOR_WINDOW = "windowspecdefinition(vec_id"
+CORPUS_ID_SHUFFLE = "hashpartitioning(vec_id"
+
+
 def _lint_plan_text(key: str, plan: str, unpart_win: int, stage: str | None) -> list[str]:
     """The shared rule battery; ``stage`` labels findings from a
     recorded pre-pin stage plan. Final plans are allowlisted per key;
@@ -309,6 +364,11 @@ def _lint_plan_text(key: str, plan: str, unpart_win: int, stage: str | None) -> 
         )
         if not allowed:
             flags.append(f"{tag}GLOBAL_WINDOW")
+    if key in MAP_SIDE_ASSIGNMENT:
+        if PER_VECTOR_WINDOW in plan:
+            flags.append(f"{tag}PER_VECTOR_WINDOW")
+        if stage and CORPUS_ID_SHUFFLE in plan:
+            flags.append(f"{tag}CORPUS_ID_SHUFFLE")
     return flags
 
 
@@ -321,9 +381,6 @@ def _max_same_table_scans(plan: str) -> int:
     multiplicity is tracked separately by ``_max_pin_rescans`` so a
     regression that re-derives one pinned frame many times stays
     visible without conflating it with corpus re-reads (ADVICE r7)."""
-    import re
-    from collections import Counter
-
     paths = re.findall(r"Location: \S+ \[([^\]]+)\]", plan)
     return max(Counter(paths).values()) if paths else 0
 
@@ -335,27 +392,17 @@ def _max_pin_rescans(plan: str) -> int:
     read the same pin). A count of 2-3 is the normal self-join /
     filter+join fan-out a pin exists to serve; a large count means some
     loop re-references one pin per iteration inside a single plan."""
-    import re
-    from collections import Counter
-
     ids = re.findall(
         r"(MapPartitionsRDD\[\d+\] at \w*[cC]heckpoint)", plan
     )
     return max(Counter(ids).values()) if ids else 0
 
 
-def audit(key: str, spec, spark, sf_dir: str) -> dict:
-    from airbnb_listings_reviews_data_engineering_spark import checkpoint as _ckpt
-    from airbnb_listings_reviews_data_engineering_spark.planlint import (
-        formatted_plan,
-        unpartitioned_windows,
-    )
-
-    import re
-
-    _ckpt.drain_stage_plans(spark)  # discard leftovers from prior keys
-    df = spec.fn(spark, sf_dir)
-    stages = _ckpt.drain_stage_plans(spark)
+def audit(key: str, df, stages) -> tuple[dict, list[str]]:
+    """(plan shape, flags) of ``key``'s built frame ``df`` and the stage
+    plans its pins recorded while it was built
+    (``checkpoint.drain_stage_plans``). The shape holds exactly the
+    LEDGER_FIELDS."""
     plan = formatted_plan(df)
     unpart_win = unpartitioned_windows(df)
     flags = _lint_plan_text(key, plan, unpart_win, stage=None)
@@ -367,11 +414,11 @@ def audit(key: str, spec, spark, sf_dir: str) -> dict:
         stage_unpart += sup
         # ANY WindowExec in a pinned stage (partitioned included): the
         # r5/r6 shuffle-assignment class was a PARTITIONED window the
-        # unpart counter is blind to — tests pin this per key
+        # unpart counter is blind to
         stage_windows += len(re.findall(r"\(\d+\) Window", splan))
         flags += _lint_plan_text(key, splan, sup, stage=label)
-    return {
-        "key": key,
+    plans = [plan] + [splan for _, splan, _ in stages]
+    shape = {
         "exchanges": plan.count("Exchange "),
         "arrow_python": "ArrowEvalPython" in plan
         or "FlatMapGroupsInPandas" in plan
@@ -385,92 +432,66 @@ def audit(key: str, spec, spark, sf_dir: str) -> dict:
         # fixed by pinning the shared intermediate (sample_dsir /
         # sample_doremi_weights, round 7). Legitimate multi-table joins
         # score 1 per table; only REPEATS of one path count.
-        "max_rescan": max(
-            [_max_same_table_scans(plan)]
-            + [_max_same_table_scans(sp) for _, sp, _ in stages]
-        ),
+        "max_rescan": max(_max_same_table_scans(p) for p in plans),
         # worst single-pin rescan count (Scan ExistingRDD multiplicity):
         # cheap by design, but a loop that re-references one pin per
         # round inside a single plan shows up here (ADVICE r7)
-        "max_pin_rescan": max(
-            [_max_pin_rescans(plan)]
-            + [_max_pin_rescans(sp) for _, sp, _ in stages]
-        ),
+        "max_pin_rescan": max(_max_pin_rescans(p) for p in plans),
         "pinned_stages": len(stages),
         "stage_exchanges": stage_exchanges,
         "stage_unpart_win": stage_unpart,
         "stage_windows": stage_windows,
-        # duplicate pin labels (looped pins) must all survive — a dict
-        # keyed by label kept only the last one (ADVICE r6)
-        "stage_plans": [(label, splan) for label, splan, _ in stages],
-        "plan": plan,
-        "flags": flags,
     }
+    return shape, flags
 
 
-def run(keys=None, sf_dir: str = DEFAULT_SF_DIR) -> list[dict]:
-    from airbnb_listings_reviews_data_engineering_spark import checkpoint as _ckpt
+def load_ledger() -> dict[str, dict]:
+    return json.loads(LEDGER_PATH.read_text())
 
-    spark = get_spark()
-    qs = all_queries()
-    rows = []
+
+def main() -> int:
+    import tempfile
+
+    from airbnb_listings_reviews_data_engineering_spark.plans import all_queries
+    from airbnb_listings_reviews_data_engineering_spark.session import get_spark
+    from airbnb_listings_reviews_data_engineering_spark.sources.staging import (
+        ROOT_CONF,
+    )
+
+    # the session tests/conftest.py builds: fan-out decisions read the
+    # core count, so the ledger must come from the sweep's configuration
+    spark = get_spark(app_name="plan_audit", cpus=4, shuffle_partitions=4)
+    # an empty staging root, as in the sweep (module docstring)
+    stage = tempfile.TemporaryDirectory(prefix="plan_audit_stage_")
+    spark.conf.set(ROOT_CONF, stage.name)
+    ledger = {}
+    bad = 0
     _ckpt.record_stage_plans(True)
     try:
-        for key in sorted(keys or qs):
+        for key, spec in sorted(all_queries().items()):
+            _ckpt.drain_stage_plans(spark)  # discard leftovers of a failed key
             try:
-                rows.append(audit(key, qs[key], spark, sf_dir))
-            except Exception as e:  # noqa: BLE001 — audit must report, not die
-                rows.append({"key": key, "exchanges": -1, "arrow_python": False,
-                             "nested_loop": False, "unpart_win": 0,
-                             "max_rescan": 0, "max_pin_rescan": 0,
-                             "pinned_stages": 0, "stage_exchanges": 0,
-                             "stage_unpart_win": 0, "stage_windows": 0,
-                             "stage_plans": [], "plan": "",
-                             "flags": [f"ERROR:{e!r:.80}"]})
+                df = spec.fn(spark, DEFAULT_SF_DIR)
+                ledger[key], flags = audit(key, df, _ckpt.drain_stage_plans(spark))
+            except Exception as e:  # noqa: BLE001 — report every key, then fail
+                flags = [f"ERROR:{e!r:.200}"]
+            finally:
+                _ckpt.release_pins(spark)
+            if flags:
+                bad += 1
+                print("FLAG", key, flags)
     finally:
         _ckpt.record_stage_plans(False)
-    return rows
-
-
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR
-    rows = run(sf_dir=sf_dir)
-    flagged = [r for r in rows if r["flags"]]
-    lines = [
-        "# PLAN_AUDIT — physical-plan lint over every registered query",
-        "",
-        f"{len(rows)} plans audited at `{sf_dir}` "
-        f"({sum(r.get('pinned_stages', 0) for r in rows)} pinned stage plans "
-        "captured via checkpoint.record_stage_plans and linted with the same "
-        "rules — pin() no longer hides a stage from the audit); "
-        f"**{len(flagged)} flagged**. Generated by scripts/plan_audit.py; "
-        "the allowlist for fixed-tiny nested-loop joins lives there and is "
-        "pinned by tests/test_plan_audit.py.",
-        "",
-        "| key | exchanges | arrow python | nested loop | unpart window |"
-        " max rescan | max pin rescan | pinned stages | stage exchanges |"
-        " stage windows | flags |",
-        "|---|---|---|---|---|---|---|---|---|---|---|",
-    ]
-    for r in rows:
-        lines.append(
-            f"| {r['key']} | {r['exchanges']} | "
-            f"{'y' if r['arrow_python'] else ''} | "
-            f"{'y' if r['nested_loop'] else ''} | "
-            f"{r.get('unpart_win', 0) or ''} | "
-            f"{r.get('max_rescan', 0) or ''} | "
-            f"{r.get('max_pin_rescan', 0) or ''} | "
-            f"{r.get('pinned_stages', 0) or ''} | "
-            f"{r.get('stage_exchanges', 0) or ''} | "
-            f"{r.get('stage_windows', 0) or ''} | "
-            f"{', '.join(r['flags'])} |"
-        )
-    with open("/root/repo/PLAN_AUDIT.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"{len(rows)} audited, {len(flagged)} flagged")
-    for r in flagged:
-        print("FLAG", r["key"], r["flags"])
+        stage.cleanup()
+    # one key per line, so a shape change diffs as that key's line
+    LEDGER_PATH.write_text(
+        "{\n"
+        + ",\n".join(f"  {json.dumps(k)}: {json.dumps(v)}" for k, v in ledger.items())
+        + "\n}\n"
+    )
+    print(f"{len(ledger)} keys written to {LEDGER_PATH.name}, {bad} flagged or failed")
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -8,7 +8,7 @@ operators/clustering.assign_nearest (the map-side argmin installed in
 r6/r7 for SemDedup, Lloyd training, PQ encode and IVF probe), so a
 correctness regression in that refactor craters these floors — they
 double as an end-to-end regression proof, complementing the
-plan-structure pins in tests/test_plan_audit.py.
+plan-shape pins in scripts/plan_ledger.json.
 
 Floors sit ~0.05-0.1 under the sf0.001 measured values (deterministic
 data, no sampling noise): semdedup 0.988/1.0, kcenter 0.328 vs 0.352,

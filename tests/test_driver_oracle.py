@@ -1,89 +1,61 @@
-"""Local mirror of the driver's correctness gate: every registered query
-runs on Spark AND its oracle runs on DuckDB over the same parquet tables;
-results must match on column names, row count, and (order-insensitively)
-values.
+"""The registry sweep: the one test that builds every registered key.
 
-Runs at sf0.001 by default for speed; set SPARK_GRAFT_TEST_SF_DIR to
-/root/testdata/sf0.01 to mirror the driver exactly.
+Each key is built once, at conftest's ``sf_dir``, with pin() recording
+its pre-materialization stage plans and an empty staging root, and
+that one build is:
+- audited by scripts/plan_audit.audit — no flags, and a plan shape
+  equal to the key's entry in scripts/plan_ledger.json;
+- compared with its DuckDB oracle by scripts/oracle_check.check — the
+  oracle type lint, the coarse Spark-vs-DuckDB type agreement, and the
+  gate's column / row-count / order-insensitive value compare.
 """
 
 from __future__ import annotations
 
-import math
-import os
-from decimal import Decimal
-
-import duckdb
 import pytest
 
+from airbnb_listings_reviews_data_engineering_spark import checkpoint
 from airbnb_listings_reviews_data_engineering_spark.plans import all_queries
-from airbnb_listings_reviews_data_engineering_spark.plans.registry import (
-    TABLES,
-    lint_oracle_types,
-)
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+from airbnb_listings_reviews_data_engineering_spark.sources.staging import ROOT_CONF
+from scripts.oracle_check import check
+from scripts.plan_audit import audit, load_ledger
 
 QUERIES = all_queries()
 
 
 @pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield con
-    con.close()
-
-
-def _norm(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            # "NaN", not "NULL": the driver gate distinguishes a Spark NaN
-            # from a DuckDB NULL, so the local mirror must too
-            return "NaN"
-        return repr(v)
-    if isinstance(v, Decimal):
-        return str(v.normalize())
-    return str(v)
-
-
-def _canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
+def ledger(spark, tmp_path_factory):
+    # an empty staging root, as when the ledger was written (see the
+    # scripts/plan_audit.py docstring)
+    prior = spark.conf.get(ROOT_CONF, None)
+    spark.conf.set(ROOT_CONF, str(tmp_path_factory.mktemp("stage")))
+    checkpoint.record_stage_plans(True)
+    yield load_ledger()
+    checkpoint.record_stage_plans(False)
+    if prior is None:
+        spark.conf.unset(ROOT_CONF)
+    else:
+        spark.conf.set(ROOT_CONF, prior)
 
 
 @pytest.mark.parametrize("key", sorted(QUERIES))
-def test_query_matches_oracle(key, spark, duck):
-    from airbnb_listings_reviews_data_engineering_spark.checkpoint import release_pins
-
+def test_query_matches_oracle(key, spark, sf_dir, ledger):
     spec = QUERIES[key]
+    checkpoint.drain_stage_plans(spark)  # discard leftovers of a failed key
     try:
-        sdf = spec.fn(spark, SF_DIR)
-        srows = sdf.collect()
-        scols = sdf.columns
+        sdf = spec.fn(spark, sf_dir)
+        shape, flags = audit(key, sdf, checkpoint.drain_stage_plans(spark))
+        problems = [f"{key}: plan flag {f}" for f in flags]
+        problems += check(spec, sdf, sf_dir)
     finally:
-        # collected — free this query's checkpoint blocks so the 429-case
-        # sweep doesn't accumulate executor storage across cases
-        release_pins(spark)
-    if spec.oracle is None:
-        # rows-only check, like the driver's weaker path
-        assert len(srows) >= 0
-        return
-    orel = duck.sql(spec.oracle)
-    type_errs = lint_oracle_types(orel.columns, orel.types, key)
-    assert not type_errs, type_errs
-    ores = duck.execute(spec.oracle)
-    ocols = [d[0] for d in ores.description]
-    orows = ores.fetchall()
-    assert sorted(scols) == sorted(ocols), f"{key}: column mismatch {scols} vs {ocols}"
-    assert len(srows) == len(orows), f"{key}: row count {len(srows)} vs {len(orows)}"
-    sc = _canon([tuple(r) for r in srows], scols)
-    oc = _canon(orows, ocols)
-    if sc != oc:
-        diffs = [(a, b) for a, b in zip(sc, oc) if a != b][:5]
-        raise AssertionError(f"{key}: value mismatch, first diffs: {diffs}")
+        # collected — free this query's checkpoint blocks so the sweep
+        # doesn't accumulate executor storage across keys
+        checkpoint.release_pins(spark)
+    want = ledger.get(key, {})
+    drift = {f: (want.get(f), v) for f, v in shape.items() if want.get(f) != v}
+    if drift:
+        problems.append(
+            f"{key}: plan shape drifted from scripts/plan_ledger.json "
+            f"(field: (ledger, now)) {drift}"
+        )
+    assert not problems, "\n".join(problems)

@@ -1,21 +1,13 @@
 """Meta-tests for scripts/oracle_check.py's comparison core: the gate
 must actually catch mismatches (a comparator that passes everything
-would make 147 green queries meaningless)."""
+would make every green key meaningless)."""
 
 from __future__ import annotations
 
 import datetime
-import importlib.util
-import sys
 from decimal import Decimal
-from pathlib import Path
 
-spec = importlib.util.spec_from_file_location(
-    "oracle_check", Path(__file__).resolve().parent.parent / "scripts" / "oracle_check.py"
-)
-oc = importlib.util.module_from_spec(spec)
-sys.modules["oracle_check"] = oc
-spec.loader.exec_module(oc)
+from scripts import oracle_check as oc
 
 
 def test_identical_frames_match():
@@ -84,132 +76,23 @@ def test_lint_flags_spark_incompatible_duckdb_types():
     assert lint_oracle_types(ok.columns, ok.types, "demo_key") == []
 
 
-def test_every_registered_oracle_is_lint_clean():
-    """No registered oracle may emit a DuckDB type with no exact Spark
-    analog — building each relation against the sf0.001 views is enough
-    to resolve the output types."""
-    import duckdb
-
-    from airbnb_listings_reviews_data_engineering_spark.plans import all_queries
-    from airbnb_listings_reviews_data_engineering_spark.plans.registry import (
-        TABLES,
-        lint_oracle_types,
-    )
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    bad = []
-    for key, spec in all_queries().items():
-        if spec.oracle is None:
-            continue
-        rel = con.sql(spec.oracle)
-        bad += lint_oracle_types(rel.columns, rel.types, key)
-    assert bad == []
-
-
-def _split_top(s: str, sep: str) -> list[str]:
-    """Split on ``sep`` at nesting depth 0 only (angle brackets and
-    parens open a level) — DECIMAL(10,2) inside a STRUCT field list must
-    not split on its own comma."""
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        if ch == sep and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    return [p.strip() for p in parts if p.strip()]
-
-
-def _coarse_spark_type(dt: str) -> str:
-    dt = dt.strip().lower()
-    # recurse into nested ELEMENT types (VERDICT r5 #5: array<bigint> vs
-    # LIST(HUGEINT) must compare element-wise, like the scalars do)
-    if dt.startswith("array<") and dt.endswith(">"):
-        return f"array<{_coarse_spark_type(dt[6:-1])}>"
-    if dt.startswith("map<") and dt.endswith(">"):
-        k, v = _split_top(dt[4:-1], ",")
-        return f"map<{_coarse_spark_type(k)},{_coarse_spark_type(v)}>"
-    if dt.startswith("struct<") and dt.endswith(">"):
-        fields = []
-        for f in _split_top(dt[7:-1], ","):
-            name, _, t = f.partition(":")
-            fields.append(f"{name.strip()}:{_coarse_spark_type(t)}")
-        return "struct<" + ",".join(fields) + ">"
-    if dt.startswith("decimal"):
-        return "decimal"
-    if dt in ("bigint", "int", "smallint", "tinyint"):
-        return "int"
-    if dt in ("double", "float"):
-        return "float"
-    if dt == "boolean":
-        return "bool"
-    if dt in ("string", "varchar"):
-        return "str"
-    if dt == "date":
-        return "date"
-    if dt.startswith("timestamp"):
-        return "ts"
-    return dt
-
-
-def _coarse_duck_type(dt) -> str:
-    dt = str(dt).strip().upper()
-    if dt.endswith("[]"):
-        return f"array<{_coarse_duck_type(dt[:-2])}>"
-    if dt.startswith("MAP(") and dt.endswith(")"):
-        k, v = _split_top(dt[4:-1], ",")
-        return f"map<{_coarse_duck_type(k)},{_coarse_duck_type(v)}>"
-    if dt.startswith("STRUCT(") and dt.endswith(")"):
-        fields = []
-        for f in _split_top(dt[7:-1], ","):
-            name, _, t = f.strip().partition(" ")
-            fields.append(f'{name.strip().strip(chr(34)).lower()}:{_coarse_duck_type(t)}')
-        return "struct<" + ",".join(fields) + ">"
-    if dt.startswith("DECIMAL"):
-        return "decimal"
-    if dt in ("BIGINT", "INTEGER", "SMALLINT", "TINYINT", "HUGEINT"):
-        return "int"
-    if dt in ("DOUBLE", "FLOAT", "REAL"):
-        return "float"
-    if dt == "BOOLEAN":
-        return "bool"
-    if dt in ("VARCHAR", "JSON"):
-        # JSON stringifies identically; oracles still CAST to VARCHAR
-        return "str"
-    if dt == "DATE":
-        return "date"
-    if dt.startswith("TIMESTAMP"):
-        return "ts"
-    return dt.lower()
-
-
 def test_coarse_types_recurse_into_nested():
     """array/struct/map ELEMENT types normalize like the scalars do:
     compatible nested pairs agree, incompatible ones stay distinct."""
-    assert _coarse_spark_type("array<bigint>") == _coarse_duck_type("BIGINT[]")
-    assert _coarse_spark_type("array<string>") == _coarse_duck_type("VARCHAR[]")
-    assert _coarse_spark_type(
+    assert oc.coarse_spark_type("array<bigint>") == oc.coarse_duck_type("BIGINT[]")
+    assert oc.coarse_spark_type("array<string>") == oc.coarse_duck_type("VARCHAR[]")
+    assert oc.coarse_spark_type(
         "struct<p:int,m:double>"
-    ) == _coarse_duck_type("STRUCT(p INTEGER, m DOUBLE)")
-    assert _coarse_spark_type(
+    ) == oc.coarse_duck_type("STRUCT(p INTEGER, m DOUBLE)")
+    assert oc.coarse_spark_type(
         "array<struct<p:int,m:decimal(10,2)>>"
-    ) == _coarse_duck_type("STRUCT(p INTEGER, m DECIMAL(10,2))[]")
-    assert _coarse_spark_type("map<string,bigint>") == _coarse_duck_type(
+    ) == oc.coarse_duck_type("STRUCT(p INTEGER, m DECIMAL(10,2))[]")
+    assert oc.coarse_spark_type("map<string,bigint>") == oc.coarse_duck_type(
         "MAP(VARCHAR, BIGINT)"
     )
     # a nested element divergence must NOT collapse to equality
-    assert _coarse_spark_type("array<bigint>") != _coarse_duck_type("DOUBLE[]")
-    assert _coarse_spark_type("array<bigint>") != _coarse_duck_type(
+    assert oc.coarse_spark_type("array<bigint>") != oc.coarse_duck_type("DOUBLE[]")
+    assert oc.coarse_spark_type("array<bigint>") != oc.coarse_duck_type(
         "BIGINT[][]"
     )
 
@@ -232,48 +115,20 @@ def test_lint_fires_on_nested_hugeint():
     errs = lint_oracle_types(rel.columns, rel.types, "demo_key")
     assert errs and "HUGEINT" in errs[0]
     # and the coarse differential sees the element type too
-    assert _coarse_duck_type("HUGEINT[]") == "array<int>"
+    assert oc.coarse_duck_type("HUGEINT[]") == "array<int>"
 
 
-def test_spark_and_oracle_output_types_agree(spark):
-    """Cross-engine TYPE differential over every registered key: a
-    column typed DECIMAL by Spark but DOUBLE by DuckDB (or vice versa)
-    can hash equal locally through string formatting and still diverge
-    in the driver's normalizer — the round-4 HUGEINT failure class from
-    the Spark side. Plans are built (never executed), so this covers
-    all keys cheaply."""
-    import duckdb
-
-    from airbnb_listings_reviews_data_engineering_spark.checkpoint import (
-        release_pins,
-    )
-    from airbnb_listings_reviews_data_engineering_spark.plans import all_queries
+def test_check_reports_type_and_value_divergence(spark, sf_dir):
+    """``check`` runs the type agreement and the value compare on one
+    build: a DECIMAL-vs-DOUBLE column with equal printed values fails
+    on type alone, and a value difference fails on value."""
     from airbnb_listings_reviews_data_engineering_spark.plans.registry import (
-        TABLES,
+        QuerySpec,
     )
 
-    sf = "/root/testdata/sf0.001"
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
-        )
-    bad = []
-    for key, spec in sorted(all_queries().items()):
-        if spec.oracle is None:
-            continue
-        try:
-            sdf = spec.fn(spark, sf)
-            stypes = {n: _coarse_spark_type(d) for n, d in sdf.dtypes}
-            rel = con.sql(spec.oracle)
-            dtypes = {
-                c: _coarse_duck_type(t) for c, t in zip(rel.columns, rel.types)
-            }
-            bad += [
-                (key, c, stypes[c], dtypes[c])
-                for c in stypes
-                if c in dtypes and stypes[c] != dtypes[c]
-            ]
-        finally:
-            release_pins(spark)
-    assert bad == []
+    spec = QuerySpec("demo_key", None, "SELECT CAST(1.5 AS DOUBLE) AS a")
+    assert oc.check(spec, spark.sql("SELECT CAST(1.5 AS DOUBLE) AS a"), sf_dir) == []
+    [p] = oc.check(spec, spark.sql("SELECT CAST(1.5 AS DECIMAL(4,1)) AS a"), sf_dir)
+    assert "'a'" in p and "decimal" in p and "float" in p
+    [p] = oc.check(spec, spark.sql("SELECT CAST(2.5 AS DOUBLE) AS a"), sf_dir)
+    assert "value mismatch" in p

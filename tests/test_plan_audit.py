@@ -1,255 +1,62 @@
-"""Plan-lint pinning: the scale anti-patterns scripts/plan_audit.py
-hunts for must stay absent from the risk-bearing queries (every key
-with a join, a python stage, or a self-join blocking structure).
+"""Spark-free checks on the plan audit's inputs: the allowlists and the
+committed plan-shape ledger must name registered keys only, and the
+ledger must cover every key with exactly the audited fields.
 
-The full all-plan sweep is `python scripts/plan_audit.py` (writes
-PLAN_AUDIT.md); this test keeps the expensive subset in CI."""
+The audit itself runs inside the registry sweep
+(tests/test_driver_oracle.py), which builds each key once and asserts
+no flags and a shape equal to the key's ledger entry. Regenerate the
+ledger with `python scripts/plan_audit.py`."""
 
 from __future__ import annotations
 
-import sys
-
-import pytest
-
-sys.path.insert(0, "/root/repo")
-
-from scripts.plan_audit import (  # noqa: E402
+from airbnb_listings_reviews_data_engineering_spark.plans import all_queries
+from scripts.plan_audit import (
+    LEDGER_FIELDS,
+    MAP_SIDE_ASSIGNMENT,
     NESTED_LOOP_ALLOWED,
     NESTED_LOOP_STAGE_ALLOWED,
     UNPARTITIONED_WINDOW_ALLOWED,
     UNPARTITIONED_WINDOW_STAGE_ALLOWED,
-    run,
-)
-
-# same-table rescan ceilings for the keys the round-7 pin pass fixed:
-# a final (or pinned-stage) plan that reads one parquet table k times
-# does k corpus passes at 100 TB. These keys each read their fact table
-# 4-27x before the shared-intermediate pins; the ceiling pins the fix.
-# (Benign shapes are excluded on purpose: tiny-dim rescans — nation in
-# pagerank — and pushdown-pruned fixture extractions — query/centroid
-# slices of embeddings — don't scan the corpus.)
-RESCAN_CEILINGS = {
-    "sink_scd2_multi": 1,       # was 27 (customer)
-    "dedup_embedding_lsh": 1,   # was 10 (embeddings)
-    "graph_jaccard_neighbors": 1,   # was 8 (4 fact tables)
-    "dedup_shared_spans": 2,    # was 8 (documents; 2 = variant union)
-    "text_perplexity_bucket": 2,  # was 8 (documents)
-    "sink_scd2": 1,             # was 7 (customer)
-    "graph_adamic_adar": 1,     # was 6 (4 fact tables)
-    "graph_degree_assortativity": 1,  # was 6
-    "inc_daily_snapshot": 1,    # was 6 (orders)
-    "text_bigram_logprob": 2,   # was 6 (documents)
-    "ml_classifier_agreement": 1,   # was 5 (documents)
-    "ml_naive_bayes": 1,        # was 4
-    "ml_confusion_matrix": 1,   # was 4
-    "graph_triangle_count": 1,  # was 4
-    "sample_dsir": 1,           # was 4 (documents, pre-restructure)
-    "sample_doremi_weights": 1, # was 8 (documents, pre-pin)
-    # second sweep (round 7, same session): the >=3 tail triaged by
-    # which TABLE repeats — every corpus-sized repeat pinned or folded
-    # into a single conditional-aggregate scan; remaining 2s are
-    # fixture unions / second-percentile passes / training-vs-encode
-    "agg_rfm_segmentation": 2,  # was 4 (orders; 2 = horizon + rollup)
-    "aqp_sample_estimate": 1,   # was 4 (orders; one conditional agg)
-    "dedup_embedding_cosine": 1,  # was 4 (embeddings)
-    "dq_referential": 2,        # was 4 lineitem / 3 orders / 3 customer
-    "inc_doc_accum": 1,         # was 3 (events; batch pinned)
-    "pipeline_decontaminate": 1,  # was 3 (documents)
-    "profile_columns": 1,       # was 3 (customer; one multi-distinct agg)
-    "profile_dataset_card": 1,  # was 3 (documents)
-    "profile_drift_tv": 1,      # was 4 (documents)
-    "profile_mutual_info": 1,   # was 4 (customer)
-    "profile_outliers_mad": 2,  # was 4 (lineitem; med pass + pinned dev)
-    "sample_mixture_epochs": 1, # was 3 (documents)
-    "sample_negative_pairs": 1, # was 3 full (embeddings)
-    "sim_hybrid_rrf": 2,        # was 2 full + slices (documents)
-    "sim_pq_quantize": 2,       # was 4 FULL encode scans -> 1 (+1 training)
-    "sink_cdc_apply": 1,        # was 4 (customer)
-    "sink_doc_upsert": 1,       # was 3 (customer)
-    "sink_merge_multi_clause": 1,  # was 3 (customer)
-    "text_bm25": 1,             # was 3 (documents)
-    "text_collocation_pmi": 1,  # was 4 (documents)
-    "text_novelty_score": 1,    # was 3 (documents)
-    "text_rouge_overlap": 1,    # was 4 (documents)
-    "text_line_dedup": 1,       # was 3 (documents)
-    # round-7 new keys, pinned at their shipped shapes
-    "eval_bradley_terry": 1,
-    "mm_phash_dedup": 1,        # one scan: 2-per-doc image-id explode (r8)
-    "text_decontaminate": 1,
-    "sample_rho_loss": 1,
-    "text_span_excise": 2,      # eval-slice pass + corpus pass
-    "pack_bin_ffd": 1,
-    "split_leakage_audit": 2,   # variant-corpus union
-    "sample_cluster_balanced": 2,  # training scan + encode scan
-    # round-8 new keys, pinned at their shipped shapes
-    "dedup_span_exact": 1,      # pinned postings; excise join re-reads docs
-    "dedup_span_keep_first": 1, # same pinned postings + canonical filter
-    "dedup_span_winnowed": 1,   # pinned minimizer postings, both join sides
-    "text_decontaminate_bloom": 2,  # corpus gram pass + doc-list pass
-    "dedup_embedding_incremental": 1,  # pinned base feeds batch + index
-    "dedup_soft_weights": 2,    # variant-corpus union (labeled frame pinned)
-    "text_decontaminate_semantic": 1,  # pinned base feeds eval + corpus
-    "pipeline_curation_funnel": 1,  # pinned tokenized base, 3 readers
-    "sample_prototype_pruning": 2,  # training scan + assignment scan
-}
-
-RISK_KEYS = sorted(
-    {
-        # joins of growing tables — must never go nested-loop
-        "join_eq2", "join_eq3", "join_semi_inlist", "join_agg_agg",
-        "join_merge_key", "join_anti", "join_full_outer", "join_asof",
-        "join_salted", "sink_scd2", "split_train_test_group",
-        "table_changes_feed",
-        # blocked self-joins — must never go cartesian
-        "dedup_minhash_lsh", "dedup_simhash", "dedup_ngram_jaccard",
-        "dedup_embedding_cosine", "pipeline_dedup_corpus",
-        "join_interval_overlap",
-        # python-bearing — must be Arrow, never row-pickling
-        "udtf_json_kv", "grouped_pandas_zscore", "cogrouped_pandas_asof",
-        "sim_cosine_topk_pandas", "mm_binary_meta", "mm_frame_sample",
-        # global-window-prone keys — must never move the data table to one
-        # task (the r3 verdict's weak class, now linted)
-        "win_running_sum", "win_lag_lead", "win_topk_per_group",
-        "sample_class_cap", "sample_curriculum", "sessionize",
-        # allowed nested-loop / unpartitioned-window keys — pinned so the
-        # allowlists stay honest
-        *NESTED_LOOP_ALLOWED,
-        *UNPARTITIONED_WINDOW_ALLOWED,
-        *(k for k, _ in NESTED_LOOP_STAGE_ALLOWED),
-        *(k for k, _ in UNPARTITIONED_WINDOW_STAGE_ALLOWED),
-        *RESCAN_CEILINGS,
-    }
+    _lint_plan_text,
+    load_ledger,
 )
 
 
-@pytest.fixture(scope="module")
-def audit_rows(spark):
-    from airbnb_listings_reviews_data_engineering_spark.plans import all_queries
-
-    # a RISK_KEYS typo must fail loudly, not silently skip the key
-    unknown = set(RISK_KEYS) - set(all_queries())
-    assert unknown == set(), f"RISK_KEYS not in registry: {unknown}"
-    return {r["key"]: r for r in run(sorted(RISK_KEYS))}
-
-
-def test_no_plan_flags_on_risk_keys(audit_rows):
-    flagged = {k: r["flags"] for k, r in audit_rows.items() if r["flags"]}
-    assert flagged == {}, flagged
-
-
-def test_allowlisted_keys_exist(audit_rows):
+def test_allowlisted_keys_exist():
     # an allowlist entry for a deleted key would silently mask a future
     # regression under a reused name
-    from airbnb_listings_reviews_data_engineering_spark.plans import all_queries
-
-    missing = NESTED_LOOP_ALLOWED - set(all_queries())
-    assert missing == set(), missing
-    missing_w = UNPARTITIONED_WINDOW_ALLOWED - set(all_queries())
-    assert missing_w == set(), missing_w
-    missing_s = {k for k, _ in NESTED_LOOP_STAGE_ALLOWED} - set(all_queries())
-    assert missing_s == set(), missing_s
-    missing_sw = {
-        k for k, _ in UNPARTITIONED_WINDOW_STAGE_ALLOWED
-    } - set(all_queries())
-    assert missing_sw == set(), missing_sw
+    listed = (
+        NESTED_LOOP_ALLOWED
+        | UNPARTITIONED_WINDOW_ALLOWED
+        | MAP_SIDE_ASSIGNMENT
+        | {k for k, _ in NESTED_LOOP_STAGE_ALLOWED}
+        | {k for k, _ in UNPARTITIONED_WINDOW_STAGE_ALLOWED}
+    )
+    assert listed - set(all_queries()) == set()
 
 
-def test_allowlisted_windows_are_genuinely_tiny(audit_rows):
-    # the allowlisted unpartitioned windows must stay confined to their
-    # tiny offset/count frames — a pinned count per plan; one more such
-    # node than pinned would mean the data table grew a global window
-    # behind the allowlist's back
-    expected = {
-        # the RRF fusion ranks the SAME tiny candidate set twice
-        # (lexical rank + vector rank) — two windows by design
-        "sim_hybrid_rrf": 2,
-        # KM survival runs two prefix sums over the #churn-days table:
-        # the risk-set identity (deaths before day) and the log-space
-        # cumulative product — both bounded by the calendar
-        "ts_survival_km": 2,
-        # noisy CDF (cum + total) and exact CDF (cum + total) over the
-        # 256-bucket histogram — four by design
-        "agg_dp_quantile": 4,
-    }
-    for key in UNPARTITIONED_WINDOW_ALLOWED:
-        assert audit_rows[key]["unpart_win"] == expected.get(key, 1), (
-            key,
-            audit_rows[key]["unpart_win"],
-        )
-    # stage-allowlisted windows are pinned the same way (the key-level
-    # loop above sees FINAL plans only; a window living inside a pinned
-    # stage is counted by stage_unpart_win — VERDICT r6 #1)
-    stage_expected = {
-        "pack_length_pairs": 1,
-        # ONE logical seed-vocab rank window, now inside the ulm_seed
-        # pin (round 14 pins the seed table itself — the rank window
-        # and its rn filter are captured as one window node in that
-        # stage plan; the old ulm_vocab1 capture saw the same logical
-        # window as 4 structural nodes via WindowGroupLimit)
-        "text_unigram_lm_em": 1,
-        "text_unigram_encode_docs": 1,
-    }
-    for key in {k for k, _ in UNPARTITIONED_WINDOW_STAGE_ALLOWED}:
-        assert audit_rows[key]["stage_unpart_win"] == stage_expected[key], (
-            key,
-            audit_rows[key]["stage_unpart_win"],
-        )
+def test_ledger_covers_registry():
+    ledger = load_ledger()
+    registered = set(all_queries())
+    assert sorted(registered - set(ledger)) == [], "keys missing from the ledger"
+    assert sorted(set(ledger) - registered) == [], "ledger keys not registered"
+    odd = {k: sorted(v) for k, v in ledger.items() if set(v) != set(LEDGER_FIELDS)}
+    assert odd == {}
 
 
-# The shuffle-assignment regression pin (VERDICT r6 #2/#3/missing-#3):
-# every assignment-bearing key's pinned stages must stay MAP-SIDE — a
-# reintroduced crossJoin + row_number()-over-partitionBy(id) formulation
-# adds a WindowExec and an Exchange hashpartitioning(<id>) to a stage
-# (or final) plan and fails these exact pins. stage_windows counts ALL
-# WindowExec nodes (partitioned included — the r5 SemDedup shuffle was a
-# partitioned window the unpartitioned counter is blind to).
-#   key: (pinned_stages, stage_exchanges, stage_windows)
-ASSIGNMENT_STAGE_PINS = {
-    "dedup_semdedup": (3, 8, 0),
-    "dedup_semdedup_multiprobe": (3, 8, 0),
-    "ml_kmeans": (2, 6, 0),
-    "sim_ivf_join_learned": (2, 6, 0),
-    "sim_pq_quantize": (8, 24, 0),
-    "sim_ivf_topk": (0, 0, 0),
-    "text_bpe_train": (7, 22, 0),
-    "text_bpe_vocab": (7, 22, 0),
-    "text_bpe_encode_docs": (7, 22, 0),
-}
-
-# the textual signature of a PER-VECTOR window (the assignment defect:
-# row_number() windowspecdefinition(vec_id, ...) forces an Exchange
-# hashpartitioning(vec_id) of the whole corpus). A vec_id GROUPBY
-# aggregation is legitimate (e.g. multiprobe's per-vector count) — only
-# the window formulation is banned.
-PER_VECTOR_WINDOW = "windowspecdefinition(vec_id"
-CORPUS_ID_SHUFFLE = "hashpartitioning(vec_id"
-
-
-def test_assignment_stages_stay_map_side(audit_rows):
-    actual = {
-        k: (
-            audit_rows[k]["pinned_stages"],
-            audit_rows[k]["stage_exchanges"],
-            audit_rows[k]["stage_windows"],
-        )
-        for k in ASSIGNMENT_STAGE_PINS
-    }
-    assert actual == ASSIGNMENT_STAGE_PINS
-    for k in ASSIGNMENT_STAGE_PINS:
-        assert PER_VECTOR_WINDOW not in audit_rows[k]["plan"], k
-        for label, splan in audit_rows[k]["stage_plans"]:
-            # stages get the stricter pin: no per-vector window AND no
-            # corpus shuffle on vec_id at all (stage_windows==0 above
-            # already bans every WindowExec; this adds the exchange)
-            assert PER_VECTOR_WINDOW not in splan, (k, label)
-            assert CORPUS_ID_SHUFFLE not in splan, (k, label)
-
-
-
-def test_rescan_ceilings(audit_rows):
-    over = {
-        k: audit_rows[k]["max_rescan"]
-        for k, ceil in RESCAN_CEILINGS.items()
-        if audit_rows[k]["max_rescan"] > ceil
-    }
-    assert over == {}, over
+def test_rule_battery_flags_each_anti_pattern():
+    bnlj = "BroadcastNestedLoopJoin BuildRight, Inner"
+    assert _lint_plan_text("join_eq3", bnlj, 0, None) == ["NESTED_LOOP"]
+    assert _lint_plan_text("join_cross", bnlj, 0, None) == []
+    # a key-level allowlist entry does not cover the key's stages
+    assert _lint_plan_text("join_cross", bnlj, 0, "s") == ["PIN[s]:NESTED_LOOP"]
+    assert _lint_plan_text("ml_kmeans", bnlj, 0, "kmeans_cents") == []
+    assert _lint_plan_text("join_eq3", "BatchEvalPython", 0, None) == ["ROW_PYTHON"]
+    assert _lint_plan_text("join_eq3", "", 1, None) == ["GLOBAL_WINDOW"]
+    assert _lint_plan_text("sample_temperature", "", 1, None) == []
+    per_vec = "row_number() windowspecdefinition(vec_id#3, d#4 ASC)"
+    shuffle = "Exchange hashpartitioning(vec_id#3, 4)"
+    assert _lint_plan_text("ml_kmeans", per_vec, 0, None) == ["PER_VECTOR_WINDOW"]
+    assert _lint_plan_text("ml_kmeans", shuffle, 0, None) == []
+    assert _lint_plan_text("ml_kmeans", shuffle, 0, "a") == ["PIN[a]:CORPUS_ID_SHUFFLE"]
+    assert _lint_plan_text("join_eq3", per_vec, 0, None) == []

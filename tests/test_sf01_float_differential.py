@@ -21,17 +21,11 @@ rendering (oracle_for), so scaled-parameter keys are exact too.
 
 from __future__ import annotations
 
-import math
-from decimal import Decimal
-
-import duckdb
 import pytest
 
+from airbnb_listings_reviews_data_engineering_spark.checkpoint import release_pins
 from airbnb_listings_reviews_data_engineering_spark.plans import all_queries
-from airbnb_listings_reviews_data_engineering_spark.plans.registry import (
-    TABLES,
-    lint_oracle_types,
-)
+from scripts.oracle_check import check
 
 SF01_DIR = "/root/testdata/sf0.1"
 
@@ -72,71 +66,16 @@ FLOAT_SENSITIVE_KEYS = [
 QUERIES = all_queries()
 
 
-@pytest.fixture(scope="module")
-def duck01():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            "CREATE VIEW {0} AS SELECT * FROM "
-            "read_parquet('{1}/{0}.parquet')".format(t, SF01_DIR)
-        )
-    yield con
-    con.close()
-
-
-def _norm(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(v)
-    if isinstance(v, Decimal):
-        return str(v.normalize())
-    return str(v)
-
-
-def _canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
-
-
 def test_float_sensitive_list_is_registered():
     missing = [k for k in FLOAT_SENSITIVE_KEYS if k not in QUERIES]
     assert not missing, f"unregistered keys in the sf0.1 battery: {missing}"
 
 
 @pytest.mark.parametrize("key", FLOAT_SENSITIVE_KEYS)
-def test_float_key_matches_oracle_at_sf01(key, spark, duck01):
-    from airbnb_listings_reviews_data_engineering_spark.checkpoint import (
-        release_pins,
-    )
-
+def test_float_key_matches_oracle_at_sf01(key, spark):
     spec = QUERIES[key]
     try:
-        sdf = spec.fn(spark, SF01_DIR)
-        srows = sdf.collect()
-        scols = sdf.columns
+        problems = check(spec, spec.fn(spark, SF01_DIR), SF01_DIR)
     finally:
         release_pins(spark)
-    osql = spec.oracle_for(SF01_DIR)
-    assert osql is not None, f"{key}: float battery requires an oracle"
-    orel = duck01.sql(osql)
-    type_errs = lint_oracle_types(orel.columns, orel.types, key)
-    assert not type_errs, type_errs
-    ores = duck01.execute(osql)
-    ocols = [d[0] for d in ores.description]
-    orows = ores.fetchall()
-    assert sorted(scols) == sorted(ocols), (
-        f"{key}: column mismatch {scols} vs {ocols}"
-    )
-    assert len(srows) == len(orows), (
-        f"{key}: row count {len(srows)} vs {len(orows)}"
-    )
-    sc = _canon([tuple(r) for r in srows], scols)
-    oc = _canon(orows, ocols)
-    if sc != oc:
-        diffs = [(a, b) for a, b in zip(sc, oc) if a != b][:5]
-        raise AssertionError(
-            f"{key}: sf0.1 float divergence, first diffs: {diffs}"
-        )
+    assert not problems, "\n".join(problems)
