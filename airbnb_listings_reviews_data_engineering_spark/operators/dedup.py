@@ -83,6 +83,42 @@ def minhash_signature(
     return sh.select(F.col(id_col), *sig_cols)
 
 
+def _lsh_bands(
+    sig: DataFrame, id_col: str, num_hashes: int = 8, bands: int = 4
+) -> tuple[DataFrame, Column]:
+    """The LSH band explode every MinHash band join shares: one row per
+    (doc, band) carrying the band key ``bk`` = struct(band, k0, k1, ...)
+    and the full signature ``h0..h{num_hashes-1}``, plus the verify
+    column — the fraction of agreeing hashes, round(agree / num_hashes,
+    4) — for a join of two such frames aliased ``a`` and ``b``.
+
+    Carrying the full signature through the explode lets the bucket
+    join yield both signatures directly — one shuffle join total,
+    instead of join + distinct + two signature re-joins. The extra
+    shuffle width (num_hashes bigints per row) is the price; at 100 TB
+    that is ~64 bytes/row against two avoided full re-shuffles of sig."""
+    rows_per_band = num_hashes // bands
+    band_structs = [
+        F.struct(
+            F.lit(b).alias("band"),
+            *[
+                F.col(f"h{b * rows_per_band + r}").alias(f"k{r}")
+                for r in range(rows_per_band)
+            ],
+        )
+        for b in range(bands)
+    ]
+    hcols = [f"h{j}" for j in range(num_hashes)]
+    exploded = sig.select(
+        F.col(id_col), *hcols, F.explode(F.array(*band_structs)).alias("bk")
+    )
+    agree = sum(
+        F.when(F.col(f"a.h{j}") == F.col(f"b.h{j}"), 1).otherwise(0)
+        for j in range(num_hashes)
+    )
+    return exploded, F.round(agree / F.lit(float(num_hashes)), 4)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -101,7 +137,6 @@ def minhash_lsh_pairs(
 
     Returns (doc_a, doc_b, est_jaccard) with est >= threshold.
     """
-    rows_per_band = num_hashes // bands
     # materialize the signature once: both sides of the self-join read it,
     # and without this the shingle+md5 scan runs twice (the signature is
     # (id, 8 longs) — tiny next to the corpus, always worth keeping).
@@ -114,34 +149,15 @@ def minhash_lsh_pairs(
     # LSH-consuming key (guide §1.2).
     sig = pin(minhash_signature(df, id_col, text_col, num_hashes, shingle),
               eager=False, label="minhash_sig")
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            *[F.col(f"h{b * rows_per_band + r}").alias(f"k{r}") for r in range(rows_per_band)],
-        )
-        for b in range(bands)
-    ]
-    # Carry the full signature through the band explode: the bucket join
-    # then yields both signatures directly — one shuffle join total,
-    # instead of join + distinct + two signature re-joins. The extra
-    # shuffle width (num_hashes bigints per row) is the price; at 100 TB
-    # that is ~64 bytes/row against two avoided full re-shuffles of sig.
-    hcols = [f"h{j}" for j in range(num_hashes)]
-    exploded = sig.select(
-        F.col(id_col), *hcols, F.explode(F.array(*band_structs)).alias("bk")
-    )
+    exploded, est = _lsh_bands(sig, id_col, num_hashes, bands)
     a = exploded.alias("a")
     b = exploded.alias("b")
-    agree = sum(
-        F.when(F.col(f"a.h{j}") == F.col(f"b.h{j}"), 1).otherwise(0)
-        for j in range(num_hashes)
-    )
     return (
         a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
         .select(
             F.col(f"a.{id_col}").alias("doc_a"),
             F.col(f"b.{id_col}").alias("doc_b"),
-            F.round(agree / F.lit(float(num_hashes)), 4).alias("est_jaccard"),
+            est.alias("est_jaccard"),
         )
         .distinct()  # a pair may collide in several bands
         .filter(F.col("est_jaccard") >= threshold)
@@ -617,42 +633,23 @@ def minhash_lsh_join(
 
     Returns (batch_id, corpus_id, est_jaccard) with est >= threshold.
     """
-    rows_per_band = num_hashes // bands
-    hcols = [f"h{j}" for j in range(num_hashes)]
-
-    def exploded(df: DataFrame, do_pin: bool) -> DataFrame:
+    def exploded(df: DataFrame, do_pin: bool) -> tuple[DataFrame, Column]:
         sig = minhash_signature(df, id_col, text_col, num_hashes, shingle)
         if do_pin:
             sig = pin(sig, label="lsh_join_sig")
-        band_structs = [
-            F.struct(
-                F.lit(b).alias("band"),
-                *[
-                    F.col(f"h{b * rows_per_band + r}").alias(f"k{r}")
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(bands)
-        ]
-        return sig.select(
-            F.col(id_col), *hcols, F.explode(F.array(*band_structs)).alias("bk")
-        )
+        return _lsh_bands(sig, id_col, num_hashes, bands)
 
     # pin_batch=False lets a STREAMING batch side through (a streaming
     # DataFrame cannot localCheckpoint; its signature is recomputed per
     # micro-batch — map-side expressions, so nothing is lost)
-    a = exploded(batch, pin_batch).alias("a")
-    b = exploded(corpus, True).alias("b")
-    agree = sum(
-        F.when(F.col(f"a.h{j}") == F.col(f"b.h{j}"), 1).otherwise(0)
-        for j in range(num_hashes)
-    )
+    a, est = exploded(batch, pin_batch)
+    b, _ = exploded(corpus, True)
     return (
-        a.join(b, F.col("a.bk") == F.col("b.bk"))
+        a.alias("a").join(b.alias("b"), F.col("a.bk") == F.col("b.bk"))
         .select(
             F.col(f"a.{id_col}").alias("batch_id"),
             F.col(f"b.{id_col}").alias("corpus_id"),
-            F.round(agree / F.lit(float(num_hashes)), 4).alias("est_jaccard"),
+            est.alias("est_jaccard"),
         )
         .distinct()  # a pair may collide in several bands
         .filter(F.col("est_jaccard") >= threshold)

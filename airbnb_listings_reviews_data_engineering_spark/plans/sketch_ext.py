@@ -2623,21 +2623,27 @@ def stream_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     that key's SQL, proving the micro-batch path changes the
     execution, not the value."""
     from ..functions.hashing import hash60_spark_sql
-    from .streaming_q import _landing_zone, _stage_batch
+    from ..streaming.ingest import run_available_now
+    from .streaming_q import _ensure_staged, _stage_batch, _staged_stream
 
     o = load(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("k"), F.col("o_orderkey").alias("ok")
     )
-    stream_dir = _landing_zone(spark, "stream_sketch_bloom")
-    for i in range(_SBL_BATCHES):
-        _stage_batch(
-            o.filter(F.col("ok") % _SBL_BATCHES == i).drop("ok"),
-            stream_dir,
-            f"batch{i + 1}.parquet",
-            i + 1,
-        )
+
+    def _stage(stream_dir: str) -> None:
+        for i in range(_SBL_BATCHES):
+            _stage_batch(
+                o.filter(F.col("ok") % _SBL_BATCHES == i).drop("ok"),
+                stream_dir,
+                f"batch{i + 1}.parquet",
+                i + 1,
+            )
+
+    stream_dir = _ensure_staged(
+        spark, "stream_sketch_bloom", sf_dir, "orders", _stage
+    )
     hx = hash60_spark_sql("concat(CAST(j AS STRING), ':', CAST(k AS STRING))")
-    stream = spark.readStream.schema("k bigint").parquet(stream_dir)
+    stream = _staged_stream(spark, stream_dir, "k bigint")
     masks = (
         stream.select(
             "k", F.explode(F.sequence(F.lit(1), F.lit(_BLOOM_K))).alias("j")
@@ -2651,7 +2657,7 @@ def stream_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.expr("bit_or(bit) AS mask"))
     )
     merged = pin(
-        run_available_now_sketch(masks, "stream_sketch_bloom"),
+        run_available_now(masks, query_name="stream_sketch_bloom"),
         label="sbl_merged",
     )
     # post-drain batch layers: identical to sketch_bloom_rollup's
@@ -2727,12 +2733,6 @@ def stream_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(n_diff = 0) AS merged_equals_direct",
         )
     )
-
-
-def run_available_now_sketch(agg: DataFrame, name: str) -> DataFrame:
-    from ..streaming.ingest import run_available_now
-
-    return run_available_now(agg, query_name=name, output_mode="complete")
 
 
 # ---------------------------------------------------------------------------

@@ -405,32 +405,12 @@ def diff_versions(
     )
 
 
-def drop_published(target_path: str) -> None:
-    """Remove a published table COMPLETELY: pointer symlink, temp link,
-    and the whole hidden versions directory. ``staging.fs_delete`` alone
-    cannot do this — rmtree refuses a symlink as its top argument, so
-    deleting just the pointer path silently leaves every version behind
-    and the next ``read_published`` resurrects the stale table as a
-    merge base (the round-8 stream_mv_merge leak)."""
-    target = os.path.abspath(target_path.rstrip("/"))
-    for link in (target, target + ".ln.tmp"):
-        if os.path.islink(link) or os.path.isfile(link):
-            try:
-                os.unlink(link)
-            except OSError:
-                pass
-    if os.path.isdir(target):  # pre-migration plain dir
-        shutil.rmtree(target, ignore_errors=True)
-    shutil.rmtree(_versions_dir(target), ignore_errors=True)
-
-
 __all__ = [
     "AnalysisException",
     "ConcurrentPublishError",
     "commit_staged",
     "current_version",
     "diff_versions",
-    "drop_published",
     "list_versions",
     "publish_parquet",
     "read_published",

@@ -5,7 +5,8 @@ The reference's 'streaming' is a daily Airflow re-run with DB-side upsert
 equivalent is a file-source stream with trigger(availableNow=True):
 each run drains whatever new files landed, foreachBatch merges them
 idempotently, and checkpointing gives exactly-once — retries come free
-(inc_retry, SURVEY.md §2.8).
+(inc_retry, SURVEY.md §2.8). ``fold_stream`` is that drain, the one
+foreachBatch harness in the package.
 
 Also provides a watermarked tumbling-window aggregation — the streaming
 operator a production events pipeline needs that the reference lacks.
@@ -114,32 +115,61 @@ def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = 
     )
 
 
-def _drain_files_into(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    checkpoint: str,
-    fmt: str,
-    batch_fn,
-) -> None:
-    """Shared availableNow drain harness: file-source stream over a drop
-    directory, each micro-batch handed to ``batch_fn`` via foreachBatch,
-    checkpointed so re-runs skip already-ingested files (exactly-once
-    without a coordinator). Both merge-style ingests below ride this one
-    definition — a fix to the drain shape cannot diverge between them."""
-    reader = spark.readStream.schema(schema)
-    stream = (
-        reader.option("header", True).csv(source_dir)
-        if fmt == "csv"
-        else reader.parquet(source_dir)
-    )
+def fold_stream(stream: DataFrame, checkpoint: str, step, *targets: str) -> None:
+    """The one exactly-once drain: fold a stream into published tables.
+
+    ``stream`` drains with ``trigger(availableNow=True)`` into
+    foreachBatch. For each micro-batch, each target's current published
+    version is read (None before its first publish), ``step(batch,
+    *bases)`` returns one frame per target (a bare frame for one
+    target, a tuple for several), and the frames are published to the
+    targets in order through sources/atomic.publish_parquet — one write
+    plus an atomic pointer swap each, so a batch that dies mid-publish
+    leaves the previous version readable.
+
+    Replay contract: the checkpoint commits a batch only after its
+    foreachBatch returns, so a crash between a durable publish and that
+    commit re-runs the batch against a base that ALREADY holds it.
+    ``step`` must therefore be idempotent against such a base. Upsert
+    (last write wins per key) and SCD2 (same batch -> no-op) are; the
+    append steps (admission ledgers, the DP release ledger) are not,
+    and rely on a fresh per-run root and checkpoint instead, so a
+    failed run is discarded whole rather than resumed."""
+    from ..sources import atomic
+
+    def fold(batch: DataFrame, _batch_id: int) -> None:
+        spark = batch.sparkSession
+        # read_published returns None ONLY when a target was never
+        # published; corruption / IO / permission errors propagate and
+        # fail the batch (retried by the stream) instead of silently
+        # replacing the base table with this batch alone.
+        out = step(batch, *(atomic.read_published(spark, t) for t in targets))
+        frames = out if isinstance(out, tuple) else (out,)
+        for df, target in zip(frames, targets, strict=True):
+            atomic.publish_parquet(df, target)
+
     q = (
-        stream.writeStream.foreachBatch(batch_fn)
+        stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+
+
+def appended(rows: DataFrame, base: DataFrame | None) -> DataFrame:
+    """An append step's new table: this batch's rows plus the previous
+    version's (``base`` is None before the first publish)."""
+    return rows if base is None else rows.unionByName(base)
+
+
+def _file_stream(
+    spark: SparkSession, source_dir: str, schema: T.StructType, fmt: str
+) -> DataFrame:
+    reader = spark.readStream.schema(schema)
+    if fmt == "csv":
+        return reader.option("header", True).csv(source_dir)
+    return reader.parquet(source_dir)
 
 
 def available_now_merge_ingest(
@@ -159,21 +189,18 @@ def available_now_merge_ingest(
     + DB upserts.
     """
     from ..operators.merge import upsert_snapshot
-    from ..sources.atomic import publish_parquet, read_published
+    from ..sources.atomic import read_published
 
-    def merge_batch(batch: DataFrame, _batch_id: int) -> None:
+    def merge_batch(batch: DataFrame, base: DataFrame | None) -> DataFrame:
         batch = batch.dropDuplicates(keys)
-        # read_published returns None ONLY when the target was never
-        # published; corruption / IO / permission errors propagate and
-        # fail the batch (retried by the stream) instead of silently
-        # replacing the base table with this batch alone.
-        base = read_published(batch.sparkSession, target_path)
-        merged = batch if base is None else upsert_snapshot(base, batch, keys)
-        # one write + atomic pointer swap; previous version stays
-        # readable if this batch dies mid-write
-        publish_parquet(merged, target_path)
+        return batch if base is None else upsert_snapshot(base, batch, keys)
 
-    _drain_files_into(spark, source_dir, schema, checkpoint, fmt, merge_batch)
+    fold_stream(
+        _file_stream(spark, source_dir, schema, fmt),
+        checkpoint,
+        merge_batch,
+        target_path,
+    )
     return read_published(spark, target_path)
 
 
@@ -584,7 +611,7 @@ def available_now_scd2_ingest(
     several changes for one key deterministic.
     """
     from ..operators.merge import merge_scd2
-    from ..sources.atomic import publish_parquet, read_published
+    from ..sources.atomic import read_published
 
     hist_schema = T.StructType(
         [f for f in schema.fields if f.name != effective]
@@ -595,12 +622,15 @@ def available_now_scd2_ingest(
         ]
     )
 
-    def scd2_batch(batch: DataFrame, _batch_id: int) -> None:
-        base = read_published(batch.sparkSession, target_path)
+    def scd2_batch(batch: DataFrame, base: DataFrame | None) -> DataFrame:
         if base is None:
             base = batch.sparkSession.createDataFrame([], hist_schema)
-        merged = merge_scd2(base, batch, keys, tracked, effective)
-        publish_parquet(merged, target_path)
+        return merge_scd2(base, batch, keys, tracked, effective)
 
-    _drain_files_into(spark, source_dir, schema, checkpoint, fmt, scd2_batch)
+    fold_stream(
+        _file_stream(spark, source_dir, schema, fmt),
+        checkpoint,
+        scd2_batch,
+        target_path,
+    )
     return read_published(spark, target_path)

@@ -27,10 +27,12 @@ Updates the marker-delimited ANN-recall section of SCALING.md.
 
 from __future__ import annotations
 
+import os
 import sys
 from itertools import combinations
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -207,7 +209,7 @@ def main() -> None:
     ]
     text = "\n".join(body) + "\n"
 
-    with open("/root/repo/SCALING.md") as f:
+    with open(os.path.join(REPO, "SCALING.md")) as f:
         old = f.read()
     if START in old:
         pre = old.split(START)[0]
@@ -215,7 +217,7 @@ def main() -> None:
         new = pre + text + post
     else:
         new = old.rstrip() + "\n\n" + text
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
         f.write(new)
     print("SCALING.md ANN section updated")
 

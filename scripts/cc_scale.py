@@ -20,10 +20,12 @@ the min-id node) with wall-clock marked n/a.
 from __future__ import annotations
 
 import random
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from airbnb_listings_reviews_data_engineering_spark.checkpoint import (  # noqa: E402
     release_pins,

@@ -18,16 +18,18 @@ Usage: python scripts/check_survey.py
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from airbnb_listings_reviews_data_engineering_spark.plans import all_queries  # noqa: E402
 from scripts.gen_coverage import SURVEY_BEGIN, SURVEY_END  # noqa: E402
 
 
 def main() -> int:
-    survey = open("/root/repo/SURVEY.md").read()
+    survey = open(os.path.join(REPO, "SURVEY.md")).read()
     qs = all_queries()
     errs = []
 

@@ -19,10 +19,12 @@ Updates the marker-delimited section of SCALING.md.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -126,7 +128,7 @@ def main() -> None:
         END,
     ]
     text = "\n".join(lines)
-    with open("/root/repo/SCALING.md") as f:
+    with open(os.path.join(REPO, "SCALING.md")) as f:
         doc = f.read()
     if START in doc:
         pre = doc.split(START)[0]
@@ -134,7 +136,7 @@ def main() -> None:
         doc = pre + text + post
     else:
         doc = doc.rstrip() + "\n\n" + text + "\n"
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
         f.write(doc)
     print(text)
 

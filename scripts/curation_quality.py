@@ -36,9 +36,11 @@ Updates the marker-delimited section of SCALING.md.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -440,7 +442,7 @@ def main() -> None:
         END,
     ]
 
-    with open("/root/repo/SCALING.md") as f:
+    with open(os.path.join(REPO, "SCALING.md")) as f:
         doc = f.read()
     block = "\n".join(lines)
     if START in doc:
@@ -449,7 +451,7 @@ def main() -> None:
         doc = pre + block + post
     else:
         doc = doc.rstrip() + "\n\n" + block + "\n"
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
         f.write(doc)
     print("semdedup:", sd)
     print("kcenter greedy/baseline:", kc_g, kc_b)

@@ -26,9 +26,11 @@ Updates the marker-delimited sections of SCALING.md.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -232,13 +234,13 @@ def main() -> None:
         END,
     ]
     text = "\n".join(body) + "\n"
-    with open("/root/repo/SCALING.md") as f:
+    with open(os.path.join(REPO, "SCALING.md")) as f:
         old = f.read()
     if START in old:
         new = old.split(START)[0] + text + old.split(END)[-1]
     else:
         new = old.rstrip() + "\n\n" + text
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
         f.write(new)
     print("SCALING.md dedup-quality section updated")
 
@@ -292,13 +294,13 @@ def main() -> None:
         EMB_END,
     ]
     emb_text = "\n".join(emb_lines) + "\n"
-    with open("/root/repo/SCALING.md") as f:
+    with open(os.path.join(REPO, "SCALING.md")) as f:
         old = f.read()
     if EMB_START in old:
         new = old.split(EMB_START)[0] + emb_text + old.split(EMB_END)[-1]
     else:
         new = old.rstrip() + "\n\n" + emb_text
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
         f.write(new)
     print("SCALING.md embedding-LSH recall section updated")
 

@@ -28,7 +28,7 @@
 #      the committed logs hash to the manifest's digests; the gate goes
 #      RED if HEAD moved while it ran
 #
-# Run from /root/repo:   bash scripts/exit_gate.sh
+# Run from the repo root:   bash scripts/exit_gate.sh
 set -uo pipefail
 cd "$(dirname "$0")/.."
 

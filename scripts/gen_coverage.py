@@ -4,9 +4,11 @@ SURVEY.md §2's inventory line by line; this table is the index."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from airbnb_listings_reviews_data_engineering_spark.plans import all_queries  # noqa: E402
 
@@ -284,7 +286,7 @@ def main() -> None:
         lines.append("")
     if missing:
         lines += ["## Unsectioned", ""] + [f"- `{k}`" for k in missing] + [""]
-    with open("/root/repo/COVERAGE.md", "w") as f:
+    with open(os.path.join(REPO, "COVERAGE.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote COVERAGE.md: {len(qs)} queries, {len(missing)} unsectioned")
     _refresh_survey_index(qs)
@@ -310,7 +312,7 @@ def _refresh_survey_index(qs) -> None:
     keys were undocumented in it; prose narrates the families, this
     block enumerates the keys). scripts/check_survey.py fails the exit
     gate when the block is stale."""
-    path = "/root/repo/SURVEY.md"
+    path = os.path.join(REPO, "SURVEY.md")
     with open(path) as f:
         doc = f.read()
     lines = [SURVEY_BEGIN,

@@ -4,9 +4,11 @@ TakeOrderedAndProject) is reviewable without running Spark."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from airbnb_listings_reviews_data_engineering_spark.plans import all_queries  # noqa: E402
 from airbnb_listings_reviews_data_engineering_spark.session import get_spark  # noqa: E402
@@ -79,7 +81,7 @@ def main() -> None:
             )
         )
         out += [f"## `{key}`", "", why + ".", "", "```", plan.strip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
 

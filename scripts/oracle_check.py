@@ -16,11 +16,13 @@ Usage: python scripts/oracle_check.py [sf_dir] [key ...]
 from __future__ import annotations
 
 import functools
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from airbnb_listings_reviews_data_engineering_spark.checkpoint import (  # noqa: E402
     release_pins,

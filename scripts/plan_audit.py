@@ -53,11 +53,13 @@ from __future__ import annotations
 
 import json
 import re
+import os
 import sys
 from collections import Counter
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from airbnb_listings_reviews_data_engineering_spark import checkpoint as _ckpt  # noqa: E402
 from airbnb_listings_reviews_data_engineering_spark.planlint import (  # noqa: E402

@@ -20,10 +20,12 @@ Writes SCALING.md and prints the table.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -208,7 +210,7 @@ def main() -> None:
     # preserve the marker-delimited sections other scripts maintain
     # (scripts/ann_recall.py, scripts/dedup_quality.py)
     try:
-        with open("/root/repo/SCALING.md") as f:
+        with open(os.path.join(REPO, "SCALING.md")) as f:
             old = f.read()
         for mark in ("ANN_RECALL", "DEDUP_QUALITY"):
             start, end = f"<!-- {mark}_START -->", f"<!-- {mark}_END -->"
@@ -217,7 +219,7 @@ def main() -> None:
                 out = out.rstrip() + "\n\n" + block
     except FileNotFoundError:
         pass
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
         f.write(out)
     print(out)
 

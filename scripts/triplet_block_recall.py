@@ -15,9 +15,11 @@ quotes numbers only with a committed raw log).
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import Window as W  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402

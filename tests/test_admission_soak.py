@@ -19,12 +19,13 @@ import shutil
 import statistics
 
 import pytest
+from conftest import REPO_ROOT
 
 
 @pytest.fixture(scope="module")
 def soak():
     spec = importlib.util.spec_from_file_location(
-        "admission_soak", "/root/repo/scripts/admission_soak.py"
+        "admission_soak", REPO_ROOT / "scripts" / "admission_soak.py"
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -90,9 +90,6 @@ def test_embedding_lsh_pair_recall_floors(spark, sf_dir):
     pinned quantity is candidate PRUNING: the single-bucket join must
     score only a small fraction of all pairs — recall bought by probing
     everything would be no result at all."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from scripts.dedup_quality import emb_lsh_pair_sets
 
     from airbnb_listings_reviews_data_engineering_spark.checkpoint import (
@@ -125,9 +122,6 @@ def test_containment_floors(spark, sf_dir):
     """Pin the SCALING.md distinctive-containment claims at gate SF: the
     DF cap must keep near-total recall of the exhaustive spec while
     feeding the pair join an order of magnitude fewer posting pairs."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from scripts.containment_quality import (
         posting_pair_volume,
         quoting_corpus,

@@ -5,10 +5,6 @@ value parity; these tests pin the geometric properties)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from airbnb_listings_reviews_data_engineering_spark.plans.geo_ext import (

@@ -6,10 +6,6 @@ FULL ordering corpus-wide, and that the augmentation is well-formed
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from airbnb_listings_reviews_data_engineering_spark.functions.arrays import as_double_array, dot

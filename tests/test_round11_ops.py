@@ -12,6 +12,7 @@ import shutil
 
 import duckdb
 import pytest
+from conftest import REPO_ROOT
 from pyspark.sql import functions as F
 
 from airbnb_listings_reviews_data_engineering_spark.functions.arrays import (
@@ -217,7 +218,7 @@ def test_mirror_rotate_picker_prefers_oldest_evidence(tmp_path, monkeypatch):
     import sys
 
     spec = importlib.util.spec_from_file_location(
-        "mirror_rotate", "/root/repo/scripts/mirror_rotate.py"
+        "mirror_rotate", REPO_ROOT / "scripts" / "mirror_rotate.py"
     )
     mr = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mr)

@@ -20,6 +20,7 @@ def _run_admission(spark, batches, gap_ms, cap, tmp_path):
 
     from airbnb_listings_reviews_data_engineering_spark.plans.streaming_q import (
         _stage_batch,
+        _staged_stream,
     )
     from airbnb_listings_reviews_data_engineering_spark.streaming.ingest import (
         run_available_now,
@@ -40,14 +41,9 @@ def _run_admission(spark, batches, gap_ms, cap, tmp_path):
         )
         _stage_batch(df, stream_dir, f"batch{seq}.parquet", seq)
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint, bseq int"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-        .withWatermark("ts", "0 seconds")
-    )
+    stream = _staged_stream(
+        spark, stream_dir, "event_id bigint, ts timestamp, user_id bigint, bseq int"
+    ).withWatermark("ts", "0 seconds")
     out = stateful_admission(
         stream,
         gap_ms=gap_ms,
@@ -413,6 +409,7 @@ def test_session_finalize_gap_vs_timer_attribution(spark, tmp_path):
 
     from airbnb_listings_reviews_data_engineering_spark.plans.streaming_q import (
         _stage_batch,
+        _staged_stream,
     )
     from airbnb_listings_reviews_data_engineering_spark.streaming.ingest import (
         run_available_now,
@@ -444,14 +441,9 @@ def test_session_finalize_gap_vs_timer_attribution(spark, tmp_path):
         )
         _stage_batch(df, stream_dir, f"batch{seq}.parquet", seq)
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint, vq bigint"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-        .withWatermark("ts", "0 seconds")
-    )
+    stream = _staged_stream(
+        spark, stream_dir, "event_id bigint, ts timestamp, user_id bigint, vq bigint"
+    ).withWatermark("ts", "0 seconds")
     out = session_finalize(stream, gap_ms=3_600_000)
     res = run_available_now(
         out, query_name=f"ssf_test_{tmp_path.name}", output_mode="update"

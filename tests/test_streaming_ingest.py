@@ -232,3 +232,69 @@ def test_scd2_ingest_retry_after_post_publish_crash(spark, tmp_path_factory, mon
         (1, "a", "2024-01-01", None, True),
         (2, "b", "2024-01-01", None, True),
     ]
+
+
+def test_stream_mv_merge_restages_events_rewritten_in_place(spark, sf_dir, tmp_path):
+    """An ``events`` table regenerated in place with the SAME row count
+    but different values must re-stage the landing zone: the staging
+    marker fingerprints the source files, not only their row count, so
+    the second drain folds the new batches and matches the oracle over
+    the new data instead of replaying the stale ones."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from airbnb_listings_reviews_data_engineering_spark.checkpoint import (
+        release_pins,
+    )
+    from airbnb_listings_reviews_data_engineering_spark.plans import all_queries
+    from scripts.oracle_check import check
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for name in os.listdir(sf_dir):
+        src = os.path.join(sf_dir, name)
+        if name == "events.parquet":
+            shutil.copyfile(src, sf / name)
+        else:
+            os.symlink(src, sf / name)
+    spec = all_queries()["stream_mv_merge"]
+
+    def run() -> list[str]:
+        problems = check(spec, spec.fn(spark, str(sf)), str(sf))
+        release_pins(spark)
+        return problems
+
+    assert run() == []
+    events = pq.read_table(sf / "events.parquet")
+    i = events.schema.get_field_index("value")
+    rewritten = events.set_column(i, "value", pc.add(events["value"], 1.25))
+    pq.write_table(rewritten, sf / "events.parquet")
+    assert pq.read_metadata(sf / "events.parquet").num_rows == events.num_rows
+    assert run() == []
+
+
+def test_stream_sketch_bloom_stages_once(spark, sf_dir):
+    """stream_sketch_bloom stages its batch files into the one stable
+    landing zone: repeated calls add no per-call directory under the
+    staging root."""
+    from airbnb_listings_reviews_data_engineering_spark.checkpoint import (
+        release_pins,
+    )
+    from airbnb_listings_reviews_data_engineering_spark.plans import all_queries
+    from airbnb_listings_reviews_data_engineering_spark.sources.staging import (
+        staging_root,
+    )
+
+    spec = all_queries()["stream_sketch_bloom"]
+    scratch = os.path.join(staging_root(spark), "scratch")
+
+    def run() -> set[str]:
+        spec.fn(spark, sf_dir).collect()
+        release_pins(spark)
+        return {d for d in os.listdir(scratch) if d.startswith("stream_sketch_bloom")}
+
+    staged = run()  # the first call may create the stable zone
+    assert run() == staged
+    assert run() == staged
