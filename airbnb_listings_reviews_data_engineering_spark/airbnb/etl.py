@@ -4,9 +4,19 @@ Replaces both reference Airflow DAGs (Airbnb_Listings_ETL.py:225-303,
 Airbnb_Review_ETL.py:128-163). Where the reference moves eager pandas
 frames between worker processes via XCom and loads row-at-a-time into
 Postgres/Mongo, here each pipeline is ONE lazy lineage: the cleaned frame
-is cached once and fanned out to the 6 sinks; the only shuffle in either
-pipeline is the reviews groupBy. Every step is a column expression — zero
-UDFs (SURVEY.md §2.9).
+is cached once and fanned out to the 6 sinks. Every step is a column
+expression — zero UDFs (SURVEY.md §2.9).
+
+Each step is built as one analyzed projection: the scan's typed select
+is one ``selectExpr``, ``clean_listings`` is the dedup window, one filter
+and one projection of all 61 columns, and each sink is one projection.
+At the benchmark's 10^4 listings a load pass spent about 40% of its wall
+time building plans on the driver, with no Spark job running, so every
+extra ``withColumn`` (a re-analysis of the whole plan) and every py4j
+round trip shows in the load's wall time. Cleaning and grouping the
+reviews take one shuffle, the per-listing groupBy, which also drops
+exact duplicate reviews (a merge into stored arrays adds its own); the
+listings pipeline shuffles once too, for the dedup window.
 
 Both DAGs use every core. Each CSV is parsed by Spark's multiLine parser
 over record-aligned chunks (sources/csv.read_multiline_csv), about one
@@ -34,7 +44,6 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoint import hand_over, release
@@ -51,6 +60,7 @@ from .schemas import (
 )
 
 MONEY_TYPE = "decimal(12,2)"
+RENAMED = {"neighbourhood": "neighborhood"}  # the reference's one column rename
 
 
 def read_listings_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -90,113 +100,110 @@ def read_reviews_csv(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _select_by_name(raw: DataFrame, schema, what: str) -> DataFrame:
+    """Select ``schema``'s columns from the string-typed scan by header
+    name, each ``try_cast`` to its type, as one SQL projection: one
+    py4j call per column instead of several."""
     missing = [f.name for f in schema.fields if f.name not in raw.columns]
     if missing:
         raise ValueError(f"{what} CSV lacks selected columns: {missing}")
-    return raw.select(
-        *[F.col(f.name).try_cast(f.dataType).alias(f.name) for f in schema.fields]
+    return raw.selectExpr(
+        *[
+            f"try_cast({_quote(f.name)} AS {f.dataType.simpleString()}) AS {_quote(f.name)}"
+            for f in schema.fields
+        ]
     )
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _money_sql(col: str) -> str:
+    return f"CAST(regexp_replace({col}, '[$,]', '') AS {MONEY_TYPE})"
 
 
 def parse_money(col: str) -> F.Column:
     """'$1,234.00' -> 1234.00 — the single canonical money parse."""
-    return F.regexp_replace(F.col(col), r"[$,]", "").cast(MONEY_TYPE)
+    return F.expr(_money_sql(col))
+
+
+# clean_listings' projection: each changed column's SQL expression
+_CLEANED = {
+    **{c: _money_sql(c) for c in MONEY_COLUMNS},
+    "zipcode": "CASE WHEN length(zipcode) > 5 THEN substring(zipcode, 1, 5) ELSE zipcode END",
+    "state": "CASE WHEN state = 'Washington DC' THEN 'DC' "
+    "WHEN city = 'Washington, D.C.' THEN 'DC' ELSE state END",
+    "city": "CASE WHEN city = 'Washington, D.C.' THEN 'Washington' ELSE city END",
+    "amenities": "CASE WHEN amenities IS NOT NULL "
+    "THEN split(regexp_replace(amenities, '[{}\"]', ''), ',') END",
+}
 
 
 def clean_listings(df: DataFrame) -> DataFrame:
     """The proccess_lists transform chain (Airbnb_Listings_ETL.py:29-87)
-    as one narrow (shuffle-free apart from dedup) column-expression chain:
-    select 61 -> rename -> dedup id -> parse money -> normalize zipcode /
-    state -> parse amenities -> drop null names."""
-    out = (
-        df.select(*SELECTED_COLUMNS)
-        .withColumnRenamed("neighbourhood", "neighborhood")
-        # dedup_key: deterministic keep-least instead of pandas keep-first
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                W.partitionBy("id").orderBy(
-                    F.col("listing_url").asc_nulls_last(),
-                    F.col("name").asc_nulls_last(),
-                )
-            ),
-        )
-        .filter(F.col("_rk") == 1)
-        .drop("_rk")
+    as one dedup window, one filter and one projection: rank by id ->
+    keep rank 1 with a non-null name -> parse money, normalize zipcode /
+    state / city, parse amenities, rename neighbourhood. No projection
+    changes ``name``, so dropping null names in the dedup filter equals
+    the reference's dropna after the transforms. The expressions are SQL
+    text: a projection given as text costs one py4j call per column,
+    where building it from Column objects costs several."""
+    # dedup_key: deterministic keep-least instead of pandas keep-first
+    kept = df.selectExpr(
+        *SELECTED_COLUMNS,
+        "row_number() OVER (PARTITION BY id "
+        "ORDER BY listing_url ASC NULLS LAST, name ASC NULLS LAST) AS _rk",
+    ).filter("_rk = 1 AND name IS NOT NULL")
+    return kept.selectExpr(
+        *[f"{_CLEANED.get(c, c)} AS {RENAMED.get(c, c)}" for c in SELECTED_COLUMNS]
     )
-    for c in MONEY_COLUMNS:
-        out = out.withColumn(c, parse_money(c))
-    out = (
-        out.withColumn(
-            "zipcode",
-            F.when(
-                F.length("zipcode") > 5, F.substring("zipcode", 1, 5)
-            ).otherwise(F.col("zipcode")),
-        )
-        .withColumn(
-            "state",
-            F.when(F.col("state") == "Washington DC", "DC")
-            .when(F.col("city") == "Washington, D.C.", "DC")
-            .otherwise(F.col("state")),
-        )
-        .withColumn(
-            "city",
-            F.when(F.col("city") == "Washington, D.C.", "Washington").otherwise(
-                F.col("city")
-            ),
-        )
-        .withColumn(
-            "amenities",
-            F.when(
-                F.col("amenities").isNotNull(),
-                F.split(F.regexp_replace("amenities", r"[{}\"]", ""), ","),
-            ),
-        )
-        .na.drop(subset=["name"])
-    )
-    return out
 
 
 def split_tables(clean: DataFrame) -> dict[str, DataFrame]:
     """Vertical partition into the 5 relational tables
-    (Airbnb_Listings_ETL.py:76-81,90-151). ``hotel_facilities`` gets the
-    fillna(-1) sentinel on its NUMERIC columns only (divergence note in
-    the module docstring)."""
+    (Airbnb_Listings_ETL.py:76-81,90-151), one projection each.
+    ``hotel_facilities`` gets the fillna(-1) sentinel on its NUMERIC
+    columns only (divergence note in the module docstring), written as
+    the expression ``na.fill`` builds: NaN and null become -1."""
+    types = dict(clean.dtypes)
     tables: dict[str, DataFrame] = {}
     for name, cols in TABLE_SCHEMA.items():
-        t = clean.select(*cols)
         if name == "hotel_facilities":
-            numeric = [
-                c
-                for c, dt in t.dtypes
-                if dt in ("int", "bigint", "double", "float") and c != "id"
-            ]
-            t = t.na.fill(-1, subset=numeric)
-        tables[name] = t
+            cols = [_fill_minus_one(c, types[c]) for c in cols]
+        tables[name] = clean.selectExpr(*cols)
     return tables
+
+
+def _fill_minus_one(c: str, dtype: str) -> str:
+    if c == "id" or dtype not in ("int", "bigint", "double", "float"):
+        return c
+    value = f"nanvl({c}, NULL)" if dtype in ("double", "float") else c
+    return f"coalesce({value}, CAST(-1 AS {dtype})) AS {c}"
 
 
 def build_listing_docs(clean: DataFrame) -> DataFrame:
     """Document assembly (load_lists_mongo, Airbnb_Listings_ETL.py:154-207):
-    text projection + host_desc struct — F.struct, not a per-row apply.
-    The reference then dropna()s the whole frame; we keep that semantic."""
-    return (
-        clean.select(*DOC_TEXT_COLUMNS)
-        .withColumn("host_desc", F.struct("host_id", "host_about"))
-        .drop("host_id", "host_about")
-        .na.drop()
-    )
+    text projection + host_desc struct — a struct expression, not a
+    per-row apply — in one projection. The reference then dropna()s the
+    whole frame; we keep that semantic."""
+    text = [c for c in DOC_TEXT_COLUMNS if c not in ("host_id", "host_about")]
+    return clean.selectExpr(*text, "struct(host_id, host_about) AS host_desc").na.drop()
 
 
 def clean_reviews(df: DataFrame) -> DataFrame:
     """proccess_reviews + the load-side casts (Airbnb_Review_ETL.py:30-86):
-    select 5 -> full-row dedup -> lenient listing_id cast -> drop nulls."""
-    return (
-        df.select("listing_id", "date", "reviewer_id", "reviewer_name", "comments")
-        .dropDuplicates()
-        .withColumn("listing_id", F.col("listing_id").try_cast("long"))
-        .na.drop()
-    )
+    select 5 -> lenient listing_id cast -> drop nulls. The reference's
+    full-row dedup is not a step here: ``reviews_to_arrays`` keeps each
+    listing's distinct review structs, which removes exact duplicate rows
+    in the shuffle the pipeline runs anyway, so a separate
+    ``dropDuplicates`` would only add a second one."""
+    return df.selectExpr(
+        "try_cast(listing_id AS bigint) AS listing_id",
+        "date",
+        "reviewer_id",
+        "reviewer_name",
+        "comments",
+    ).na.drop()
 
 
 def reviews_to_arrays(reviews: DataFrame) -> DataFrame:

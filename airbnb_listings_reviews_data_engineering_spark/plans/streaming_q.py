@@ -421,9 +421,9 @@ def stream_stateful_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.ingest import stateful_admission
 
-    ev = load(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-
     def _stage(stream_dir: str) -> None:
+        # loaded only to re-stage: reading the parquet schema is a job
+        ev = load(spark, sf_dir, "events").select("event_id", "ts", "user_id")
         b1 = F.lit(_SSA_B1).cast("timestamp")
         b2 = F.lit(_SSA_B2).cast("timestamp")
         batches = [
@@ -578,13 +578,14 @@ def stream_session_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     applies unchanged."""
     from ..streaming.ingest import session_finalize
 
-    ev = load(spark, sf_dir, "events").select(
-        "event_id",
-        "ts",
-        "user_id",
-        F.round(F.col("value") * 10000).cast("long").alias("vq"),
-    )
     def _stage(stream_dir: str) -> None:
+        # loaded only to re-stage (see stream_stateful_admission)
+        ev = load(spark, sf_dir, "events").select(
+            "event_id",
+            "ts",
+            "user_id",
+            F.round(F.col("value") * 10000).cast("long").alias("vq"),
+        )
         b1 = F.lit(_SSA_B1).cast("timestamp")
         b2 = F.lit(_SSA_B2).cast("timestamp")
         batches = [
@@ -776,20 +777,21 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     # testdata generation (nanos-long vs micros-timestamp), so the staged
     # batches always carry proper timestamps and the stream schema below
     # is generation-independent.
-    raw = load(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    batches = [
-        ("a_batch1.parquet", raw.filter(F.col("event_id") % 5 != 0)),
-        ("b_batch2.parquet", raw.limit(0)),  # watermark-advancing empty batch
-        (
-            "c_batch3.parquet",
-            raw.filter(F.col("event_id") % 5 == 0).withColumn(
-                "ts", F.col("ts") - F.expr("INTERVAL 6 HOURS")
-            ),
-        ),
-    ]
     def _stage(stream_dir: str) -> None:
+        # loaded only to re-stage (see stream_stateful_admission)
+        raw = load(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value", "props"
+        )
+        batches = [
+            ("a_batch1.parquet", raw.filter(F.col("event_id") % 5 != 0)),
+            ("b_batch2.parquet", raw.limit(0)),  # watermark-advancing empty batch
+            (
+                "c_batch3.parquet",
+                raw.filter(F.col("event_id") % 5 == 0).withColumn(
+                    "ts", F.col("ts") - F.expr("INTERVAL 6 HOURS")
+                ),
+            ),
+        ]
         for i, (name, df) in enumerate(batches):
             _stage_batch(df, stream_dir, name, i)
 
@@ -2356,11 +2358,12 @@ def stream_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
         "concat('sdp:', prio, ':', CAST(batch AS STRING))",
         hash60_spark_sql,
     )
-    o = load(spark, sf_dir, "orders").selectExpr(
-        "o_orderpriority AS prio",
-        f"o_orderkey % {_SDP_BATCHES} + 1 AS batch",
-    )
     def _stage(stream_dir: str) -> None:
+        # loaded only to re-stage (see stream_stateful_admission)
+        o = load(spark, sf_dir, "orders").selectExpr(
+            "o_orderpriority AS prio",
+            f"o_orderkey % {_SDP_BATCHES} + 1 AS batch",
+        )
         for i in range(1, _SDP_BATCHES + 1):
             _stage_batch(
                 o.filter(F.col("batch") == i), stream_dir,

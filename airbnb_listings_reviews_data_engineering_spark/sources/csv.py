@@ -15,6 +15,18 @@ Ge et al., "Speculative Distributed CSV Data Parsing", SIGMOD 2019,
 done exactly instead of speculatively). Each chunk is the file's header
 record plus a byte range, so Spark's own parser, with unchanged options,
 reads the chunks one task each and every row keeps its value.
+
+The cut also gives the column names. Without a schema Spark infers one
+with a job that reads the first record; a split read instead parses
+the header line each file starts with on the driver and hands Spark an
+all-string schema of those names, so building the frame starts no job.
+Spark's inference runs as before when the names cannot be told exactly
+from the line (see :func:`header_names`): the files' header lines
+differ, the line holds a quote or a stray CR (a quoted name may span
+lines, which Spark normalizes) or a non-ASCII byte such as a byte-order
+mark, or Spark would rename a column (an empty name, or names equal
+when case is ignored). An input that is read as given, uncut, is
+inferred by Spark too.
 """
 
 from __future__ import annotations
@@ -70,9 +82,13 @@ def read_multiline_csv(
         .option("escape", '"')
         .option("encoding", encoding)
     )
-    chunks = split_csv(spark, path, encoding)
-    if not chunks:
+    split = split_csv(spark, path, encoding)
+    if split is None:
         return reader.csv(path, schema=schema)
+    chunks, names = split
+    if schema is None and names is not None:
+        # the schema Spark would infer: every header name, as a string
+        schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
     try:
         df = reader.csv(chunks, schema=schema)
     except BaseException:
@@ -82,10 +98,14 @@ def read_multiline_csv(
     return df
 
 
-def split_csv(spark: SparkSession, path: str, encoding: str) -> str | None:
+def split_csv(
+    spark: SparkSession, path: str, encoding: str
+) -> tuple[str, list[str] | None] | None:
     """Write record-aligned chunks of the CSV input at ``path`` into a
-    fresh staging directory and return it, or None when nothing was cut
-    (nothing is copied then).
+    fresh staging directory and return it with the column names of the
+    files' header (see :func:`header_names`; None when Spark has to
+    infer them), or return None when nothing was cut (nothing is copied
+    then).
 
     A file of ``b`` bytes out of ``total`` gets ``ceil(n * b / total)``
     chunks for ``n = defaultParallelism``; a file with fewer records
@@ -115,10 +135,12 @@ def split_csv(spark: SparkSession, path: str, encoding: str) -> str | None:
     if not any(cuts for _, cuts in plans):
         return None
     os.makedirs(out)
+    first_lines = []
     try:
         for i, (f, size, (header_end, cuts)) in enumerate(zip(files, sizes, plans)):
             bounds = [0, *cuts, size]
             with open(f, "rb") as src:
+                first_lines.append(src.readline())
                 for j in range(len(bounds) - 1):
                     with open(os.path.join(out, f"part-{i:05d}-{j:05d}.csv"), "wb") as dst:
                         if j:
@@ -127,7 +149,34 @@ def split_csv(spark: SparkSession, path: str, encoding: str) -> str | None:
     except BaseException:
         shutil.rmtree(out, ignore_errors=True)
         raise
-    return out
+    return out, header_names(first_lines)
+
+
+def header_names(first_lines: list[bytes]) -> list[str] | None:
+    """The column names Spark's ``header`` option gives input files whose
+    first lines (LF included) are ``first_lines``, or None when this
+    cannot tell them exactly and Spark must infer them with a job:
+
+    - the files' first lines differ;
+    - the line holds a quote, or a CR other than the one before its LF
+      (a quoted header field can span lines, and Spark normalizes line
+      breaks inside it), or has no LF;
+    - the line is not ASCII, a byte-order mark included (Java and
+      Python fold case differently outside ASCII);
+    - Spark's ``makeSafeHeader`` would rename a column: an empty name,
+      or names equal when case is ignored.
+
+    Otherwise the names are the line's comma-separated fields, as read."""
+    line = first_lines[0]
+    if any(other != line for other in first_lines[1:]) or not line.endswith(b"\n"):
+        return None
+    line = line[:-2] if line.endswith(b"\r\n") else line[:-1]
+    if not line.isascii() or b'"' in line or b"\r" in line:
+        return None
+    names = line.decode("ascii").split(",")
+    if "" in names or len({n.lower() for n in names}) < len(names):
+        return None
+    return names
 
 
 def record_cuts(path: str, targets: list[int]) -> tuple[int, list[int]] | None:

@@ -7,6 +7,9 @@ multiLine read of the unsplit input with the same options: every row
 must keep exactly its value. Also pinned: the cut points equal a
 byte-at-a-time reference scan at every block size, unsafe files fall
 back to the one-task read, and ``release_pins`` deletes the chunks.
+A split read takes its column names from the header record it cut, so
+building the frame starts no Spark job, and headers Spark would rename
+fall back to Spark's own inference.
 """
 
 from __future__ import annotations
@@ -19,9 +22,11 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from airbnb_listings_reviews_data_engineering_spark.checkpoint import release_pins
+from airbnb_listings_reviews_data_engineering_spark.airbnb import etl
+from airbnb_listings_reviews_data_engineering_spark.checkpoint import release, release_pins
 from airbnb_listings_reviews_data_engineering_spark.sources import csv as csv_source
 from airbnb_listings_reviews_data_engineering_spark.sources.csv import (
+    header_names,
     read_multiline_csv,
     record_cuts,
     split_csv,
@@ -162,16 +167,21 @@ def test_split_content_fidelity(spark, one_file_csv):
     assert got == want  # newlines and doubled quotes survive intact
 
 
-def test_generated_dump_matches_spark_reader(spark, tmp_path):
-    """The benchmark generator's shape: UTF-8 listings with quoted
-    multi-line text and amenity literals, ISO-8859-1 reviews with
+@pytest.fixture(scope="module")
+def gen_day1(tmp_path_factory) -> Path:
+    """Day 1 of the benchmark generator's dump: UTF-8 listings with
+    quoted multi-line text and amenity literals, ISO-8859-1 reviews with
     non-ASCII names."""
     spec = importlib.util.spec_from_file_location(
         "airbnb_gen", Path(__file__).resolve().parent.parent / "airbnb_bench" / "gen.py"
     )
     gen = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(gen)
-    day1 = Path(gen.generate(str(tmp_path / "data"), 5, 300)) / "day1"
+    return Path(gen.generate(str(tmp_path_factory.mktemp("gen") / "data"), 5, 300)) / "day1"
+
+
+def test_generated_dump_matches_spark_reader(spark, gen_day1):
+    day1 = gen_day1
     reviews = (day1 / "Reviews.csv").read_bytes()
     assert any(b > 127 for b in reviews)
     for name, encoding in (("Listings.csv", "UTF-8"), ("Reviews.csv", "ISO-8859-1")):
@@ -179,6 +189,55 @@ def test_generated_dump_matches_spark_reader(spark, tmp_path):
         got = read_multiline_csv(spark, path, encoding=encoding)
         assert got.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
         _assert_same_rows(got, _reference(spark, path, encoding))
+
+
+def test_generated_dump_reads_start_no_job(spark, gen_day1):
+    """Both ETL scans take their header from the split scan: building
+    either frame starts no Spark job (no schema inference)."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    for read, name in (
+        (etl.read_listings_csv, "Listings.csv"),
+        (etl.read_reviews_csv, "Reviews.csv"),
+    ):
+        before = scheduler.nextJobId()
+        df = read(spark, str(gen_day1 / name))
+        assert scheduler.nextJobId() == before, name
+        assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+        release(df)
+
+
+@pytest.mark.parametrize(
+    "header",
+    [
+        b"id,ID,body",  # Spark suffixes names equal when case is ignored
+        b"id,,body",  # and names an empty one _c1
+        b"\xef\xbb\xbfid,tag,body",  # a UTF-8 byte-order mark
+        b'id,"tag",body',  # a quoted name
+    ],
+)
+def test_renamed_headers_match_spark_reader(spark, tmp_path, stage_root, header):
+    rows = b"".join(b'%d,t%d,"line %d\nnext"\n' % (i, i % 3, i) for i in range(200))
+    path = tmp_path / "head.csv"
+    path.write_bytes(header + b"\n" + rows)
+    got = read_multiline_csv(spark, str(path))
+    assert len(_chunk_dirs(stage_root)) == 1  # the file was cut
+    _assert_same_rows(got, _reference(spark, path))
+
+
+def test_header_names_fall_back_where_spark_renames():
+    assert header_names([b"a,b,c\n"]) == ["a", "b", "c"]
+    assert header_names([b"a,b\r\n", b"a,b\r\n"]) == ["a", "b"]
+    for first_lines in (
+        [b"a,b\n", b"a,c\n"],  # the files' headers differ
+        [b"a,b"],  # no LF: the header record's end is unknown
+        [b'a,"b"\n'],
+        [b"a,b\rc\n"],
+        [b"\xef\xbb\xbfa,b\n"],
+        [b"a,\xc3\xa9\n"],  # not ASCII
+        [b"a,,b\n"],
+        [b"a,b,A\n"],
+    ):
+        assert header_names(first_lines) is None, first_lines
 
 
 def test_hand_built_edge_cases_match_spark_reader(spark, tmp_path, stage_root):
@@ -236,7 +295,7 @@ def test_unsplittable_encoding_and_uri_read_as_given(spark, tmp_path):
     path.write_bytes(b"a,b\n1,2\n3,4\n5,6\n7,8\n")
     assert split_csv(spark, str(path), "UTF-16") is None
     assert split_csv(spark, "file://" + str(path), "UTF-8") is None
-    assert split_csv(spark, str(path), "UTF-8") is not None
+    assert split_csv(spark, str(path), "UTF-8")[1] == ["a", "b"]
 
 
 def test_release_pins_deletes_chunks(spark, one_file_csv, stage_root):
