@@ -5,26 +5,31 @@
 
 ``BASE_REF`` is exported with ``git archive`` into a directory of its
 own (``--base-dir``, default a temporary directory that is deleted
-afterwards), so no worktree is registered in the repository. Each pair
+afterwards), so no worktree is registered in the repository. The export
+records the commit it holds in ``.ab_base_commit``; a kept ``--base-dir``
+is reused only while ``BASE_REF`` still resolves to that commit. Each pair
 runs one fresh process per side; the side that goes first alternates
 from pair to pair, so a drift in the host's load reaches both sides
 alike. The 1-minute load average is recorded before every run.
 
 - ``--workload W --seed S`` runs the benchmark unedited in each tree,
   ``airbnb_bench/run.py --workload W --seed S --seconds N --trace 0``
-  under this interpreter, and reads its end-to-end metrics and
-  ``failed`` from the last output line.
+  under this interpreter, with ``N`` the ``run_seconds`` of
+  ``BENCHMARK.json``, and reads its end-to-end metrics and ``failed``
+  from the last output line.
 - ``--keys K,... --control C`` runs ``bench.py`` in each tree with
   ``SPARK_GRAFT_BENCH_ONLY`` set to the keys and the control key, and
   reads each key's seconds (the min of its reps) and Spark job count
   from the sidecar file ``bench.py`` writes. The sidecar each tree had
   before the run is put back afterwards.
 
-It prints, per metric, each side's median and quartiles, the tree's
-change of the median, whether that change exceeds the base's
-interquartile range, and the pairs the tree won (lower is better,
-except ``rows_per_s``). ``--out FILE`` also writes every run as one
-JSON line.
+Every run is printed as one JSON line as it finishes. The summary gives
+the base commit and, per metric, each side's median and quartiles, the
+tree's change of the median, whether that change exceeds the base's
+interquartile range, and the pairs the tree won. A metric's direction
+and regression bound come from its ``end_to_end`` entry in
+``BENCHMARK.json``; every other metric (``failed``, a key's seconds and
+jobs) is lower-better and has no bound.
 """
 
 from __future__ import annotations
@@ -40,7 +45,10 @@ import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SIDECAR = os.path.join("scripts", "last_bench_queries.json")
-HIGHER_IS_BETTER = {"rows_per_s"}
+STAMP = ".ab_base_commit"
+with open(os.path.join(ROOT, "BENCHMARK.json")) as _f:
+    BENCHMARK = json.load(_f)
+E2E = {m["name"]: m for m in BENCHMARK["end_to_end"]}
 
 
 def _parse(argv):
@@ -49,12 +57,10 @@ def _parse(argv):
     p.add_argument("--pairs", type=int, default=10)
     p.add_argument("--workload")
     p.add_argument("--seed", type=int, default=1)
-    p.add_argument("--seconds", type=float, default=10)
     p.add_argument("--keys", help="comma-separated bench.py keys")
     p.add_argument("--control", help="an untouched bench.py key run beside --keys")
     p.add_argument("--base-dir", help="export BASE_REF here and keep it; a directory "
-                   "that already holds an export is reused as is")
-    p.add_argument("--out", help="append every run as a JSON line")
+                   "that already holds an export of the same commit is reused")
     args = p.parse_args(argv)
     if (args.workload is None) == (args.keys is None):
         p.error("give exactly one of --workload and --keys")
@@ -65,16 +71,45 @@ def _parse(argv):
     return args
 
 
-def export(ref: str, dest: str) -> None:
-    """Write the files of ``ref`` into the empty or missing ``dest``."""
+def resolve(ref: str) -> str:
+    out = subprocess.run(["git", "-C", ROOT, "rev-parse", "--verify", f"{ref}^{{commit}}"],
+                         capture_output=True, text=True)
+    if out.returncode:
+        raise SystemExit(f"{ref} names no commit:\n{out.stderr}")
+    return out.stdout.strip()
+
+
+def export(sha: str, dest: str) -> None:
+    """Write the files of commit ``sha`` into the empty or missing
+    ``dest`` and record ``sha`` in its stamp file."""
     os.makedirs(dest, exist_ok=True)
     if os.listdir(dest):
         raise SystemExit(f"{dest} is not empty")
-    archive = subprocess.Popen(["git", "-C", ROOT, "archive", ref], stdout=subprocess.PIPE)
+    archive = subprocess.Popen(["git", "-C", ROOT, "archive", sha], stdout=subprocess.PIPE)
     subprocess.run(["tar", "-x", "-C", dest], stdin=archive.stdout, check=True)
     archive.stdout.close()
     if archive.wait():
-        raise SystemExit(f"git archive {ref} failed")
+        raise SystemExit(f"git archive {sha} failed")
+    with open(os.path.join(dest, STAMP), "w") as f:
+        f.write(sha + "\n")
+
+
+def base_tree(ref: str, dest: str) -> str:
+    """Make ``dest`` hold the files of ``ref``: export them into an empty
+    directory, or reuse an earlier export of the same commit. Returns the
+    commit."""
+    sha = resolve(ref)
+    stamp = os.path.join(dest, STAMP)
+    if not os.path.exists(stamp):
+        export(sha, dest)
+        return sha
+    with open(stamp) as f:
+        held = f.read().strip()
+    if held != sha:
+        raise SystemExit(
+            f"{dest} holds {held}, but {ref} is {sha}; empty it or give another --base-dir"
+        )
+    return sha
 
 
 def _run(cmd: list[str], tree: str, env: dict | None = None) -> str:
@@ -89,7 +124,8 @@ def _run(cmd: list[str], tree: str, env: dict | None = None) -> str:
 def run_workload(tree: str, args) -> dict[str, float]:
     stdout = _run(
         [sys.executable, "airbnb_bench/run.py", "--workload", args.workload,
-         "--seed", str(args.seed), "--seconds", str(args.seconds), "--trace", "0"],
+         "--seed", str(args.seed), "--seconds", str(BENCHMARK["run_seconds"]),
+         "--trace", "0"],
         tree,
     )
     last = json.loads(stdout.strip().splitlines()[-1])
@@ -109,7 +145,8 @@ def run_keys(tree: str, keys: list[str]) -> dict[str, float]:
             side = json.load(f)
     finally:
         if saved is None:
-            os.remove(sidecar)
+            if os.path.exists(sidecar):
+                os.remove(sidecar)
         else:
             with open(sidecar, "wb") as f:
                 f.write(saved)
@@ -126,29 +163,37 @@ def _quartiles(values: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
-def summarize(runs: list[dict]) -> str:
+def summarize(runs: list[dict], base_sha: str) -> str:
     """One line per metric: base and tree median [q1-q3], the change of
-    the median, whether it exceeds the base's spread, and pairs won."""
+    the median, whether it exceeds the base's spread, pairs won, and
+    whether the tree's median is worse than the base's by more than the
+    metric's bound."""
     by_side = {s: [r for r in runs if r["side"] == s] for s in ("base", "tree")}
     lines = [
+        f"base {base_sha}",
         f"load1 before runs: base median {statistics.median(r['load1'] for r in by_side['base']):.2f}, "
         f"tree median {statistics.median(r['load1'] for r in by_side['tree']):.2f}",
         f"{'metric':34} {'base median [q1-q3]':>28} {'tree median [q1-q3]':>28} "
-        f"{'change':>8} {'>IQR':>5} {'won':>6}",
+        f"{'change':>8} {'>IQR':>5} {'won':>6} {'bound':>10}",
     ]
     for name in runs[0]["metrics"]:
         base = [r["metrics"][name] for r in by_side["base"]]
         tree = [r["metrics"][name] for r in by_side["tree"]]
         b1, bm, b3 = _quartiles(base)
         t1, tm, t3 = _quartiles(tree)
-        sign = -1 if name in HIGHER_IS_BETTER else 1
+        spec = E2E.get(name, {})
+        sign = -1 if spec.get("better") == "higher" else 1
         won = sum(sign * (t - b) < 0 for b, t in zip(base, tree))
         change = (tm - bm) / bm if bm else 0.0
+        if "bound" not in spec:
+            bound = "-"
+        else:
+            bound = "WORSE" if sign * change > spec["bound"] else f"ok {spec['bound']:.0%}"
         lines.append(
             f"{name:34} {bm:>10.4g} [{b1:.4g}-{b3:.4g}]".ljust(63)
             + f" {tm:>10.4g} [{t1:.4g}-{t3:.4g}]".ljust(29)
             + f" {change:>+8.1%} {'yes' if abs(tm - bm) > b3 - b1 else 'no':>5}"
-            f" {won:>3}/{len(base)}"
+            f" {won:>3}/{len(base)} {bound:>10}"
         )
     return "\n".join(lines)
 
@@ -157,11 +202,10 @@ def main(argv=None) -> None:
     args = _parse(argv)
     keys = None if args.keys is None else [*args.keys.split(","), args.control]
     base_dir = args.base_dir or tempfile.mkdtemp(prefix="ab_base_")
-    if not os.path.exists(os.path.join(base_dir, "bench.py")):
-        export(args.base_ref, base_dir)
     trees = {"base": base_dir, "tree": ROOT}
     runs = []
     try:
+        base_sha = base_tree(args.base_ref, base_dir)
         for pair in range(args.pairs):
             order = ("base", "tree") if pair % 2 == 0 else ("tree", "base")
             for side in order:
@@ -173,13 +217,10 @@ def main(argv=None) -> None:
                 run = {"pair": pair, "side": side, "load1": load1, "metrics": metrics}
                 runs.append(run)
                 print(json.dumps(run), flush=True)
-                if args.out:
-                    with open(args.out, "a") as f:
-                        f.write(json.dumps(run) + "\n")
     finally:
         if args.base_dir is None:
             shutil.rmtree(base_dir, ignore_errors=True)
-    print(summarize(runs))
+    print(summarize(runs, base_sha))
 
 
 if __name__ == "__main__":
