@@ -37,42 +37,13 @@ GUARD_CONF = "spark.airbnb.percentile.maxExactGroupRows"
 DEFAULT_MAX_EXACT_GROUP_ROWS = 10_000_000
 
 # (cache_key, threshold) -> probe verdict. When ``stats_path`` is given
-# the key also carries a freshness stamp (file count + newest mtime), so
+# the key also carries the table's fingerprint (sources/parquet.py), so
 # in-session regeneration of the data invalidates the memo instead of
-# re-selecting exact percentile on now-oversized groups (ADVICE r3).
+# re-selecting exact percentile on now-oversized groups (ADVICE r3); a
+# path without a fingerprint (URI, unreadable) is probed uncached.
 # Path-less callers with mutable inputs simply omit cache_key and
 # re-probe each time.
 _PROBE_CACHE: dict[tuple, bool] = {}
-
-
-def _parquet_files(path: str) -> list[str]:
-    import os
-
-    if os.path.isdir(path):
-        out = []
-        for root, _, names in os.walk(path):
-            out += [
-                os.path.join(root, n)
-                for n in names
-                if n.endswith(".parquet")
-            ]
-        return sorted(out)
-    return [path]
-
-
-def _freshness(path: str) -> tuple | None:
-    """Cheap invalidation stamp for a local parquet file/dir: (#files,
-    newest mtime_ns). None for URI-style paths (hdfs://, s3a://) — no
-    local stat; callers there fall back to uncached probing."""
-    import os
-
-    if "://" in path:
-        return None
-    try:
-        files = _parquet_files(path)
-        return (len(files), max(os.stat(f).st_mtime_ns for f in files))
-    except OSError:
-        return None
 
 
 def parquet_max_group_bound(path: str, group_col: str) -> int | None:
@@ -90,8 +61,10 @@ def parquet_max_group_bound(path: str, group_col: str) -> int | None:
     try:
         import pyarrow.parquet as pq
 
+        from ..sources.parquet import data_files
+
         events: list[tuple] = []
-        for f in _parquet_files(path):
+        for f in data_files(path):
             md = pq.ParquetFile(f).metadata
             names = [
                 md.schema.column(i).path for i in range(md.num_columns)
@@ -138,7 +111,8 @@ def exact_fits(
     PHYSICAL column name in the file when the frame groups by an alias.
     The probe itself never buffers values and never collects a result
     set. ``cache_key`` memoizes the verdict; with ``stats_path`` the key
-    carries a freshness stamp so regenerated data re-probes."""
+    carries the table's fingerprint so regenerated data re-probes, and a
+    path that has none is never memoized."""
     if threshold is None:
         threshold = int(
             df.sparkSession.conf.get(
@@ -146,7 +120,10 @@ def exact_fits(
             )
         )
     if cache_key is not None and stats_path is not None:
-        cache_key = (*cache_key, _freshness(stats_path))
+        from ..sources.parquet import fingerprint
+
+        fp = fingerprint(stats_path)
+        cache_key = None if fp is None else (*cache_key, fp)
     memo = (cache_key, threshold) if cache_key is not None else None
     if memo is not None and memo in _PROBE_CACHE:
         return _PROBE_CACHE[memo]

@@ -92,21 +92,13 @@ def _semdedup_k(sf_dir: str) -> int:
     parallelism equals the number of distinct cids, so k IS the task
     count of the heaviest stage (measured: the k=4 pair phase ran 4
     tasks on a 32-core box; k=16 runs 16)."""
-    try:
-        import os
+    import os
 
-        import pyarrow.parquet as pq
+    from ..sources.parquet import row_count
 
-        from ..functions.percentile import _parquet_files
-
-        path = os.path.join(sf_dir, "embeddings.parquet")
-        # a written table is a DIRECTORY of part files — sum their
-        # footers (ParquetFile on the dir throws; the silent fallback
-        # froze k at 4 on blown corpora and unbounded the cells)
-        n = sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
-        return max(_SD_K, n // 125)
-    except Exception:  # noqa: BLE001 — fall back to the oracle's k
-        return _SD_K
+    # an unreadable footer falls back to the oracle's k
+    n = row_count(os.path.join(sf_dir, "embeddings.parquet"))
+    return _SD_K if n is None else max(_SD_K, n // 125)
 
 
 def _semdedup_sql(k: int = _SD_K) -> str:

@@ -16,38 +16,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checkpoint import pin
-
 from ..operators.merge import (
     merge_full_outer,
     merge_scd2,
     merge_scd2_multi,
     upsert_snapshot,
 )
+from ..sources.staging import scratch_dir
 from .registry import load, register
 
-
-def _scratch_dir(spark, key: str, stable: bool = False) -> str:
-    """Per-run scratch under the configurable staging root: on a cluster
-    every executor must see the path (local mkdtemp would not be), and
-    the root is dist-FS-configurable (sources/staging.py). Callers
-    remove the directory in their `finally` via staging.fs_delete.
-    Mirrors staging_root's guard: only local roots are mkdir'd eagerly —
-    os.makedirs on an hdfs://s3a:// join would create a bogus local
-    'hdfs:' directory (ADVICE r3); URI-style scratch dirs are created by
-    the Spark writers that fill them. ``stable=True`` drops the per-call
-    uuid so a fixture that AMORTIZES staged inputs across invocations
-    (stream_mv_merge's marker) lands on the same path every time; the
-    caller then owns cleanup of per-run state inside it."""
-    import os
-    import uuid
-
-    from ..sources.staging import staging_root
-
-    leaf = f"{key}_stable" if stable else f"{key}_{uuid.uuid4().hex[:12]}"
-    d = os.path.join(staging_root(spark), "scratch", leaf)
-    if "://" not in d:
-        os.makedirs(d, exist_ok=True)
-    return d
 
 _JDBC_UPSERT_SQL = """
 WITH base AS (
@@ -422,7 +399,7 @@ def inc_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_acctbal", F.col("c_acctbal") + 100.0
     )
     sinks = range(4)  # vertical fan-out, like the reference's 6 tables
-    out = _scratch_dir(spark, "inc_retry")
+    out = scratch_dir(spark, "inc_retry")
     try:
 
         def write_sink(i: int, part: DataFrame) -> None:
@@ -502,7 +479,7 @@ def table_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = upsert_snapshot(v1, upd, ["o_orderkey"]).filter(
         F.col("o_orderkey") % 7 != 0
     )
-    out = _scratch_dir(spark, "changes")
+    out = scratch_dir(spark, "changes")
     try:
         target = f"{out}/orders_versioned"
         publish_parquet(v1, target)
@@ -535,7 +512,7 @@ def maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 3 == 0).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    out = _scratch_dir(spark, "compact")
+    out = scratch_dir(spark, "compact")
     try:
         target = f"{out}/orders_frag"
         publish_parquet(o.repartition(64), target)
@@ -736,10 +713,10 @@ def src_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("c_mktsegment"))
         .alias("c_mktsegment"),
     )
-    # _scratch_dir + fs_delete, never hand-rolled mkdir/recursive-rm:
+    # scratch_dir + fs_delete, never hand-rolled mkdir/recursive-rm:
     # a URI staging root (hdfs://, s3a://) must not grow a bogus local
     # 'hdfs:' dir nor leak the staged versions on cleanup (VERDICT r5 #2)
-    root = _scratch_dir(spark, "tt")
+    root = scratch_dir(spark, "tt")
     target = os.path.join(root, "customers")
     publish_parquet(v1, target)
     publish_parquet(v2, target)
@@ -1008,10 +985,10 @@ def sink_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("o_totalprice"))
         .alias("o_totalprice"),
     )
-    # _scratch_dir + fs_delete, never hand-rolled mkdir/recursive-rm:
+    # scratch_dir + fs_delete, never hand-rolled mkdir/recursive-rm:
     # a URI staging root (hdfs://, s3a://) must not grow a bogus local
     # 'hdfs:' dir nor leak the staged versions on cleanup (VERDICT r5 #2)
-    root = _scratch_dir(spark, "wap")
+    root = scratch_dir(spark, "wap")
     target = os.path.join(root, "orders_wap")
 
     def gate(tag: str, df: DataFrame):

@@ -6600,27 +6600,24 @@ def _ivfpq_artifact_path(
     table's identity and the PQ layout — regenerated testdata or a
     layout change can never serve stale codebooks (the search result
     would silently diverge from the oracle, which always trains on the
-    current table). The identity digest covers, per part file: name,
-    byte size, and UNTRUNCATED mtime_ns (ADVICE r11: row count + whole-
-    second mtime let a corpus regenerated in-place with the same row
-    count within the same second serve stale artifacts)."""
+    current table). The identity digest is the table's fingerprint
+    (sources/parquet.py: per part file name, byte size and UNTRUNCATED
+    mtime_ns — ADVICE r11: row count + whole-second mtime let a corpus
+    regenerated in-place with the same row count within the same second
+    serve stale artifacts). A table without a fingerprint has no
+    artifact path: it raises rather than name a reusable one."""
     import hashlib
     import os
 
-    import pyarrow.parquet as pq
-
-    from ..functions.percentile import _parquet_files
+    from ..sources.parquet import fingerprint, row_count
     from ..sources.staging import staging_dir
 
-    files = sorted(_parquet_files(os.path.join(sf_dir, "embeddings.parquet")))
-    n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    ident = hashlib.md5(
-        "|".join(
-            f"{os.path.basename(f)}:{os.stat(f).st_size}"
-            f":{os.stat(f).st_mtime_ns}"
-            for f in files
-        ).encode()
-    ).hexdigest()[:16]
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    fp = fingerprint(src)
+    if fp is None:
+        raise FileNotFoundError(f"cannot fingerprint {src}")
+    n = row_count(src)
+    ident = hashlib.md5(repr(fp).encode()).hexdigest()[:16]
     base = os.path.basename(os.path.abspath(sf_dir.rstrip("/")))
     layout = (
         f"{_IVFPQ_SUBSPACES}x{_IVFPQ_SUBDIM}x{_IVFPQ_CODES}"
@@ -6887,7 +6884,7 @@ def sim_ivfpq_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ search, SERVER role: identical search to sim_ivfpq_topk
     but consuming the PRE-BUILT artifacts the trainer published — the
     codebooks AND the PQ-coded corpus index (atomic-publish parquet,
-    fingerprinted by the embeddings table's row count + mtime and the
+    keyed by the embeddings table's fingerprint and the
     PQ layout, so a changed corpus can never be served stale); a cold
     start with no published pair builds once and publishes. This is
     the deployment shape: the index is built once per corpus, and
@@ -7204,10 +7201,10 @@ def _canon_offset(sf_dir: str) -> int:
 
         import pyarrow.parquet as pq
 
-        from ..functions.percentile import _parquet_files
+        from ..sources.parquet import data_files
 
         mx = 0
-        for f in _parquet_files(os.path.join(sf_dir, "documents.parquet")):
+        for f in data_files(os.path.join(sf_dir, "documents.parquet")):
             md = pq.ParquetFile(f).metadata
             for g in range(md.num_row_groups):
                 rg = md.row_group(g)

@@ -163,9 +163,9 @@ def _source_splits(path: str, need: int) -> tuple[int, int]:
     try:
         import pyarrow.parquet as pq
 
-        from ..functions.percentile import _parquet_files
+        from ..sources.parquet import data_files
 
-        files = sorted(_parquet_files(path))  # recursive; local FS only
+        files = data_files(path)  # recursive; local FS only
         if not files:
             raise FileNotFoundError(path)
         groups = rows = 0

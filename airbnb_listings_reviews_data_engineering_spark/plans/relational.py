@@ -16,7 +16,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.staging import staging_dir as _stage_dir  # noqa: F401 — shared root
+from ..sources.staging import staging_dir
 from .registry import load, register, register_views
 
 
@@ -48,7 +48,7 @@ def src_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark: df.write.csv -> spark.read.csv(header, schema); roundtrip proves
     the reader. At 100 TB the explicit schema avoids a full inference pass.
     """
-    staged = _stage_dir("src_csv")
+    staged = staging_dir("src_csv")
     load(spark, sf_dir, "region").write.mode("overwrite").option("header", True).csv(staged)
     return spark.read.csv(staged, header=True, schema=REGION_CSV_SCHEMA)
 
@@ -59,7 +59,7 @@ def src_csv_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: pd.read_csv(..., encoding='ISO-8859-1'), Airbnb_Review_ETL.py:22.
     """
-    staged = _stage_dir("src_csv_encoding")
+    staged = staging_dir("src_csv_encoding")
     (
         load(spark, sf_dir, "nation")
         .write.mode("overwrite")
@@ -137,7 +137,7 @@ def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Written partitioned (no coalesce(1) — at 100 TB a single-file sink
     serializes the job through one task); read back to verify.
     """
-    staged = _stage_dir("sink_csv")
+    staged = staging_dir("sink_csv")
     out = (
         load(spark, sf_dir, "orders")
         .groupBy("o_orderstatus")
@@ -169,7 +169,7 @@ def xfer_xcom(spark: SparkSession, sf_dir: str) -> DataFrame:
     when a DAG boundary genuinely requires materialization, stage columnar
     parquet, never pickle.
     """
-    staged = _stage_dir("xfer_xcom")
+    staged = staging_dir("xfer_xcom")
     stage1 = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     stage1.write.mode("overwrite").parquet(staged)
     stage2 = spark.read.parquet(staged)

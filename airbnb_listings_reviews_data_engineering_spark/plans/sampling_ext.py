@@ -1322,21 +1322,11 @@ def _ffd_groups(sf_dir: str) -> int:
     sweep measured the FIXED-group version SUPERLINEAR (marginal 8.75
     vs 3.22 — per-group work is docs x bins and both grew), and this
     bound restores linearity (SCALING.md)."""
-    try:
-        import pyarrow.parquet as pq
+    from ..sources.parquet import row_count
 
-        from ..functions.percentile import _parquet_files
-
-        # a written table is a DIRECTORY of part files — sum their
-        # footers (ParquetFile on the dir throws, and the silent
-        # 8-group fallback re-created the quadratic loop at 30x)
-        n = sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in _parquet_files(f"{sf_dir}/documents.parquet")
-        )
-        return max(_FFD_GRP, n // 256)
-    except Exception:  # noqa: BLE001 — fall back to the oracle's count
-        return _FFD_GRP
+    # an unreadable footer falls back to the oracle's count
+    n = row_count(f"{sf_dir}/documents.parquet")
+    return _FFD_GRP if n is None else max(_FFD_GRP, n // 256)
 
 def _ffd_sql(n_grp: int = _FFD_GRP) -> str:
     return f"""

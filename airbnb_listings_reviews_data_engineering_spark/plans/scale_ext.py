@@ -11,8 +11,10 @@ deployment lives on, demonstrated end-to-end and oracle-checked.
   fallback when AQE's skew split can't help (e.g. a single hot key in a
   broadcast-ineligible join).
 
-The staged tables are written once per (sf_dir, session) under the
-staging root; plan tests assert the physical properties (no Exchange /
+The bucketed tables are written once per (sf_dir, session) into the
+session catalog; the partitioned layouts are staged fixtures
+(``sources/staging.ensure_staged``), restaged when their source table
+changes; plan tests assert the physical properties (no Exchange /
 PartitionFilters) so regressions are caught structurally, not by timing.
 """
 
@@ -24,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checkpoint import pin
-from ..sources.staging import fs_delete, staging_root
+from ..sources.staging import ensure_staged, fs_delete, staging_root
 from .registry import load, register
 
 
@@ -94,12 +96,12 @@ def src_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the matching partition directory (PartitionFilters in the plan —
     the distributed analog of the reference's B-tree index lookups). At
     100 TB, partition-by-date + predicate = reading 1/365th of the data."""
-    tag = _sf_tag(sf_dir)
-    staged = os.path.join(staging_root(spark), f"events_by_type_{tag}")
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
+    def _stage(zone: str) -> None:
         load(spark, sf_dir, "events").write.partitionBy("event_type").mode(
             "overwrite"
-        ).parquet(staged)
+        ).parquet(zone)
+
+    staged = ensure_staged(spark, "src_partition_pruning", sf_dir, "events", _stage)
     df = spark.read.parquet(staged)
     return (
         df.filter(F.col("event_type") == "click")
@@ -581,12 +583,14 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     the fact scan to the matching date/priority directories without the
     query author naming them (tests/test_plan_quality.py pins the
     dynamicpruning expression in the physical plan)."""
-    tag = _sf_tag(sf_dir)
-    staged = os.path.join(staging_root(spark), f"orders_by_prio_{tag}")
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
+    def _stage(zone: str) -> None:
         load(spark, sf_dir, "orders").write.partitionBy(
             "o_orderpriority"
-        ).mode("overwrite").parquet(staged)
+        ).mode("overwrite").parquet(zone)
+
+    staged = ensure_staged(
+        spark, "join_dynamic_partition_pruning", sf_dir, "orders", _stage
+    )
     fact = spark.read.parquet(staged)
     dim = (
         load(spark, sf_dir, "orders")
@@ -644,7 +648,7 @@ def src_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pin() materializes the XML parse before the staged dir is removed
     # (a lazily-returned scan would read a deleted path); the delete
-    # follows the repo's _scratch_dir convention — staged fixture dirs
+    # follows the repo's scratch_dir convention — staged fixture dirs
     # don't outlive the call (ADVICE r12). The pin doubles as the
     # demonstrated funnel: XML is parsed ONCE, downstream consumers
     # read the materialized columnar form.

@@ -2624,7 +2624,8 @@ def stream_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     execution, not the value."""
     from ..functions.hashing import hash60_spark_sql
     from ..streaming.ingest import run_available_now
-    from .streaming_q import _ensure_staged, _stage_batch, _staged_stream
+    from ..sources.staging import ensure_staged
+    from .streaming_q import _stage_batch, _staged_stream
 
     o = load(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("k"), F.col("o_orderkey").alias("ok")
@@ -2639,7 +2640,7 @@ def stream_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
                 i + 1,
             )
 
-    stream_dir = _ensure_staged(
+    stream_dir = ensure_staged(
         spark, "stream_sketch_bloom", sf_dir, "orders", _stage
     )
     hx = hash60_spark_sql("concat(CAST(j AS STRING), ':', CAST(k AS STRING))")

@@ -6,8 +6,8 @@ correctness statement for Structured Streaming. The jobs share three
 pieces:
 
 - staging: a key lands its micro-batch files once, through
-  ``_ensure_staged`` + ``_stage_batch``, into one stable landing zone
-  per key, re-staged only when the source files change;
+  ``sources/staging.ensure_staged`` + ``_stage_batch``, into one stable
+  landing zone per key, re-staged only when the source files change;
 - reading: ``_staged_stream`` reads such a zone as one staged file per
   micro-batch, in staging order;
 - draining: aggregations and stateful operators drain into a memory
@@ -20,13 +20,15 @@ pieces:
 
 from __future__ import annotations
 
+import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checkpoint import pin
-
+from ..sources.parquet import row_count
+from ..sources.staging import ensure_staged, scratch_dir
 from ..streaming.ingest import (
     read_events_stream,
     run_available_now,
@@ -35,47 +37,6 @@ from ..streaming.ingest import (
     windowed_counts,
 )
 from .registry import load, register
-
-
-def _landing_zone(spark: SparkSession, key: str, stable: bool = False) -> str:
-    """Scratch root for the SIMULATED file-stream landing zone the
-    micro-batch queries stage. Routed through merge_queries._scratch_dir
-    so a URI staging root (hdfs://, s3a://) is never os.makedirs'd into
-    a bogus local 'hdfs:' dir (VERDICT r5 #2's failure mode); because
-    the fixture's part-file promotion below is os-level, a URI root
-    raises loudly here instead of corrupting local state — a real
-    deployment points readStream at its actual landing zone and never
-    stages one (the fixture exists only to make stream/batch
-    equivalence hermetically testable)."""
-    from .merge_queries import _scratch_dir
-
-    root = _scratch_dir(spark, key, stable=stable)
-    if "://" in root:
-        raise NotImplementedError(
-            "simulated stream landing zones are driver-local fixtures; "
-            "on a dist-FS staging root point readStream at the real "
-            "landing zone instead"
-        )
-    return root
-
-
-def _source_rows(sf_dir: str, table: str) -> int:
-    """Source row count from the parquet footers (-1 if unreadable) —
-    metadata only, shared by the staging marker and the state-layout
-    sizing below."""
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-
-        from ..functions.percentile import _parquet_files
-
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in _parquet_files(os.path.join(sf_dir, f"{table}.parquet"))
-        )
-    except Exception:  # noqa: BLE001 — callers treat -1 as unknown
-        return -1
 
 
 @contextmanager
@@ -103,9 +64,9 @@ def _stateful_layout(spark: SparkSession, sf_dir: str, table: str):
     stateful checkpoint must also never be reused across runs with a
     different computed ``parts`` (state partition count pins at first
     run) — all drains here use fresh per-run checkpoints."""
-    n_rows = _source_rows(sf_dir, table)
+    n_rows = row_count(os.path.join(sf_dir, f"{table}.parquet"))
     par = spark.sparkContext.defaultParallelism
-    parts = par if n_rows < 0 else min(par, max(2, n_rows // 12_500))
+    parts = par if n_rows is None else min(par, max(2, n_rows // 12_500))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
@@ -114,84 +75,28 @@ def _stateful_layout(spark: SparkSession, sf_dir: str, table: str):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def _ensure_staged(
-    spark: SparkSession, key: str, sf_dir: str, table: str, stage_fn
-) -> str:
-    """Stable landing zone with AMORTIZED staging — the one way every
-    staged stream key lands its micro-batch files (VERDICT r7 #5): the
-    staged files are a pure function of the source table and the
-    staging code, recorded in a marker file, so re-staging is skipped
-    when the marker matches and repeated invocations (bench reps,
-    warm-up, mirror) measure the streaming drain itself rather than
-    re-writing fixture parquet every time; the zone is one
-    ``<key>_stable`` dir, so repeated calls leave nothing behind.
-    ``stage_fn(stream_dir)`` writes the batch files (_stage_batch). The
-    marker
-    pins (ADVICE r13): the source row count AND a per-file fingerprint
-    (name, size, untruncated mtime_ns — the percentile-cache idiom), so
-    testdata regenerated in place with the same row count still
-    invalidates; a STAGE_VERSION that call sites bump when staging
-    constants change (batch filters, boundaries); and an unreadable
-    source (n_rows == -1) never matches, so it always re-stages."""
-    import json
-    import os
-
-    from ..functions.percentile import _parquet_files
-    from ..sources.staging import fs_delete
-
-    stream_dir = _landing_zone(spark, key, stable=True)
-    n_rows = _source_rows(sf_dir, table)
-    try:
-        files = sorted(_parquet_files(os.path.join(sf_dir, f"{table}.parquet")))
-        fp = [
-            [os.path.basename(f), os.stat(f).st_size, os.stat(f).st_mtime_ns]
-            for f in files
-        ]
-    except OSError:
-        fp = None
-    marker = os.path.join(stream_dir, "_staged.json")
-    want = {
-        "sf_dir": os.path.abspath(sf_dir),
-        "n_rows": n_rows,
-        "src_fp": fp,
-        "stage_version": _STAGE_VERSION,
-    }
-    have = None
-    try:
-        with open(marker) as f:
-            have = json.load(f)
-    except (OSError, ValueError):
-        pass
-    if have != want or n_rows < 0 or fp is None:
-        fs_delete(stream_dir)
-        # recreate through the guarded helper route (_scratch_dir owns
-        # the one sanctioned local mkdir), never a direct makedirs
-        stream_dir = _landing_zone(spark, key, stable=True)
-        stage_fn(stream_dir)
-        with open(marker, "w") as f:
-            json.dump(want, f)
-    return stream_dir
-
-
-# Bump when ANY staging constant a stage_fn closes over changes
-# (_SKN_BATCHES, _SSA_B1/_SSA_B2, batch filters, incoming-doc fixtures)
-# — the marker then invalidates every stable landing zone at once
-# (ADVICE r13: code changes silently reused stale fixture batches).
-_STAGE_VERSION = 1
-
-
 def _stage_batch(df: DataFrame, stream_dir: str, name: str, seq: int) -> None:
     """Land one micro-batch as a single deterministically-ordered
     parquet file: write single-file, promote the part file to ``name``,
     then stamp mtime so BOTH mtime and lexicographic path order the
     batches — the file source's batch assignment is then deterministic.
-    Local-only by construction (_landing_zone rejects URI roots)."""
+
+    The promotion is os-level, so a URI zone (a dist-FS staging root:
+    hdfs://, s3a://) raises loudly here instead of corrupting local
+    state — a real deployment points readStream at its actual landing
+    zone and never stages one (the fixture exists only to make
+    stream/batch equivalence hermetically testable)."""
     import glob
-    import os
     import shutil
 
     from ..sources.staging import fs_delete
 
+    if "://" in stream_dir:
+        raise NotImplementedError(
+            "simulated stream landing zones are driver-local fixtures; "
+            "on a dist-FS staging root point readStream at the real "
+            "landing zone instead"
+        )
     staged = os.path.join(stream_dir, f"_stage_{seq}")
     df.coalesce(1).write.parquet(staged)
     part = glob.glob(os.path.join(staged, "part-*.parquet"))[0]
@@ -436,10 +341,10 @@ def stream_stateful_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         for seq, b in enumerate(batches, start=1):
             _stage_batch(b, stream_dir, f"batch{seq}.parquet", seq)
 
-    # stable landing zone, staged once per (sf_dir, row count): the
+    # stable landing zone, staged once per (sf_dir, source fingerprint): the
     # measured work is the keyed-state drain, not three fixture parquet
     # writes per invocation (the stream_mv_merge amortization idiom)
-    stream_dir = _ensure_staged(
+    stream_dir = ensure_staged(
         spark, "stream_stateful_admission", sf_dir, "events", _stage
     )
     # the final no-data micro-batch is what flushes end-of-stream
@@ -596,9 +501,9 @@ def stream_session_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         for seq, b in enumerate(batches, start=1):
             _stage_batch(b, stream_dir, f"batch{seq}.parquet", seq)
 
-    # stable landing zone, staged once per (sf_dir, row count) — see
+    # stable landing zone, staged once per (sf_dir, source fingerprint) — see
     # stream_stateful_admission
-    stream_dir = _ensure_staged(
+    stream_dir = ensure_staged(
         spark, "stream_session_finalize", sf_dir, "events", _stage
     )
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
@@ -795,9 +700,9 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, (name, df) in enumerate(batches):
             _stage_batch(df, stream_dir, name, i)
 
-    # staged once per (sf_dir, row count) — the measured work is the
+    # staged once per (sf_dir, source fingerprint) — the measured work is the
     # watermark-drop drain, not re-writing three fixture batches per run
-    stream_dir = _ensure_staged(spark, "stream_late_data", sf_dir, "events", _stage)
+    stream_dir = ensure_staged(spark, "stream_late_data", sf_dir, "events", _stage)
 
     stream = _staged_stream(spark, stream_dir, EVENTS_SCHEMA)
     agg = windowed_counts(stream, window="1 hour", watermark="1 hour")
@@ -834,7 +739,7 @@ def _stage_events_by_id_residue(spark: SparkSession, sf_dir: str) -> str:
                 i,
             )
 
-    return _ensure_staged(spark, "events_by_id_residue", sf_dir, "events", _stage)
+    return ensure_staged(spark, "events_by_id_residue", sf_dir, "events", _stage)
 
 
 _UPSERT_STREAM_SQL = """
@@ -873,7 +778,7 @@ def stream_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the state table + checkpoint are per-run (fresh uuid root, deleted
     # below) so every invocation re-runs the merge path from empty state
     stream_dir = _stage_events_by_id_residue(spark, sf_dir)
-    root = _landing_zone(spark, "upsert")
+    root = scratch_dir(spark, "upsert")
     target = os.path.join(root, "state")
 
     state_cols = ["user_id", "event_id", "event_type", "value", "ts"]
@@ -940,7 +845,7 @@ def stream_mv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so every invocation replays the SAME three micro-batches from an
     # empty MV
     stream_dir = _stage_events_by_id_residue(spark, sf_dir)
-    root = _landing_zone(spark, "mv")
+    root = scratch_dir(spark, "mv")
     target = os.path.join(root, "mv")
 
     unit = F.round(F.col("value") * 10000).cast("bigint")
@@ -1108,10 +1013,10 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + _SDM_OFFSET).alias("doc_id"),
         F.regexp_replace("text", r"^[a-z]+ ", "").alias("text"),
     )
-    # staged once per (sf_dir, row count) — the measured work is the
+    # staged once per (sf_dir, source fingerprint) — the measured work is the
     # per-batch signature + band join, not re-writing the fixture
     # parquet every invocation (the stream_mv_merge amortization idiom)
-    stream_dir = _ensure_staged(
+    stream_dir = ensure_staged(
         spark,
         "stream_dedup_minhash",
         sf_dir,
@@ -1225,8 +1130,8 @@ def stream_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materializes the standing index; later batches read the cache
         label="sde_index",
     )
-    # staged once per (sf_dir, row count) — see stream_dedup_minhash
-    stream_dir = _ensure_staged(
+    # staged once per (sf_dir, source fingerprint) — see stream_dedup_minhash
+    stream_dir = ensure_staged(
         spark,
         "stream_dedup_embedding",
         sf_dir,
@@ -1369,8 +1274,8 @@ def stream_dedup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=False,  # lazy — standing index materializes in batch 1
         label="sds_gram_index",
     )
-    # staged once per (sf_dir, row count) — see stream_dedup_minhash
-    stream_dir = _ensure_staged(
+    # staged once per (sf_dir, source fingerprint) — see stream_dedup_minhash
+    stream_dir = ensure_staged(
         spark,
         "stream_dedup_span",
         sf_dir,
@@ -1432,9 +1337,9 @@ def stream_sketch_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 i + 1,
             )
 
-    # staged once per (sf_dir, row count) — the measured work is the
+    # staged once per (sf_dir, source fingerprint) — the measured work is the
     # register-minima drain, not re-writing the fixture every run
-    stream_dir = _ensure_staged(
+    stream_dir = ensure_staged(
         spark, "stream_sketch_ndv", sf_dir, "orders", _stage
     )
     stream = _staged_stream(spark, stream_dir, "prio string, custkey bigint")
@@ -1524,10 +1429,10 @@ def stream_sketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 i + 1,
             )
 
-    # staged once per (sf_dir, row count) — the measured work is the
+    # staged once per (sf_dir, source fingerprint) — the measured work is the
     # per-batch cell explosion + grid aggregation, not three fixture
     # parquet writes of the full price column per run
-    stream_dir = _ensure_staged(
+    stream_dir = ensure_staged(
         spark, "stream_sketch_quantile", sf_dir, "lineitem", _stage
     )
     stream = _staged_stream(spark, stream_dir, "l_extendedprice double")
@@ -1760,13 +1665,13 @@ def stream_admission_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stage_batch(b1, stream_dir, "batch1.parquet", 1)
         _stage_batch(b2, stream_dir, "batch2.parquet", 2)
 
-    # incoming batches staged once per (sf_dir, row count); the GROWING
+    # incoming batches staged once per (sf_dir, source fingerprint); the GROWING
     # published index + decisions stay per-run (fresh uuid root below) —
     # the index growth IS the computation being measured
-    stream_dir = _ensure_staged(
+    stream_dir = ensure_staged(
         spark, "stream_admission_e2e", sf_dir, "documents", _stage
     )
-    root = _landing_zone(spark, "stream_admission_e2e")
+    root = scratch_dir(spark, "stream_admission_e2e")
     idx_target = os.path.join(root, "index")
     dec_target = os.path.join(root, "decisions")
     # the standing index starts as the corpus's signature table
@@ -1994,12 +1899,12 @@ def stream_admission_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stage_batch(b1, stream_dir, "batch1.parquet", 1)
         _stage_batch(b2, stream_dir, "batch2.parquet", 2)
 
-    # incoming batches staged once per (sf_dir, row count); the growing
+    # incoming batches staged once per (sf_dir, source fingerprint); the growing
     # published index + decisions stay per-run — see stream_admission_e2e
-    stream_dir = _ensure_staged(
+    stream_dir = ensure_staged(
         spark, "stream_admission_embedding", sf_dir, "embeddings", _stage
     )
-    root = _landing_zone(spark, "stream_admission_embedding")
+    root = scratch_dir(spark, "stream_admission_embedding")
     idx_target = os.path.join(root, "index")
     dec_target = os.path.join(root, "decisions")
     # the standing index starts as the corpus's (id, vector, bucket) table
@@ -2237,12 +2142,12 @@ def stream_admission_span(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stage_batch(b1, stream_dir, "batch1.parquet", 1)
         _stage_batch(b2, stream_dir, "batch2.parquet", 2)
 
-    # incoming batches staged once per (sf_dir, row count); the growing
+    # incoming batches staged once per (sf_dir, source fingerprint); the growing
     # published index + decisions stay per-run — see stream_admission_e2e
-    stream_dir = _ensure_staged(
+    stream_dir = ensure_staged(
         spark, "stream_admission_span", sf_dir, "documents", _stage
     )
-    root = _landing_zone(spark, "stream_admission_span")
+    root = scratch_dir(spark, "stream_admission_span")
     idx_target = os.path.join(root, "index")
     dec_target = os.path.join(root, "decisions")
     publish_parquet(
@@ -2370,12 +2275,12 @@ def stream_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"batch{i}.parquet", i,
             )
 
-    # incoming batches staged once per (sf_dir, row count); the budget
+    # incoming batches staged once per (sf_dir, source fingerprint); the budget
     # ledger stays per-run — the cumulative release IS the computation
-    stream_dir = _ensure_staged(
+    stream_dir = ensure_staged(
         spark, "stream_dp_release", sf_dir, "orders", _stage
     )
-    root = _landing_zone(spark, "stream_dp_release")
+    root = scratch_dir(spark, "stream_dp_release")
     led_target = os.path.join(root, "ledger")
 
     def release(batch_df, prev):
@@ -2453,8 +2358,6 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         SimpleDataSourceStreamReader,
     )
 
-    from .merge_queries import _scratch_dir
-
     page, pages = _SPYDS_PAGE, _SPYDS_PAGES
 
     class _FeedReader(SimpleDataSourceStreamReader):
@@ -2513,7 +2416,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (page, pages) feed shape, so a constant change (or a stale dir
     # from an older code version) must land on a fresh checkpoint+sink
     # instead of silently mixing with the old feed (ADVICE r12).
-    root = _scratch_dir(
+    root = scratch_dir(
         spark, f"spyds_{_SPYDS_PAGE}x{_SPYDS_PAGES}", stable=True
     )
     sink = os.path.join(root, "landed")

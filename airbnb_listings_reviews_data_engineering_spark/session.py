@@ -44,10 +44,7 @@ def get_spark(
         # shape that wants a lower floor (a small pinned frame whose
         # layout feeds many compute-heavy downstream passes) gets it
         # scoped via checkpoint.small_pin_floor instead.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 16g: local mode puts every "executor" in the driver JVM; an 8g

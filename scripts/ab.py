@@ -10,7 +10,10 @@ records the commit it holds in ``.ab_base_commit``; a kept ``--base-dir``
 is reused only while ``BASE_REF`` still resolves to that commit. Each pair
 runs one fresh process per side; the side that goes first alternates
 from pair to pair, so a drift in the host's load reaches both sides
-alike. The 1-minute load average is recorded before every run.
+alike. Before every run the script waits, at most ``LOAD_WAIT_S``
+seconds, for the host's 1-minute load average to fall below
+``LOAD_MAX``, so a run does not start on the tail of the one before it;
+the load average it starts at and the seconds it waited are recorded.
 
 - ``--workload W --seed S`` runs the benchmark unedited in each tree,
   ``airbnb_bench/run.py --workload W --seed S --seconds N --trace 0``
@@ -42,10 +45,14 @@ import statistics
 import subprocess
 import sys
 import tempfile
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SIDECAR = os.path.join("scripts", "last_bench_queries.json")
 STAMP = ".ab_base_commit"
+LOAD_MAX = 1.5  # start a run only below this 1-minute load average ...
+LOAD_WAIT_S = 60  # ... or once this many seconds have passed
+LOAD_POLL_S = 5
 with open(os.path.join(ROOT, "BENCHMARK.json")) as _f:
     BENCHMARK = json.load(_f)
 E2E = {m["name"]: m for m in BENCHMARK["end_to_end"]}
@@ -110,6 +117,19 @@ def base_tree(ref: str, dest: str) -> str:
             f"{dest} holds {held}, but {ref} is {sha}; empty it or give another --base-dir"
         )
     return sha
+
+
+def settle() -> tuple[float, int]:
+    """Wait until the 1-minute load average is below ``LOAD_MAX``, for
+    at most ``LOAD_WAIT_S`` seconds. Returns (load average, seconds
+    waited)."""
+    waited = 0
+    load1 = os.getloadavg()[0]
+    while load1 >= LOAD_MAX and waited < LOAD_WAIT_S:
+        time.sleep(LOAD_POLL_S)
+        waited += LOAD_POLL_S
+        load1 = os.getloadavg()[0]
+    return load1, waited
 
 
 def _run(cmd: list[str], tree: str, env: dict | None = None) -> str:
@@ -209,12 +229,13 @@ def main(argv=None) -> None:
         for pair in range(args.pairs):
             order = ("base", "tree") if pair % 2 == 0 else ("tree", "base")
             for side in order:
-                load1 = os.getloadavg()[0]
+                load1, wait_s = settle()
                 metrics = (
                     run_workload(trees[side], args) if keys is None
                     else run_keys(trees[side], keys)
                 )
-                run = {"pair": pair, "side": side, "load1": load1, "metrics": metrics}
+                run = {"pair": pair, "side": side, "load1": load1, "wait_s": wait_s,
+                       "metrics": metrics}
                 runs.append(run)
                 print(json.dumps(run), flush=True)
     finally:

@@ -1,6 +1,7 @@
 """scripts/ab.py: the base export is tied to one commit, a failed bench.py
-run surfaces its own error, and the summary applies BENCHMARK.json's
-directions and bounds."""
+run surfaces its own error, the summary applies BENCHMARK.json's
+directions and bounds, and a run waits, for a bounded time, for the
+host's load to fall."""
 
 from __future__ import annotations
 
@@ -69,3 +70,31 @@ def test_summary_reads_direction_and_bound_from_benchmark():
     assert lines["run_s"].split()[-3:] == ["1/1", "ok", f"{ab.E2E['run_s']['bound']:.0%}"]
     assert lines["rows_per_s"].split()[-2:] == ["0/1", "WORSE"]
     assert lines["failed"].split()[-2:] == ["0/1", "-"]
+
+
+def _fake_load(monkeypatch, loads):
+    it = iter(loads)
+    slept = []
+    monkeypatch.setattr(ab.os, "getloadavg", lambda: (next(it), 0.0, 0.0))
+    monkeypatch.setattr(ab.time, "sleep", slept.append)
+    return slept
+
+
+def test_run_waits_for_the_load_to_fall(monkeypatch):
+    busy = ab.LOAD_MAX + 1
+    slept = _fake_load(monkeypatch, [busy, busy, ab.LOAD_MAX - 0.5])
+    assert ab.settle() == (ab.LOAD_MAX - 0.5, 2 * ab.LOAD_POLL_S)
+    assert slept == [ab.LOAD_POLL_S] * 2
+
+
+def test_run_wait_is_capped(monkeypatch):
+    busy = ab.LOAD_MAX + 1
+    slept = _fake_load(monkeypatch, [busy] * 1000)
+    assert ab.settle() == (busy, ab.LOAD_WAIT_S)
+    assert sum(slept) == ab.LOAD_WAIT_S
+
+
+def test_idle_host_starts_at_once(monkeypatch):
+    slept = _fake_load(monkeypatch, [0.0])
+    assert ab.settle() == (0.0, 0)
+    assert slept == []

@@ -224,18 +224,20 @@ def test_exact_fits_stats_verdict_needs_no_scan(tmp_path):
 
 def test_exact_fits_freshness_invalidates_memo(spark, tmp_path):
     """Regenerating the data under the same path must re-derive the
-    verdict (the memo key carries file mtime), not replay a stale
-    fits=True onto now-oversized groups."""
+    verdict (the memo key carries the table's fingerprint), not replay a
+    stale fits=True onto now-oversized groups. A stats_path that has no
+    fingerprint (a URI path: no local stat) is never memoized."""
     from airbnb_listings_reviews_data_engineering_spark.functions.percentile import (
         exact_fits,
     )
 
     p = tmp_path / "t.parquet"
     _write_groups(p, ["a"] * 5 + ["b"] * 5, 5)
-    key = ("freshness-test", str(p))
     df = spark.read.parquet(str(p))
-    assert exact_fits(df, ["g"], "v", threshold=10, cache_key=key,
-                      stats_path=str(p)) is True
+    stats_paths = (str(p), "hdfs://namenode:9000/t.parquet")
+    for stats_path in stats_paths:
+        assert exact_fits(df, ["g"], "v", threshold=10, stats_path=stats_path,
+                          cache_key=("freshness-test", stats_path)) is True
 
     import os
     import time
@@ -244,8 +246,9 @@ def test_exact_fits_freshness_invalidates_memo(spark, tmp_path):
     _write_groups(p, ["a"] * 50, 50)  # one oversized group now
     os.utime(p)
     df2 = spark.read.parquet(str(p))
-    assert exact_fits(df2, ["g"], "v", threshold=10, cache_key=key,
-                      stats_path=str(p)) is False
+    for stats_path in stats_paths:
+        assert exact_fits(df2, ["g"], "v", threshold=10, stats_path=stats_path,
+                          cache_key=("freshness-test", stats_path)) is False
 
 
 def test_interval_overlap_join_is_banded_equi(spark, sf_dir):
