@@ -90,9 +90,9 @@ class small_pin_floor:
     parallel. Scoped, not session-wide: a session-wide 16k floor
     measured SLOWER on 7 of 8 probed keys at sf0.1 (the extra
     near-empty tasks cost more than they parallelize —
-    OPTIMIZATION_r13.md), and at production scale the pinned table's
-    bytes dwarf any floor, so this is a local-harness no-op there by
-    construction."""
+    `git show 237c644:OPTIMIZATION_r13.md`), and at production scale the
+    pinned table's bytes dwarf any floor, so this is a local-harness
+    no-op there by construction."""
 
     _KEY = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 

@@ -99,7 +99,8 @@ def register(
 # normalizes them differently from the repo's fetchall()->Python-int
 # mirror, so an oracle emitting one can pass locally yet fail the driver
 # (round-4 postmortem: 14 integer-sum() oracles typed HUGEINT and 5 of
-# them went red in CORRECTNESS_r04 with bitwise-identical values).
+# them went red in `git show 237c644:CORRECTNESS_r04.json` with
+# bitwise-identical values).
 # Every oracle must CAST such expressions to a Spark-representable type
 # (BIGINT, DOUBLE, DECIMAL, ...).
 DUCKDB_TYPES_WITHOUT_SPARK_ANALOG = (

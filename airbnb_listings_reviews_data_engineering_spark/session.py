@@ -39,8 +39,9 @@ def get_spark(
         # A/B at sf0.1 showed 1m faster on 7 of 8 probed keys (e.g.
         # eval_bleu_corpus 1.85->0.83, sample_rho_loss 1.57->0.78,
         # profile_drift_ks 3.59->2.25, sketch_bloom_rollup 2.74->1.95;
-        # OPTIMIZATION_r13.md) — the extra near-empty post-shuffle tasks
-        # cost more than their parallelism buys on most shapes. The ONE
+        # `git show 237c644:OPTIMIZATION_r13.md`) — the extra near-empty
+        # post-shuffle tasks cost more than their parallelism buys on
+        # most shapes. The ONE
         # shape that wants a lower floor (a small pinned frame whose
         # layout feeds many compute-heavy downstream passes) gets it
         # scoped via checkpoint.small_pin_floor instead.
