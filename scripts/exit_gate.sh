@@ -1,14 +1,14 @@
 #!/usr/bin/env bash
-# Round-close exit gate (VERDICT r7 #8; reworked r12 per VERDICT r11
-# #1/#2/#5/#8): ONE command that runs everything a round must have
+# Exit gate: ONE command that runs everything a change must have
 # green AFTER its last code commit, in an order that keeps the bench
 # artifact trustworthy and couples the proof to HEAD mechanically:
 #
 #   0. refuse to run with uncommitted CODE (*.py/*.sh/*.sql) or an
 #      uncommitted bench baseline — the manifest must describe a
 #      commit, not a dirty tree
-#   1. idle-wait: block until 1-min loadavg is low enough that bench
-#      numbers mean something (or time out loudly)
+#   1. idle-wait: block until the 1-min loadavg is at most LOAD_MAX
+#      (scripts/ab.py's bound) so bench numbers mean something, or
+#      time out loudly
 #   2. sf0.1 bench FIRST — before the mirror + pytest suite
 #      heat the box — once; every key's raw min-of-3 seconds must stay
 #      within BENCH_MAX_RATIO of its entry in scripts/bench_baseline.json
@@ -20,11 +20,13 @@
 #   4. COVERAGE.md regeneration + SURVEY.md key-index refresh
 #   5. survey completeness check
 #   6. full pytest
-#   7. fresh-process rotation age report (every key <= 2 rounds old)
+#   7. fresh-process rotation age report: every key passed
+#      oracle_check.py in a fresh process within the last MAX_AGE (10)
+#      commits that touch the package or scripts/oracle_check.py
 #   8. gate_manifest.json: git SHA + sha256 of both logs and of the
 #      baseline + the raw headline and the worst key's ratio to its
 #      baseline — the judge
-#      verifies the manifest's SHA is the round's last code commit and
+#      verifies the manifest's SHA is the last code commit and
 #      the committed logs hash to the manifest's digests; the gate goes
 #      RED if HEAD moved while it ran
 #
@@ -44,17 +46,20 @@ if [ -n "$DIRTY_CODE" ]; then
   exit 1
 fi
 
-echo "== 1/8 idle-wait (1-min loadavg <= ${GATE_MAX_LOAD:=12.0}, up to ${GATE_IDLE_WAIT_SEC:=600}s)"
+# the loadavg bound scripts/ab.py waits for before each run
+LOAD_MAX=1.5
+IDLE_WAIT_SEC=600
+echo "== 1/8 idle-wait (1-min loadavg <= ${LOAD_MAX}, up to ${IDLE_WAIT_SEC}s)"
 waited=0
 while :; do
   load=$(cut -d' ' -f1 /proc/loadavg)
-  ok=$(python - "$load" "$GATE_MAX_LOAD" <<'PY'
+  ok=$(python - "$load" "$LOAD_MAX" <<'PY'
 import sys
 print(1 if float(sys.argv[1]) <= float(sys.argv[2]) else 0)
 PY
 )
   [ "$ok" = "1" ] && { echo "loadavg $load ok (waited ${waited}s)"; break; }
-  if [ "$waited" -ge "$GATE_IDLE_WAIT_SEC" ]; then
+  if [ "$waited" -ge "$IDLE_WAIT_SEC" ]; then
     echo "WARNING: loadavg still $load after ${waited}s — bench numbers may be load-inflated (recorded in manifest)"
     break
   fi
@@ -118,7 +123,7 @@ rc=${PIPESTATUS[0]}
 
 echo "== 7/8 fresh-process rotation age"
 python scripts/mirror_rotate.py --report || {
-  echo "EXIT GATE RED: a registered key has no independent evidence within 2 rounds — run scripts/mirror_rotate.py"; exit 1; }
+  echo "EXIT GATE RED: a registered key has no fresh-process pass within the last 10 code commits — run scripts/mirror_rotate.py and commit its state and log"; exit 1; }
 
 echo "== 8/8 gate manifest"
 SHA_END=$(git rev-parse HEAD)
@@ -139,7 +144,7 @@ age = 0
 for line in subprocess.run(
     [sys.executable, "scripts/mirror_rotate.py", "--report"],
     capture_output=True, text=True).stdout.splitlines():
-    if line.startswith("oldest_fresh_process_age_rounds="):
+    if line.startswith("oldest_fresh_process_age_commits="):
         age = int(line.split("=")[1])
 manifest = {
     "git_sha": sys.argv[1],
@@ -153,11 +158,11 @@ manifest = {
     "bench_worst_key": worst["key"],
     "bench_worst_ratio": worst["ratio"],
     "pytest_tail": open("/tmp/gate_pytest_tail").read().strip().splitlines()[-1],
-    "oldest_fresh_process_age_rounds": age,
+    "oldest_fresh_process_age_commits": age,
 }
 json.dump(manifest, open("scripts/gate_manifest.json", "w"), indent=1)
 print(json.dumps(manifest, indent=1))
 PY
 
 echo "== exit gate GREEN: $(date -u +%Y-%m-%dT%H:%M:%SZ) @ ${SHA_START:0:10}"
-echo "   commit scripts/last_mirror_run.log scripts/last_bench_run.log scripts/last_bench_queries.json scripts/gate_manifest.json (+ regenerated COVERAGE/SURVEY) in the round-close commit"
+echo "   commit scripts/last_mirror_run.log scripts/last_bench_run.log scripts/last_bench_queries.json scripts/gate_manifest.json (+ regenerated COVERAGE/SURVEY) in the closing commit"

@@ -1,6 +1,9 @@
 """Generate PLANS.md: the formatted physical plans of representative
 queries, so plan quality (pushdown, broadcast, bucketing, no cartesians,
-TakeOrderedAndProject) is reviewable without running Spark."""
+TakeOrderedAndProject) is reviewable without running Spark.
+
+PLANS.md is written on demand (``python scripts/gen_plans.py``) and is
+not committed: a committed copy drifts from the code it describes."""
 
 from __future__ import annotations
 

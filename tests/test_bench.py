@@ -1,9 +1,11 @@
 """bench.py's output contract: the final line fits a 2000-char stdout
-tail, and a real run writes the per-key sidecar with job counts."""
+tail, a real run writes the per-key sidecar with job counts, and the
+warm-up rep runs at the timed scale."""
 
 from __future__ import annotations
 
 import json
+from types import SimpleNamespace
 
 import pytest
 
@@ -65,3 +67,34 @@ def test_bench_main_writes_contract_and_job_counts(
     side = json.loads((tmp_path / bench.SIDECAR).read_text())
     assert sorted(side["queries"]) == sorted(keys)
     assert all(side["jobs"][k] >= 1 for k in keys)
+
+
+def test_bench_warms_each_key_at_the_timed_sf_dir(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """A key that stages a fixture once per sf_dir (as ensure_staged
+    does) stages in the untimed warm-up rep, so no timed rep counts the
+    staging job."""
+    staged: set[str] = set()
+    calls: list[str] = []
+
+    def fn(sp, sf_dir):
+        calls.append(sf_dir)
+        if sf_dir not in staged:
+            staged.add(sf_dir)
+            sp.range(3).count()  # the staging job
+        return sp.range(3)
+
+    sf_dir = str(tmp_path / "sf0.1")
+    monkeypatch.setattr(
+        bench, "all_queries", lambda: {"join_eq3": SimpleNamespace(fn=fn)}
+    )
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY", "join_eq3")
+    monkeypatch.chdir(tmp_path)
+    (tmp_path / "scripts").mkdir()
+    bench.main()
+    capsys.readouterr()
+    assert calls == [sf_dir] * (bench.REPS + 1)
+    side = json.loads((tmp_path / bench.SIDECAR).read_text())
+    assert side["jobs"] == {"join_eq3": 1}

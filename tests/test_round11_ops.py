@@ -12,7 +12,6 @@ import shutil
 
 import duckdb
 import pytest
-from conftest import REPO_ROOT
 from pyspark.sql import functions as F
 
 from airbnb_listings_reviews_data_engineering_spark.functions.arrays import (
@@ -208,30 +207,3 @@ def test_canonical_dedup_catches_planted_variants(spark, sf_dir):
     for r in out:
         assert r["keeper_id"] < off  # keeper is never the variant
         assert r["n_dropped"] == r["n_members"] - 1
-
-
-def test_mirror_rotate_picker_prefers_oldest_evidence(tmp_path, monkeypatch):
-    """The rotation cohort must put never-driver-sampled AND
-    never-rotated keys first, and --keys must reject unknown keys."""
-    import importlib.util
-    import json
-    import sys
-
-    spec = importlib.util.spec_from_file_location(
-        "mirror_rotate", REPO_ROOT / "scripts" / "mirror_rotate.py"
-    )
-    mr = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mr)
-
-    monkeypatch.setattr(
-        mr, "registered_keys", lambda: ["a_never", "b_driver", "c_rotated"]
-    )
-    monkeypatch.setattr(mr, "driver_sample_rounds", lambda: {"b_driver": 9})
-    state = {"rotated": {"c_rotated": {"round": 11, "ts": 5, "verdict": "ok"}}}
-    monkeypatch.setattr(mr, "load_state", lambda: state)
-    assert mr.pick_cohort(3) == ["a_never", "b_driver", "c_rotated"]
-    assert mr.pick_cohort(1) == ["a_never"]
-    # a re-rotated key moves behind a driver-sampled-earlier key only
-    # if its evidence is newer
-    state["rotated"]["b_driver"] = {"round": 12, "ts": 9, "verdict": "ok"}
-    assert mr.pick_cohort(3) == ["a_never", "c_rotated", "b_driver"]
