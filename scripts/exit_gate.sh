@@ -123,7 +123,7 @@ rc=${PIPESTATUS[0]}
 
 echo "== 7/8 fresh-process rotation age"
 python scripts/mirror_rotate.py --report || {
-  echo "EXIT GATE RED: a registered key has no fresh-process pass within the last 10 code commits — run scripts/mirror_rotate.py and commit its state and log"; exit 1; }
+  echo "EXIT GATE RED: a registered key has no fresh-process pass within MAX_AGE code commits (report above) — run scripts/mirror_rotate.py and commit its state and log"; exit 1; }
 
 echo "== 8/8 gate manifest"
 SHA_END=$(git rev-parse HEAD)

@@ -35,6 +35,7 @@ import os
 import subprocess
 import sys
 import time
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor, as_completed
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -99,10 +100,8 @@ def report_ages() -> bool:
     """Print the evidence-age distribution; True iff every key has
     evidence at most MAX_AGE commits old."""
     ages = evidence_ages()
-    hist: dict[int | None, int] = {}
-    for a in ages.values():
-        hist[a] = hist.get(a, 0) + 1
-    never = hist.pop(None, 0)
+    hist = Counter(a for a in ages.values() if a is not None)
+    never = len(ages) - hist.total()
     print("evidence ages in code commits (age_commits: n_keys): "
           + ", ".join(f"{a}: {hist[a]}" for a in sorted(hist))
           + (f", no evidence: {never}" if never else ""))
