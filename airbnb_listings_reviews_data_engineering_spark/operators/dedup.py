@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import pin, release
 from ..functions.arrays import as_double_array, dot, norm
-from ..functions.hashing import hash60
+from ..functions.hashing import hash60, hash60_spark_sql
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -707,6 +707,49 @@ def containment_pairs(
     )
 
 
+def _window_grams(n: int, positions: bool = True) -> Column:
+    """Every n-token window of the token array ``w``: its hash60 ``h``,
+    in a struct with its 1-based start ``pos`` when ``positions``.
+    slice-then-transform, not sequence(1, len-n+1): Spark's
+    sequence(1, 0) is the DESCENDING [1, 0] (the text_span_excise
+    lesson) — slice of length 0 is the matching empty for short docs."""
+    h = hash60_spark_sql(f"concat_ws(' ', slice(w, i + 1, {n}))")
+    elem = f"struct(i + 1 AS pos, {h} AS h)" if positions else h
+    return F.expr(
+        f"transform(slice(w, 1, greatest(size(w) - {n - 1}, 0)),"
+        f" (x, i) -> {elem})"
+    )
+
+
+def _excised(df: DataFrame, id_col: str, n: int) -> DataFrame:
+    """(id, n_tok, n_removed, n_spans, clean_text) from each row's tokens
+    ``w`` and the SORTED starts ``st`` of its covered n-token windows:
+    every token inside a covered window is removed."""
+    kept = df.withColumn(
+        "kw",
+        F.expr(
+            "transform(filter(sequence(1, size(w)), i ->"
+            f" size(filter(st, s -> i >= s AND i <= s + {n - 1})) = 0),"
+            " i -> element_at(w, i))"
+        ),
+    )
+    # maximal-span count over the SORTED starts: windows are all n long,
+    # so consecutive starts fuse iff the gap is <= n; guard size <= 1
+    # (Spark sequence(2, 1) is descending, not empty)
+    n_spans = F.expr(
+        "CASE WHEN size(st) <= 1 THEN size(st)"
+        " ELSE 1 + size(filter(sequence(2, size(st)),"
+        f" i -> element_at(st, i) - element_at(st, i - 1) > {n})) END"
+    )
+    return kept.select(
+        id_col,
+        F.size("w").cast("bigint").alias("n_tok"),
+        (F.size("w") - F.size("kw")).cast("bigint").alias("n_removed"),
+        n_spans.cast("bigint").alias("n_spans"),
+        F.array_join("kw", " ").alias("clean_text"),
+    )
+
+
 def duplicated_span_excise(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -758,23 +801,11 @@ def duplicated_span_excise(
     text_span_excise array rebuild: per-doc start positions
     collect_list (bounded by hits per doc), then a pure column
     expression filters covered positions — no window, no Python."""
-    from ..functions.hashing import hash60_spark_sql
-
     tok = docs.select(id_col, F.split(text_col, " ").alias("w"))
-    gram_h = hash60_spark_sql(f"concat_ws(' ', slice(w, i + 1, {n}))")
-    # slice-then-transform, not sequence(1, len-n+1): Spark's
-    # sequence(1, 0) is the DESCENDING [1, 0] (the text_span_excise
-    # lesson) — slice of length 0 is the matching empty for short docs
     grams = pin(
-        tok.select(
-            id_col,
-            F.explode(
-                F.expr(
-                    f"transform(slice(w, 1, greatest(size(w) - {n - 1}, 0)),"
-                    f" (x, i) -> struct(i + 1 AS pos, {gram_h} AS h))"
-                )
-            ).alias("pg"),
-        ).select(id_col, F.col("pg.pos").alias("pos"), F.col("pg.h").alias("h")),
+        tok.select(id_col, F.explode(_window_grams(n)).alias("pg")).select(
+            id_col, F.col("pg.pos").alias("pos"), F.col("pg.h").alias("h")
+        ),
         eager=False,  # lazy: df-cap filter + both join sides share the
         # terminal plan (round 14 — see minhash_lsh_pairs)
         label="span_exact_postings",
@@ -797,34 +828,12 @@ def duplicated_span_excise(
     hits = covered.groupBy(id_col).agg(
         F.sort_array(F.collect_list("pos")).alias("st")
     )
-    kept = (
-        tok.join(hits, id_col, "left")
-        .withColumn(
+    return _excised(
+        tok.join(hits, id_col, "left").withColumn(
             "st", F.coalesce("st", F.expr("CAST(array() AS array<int>)"))
-        )
-        .withColumn(
-            "kw",
-            F.expr(
-                "transform(filter(sequence(1, size(w)), i ->"
-                f" size(filter(st, s -> i >= s AND i <= s + {n - 1})) = 0),"
-                " i -> element_at(w, i))"
-            ),
-        )
-    )
-    # maximal-span count over the SORTED starts: windows are all n long,
-    # so consecutive starts fuse iff the gap is <= n; guard size <= 1
-    # (Spark sequence(2, 1) is descending, not empty)
-    n_spans = F.expr(
-        "CASE WHEN size(st) <= 1 THEN size(st)"
-        " ELSE 1 + size(filter(sequence(2, size(st)),"
-        f" i -> element_at(st, i) - element_at(st, i - 1) > {n})) END"
-    )
-    return kept.select(
+        ),
         id_col,
-        F.size("w").cast("bigint").alias("n_tok"),
-        (F.size("w") - F.size("kw")).cast("bigint").alias("n_removed"),
-        n_spans.cast("bigint").alias("n_spans"),
-        F.array_join("kw", " ").alias("clean_text"),
+        n,
     )
 
 
@@ -839,19 +848,9 @@ def positional_gram_index(
     arrives again, so membership is the whole index. ~one row per
     distinct corpus n-gram; callers pin() it (bucketed parquet on a
     cluster) and reuse it across micro-batches."""
-    from ..functions.hashing import hash60_spark_sql
-
-    gram_h = hash60_spark_sql(f"concat_ws(' ', slice(w, i + 1, {n}))")
     return (
         docs.select(F.split(text_col, " ").alias("w"))
-        .select(
-            F.explode(
-                F.expr(
-                    f"transform(slice(w, 1, greatest(size(w) - {n - 1}, 0)),"
-                    f" (x, i) -> {gram_h})"
-                )
-            ).alias("h")
-        )
+        .select(F.explode(_window_grams(n, positions=False)).alias("h"))
         .distinct()
     )
 
@@ -884,19 +883,9 @@ def span_excise_against_index(
     Returns (id, n_tok, n_removed, n_spans, clean_text) — the same
     shape as duplicated_span_excise; n_spans counts MAXIMAL merged
     excised spans."""
-    from ..functions.hashing import hash60_spark_sql
-
-    gram_h = hash60_spark_sql(f"concat_ws(' ', slice(w, i + 1, {n}))")
     tok = batch.select(id_col, text_col, F.split(text_col, " ").alias("w"))
     g = tok.select(
-        id_col,
-        text_col,
-        F.explode_outer(
-            F.expr(
-                f"transform(slice(w, 1, greatest(size(w) - {n - 1}, 0)),"
-                f" (x, i) -> struct(i + 1 AS pos, {gram_h} AS h))"
-            )
-        ).alias("pg"),
+        id_col, text_col, F.explode_outer(_window_grams(n)).alias("pg")
     ).select(id_col, text_col, F.col("pg.pos").alias("pos"), F.col("pg.h").alias("h"))
     m = g.join(index.select("h", F.lit(1).alias("hit")), "h", "left")
     agg = m.groupBy(id_col, text_col).agg(
@@ -904,26 +893,7 @@ def span_excise_against_index(
             F.collect_list(F.when(F.col("hit") == 1, F.col("pos")))
         ).alias("st")
     )
-    kept = agg.withColumn("w", F.split(text_col, " ")).withColumn(
-        "kw",
-        F.expr(
-            "transform(filter(sequence(1, size(w)), i ->"
-            f" size(filter(st, s -> i >= s AND i <= s + {n - 1})) = 0),"
-            " i -> element_at(w, i))"
-        ),
-    )
-    n_spans = F.expr(
-        "CASE WHEN size(st) <= 1 THEN size(st)"
-        " ELSE 1 + size(filter(sequence(2, size(st)),"
-        f" i -> element_at(st, i) - element_at(st, i - 1) > {n})) END"
-    )
-    return kept.select(
-        id_col,
-        F.size("w").cast("bigint").alias("n_tok"),
-        (F.size("w") - F.size("kw")).cast("bigint").alias("n_removed"),
-        n_spans.cast("bigint").alias("n_spans"),
-        F.array_join("kw", " ").alias("clean_text"),
-    )
+    return _excised(agg.withColumn("w", F.split(text_col, " ")), id_col, n)
 
 
 def connected_components_incremental(

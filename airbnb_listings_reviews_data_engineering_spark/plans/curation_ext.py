@@ -139,6 +139,49 @@ LEFT JOIN (SELECT cid, count(*) AS n_dup_pairs,
     )
 
 
+def _semdedup_corpus(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The SemDedup fixture: the base embeddings (first _SD_DIMS dims)
+    plus a perturbed copy of each (first coordinate +0.01, vec_id +
+    100000), and the k-means centroids trained on the base embeddings."""
+    from ..operators.clustering import kmeans_centroids
+
+    emb = load(spark, sf_dir, "embeddings")
+    base = emb.select(
+        "vec_id", F.slice(as_double_array("embedding"), 1, _SD_DIMS).alias("v")
+    )
+    perturbed = base.select(
+        (F.col("vec_id") + 100000).alias("vec_id"),
+        F.concat(
+            F.array(F.element_at("v", 1) + 0.01), F.slice("v", 2, _SD_DIMS - 1)
+        ).alias("v"),
+    )
+    corpus = base.unionByName(perturbed)
+    cents = kmeans_centroids(
+        emb, "vec_id", "embedding", k=_semdedup_k(sf_dir), dims=_SD_DIMS,
+        iters=_SD_ITERS
+    )
+    return corpus, cents
+
+
+def _in_cell_dups(cells: DataFrame) -> DataFrame:
+    """Pairs (keep_id < drop_id) of vectors assigned to one cell ``cid``
+    whose normalized vectors ``vn`` have rounded cosine >= 0.99."""
+    a = cells.select(
+        F.col("cid"), F.col("vec_id").alias("keep_id"), F.col("vn").alias("va")
+    )
+    b = cells.select(
+        F.col("cid"), F.col("vec_id").alias("drop_id"), F.col("vn").alias("vb")
+    )
+    cos = F.round(_flat_dot("va", "vb"), 4)
+    return (
+        a.join(b, "cid")
+        .filter(F.col("keep_id") < F.col("drop_id"))
+        .filter(cos >= 0.99)
+    )
+
+
 @register(
     "dedup_semdedup",
     oracle=_semdedup_sql(),
@@ -167,40 +210,14 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic only in a constant cluster size — the same
     bounded-bucket discipline as dedup_embedding_lsh, with learned
     rather than hashed buckets."""
-    from ..operators.clustering import kmeans_centroids
-
-    emb = load(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id", F.slice(as_double_array("embedding"), 1, _SD_DIMS).alias("v")
-    )
-    perturbed = base.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("v", 1) + 0.01), F.slice("v", 2, _SD_DIMS - 1)
-        ).alias("v"),
-    )
-    corpus = base.unionByName(perturbed)
-
-    cents = kmeans_centroids(
-        emb, "vec_id", "embedding", k=_semdedup_k(sf_dir), dims=_SD_DIMS,
-        iters=_SD_ITERS
-    )
+    corpus, cents = _semdedup_corpus(spark, sf_dir)
     assigned = _assign_cells(corpus, cents).select(
         "vec_id", _normalized("v").alias("vn"), "cid"
     )
     assigned = pin(assigned, label="semdedup_assigned")
 
-    a = assigned.select(
-        F.col("cid"), F.col("vec_id").alias("keep_id"), F.col("vn").alias("va")
-    )
-    b = assigned.select(
-        F.col("cid"), F.col("vec_id").alias("drop_id"), F.col("vn").alias("vb")
-    )
-    cos = F.round(_flat_dot("va", "vb"), 4)
     pairs = (
-        a.join(b, "cid")
-        .filter(F.col("keep_id") < F.col("drop_id"))
-        .filter(cos >= 0.99)
+        _in_cell_dups(assigned)
         .select("cid", "keep_id", "drop_id")
     )
     # aggregate BOTH sides to k rows before joining: the previous
@@ -815,39 +832,14 @@ def dedup_semdedup_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to learned buckets; the 1-row summary exposes the
     assignment amplification (n_assignments / n_vectors) a capacity
     planner needs."""
-    from ..operators.clustering import kmeans_centroids
-
-    emb = load(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id", F.slice(as_double_array("embedding"), 1, _SD_DIMS).alias("v")
-    )
-    perturbed = base.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("v", 1) + 0.01), F.slice("v", 2, _SD_DIMS - 1)
-        ).alias("v"),
-    )
-    corpus = base.unionByName(perturbed)
-    cents = kmeans_centroids(
-        emb, "vec_id", "embedding", k=_semdedup_k(sf_dir), dims=_SD_DIMS,
-        iters=_SD_ITERS
-    )
+    corpus, cents = _semdedup_corpus(spark, sf_dir)
     probed = _assign_cells(corpus, cents, probes=_SD_PROBES).select(
         "vec_id", _normalized("v").alias("vn"), "cid"
     )
     probed = pin(probed, label="semdedup_mp_probed")
 
-    a = probed.select(
-        F.col("cid"), F.col("vec_id").alias("keep_id"), F.col("vn").alias("va")
-    )
-    b = probed.select(
-        F.col("cid"), F.col("vec_id").alias("drop_id"), F.col("vn").alias("vb")
-    )
-    cos = F.round(_flat_dot("va", "vb"), 4)
     pairs = (
-        a.join(b, "cid")
-        .filter(F.col("keep_id") < F.col("drop_id"))
-        .filter(cos >= 0.99)
+        _in_cell_dups(probed)
         .select("keep_id", "drop_id")
         .distinct()
     )

@@ -162,21 +162,12 @@ WHERE {_PAIR_D} <= {_RADIUS_KM}
 """
 
 
-@register("geo_grid_join", oracle=_GRID_JOIN_SQL)
-def geo_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Radius self-join ('all listing pairs within 150 km') via GRID
-    BLOCKING — the spatial analog of the LSH band join, never all-pairs:
-    each point lands in one 3-degree cell; the probe side explodes to
-    its 3x3 neighbor cells (a fixed 9x map-side fan-out, longitude
-    wrapped at the dateline via pmod) and candidates come from the
-    EQUI-join on the cell id; the exact haversine then verifies inside
-    blocks only. Cell size is chosen so two points within the radius
-    can never be more than one cell apart at any latitude the data
-    contains (|lat| <= 60: 150 km <= 2.7 lon-degrees < 3). At 100 TB
-    the cell id is the shuffle key — candidate count scales with local
-    density, not n^2; skewed megacity cells are one hot key, handled
-    like any skew join (salting / AQE). a.k < b.k canonicalizes pairs."""
-    c = load(spark, sf_dir, "customer")
+def _cell_pairs(c: DataFrame, pair: Column) -> tuple[DataFrame, Column]:
+    """Candidate pairs among the customers ``c``: probe side ``a``, each
+    point exploded to its 3x3 neighbour grid cells (longitude wrapped at
+    the dateline via pmod), equi-joined on the cell id to point side
+    ``b`` where ``pair`` holds. Also returns the exact haversine
+    distance between the two points."""
     lat, lon = _point(F.col("c_custkey").cast("string"))
     pts = c.select(
         F.col("c_custkey").alias("k"), lat.alias("lat"), lon.alias("lon")
@@ -199,17 +190,36 @@ def geo_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     a, b = probes.alias("a"), pts.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.py") == F.col("b.cy"))
+        & (F.col("a.px") == F.col("b.cx"))
+        & pair,
+    )
     d = _haversine(
         F.col("a.lat"), F.col("a.lon"), F.col("b.lat"), F.col("b.lon")
     )
+    return pairs, d
+
+
+@register("geo_grid_join", oracle=_GRID_JOIN_SQL)
+def geo_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Radius self-join ('all listing pairs within 150 km') via GRID
+    BLOCKING — the spatial analog of the LSH band join, never all-pairs:
+    each point lands in one 3-degree cell; the probe side explodes to
+    its 3x3 neighbor cells (a fixed 9x map-side fan-out, longitude
+    wrapped at the dateline via pmod) and candidates come from the
+    EQUI-join on the cell id; the exact haversine then verifies inside
+    blocks only. Cell size is chosen so two points within the radius
+    can never be more than one cell apart at any latitude the data
+    contains (|lat| <= 60: 150 km <= 2.7 lon-degrees < 3). At 100 TB
+    the cell id is the shuffle key — candidate count scales with local
+    density, not n^2; skewed megacity cells are one hot key, handled
+    like any skew join (salting / AQE). a.k < b.k canonicalizes pairs."""
+    c = load(spark, sf_dir, "customer")
+    pairs, d = _cell_pairs(c, F.col("a.k") < F.col("b.k"))
     return (
-        a.join(
-            b,
-            (F.col("a.py") == F.col("b.cy"))
-            & (F.col("a.px") == F.col("b.cx"))
-            & (F.col("a.k") < F.col("b.k")),
-        )
-        .filter(d <= _RADIUS_KM)
+        pairs.filter(d <= _RADIUS_KM)
         .select(
             F.col("a.k").alias("key_a"),
             F.col("b.k").alias("key_b"),
@@ -367,50 +377,16 @@ def geo_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate SF for output size; the plan shape is density-bounded at any
     corpus."""
     c = load(spark, sf_dir, "customer").filter(F.col("c_custkey") < 600)
-    lat, lon = _point(F.col("c_custkey").cast("string"))
-    pts = c.select(
-        F.col("c_custkey").alias("k"), lat.alias("lat"), lon.alias("lon")
-    ).withColumns(
-        {
-            "cy": F.floor((F.col("lat") + 60) / _CELL_DEG).cast("bigint"),
-            "cx": F.floor((F.col("lon") + 180) / _CELL_DEG).cast("bigint"),
-        }
-    )
-    offsets = F.array(*[F.lit(i) for i in (-1, 0, 1)])
-    probes = (
-        pts.withColumn("dy", F.explode(offsets))
-        .withColumn("dx", F.explode(offsets))
-        .select(
-            "k",
-            "lat",
-            "lon",
-            (F.col("cy") + F.col("dy")).alias("py"),
-            F.pmod(F.col("cx") + F.col("dx"), F.lit(120)).alias("px"),
-        )
-    )
-    a, b = probes.alias("a"), pts.alias("b")
-    d = F.round(
-        _haversine(F.col("a.lat"), F.col("a.lon"), F.col("b.lat"), F.col("b.lon")),
-        4,
-    )
-    raw = _haversine(
-        F.col("a.lat"), F.col("a.lon"), F.col("b.lat"), F.col("b.lon")
-    )
+    pairs, raw = _cell_pairs(c, F.col("a.k") != F.col("b.k"))
     from pyspark.sql import Window as W
 
     w = W.partitionBy("key_a").orderBy("d_km", "key_b")
     return (
-        a.join(
-            b,
-            (F.col("a.py") == F.col("b.cy"))
-            & (F.col("a.px") == F.col("b.cx"))
-            & (F.col("a.k") != F.col("b.k")),
-        )
-        .filter(raw <= _RADIUS_KM)
+        pairs.filter(raw <= _RADIUS_KM)
         .select(
             F.col("a.k").alias("key_a"),
             F.col("b.k").alias("key_b"),
-            d.alias("d_km"),
+            F.round(raw, 4).alias("d_km"),
         )
         .withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= 3)

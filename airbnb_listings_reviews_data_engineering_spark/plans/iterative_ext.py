@@ -1368,36 +1368,44 @@ FROM (
 )"""
 
 
-def _logreg_feats(spark: SparkSession, sf_dir: str, label: str = "lr_feats"):
-    """The pinned 3-double feature projection both trainer keys share.
-    Precondition: the (lineitem x orders) join is non-empty — with
-    n = 0 the weight update divides by zero and min() returns NULL,
-    i.e. silently-NULL weights rather than an error (unreachable on
-    the shipped fixtures; tests assert n_obs > 1000)."""
+def _order_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each order joined to its lineitem line count ``x1n`` and rounded
+    total quantity ``x2n``: the raw inputs of _LOGREG_FEATS."""
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     f = li.groupBy("l_orderkey").agg(
         F.count("*").alias("x1n"),
         F.round(F.sum("l_quantity")).cast("bigint").alias("x2n"),
     )
+    return f.join(o, f.l_orderkey == o.o_orderkey)
+
+
+def _logreg_feats(spark: SparkSession, sf_dir: str, label: str = "lr_feats"):
+    """The pinned 3-double feature projection ml_logreg_gd trains on.
+    Precondition: the (lineitem x orders) join is non-empty — with
+    n = 0 the weight update divides by zero and min() returns NULL,
+    i.e. silently-NULL weights rather than an error (unreachable on
+    the shipped fixtures; tests assert n_obs > 1000)."""
     # small_pin_floor: this pin's materialized layout is re-scanned by
     # every unrolled GD round; without it AQE coalesces the few-MB
     # feature shuffle to 1-3 partitions and the rounds run near-serial
     with small_pin_floor(spark):
         return pin(
-            f.join(o, f.l_orderkey == o.o_orderkey).selectExpr(*_LOGREG_FEATS),
+            _order_features(spark, sf_dir).selectExpr(*_LOGREG_FEATS),
             label=label,
         )
 
 
-def logreg_train_weights(feats: DataFrame) -> DataFrame:
+def logreg_train_weights(
+    feats: DataFrame, rounds: int = _LOGREG_ROUNDS
+) -> DataFrame:
     """The unrolled GD training chain, returning the UNROUNDED 1-row
     weight frame (w0, w1, w2 doubles) — the object the bitwise-
     determinism claim is about; ml_logreg_gd rounds to 6 places only
     for the human-facing output row, so CI pins determinism on THIS
     frame (tests/test_round8_ops.py: partition-order test collects it
     raw under two shuffle-partition counts and compares the doubles
-    exactly)."""
+    exactly). ``rounds`` GD rounds from zero weights."""
     w = (
         feats.sparkSession.range(1)
         .selectExpr(
@@ -1406,7 +1414,7 @@ def logreg_train_weights(feats: DataFrame) -> DataFrame:
             "CAST(0.0 AS DOUBLE) AS w2",
         )
     )
-    for _ in range(_LOGREG_ROUNDS):
+    for _ in range(rounds):
         scored = (
             feats.crossJoin(F.broadcast(w))
             .selectExpr("y", "x1", "x2", "w0", "w1", "w2",
@@ -1425,6 +1433,41 @@ def logreg_train_weights(feats: DataFrame) -> DataFrame:
             _logreg_update(0), _logreg_update(1), _logreg_update(2)
         )
     return w
+
+
+def _logreg_accuracy(
+    rows: DataFrame, w: DataFrame, correct: str = "n_correct", *extra: str
+) -> DataFrame:
+    """One row: the weights ``w`` (w0, w1, w2), the row count n, how many
+    of ``rows`` the model labels right (column ``correct``), the
+    positives n_pos, and the ``extra`` aggregates over yi and z."""
+    return (
+        rows.crossJoin(F.broadcast(w))
+        .selectExpr("yi", "w0", "w1", "w2", f"{_LOGREG_Z} AS z")
+        .agg(
+            F.expr("min(w0) AS w0"),
+            F.expr("min(w1) AS w1"),
+            F.expr("min(w2) AS w2"),
+            F.expr("count(*) AS n"),
+            F.expr(
+                "CAST(sum(CASE WHEN (CASE WHEN z >= 0.0 THEN 1 ELSE 0 END)"
+                f" = yi THEN 1 ELSE 0 END) AS BIGINT) AS {correct}"
+            ),
+            F.expr("CAST(sum(yi) AS BIGINT) AS n_pos"),
+            *[F.expr(e) for e in extra],
+        )
+    )
+
+
+def _holdout_row(acc: DataFrame, n_train: DataFrame, *cols: str) -> DataFrame:
+    """The held-out report: train and test sizes, the intercept, then
+    ``cols`` over the one-row accuracy aggregate ``acc``."""
+    return acc.crossJoin(F.broadcast(n_train)).selectExpr(
+        "CAST(n_train AS BIGINT) AS n_train",
+        "CAST(n AS BIGINT) AS n_test",
+        "round(w0, 6) AS w_intercept",
+        *cols,
+    )
 
 
 @register("ml_logreg_gd", oracle=_logreg_sql(_LOGREG_ROUNDS))
@@ -1451,22 +1494,7 @@ def ml_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     the curation quality-classifier-training shape). Precondition:
     non-empty feature table (see _logreg_feats)."""
     feats = _logreg_feats(spark, sf_dir)
-    w = logreg_train_weights(feats)
-    acc = (
-        feats.crossJoin(F.broadcast(w))
-        .selectExpr("yi", "w0", "w1", "w2", f"{_LOGREG_Z} AS z")
-        .agg(
-            F.expr("min(w0) AS w0"),
-            F.expr("min(w1) AS w1"),
-            F.expr("min(w2) AS w2"),
-            F.expr("count(*) AS n"),
-            F.expr(
-                "CAST(sum(CASE WHEN (CASE WHEN z >= 0.0 THEN 1 ELSE 0 END)"
-                " = yi THEN 1 ELSE 0 END) AS BIGINT) AS n_correct"
-            ),
-            F.expr("CAST(sum(yi) AS BIGINT) AS n_pos"),
-        )
-    )
+    acc = _logreg_accuracy(feats, logreg_train_weights(feats))
     return acc.selectExpr(
         "CAST(n AS BIGINT) AS n_obs",
         "round(w0, 6) AS w_intercept",
@@ -1532,67 +1560,21 @@ def ml_logreg_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     model generalizes, as it must — the constructed target's signal
     is shared across the split and only the %13 pseudo-noise is
     irreducible."""
-    li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    f = li.groupBy("l_orderkey").agg(
-        F.count("*").alias("x1n"),
-        F.round(F.sum("l_quantity")).cast("bigint").alias("x2n"),
-    )
     feats = pin(
-        f.join(o, f.l_orderkey == o.o_orderkey).selectExpr(
+        _order_features(spark, sf_dir).selectExpr(
             *_LOGREG_FEATS,
             "CASE WHEN o_orderkey % 5 = 0 THEN 1 ELSE 0 END AS hold",
         ),
         label="lr_holdout_feats",
     )
     train = feats.filter("hold = 0")
-    w = (
-        feats.sparkSession.range(1)
-        .selectExpr(
-            "CAST(0.0 AS DOUBLE) AS w0",
-            "CAST(0.0 AS DOUBLE) AS w1",
-            "CAST(0.0 AS DOUBLE) AS w2",
-        )
-    )
-    for _ in range(_LOGREG_ROUNDS):
-        scored = (
-            train.crossJoin(F.broadcast(w))
-            .selectExpr("y", "x1", "x2", "w0", "w1", "w2",
-                        f"{_LOGREG_Z} AS z")
-            .selectExpr("y", "x1", "x2", "w0", "w1", "w2",
-                        f"{_LOGREG_P} AS p")
-        )
-        g = scored.agg(
-            F.expr("min(w0) AS w0p"),
-            F.expr("min(w1) AS w1p"),
-            F.expr("min(w2) AS w2p"),
-            F.expr("count(*) AS n"),
-            *[F.expr(e) for e in _LOGREG_GRAD],
-        )
-        w = g.selectExpr(
-            _logreg_update(0), _logreg_update(1), _logreg_update(2)
-        )
     n_train = train.agg(F.expr("count(*) AS n_train"))
-    acc = (
-        feats.filter("hold = 1")
-        .crossJoin(F.broadcast(w))
-        .selectExpr("yi", "w0", "w1", "w2", f"{_LOGREG_Z} AS z")
-        .agg(
-            F.expr("min(w0) AS w0"),
-            F.expr("min(w1) AS w1"),
-            F.expr("min(w2) AS w2"),
-            F.expr("count(*) AS n"),
-            F.expr(
-                "CAST(sum(CASE WHEN (CASE WHEN z >= 0.0 THEN 1 ELSE 0 END)"
-                " = yi THEN 1 ELSE 0 END) AS BIGINT) AS n_correct"
-            ),
-            F.expr("CAST(sum(yi) AS BIGINT) AS n_pos"),
-        )
+    acc = _logreg_accuracy(
+        feats.filter("hold = 1"), logreg_train_weights(train)
     )
-    return acc.crossJoin(F.broadcast(n_train)).selectExpr(
-        "CAST(n_train AS BIGINT) AS n_train",
-        "CAST(n AS BIGINT) AS n_test",
-        "round(w0, 6) AS w_intercept",
+    return _holdout_row(
+        acc,
+        n_train,
         "round(w1, 6) AS w_lines",
         "round(w2, 6) AS w_qty",
         "round(CAST(n_correct AS DOUBLE) / CAST(n AS DOUBLE), 6)"
@@ -1708,36 +1690,19 @@ def ml_quality_distill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     feats = pin(g.selectExpr(*_QD_FEATS), label="quality_distill_feats")
     train = feats.filter("hold = 0")
-    w = logreg_train_weights(train)
     n_train = train.agg(F.expr("count(*) AS n_train"))
-    acc = (
-        feats.filter("hold = 1")
-        .crossJoin(F.broadcast(w))
-        .selectExpr("yi", "w0", "w1", "w2", f"{_LOGREG_Z} AS z")
-        .agg(
-            F.expr("min(w0) AS w0"),
-            F.expr("min(w1) AS w1"),
-            F.expr("min(w2) AS w2"),
-            F.expr("count(*) AS n"),
-            F.expr(
-                "CAST(sum(CASE WHEN (CASE WHEN z >= 0.0 THEN 1 ELSE 0 END)"
-                " = yi THEN 1 ELSE 0 END) AS BIGINT) AS n_agree"
-            ),
-            F.expr("CAST(sum(yi) AS BIGINT) AS n_pos"),
-            F.expr(
-                "CAST(sum(CASE WHEN z >= 0.0 AND yi = 0 THEN 1 ELSE 0 END)"
-                " AS BIGINT) AS n_false_pass"
-            ),
-            F.expr(
-                "CAST(sum(CASE WHEN z < 0.0 AND yi = 1 THEN 1 ELSE 0 END)"
-                " AS BIGINT) AS n_false_drop"
-            ),
-        )
+    acc = _logreg_accuracy(
+        feats.filter("hold = 1"),
+        logreg_train_weights(train),
+        "n_agree",
+        "CAST(sum(CASE WHEN z >= 0.0 AND yi = 0 THEN 1 ELSE 0 END)"
+        " AS BIGINT) AS n_false_pass",
+        "CAST(sum(CASE WHEN z < 0.0 AND yi = 1 THEN 1 ELSE 0 END)"
+        " AS BIGINT) AS n_false_drop",
     )
-    return acc.crossJoin(F.broadcast(n_train)).selectExpr(
-        "CAST(n_train AS BIGINT) AS n_train",
-        "CAST(n AS BIGINT) AS n_test",
-        "round(w0, 6) AS w_intercept",
+    return _holdout_row(
+        acc,
+        n_train,
         "round(w1, 6) AS w_ntok",
         "round(w2, 6) AS w_stop",
         "round(CAST(n_agree AS DOUBLE) / CAST(n AS DOUBLE), 6)"
@@ -2068,17 +2033,8 @@ def sample_influence_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Influence for a d-dim model costs one corpus scan regardless of
     rows — the property that makes gradient-alignment curation viable
     at 100 TB where Hessian-based influence is not."""
-    f = (
-        load(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(
-            F.count("*").alias("x1n"),
-            F.round(F.sum("l_quantity")).cast("bigint").alias("x2n"),
-        )
-    )
-    o = load(spark, sf_dir, "orders")
     feats = pin(
-        f.join(o, f.l_orderkey == o.o_orderkey).selectExpr(
+        _order_features(spark, sf_dir).selectExpr(
             "o_orderkey AS okey",
             "CASE WHEN o_orderkey % 5 = 0 THEN 1 ELSE 0 END AS hold",
             *_LOGREG_FEATS,
@@ -2086,27 +2042,7 @@ def sample_influence_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
         label="inf_feats",
     )
     train = feats.filter(F.col("hold") == 0)
-    w = spark.range(1).selectExpr(
-        "CAST(0.0 AS DOUBLE) AS w0",
-        "CAST(0.0 AS DOUBLE) AS w1",
-        "CAST(0.0 AS DOUBLE) AS w2",
-    )
-    for _ in range(_INF_ROUNDS):
-        scored = (
-            train.crossJoin(F.broadcast(w))
-            .selectExpr("y", "x1", "x2", "w0", "w1", "w2", f"{_LOGREG_Z} AS z")
-            .selectExpr("y", "x1", "x2", "w0", "w1", "w2", f"{_LOGREG_P} AS p")
-        )
-        g = scored.agg(
-            F.expr("min(w0) AS w0p"),
-            F.expr("min(w1) AS w1p"),
-            F.expr("min(w2) AS w2p"),
-            F.expr("count(*) AS n"),
-            *[F.expr(e) for e in _LOGREG_GRAD],
-        )
-        w = g.selectExpr(
-            _logreg_update(0), _logreg_update(1), _logreg_update(2)
-        )
+    w = logreg_train_weights(train, _INF_ROUNDS)
     ghold = (
         feats.filter(F.col("hold") == 1)
         .crossJoin(F.broadcast(w))
@@ -2125,27 +2061,21 @@ def sample_influence_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr("okey", "yi", _INF_EXPR),
         label="inf_scores",
     )
-    helpful = (
-        inf.orderBy(F.desc("influence"), "okey")
-        .limit(_INF_TOPK)
-        .selectExpr(
-            "'helpful' AS direction",
-            "okey AS o_orderkey",
-            "CAST(yi AS INT) AS label",
-            "influence",
+    def top(order, direction: str) -> DataFrame:
+        return (
+            inf.orderBy(order, "okey")
+            .limit(_INF_TOPK)
+            .selectExpr(
+                f"'{direction}' AS direction",
+                "okey AS o_orderkey",
+                "CAST(yi AS INT) AS label",
+                "influence",
+            )
         )
+
+    return top(F.desc("influence"), "helpful").unionByName(
+        top(F.asc("influence"), "harmful")
     )
-    harmful = (
-        inf.orderBy(F.asc("influence"), "okey")
-        .limit(_INF_TOPK)
-        .selectExpr(
-            "'harmful' AS direction",
-            "okey AS o_orderkey",
-            "CAST(yi AS INT) AS label",
-            "influence",
-        )
-    )
-    return helpful.unionByName(harmful)
 
 
 sample_influence_proxy.__doc__ = sample_influence_proxy.__doc__.format(

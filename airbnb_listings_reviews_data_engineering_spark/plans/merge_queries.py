@@ -183,19 +183,17 @@ FROM upd JOIN changed USING (c_custkey)
 """
 
 
-@register("sink_scd2", oracle=_SCD2_SQL)
-def sink_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Type-2 slowly-changing-dimension merge: a segment-change batch
-    closes each changed key's current row (valid_to = effective date)
-    and appends the new version; unchanged keys (including updates that
-    carry the same value — the no-op case) and closed history pass
-    through. The reference's replace-style upsert (Airbnb_Listings_ETL
-    .py:143-151) destroys history; SCD2 is what a warehouse keeps
-    instead, and it is one shuffle join here (operators/merge.py
-    merge_scd2), not a per-row UPDATE loop."""
-    # pinned source projection: current + history + update batch all
-    # derive from it and the merge reads each side again — 7 customer
-    # scans unpinned (max_rescan audit column, round 7)
+def _scd2_fixture(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(source, dimension) for the two SCD2 sink keys: the pinned
+    customer (c_custkey, c_mktsegment) projection, and the dimension
+    they merge into — every customer's current segment since
+    2024-01-01, plus a closed 'OLD' 2023 segment for every 10th
+    custkey."""
+    # pinned: the dimension, the change batch and the merge all read it
+    # again — unpinned, the final plans read customer 7 (sink_scd2) and
+    # 27 (sink_scd2_multi) times (max_rescan audit column, round 7)
     c = pin(
         load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
         label="scd2_src",
@@ -214,7 +212,20 @@ def sink_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("2024-01-01").alias("valid_to"),
         F.lit(False).alias("is_current"),
     )
-    base = cur.unionByName(hist)
+    return c, cur.unionByName(hist)
+
+
+@register("sink_scd2", oracle=_SCD2_SQL)
+def sink_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Type-2 slowly-changing-dimension merge: a segment-change batch
+    closes each changed key's current row (valid_to = effective date)
+    and appends the new version; unchanged keys (including updates that
+    carry the same value — the no-op case) and closed history pass
+    through. The reference's replace-style upsert (Airbnb_Listings_ETL
+    .py:143-151) destroys history; SCD2 is what a warehouse keeps
+    instead, and it is one shuffle join here (operators/merge.py
+    merge_scd2), not a per-row UPDATE loop."""
+    c, base = _scd2_fixture(spark, sf_dir)
     updates = c.filter(F.col("c_custkey") % 4 == 0).select(
         "c_custkey",
         F.lit("MACHINERY").alias("c_mktsegment"),
@@ -298,29 +309,7 @@ def sink_scd2_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     valid_to. The reference's replace-style upsert
     (Airbnb_Listings_ETL.py:143-151) keeps no history at all; this is
     the backfill-replay form a warehouse needs."""
-    # pin the source projection: the CDC fixture derives NINE frames
-    # from it (current + history + 7 change streams) and the merge
-    # references each again — unpinned, the final plan read the
-    # customer table 27 times (max_rescan audit column, round 7)
-    c = pin(
-        load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
-        label="scd2_src",
-    )
-    cur = c.select(
-        "c_custkey",
-        "c_mktsegment",
-        F.lit("2024-01-01").alias("valid_from"),
-        F.lit(None).cast("string").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
-    hist = c.filter(F.col("c_custkey") % 10 == 0).select(
-        "c_custkey",
-        F.lit("OLD").alias("c_mktsegment"),
-        F.lit("2023-01-01").alias("valid_from"),
-        F.lit("2024-01-01").alias("valid_to"),
-        F.lit(False).alias("is_current"),
-    )
-    base = cur.unionByName(hist)
+    c, base = _scd2_fixture(spark, sf_dir)
 
     k4 = c.filter(F.col("c_custkey") % 4 == 0)
     changes = [

@@ -11,27 +11,32 @@ deployment lives on, demonstrated end-to-end and oracle-checked.
   fallback when AQE's skew split can't help (e.g. a single hot key in a
   broadcast-ineligible join).
 
-The bucketed tables are written once per (sf_dir, session) into the
-session catalog; the partitioned layouts are staged fixtures
-(``sources/staging.ensure_staged``), restaged when their source table
-changes; plan tests assert the physical properties (no Exchange /
+The bucketed tables are written into the session catalog once per
+(sf_dir, source fingerprint, session); the partitioned layouts are
+staged fixtures (``sources/staging.ensure_staged``), restaged when
+their source table changes; plan tests assert the physical properties (no Exchange /
 PartitionFilters) so regressions are caught structurally, not by timing.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checkpoint import pin
+from ..sources.parquet import fingerprint
 from ..sources.staging import ensure_staged, fs_delete, staging_root
 from .registry import load, register
 
 
 def _sf_tag(sf_dir: str) -> str:
-    return sf_dir.strip("/").replace("/", "_").replace(".", "p")
+    """``sf_dir`` as a name part that is also a valid unquoted table
+    identifier: '.' becomes 'p', any other non-word character '_'."""
+    return re.sub(r"\W", "_", sf_dir.strip("/").replace(".", "p"))
 
 
 _BUCKETED_SQL = """
@@ -42,14 +47,28 @@ GROUP BY c.c_mktsegment
 """
 
 
-def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> None:
+def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Names of the session-catalog tables holding orders and customer
+    bucketed (8 buckets) on the custkey. A name carries the md5 of its
+    source table's fingerprint (sources/parquet.py), so a table
+    rewritten in place gets a new bucketed copy instead of answering
+    from the old one, and the old copy is dropped; a source without a
+    fingerprint is rebuilt on every call."""
     tag = _sf_tag(sf_dir)
     existing = {t.name for t in spark.catalog.listTables()}
-    for src, key, tbl in (
-        ("orders", "o_custkey", f"orders_bkt_{tag}"),
-        ("customer", "c_custkey", f"customer_bkt_{tag}"),
-    ):
-        if tbl not in existing:
+    names = []
+    for src, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
+        fp = fingerprint(os.path.join(sf_dir, f"{src}.parquet"))
+        tbl = f"{src}_bkt_{tag}"
+        if fp is not None:
+            tbl += "_" + hashlib.md5(repr(fp).encode()).hexdigest()[:16]
+        if fp is None or tbl not in existing:
+            for old in existing:
+                if old != tbl and re.fullmatch(
+                    f"{src}_bkt_{tag}(_[0-9a-f]{{16}})?", old
+                ):
+                    spark.sql(f"DROP TABLE {old}")
+                    fs_delete(os.path.join(staging_root(spark), old), spark)
             (
                 load(spark, sf_dir, src)
                 .write.bucketBy(8, key)
@@ -58,6 +77,8 @@ def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> None:
                 .mode("overwrite")
                 .saveAsTable(tbl)
             )
+        names.append(tbl)
+    return names[0], names[1]
 
 
 @register("join_bucketed", oracle=_BUCKETED_SQL)
@@ -67,10 +88,9 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     NO shuffle Exchange before the join (asserted in plan tests). At
     100 TB this converts the nightly fact-dim join from a full shuffle of
     the fact table into a local merge per bucket."""
-    _ensure_bucketed(spark, sf_dir)
-    tag = _sf_tag(sf_dir)
-    o = spark.table(f"orders_bkt_{tag}")
-    c = spark.table(f"customer_bkt_{tag}")
+    orders_bkt, customer_bkt = _ensure_bucketed(spark, sf_dir)
+    o = spark.table(orders_bkt)
+    c = spark.table(customer_bkt)
     return (
         o.hint("merge")  # keep SMJ: broadcast would hide the bucket effect
         .join(c, o.o_custkey == c.c_custkey)

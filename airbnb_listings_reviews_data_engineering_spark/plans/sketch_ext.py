@@ -35,51 +35,54 @@ from ..functions.hashing import (
     hash60_duckdb_sql,
     hash60_spark_sql,
 )
+from ..operators.sketch import (
+    BLOOM_ABSENT_N,
+    BLOOM_HX,
+    BLOOM_K,
+    BLOOM_M,
+    BLOOM_MASK,
+    BLOOM_PROBE_MOD,
+    CM_D,
+    CM_PRIMES,
+    DQ_CENTS,
+    DQ_LEAF_MAX,
+    DQ_LEAF_W,
+    DQ_LEVELS,
+    DQ_QS,
+    H,
+    KMV_EST,
+    KMV_K,
+    bloom_positions,
+    bloom_report,
+    cell_structs,
+    cm_cols,
+    cm_grid,
+    cm_probe,
+    dq_descend,
+    dq_grid,
+    dq_node_hash_duck,
+    dq_node_hash_spark,
+    grid_lookups,
+    grid_map,
+    kmv_fold,
+    kmv_registers,
+    n_diff,
+    ndv_report,
+    spread_counts,
+)
+from ..sources.staging import ensure_staged
+from ..streaming.ingest import (
+    run_available_now,
+    stage_batch,
+    staged_stream,
+    stateful_layout,
+)
 from .registry import load, register
-
-# 60-bit hash space size as an exact double (2^60) — shared literal
-_H = "1152921504606846976.0"
 
 # ---------------------------------------------------------------------------
 # KMV / register-minima NDV: K bounded registers per group, no sort
+# (estimator and its small-range correction: operators/sketch.KMV_EST)
 # ---------------------------------------------------------------------------
-
-_KMV_K = 64
-# Harmonic-mean (HLL-style) estimate over the K register minima: m_j
-# sits at ~H/(n_j+1), so K^2*H / sum_j(m_j) - K estimates n. (The naive
-# per-register sum of H/m_j is NOT usable: E[1/min] diverges — a single
-# lucky tiny minimum dominates; measured rel_err 3.4-25x before this
-# form.) Empty registers contribute m_j = H. The sum is computed over
-# m_j div 256 (exact integer shift, partition-order-independent, and
-# 64 x 2^52 cannot overflow int64 — sum(m) itself can reach 2^66 at
-# small n) and rescaled once in DOUBLE: the int->double cast and the
-# one division are IEEE-deterministic, so the estimate is bitwise equal
-# across engines. {div} is the engine's integer-divide spelling.
-#
-# SMALL-RANGE CORRECTION (HLL's linear counting, Flajolet et al. 2007
-# §4): with n << K most registers are EMPTY and the harmonic form
-# collapses (measured: n_exact=3 -> est 1; n=5 -> 3). When any register
-# is empty, estimate from occupancy instead: n ~= K*ln(K/V) for V empty
-# registers — but ln is libm, NOT bitwise-portable across a JVM and
-# DuckDB's C runtime, so the 63 possible outputs (V is an integer in
-# 1..K-1) are precomputed HERE, once, into a CASE lookup embedded in
-# BOTH engines' SQL text. No runtime transcendentals anywhere.
-import math as _math
-
-_KMV_LINEAR = " ".join(
-    f"WHEN {v} THEN {round(_KMV_K * _math.log(_KMV_K / v))}"
-    for v in range(1, _KMV_K)
-)
-_KMV_HARMONIC = (
-    f"CAST(round({_KMV_K}.0 * {_KMV_K}.0 * {_H}"
-    f" / (CAST(sum(m {{div}} 256) AS DOUBLE) * 256.0"
-    f" + ({_KMV_K} - count(*)) * {_H}) - {_KMV_K}.0) AS BIGINT)"
-)
-_KMV_EST = (
-    f"CASE WHEN count(*) < {_KMV_K}"
-    f" THEN CAST((CASE ({_KMV_K} - count(*)) {_KMV_LINEAR} END) AS BIGINT)"
-    f" ELSE {_KMV_HARMONIC} END"
-)
 
 _KMV_SQL = f"""
 WITH h AS (
@@ -88,11 +91,11 @@ WITH h AS (
   FROM orders
 ),
 regs AS (
-  SELECT prio, h % {_KMV_K} AS reg, min(h) AS m
-  FROM h GROUP BY prio, h % {_KMV_K}
+  SELECT prio, h % {KMV_K} AS reg, min(h) AS m
+  FROM h GROUP BY prio, h % {KMV_K}
 ),
 est AS (
-  SELECT prio, {_KMV_EST.format(div="//")} AS ndv_est
+  SELECT prio, {KMV_EST.format(div="//")} AS ndv_est
   FROM regs GROUP BY prio
 ),
 ex AS (
@@ -131,26 +134,10 @@ def sketch_kmv_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("prio"),
         F.expr(hash60_spark_sql("CAST(o_custkey AS STRING)")).alias("h"),
     )
-    regs = (
-        h.withColumn("reg", F.col("h") % _KMV_K)
-        .groupBy("prio", "reg")
-        .agg(F.min("h").alias("m"))
-    )
-    est = regs.groupBy("prio").agg(
-        F.expr(_KMV_EST.format(div="div") + " AS ndv_est")
-    )
     ex = o.groupBy(F.col("o_orderpriority").alias("prio")).agg(
         F.countDistinct("o_custkey").alias("n_exact")
     )
-    return est.join(ex, "prio").select(
-        "prio",
-        "n_exact",
-        "ndv_est",
-        F.expr(
-            "round(abs(ndv_est - n_exact) / CAST(n_exact AS DOUBLE), 4)"
-            " AS rel_err"
-        ),
-    )
+    return ndv_report(kmv_fold(kmv_registers(h, "prio"), "prio"), ex, "prio")
 
 
 # ---------------------------------------------------------------------------
@@ -190,6 +177,23 @@ FROM hm
 """
 
 
+def _theta_members(o: DataFrame) -> DataFrame:
+    """(k, a, b): each custkey with an order of priority _THETA_A or
+    _THETA_B, and whether it is in set A and in set B."""
+    return (
+        o.filter(F.col("o_orderpriority").isin(_THETA_A, _THETA_B))
+        .groupBy(F.col("o_custkey").alias("k"))
+        .agg(
+            F.max(
+                F.when(F.col("o_orderpriority") == _THETA_A, 1).otherwise(0)
+            ).alias("a"),
+            F.max(
+                F.when(F.col("o_orderpriority") == _THETA_B, 1).otherwise(0)
+            ).alias("b"),
+        )
+    )
+
+
 @register("sketch_theta_setops", oracle=_THETA_SQL)
 def sketch_theta_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta-sketch set operations (Dasgupta et al., arXiv:1510.01997,
@@ -208,17 +212,7 @@ def sketch_theta_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate becomes a per-sketch field. The exact memberships emitted
     alongside are the gate's verifier (one two-phase distinct). The
     whole plan is ONE groupBy(custkey) + one global aggregate."""
-    o = load(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority").isin(_THETA_A, _THETA_B)
-    )
-    mem = o.groupBy(F.col("o_custkey").alias("k")).agg(
-        F.max(
-            F.when(F.col("o_orderpriority") == _THETA_A, 1).otherwise(0)
-        ).alias("a"),
-        F.max(
-            F.when(F.col("o_orderpriority") == _THETA_B, 1).otherwise(0)
-        ).alias("b"),
-    )
+    mem = _theta_members(load(spark, sf_dir, "orders"))
     hm = mem.select(
         "a",
         "b",
@@ -245,42 +239,19 @@ def sketch_theta_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # count-min point frequencies: d x w counter grid, probe = min over rows
 # ---------------------------------------------------------------------------
 
-_CM_D = 3
-# Row i reduces the shared 60-bit key hash modulo its OWN prime width.
-# The round-9 form — (hash60 XOR seed_i) % 4096 — had FULLY CORRELATED
-# rows (ADVICE r9): 4096 = 2^12 and XOR by a constant is bitwise, so
-# two keys equal in the low 12 bits collided in EVERY row and the
-# effective depth was 1. Distinct prime moduli fix this with the same
-# single md5 per key: row r collides two keys iff h1 = h2 (mod p_r),
-# and by CRT all-d-rows collision requires h1 = h2 (mod p0*p1*p2 ~
-# 6.9e10) — probability ~1.4e-11 for distinct 60-bit hashes, so the
-# d rows are independent in the sense the 1 - e^-d bound needs.
-_CM_PRIMES = (4093, 4099, 4091)
-_CM_W = min(_CM_PRIMES)  # width for the e*N/w error statement
+# the d prime-width rows: operators/sketch.CM_PRIMES
 _CM_PROBE_MOD = 97  # fixed probe set: custkeys divisible by 97
-
-
-def _cm_cols_duck(expr: str) -> list[str]:
-    return [
-        f"{hash60_duckdb_sql(expr)} % {_CM_PRIMES[i]}" for i in range(_CM_D)
-    ]
-
-
-def _cm_cols_spark(expr: str) -> list[str]:
-    return [
-        f"{hash60_spark_sql(expr)} % {_CM_PRIMES[i]}" for i in range(_CM_D)
-    ]
+# the oracles' probe rows: each probe (k, n_exact) of ex once per grid row
+_CM_PROBES_DUCK = " UNION ALL ".join(
+    f"SELECT k, n_exact, {i} AS r, {c} AS c FROM ex"
+    for i, c in enumerate(cm_cols(hash60_duckdb_sql, "CAST(k AS VARCHAR)"))
+)
 
 
 def _cm_sql() -> str:
-    duck_cols = _cm_cols_duck("CAST(o_custkey AS VARCHAR)")
-    probe_cols = _cm_cols_duck("CAST(k AS VARCHAR)")
+    duck_cols = cm_cols(hash60_duckdb_sql, "CAST(o_custkey AS VARCHAR)")
     cells = " UNION ALL ".join(
         f"SELECT {i} AS r, {c} AS c FROM orders" for i, c in enumerate(duck_cols)
-    )
-    probes = " UNION ALL ".join(
-        f"SELECT k, n_exact, {i} AS r, {c} AS c FROM ex"
-        for i, c in enumerate(probe_cols)
     )
     return f"""
 WITH sk AS (
@@ -290,7 +261,7 @@ ex AS (
   SELECT o_custkey AS k, count(*) AS n_exact FROM orders
   WHERE o_custkey % {_CM_PROBE_MOD} = 0 GROUP BY o_custkey
 ),
-pr AS ({probes})
+pr AS ({_CM_PROBES_DUCK})
 SELECT k AS custkey, CAST(min(n_exact) AS BIGINT) AS n_exact,
        CAST(min(cnt) AS BIGINT) AS n_est
 FROM pr JOIN sk USING (r, c)
@@ -298,12 +269,25 @@ GROUP BY k
 """
 
 
+# the probe side's grid columns, over the probe key k
+_CM_PROBE_COLS = cm_cols(hash60_spark_sql, "CAST(k AS STRING)")
+
+
+def _cm_probe_set(o: DataFrame) -> DataFrame:
+    """(k, n_exact): the exact order count of every probed custkey."""
+    return (
+        o.filter(F.col("o_custkey") % _CM_PROBE_MOD == 0)
+        .groupBy(F.col("o_custkey").alias("k"))
+        .agg(F.count("*").alias("n_exact"))
+    )
+
+
 @register("sketch_countmin_heavy", oracle=_cm_sql())
 def sketch_countmin_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min point frequencies (Cormode & Muthukrishnan, J.Alg
     2005): a d=3 x w~4096 counter grid — row i counts the stream at
     column hash60(key) %% p_i with DISTINCT PRIME widths per row (see
-    _CM_PRIMES: XOR-seeded power-of-two columns were fully correlated,
+    CM_PRIMES: XOR-seeded power-of-two columns were fully correlated,
     ADVICE r9; prime moduli give CRT-independent rows from one md5 per
     key) — and a key's frequency estimate is min over the d counters,
     ALWAYS >= the true count (pinned in tests) and over by at most
@@ -317,42 +301,8 @@ def sketch_countmin_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     97) broadcast-join the tiny grid; the exact per-key counts emitted
     alongside are the verifier, not the scale path."""
     o = load(spark, sf_dir, "orders")
-    cols = _cm_cols_spark("CAST(o_custkey AS STRING)")
-    cells = o.select(
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("r"), F.expr(c).alias("c")
-                )
-                for i, c in enumerate(cols)
-            ])
-        ).alias("rc")
-    ).select("rc.r", "rc.c")
-    sk = cells.groupBy("r", "c").agg(F.count("*").alias("cnt"))
-    ex = (
-        o.filter(F.col("o_custkey") % _CM_PROBE_MOD == 0)
-        .groupBy(F.col("o_custkey").alias("k"))
-        .agg(F.count("*").alias("n_exact"))
-    )
-    probe_cols = _cm_cols_spark("CAST(k AS STRING)")
-    pr = ex.select(
-        "k",
-        "n_exact",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(i).alias("r"), F.expr(c).alias("c"))
-                for i, c in enumerate(probe_cols)
-            ])
-        ).alias("rc"),
-    ).select("k", "n_exact", "rc.r", "rc.c")
-    return (
-        pr.join(F.broadcast(sk), ["r", "c"])
-        .groupBy(F.col("k").alias("custkey"))
-        .agg(
-            F.expr("CAST(min(n_exact) AS BIGINT) AS n_exact"),
-            F.expr("CAST(min(cnt) AS BIGINT) AS n_est"),
-        )
-    )
+    sk = cm_grid(o, cm_cols(hash60_spark_sql, "CAST(o_custkey AS STRING)"))
+    return cm_probe(_cm_probe_set(o), sk, _CM_PROBE_COLS, "custkey")
 
 
 # ---------------------------------------------------------------------------
@@ -386,11 +336,11 @@ def _card_sql() -> str:
 WITH uv AS ({uv}),
 h AS (SELECT col, {hash60_duckdb_sql("val")} AS h FROM uv),
 regs AS (
-  SELECT col, h % {_KMV_K} AS reg, min(h) AS m
-  FROM h GROUP BY col, h % {_KMV_K}
+  SELECT col, h % {KMV_K} AS reg, min(h) AS m
+  FROM h GROUP BY col, h % {KMV_K}
 ),
 est AS (
-  SELECT col, {_KMV_EST.format(div="//")} AS ndv_est
+  SELECT col, {KMV_EST.format(div="//")} AS ndv_est
   FROM regs GROUP BY col
 ),
 ex AS ({ex})
@@ -423,14 +373,8 @@ def profile_sketch_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     uv = o.selectExpr(
         f"stack({len(_CARD_COLS)}, {stack_args}) AS (col, val)"
     )
-    regs = (
-        uv.select("col", F.expr(hash60_spark_sql("val")).alias("h"))
-        .withColumn("reg", F.col("h") % _KMV_K)
-        .groupBy("col", "reg")
-        .agg(F.min("h").alias("m"))
-    )
-    est = regs.groupBy("col").agg(
-        F.expr(_KMV_EST.format(div="div") + " AS ndv_est")
+    regs = kmv_registers(
+        uv.select("col", F.expr(hash60_spark_sql("val")).alias("h")), "col"
     )
     ex_aggs = [
         F.countDistinct(F.expr(e.format(vc="STRING"))).alias(f"nd_{i}")
@@ -443,15 +387,7 @@ def profile_sketch_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = ex_row.selectExpr(
         f"stack({len(_CARD_COLS)}, {ex_stack}) AS (col, n_exact)"
     )
-    return est.join(ex, "col").select(
-        "col",
-        "n_exact",
-        "ndv_est",
-        F.expr(
-            "round(abs(ndv_est - n_exact) / CAST(n_exact AS DOUBLE), 4)"
-            " AS rel_err"
-        ),
-    )
+    return ndv_report(kmv_fold(regs, "col"), ex, "col")
 
 
 # ---------------------------------------------------------------------------
@@ -574,6 +510,15 @@ _BK_K = 128
 _H_INT = 1152921504606846976
 
 
+def _bk_est(n: str, hk: str) -> str:
+    """Bottom-k NDV estimate of a sketch holding ``n`` hashes, the
+    largest ``hk``: exact below saturation, else (k-1)*H/h_k."""
+    return (
+        f"CASE WHEN {n} < {_BK_K} THEN {n}"
+        f" ELSE CAST(round(({_BK_K} - 1) * ({H} / {hk})) AS BIGINT) END"
+    )
+
+
 def _bk_sql() -> str:
     h = hash60_duckdb_sql("CAST(k AS VARCHAR)")
     return f"""
@@ -607,20 +552,20 @@ est AS (
   SELECT
     CASE WHEN (SELECT count(*) FROM sa) < {_BK_K}
          THEN (SELECT count(*) FROM sa)
-         ELSE CAST(round(({_BK_K} - 1) * ({_H} / (SELECT max(h) FROM sa)))
+         ELSE CAST(round(({_BK_K} - 1) * ({H} / (SELECT max(h) FROM sa)))
               AS BIGINT) END AS est_a,
     CASE WHEN (SELECT count(*) FROM sb) < {_BK_K}
          THEN (SELECT count(*) FROM sb)
-         ELSE CAST(round(({_BK_K} - 1) * ({_H} / (SELECT max(h) FROM sb)))
+         ELSE CAST(round(({_BK_K} - 1) * ({H} / (SELECT max(h) FROM sb)))
               AS BIGINT) END AS est_b,
     CAST(round((SELECT count(*) FROM (
             SELECT h FROM sa UNION SELECT h FROM sb
           ) u, th WHERE u.h < th.theta)
-          * ({_H} / CAST((SELECT theta FROM th) AS DOUBLE)))
+          * ({H} / CAST((SELECT theta FROM th) AS DOUBLE)))
          AS BIGINT) AS est_union,
     CAST(round((SELECT count(*) FROM sa JOIN sb USING (h) CROSS JOIN th
             WHERE sa.h < th.theta)
-          * ({_H} / CAST((SELECT theta FROM th) AS DOUBLE)))
+          * ({H} / CAST((SELECT theta FROM th) AS DOUBLE)))
          AS BIGINT) AS est_inter
 ),
 ex AS (
@@ -658,19 +603,8 @@ def sketch_theta_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate's verifier."""
     from pyspark.sql import Window as W
 
-    o = load(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority").isin(_THETA_A, _THETA_B)
-    )
     mem = pin(
-        o.groupBy(F.col("o_custkey").alias("k")).agg(
-            F.max(
-                F.when(F.col("o_orderpriority") == _THETA_A, 1).otherwise(0)
-            ).alias("a"),
-            F.max(
-                F.when(F.col("o_orderpriority") == _THETA_B, 1).otherwise(0)
-            ).alias("b"),
-        ),
-        label="theta_bk_mem",
+        _theta_members(load(spark, sf_dir, "orders")), label="theta_bk_mem"
     )
     hm = mem.select(
         "a", "b",
@@ -750,34 +684,25 @@ def sketch_theta_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(ex))
         .selectExpr(
             "n_exact_a",
-            f"CASE WHEN na < {_BK_K} THEN na"
-            f" ELSE CAST(round(({_BK_K} - 1) * ({_H} / ha)) AS BIGINT)"
-            " END AS est_a",
+            f"{_bk_est('na', 'ha')} AS est_a",
             "n_exact_b",
-            f"CASE WHEN nb < {_BK_K} THEN nb"
-            f" ELSE CAST(round(({_BK_K} - 1) * ({_H} / hb)) AS BIGINT)"
-            " END AS est_b",
+            f"{_bk_est('nb', 'hb')} AS est_b",
             "n_exact_union",
-            f"CAST(round(n_union_s * ({_H} / CAST(theta AS DOUBLE)))"
+            f"CAST(round(n_union_s * ({H} / CAST(theta AS DOUBLE)))"
             " AS BIGINT) AS est_union",
             "n_exact_inter",
-            f"CAST(round(n_inter_s * ({_H} / CAST(theta AS DOUBLE)))"
+            f"CAST(round(n_inter_s * ({H} / CAST(theta AS DOUBLE)))"
             " AS BIGINT) AS est_inter",
         )
     )
 
 
 def _cm_rollup_sql() -> str:
-    duck_cols = _cm_cols_duck("CAST(o_custkey AS VARCHAR)")
+    duck_cols = cm_cols(hash60_duckdb_sql, "CAST(o_custkey AS VARCHAR)")
     cells = " UNION ALL ".join(
         f"SELECT date_trunc('month', o_orderdate) AS mon, {i} AS r,"
         f" {c} AS c FROM orders"
         for i, c in enumerate(duck_cols)
-    )
-    probe_cols = _cm_cols_duck("CAST(k AS VARCHAR)")
-    probes = " UNION ALL ".join(
-        f"SELECT k, n_exact, {i} AS r, {c} AS c FROM ex"
-        for i, c in enumerate(probe_cols)
     )
     return f"""
 WITH monthly AS (
@@ -789,7 +714,7 @@ ex AS (
   SELECT o_custkey AS k, count(*) AS n_exact FROM orders
   WHERE o_custkey % {_CM_PROBE_MOD} = 0 GROUP BY o_custkey
 ),
-pr AS ({probes})
+pr AS ({_CM_PROBES_DUCK})
 SELECT k AS custkey, CAST(min(n_exact) AS BIGINT) AS n_exact,
        CAST(min(cnt) AS BIGINT) AS n_est
 FROM pr JOIN merged USING (r, c)
@@ -812,209 +737,61 @@ def sketch_countmin_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined groupBy into (months x d x w) cells, one tiny
     re-aggregation to (d x w), broadcast probe join."""
     o = load(spark, sf_dir, "orders")
-    cols = _cm_cols_spark("CAST(o_custkey AS STRING)")
-    cells = o.select(
+    monthly = cm_grid(
+        o,
+        cm_cols(hash60_spark_sql, "CAST(o_custkey AS STRING)"),
         F.date_trunc("month", F.col("o_orderdate")).alias("mon"),
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(i).alias("r"), F.expr(c).alias("c"))
-                for i, c in enumerate(cols)
-            ])
-        ).alias("rc"),
-    ).select("mon", "rc.r", "rc.c")
-    monthly = cells.groupBy("mon", "r", "c").agg(F.count("*").alias("cnt"))
+    )
     merged = monthly.groupBy("r", "c").agg(
         F.expr("CAST(sum(cnt) AS BIGINT) AS cnt")
     )
-    ex = (
-        o.filter(F.col("o_custkey") % _CM_PROBE_MOD == 0)
-        .groupBy(F.col("o_custkey").alias("k"))
-        .agg(F.count("*").alias("n_exact"))
-    )
-    probe_cols = _cm_cols_spark("CAST(k AS STRING)")
-    pr = ex.select(
-        "k",
-        "n_exact",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(i).alias("r"), F.expr(c).alias("c"))
-                for i, c in enumerate(probe_cols)
-            ])
-        ).alias("rc"),
-    ).select("k", "n_exact", "rc.r", "rc.c")
-    return (
-        pr.join(F.broadcast(merged), ["r", "c"])
-        .groupBy(F.col("k").alias("custkey"))
-        .agg(
-            F.expr("CAST(min(n_exact) AS BIGINT) AS n_exact"),
-            F.expr("CAST(min(cnt) AS BIGINT) AS n_est"),
-        )
-    )
+    return cm_probe(_cm_probe_set(o), merged, _CM_PROBE_COLS, "custkey")
 
 
 # ---------------------------------------------------------------------------
 # dyadic count-min quantiles: the MERGEABLE quantile sketch (VERDICT r9 #3)
 # ---------------------------------------------------------------------------
 
-# Leaf bucket = price cents div 256 ($2.56 resolution — plenty for a
-# rank sketch: the mean leaf holds ~15 rows at sf0.1, so leaf choice
-# bounds rank granularity at ~2e-5); the lineitem price domain
-# [90068, 10499991] cents spans < 2^16 leaves, clamped so out-of-range
-# values land in the edge buckets instead of vanishing from every
-# descent decision.
-_DQ_LEAF_W = 256
-_DQ_LEVELS = 16
-_DQ_LEAF_MAX = (1 << _DQ_LEVELS) - 1
-_DQ_QS = (25, 50, 75, 90)
-
-_DQ_CENTS = "CAST(round(l_extendedprice * 100) AS BIGINT)"
+# the grid, its fold and its descent: operators/sketch (dq_grid,
+# dq_fold_expr, dq_descend; leaf DQ_LEAF_W cents, DQ_LEVELS levels)
 
 
-def _dq_node_hash_spark(lvl_expr: str, node_expr: str) -> str:
-    return hash60_spark_sql(
-        f"concat({lvl_expr}, ':', CAST({node_expr} AS STRING))"
-    )
-
-
-def _dq_node_hash_duck(lvl_expr: str, node_expr: str) -> str:
-    return hash60_duckdb_sql(
-        f"{lvl_expr} || ':' || CAST({node_expr} AS VARCHAR)"
-    )
-
-
-def _dq_grid(
-    li: DataFrame,
-    extra_keys: list[str] | None = None,
-    cents_expr: str | None = None,
-    leaf_w: int | None = None,
-) -> DataFrame:
-    """(lvl, r, c) -> cnt counter grid over the dyadic decomposition of
-    the price-cents domain: each leaf count feeds its ancestor node at
-    every level (node = leaf >> lvl), and each (lvl, node) aggregate is
-    hashed ONCE (md5 runs on the ~2 x distinct-leaf node set, never per
-    input row) then spread across the d prime-width rows. State is
-    bounded by d x w per level x L levels (~221k cells) no matter the
-    input size. ``extra_keys`` threads grouping columns (e.g. the
-    rollup month) through every aggregate."""
-    ek = extra_keys or []
-    cents_expr = _DQ_CENTS if cents_expr is None else cents_expr
-    leaf_w = _DQ_LEAF_W if leaf_w is None else leaf_w
-    leafs = li.groupBy(
-        *ek,
-        F.expr(
-            f"least({cents_expr} div {leaf_w}, {_DQ_LEAF_MAX})"
-        ).alias("leaf"),
-    ).agg(F.count("*").alias("cnt"))
-    nodes = (
-        leafs.select(
-            *ek,
-            "cnt",
-            F.expr(
-                f"explode(transform(sequence(0, {_DQ_LEVELS - 1}),"
-                " l -> struct(l AS lvl, shiftright(leaf, l) AS node)))"
-            ).alias("ln"),
+def _dq_levels_duck(grouped: bool = False) -> str:
+    """The DuckDB replay of the descent: per level l, CTE p<l> probes the
+    left child of each s<l+1> node, e<l> reads its d grid cells (an
+    absent row reads 0) and s<l> steps left or right. ``grouped``
+    threads the group column grp through every CTE and grid join."""
+    g = "grp, " if grouped else ""
+    pg = "p.grp, " if grouped else ""
+    on = "\n    ON g.grp = p.grp AND" if grouped else " ON"
+    levels = []
+    for lvl in range(DQ_LEVELS - 1, -1, -1):
+        hq = dq_node_hash_duck(f"'{lvl}'", "ln")
+        cprojs = ", ".join(
+            f"{hq} % {p} AS c{i}" for i, p in enumerate(CM_PRIMES)
         )
-        .select(*ek, "cnt", "ln.lvl", "ln.node")
-        .groupBy(*ek, "lvl", "node")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    h = _dq_node_hash_spark("CAST(lvl AS STRING)", "node")
-    cell_structs = ", ".join(
-        f"struct({i} AS r, h % {p} AS c)" for i, p in enumerate(_CM_PRIMES)
-    )
-    return (
-        nodes.selectExpr(*ek, "lvl", "cnt", f"{h} AS h")
-        .selectExpr(
-            *ek, "lvl", "cnt", f"explode(array({cell_structs})) AS rc"
+        legs = " OR ".join(
+            f"(g.r = {i} AND g.c = p.c{i})" for i in range(CM_D)
         )
-        .select(*ek, "lvl", "rc.r", "rc.c", "cnt")
-        .groupBy(*ek, "lvl", "r", "c")
-        .agg(F.expr("CAST(sum(cnt) AS BIGINT) AS cnt"))
-    )
-
-
-def _dq_fold_expr(leaf_w: int | None = None) -> str:
-    """The whole 16-level descent as ONE SQL expression: an
-    ``aggregate`` fold over the descending level sequence, reading CM
-    cells from the broadcast map column ``gm`` and the rank target
-    from ``target`` — shared by the global, rollup, streaming, and
-    per-group quantile keys."""
-    h = _dq_node_hash_spark("CAST(l AS STRING)", "acc.node * 2")
-    cell_lookups = ", ".join(
-        f"coalesce(element_at(gm, (l * 3 + {i}) * 8192"
-        f" + {h} % {p}), CAST(0 AS BIGINT))"
-        for i, p in enumerate(_CM_PRIMES)
-    )
-    step = (
-        f"(acc, l) -> CASE WHEN acc.cum + least({cell_lookups}) >= target"
-        " THEN struct(acc.node * 2 AS node, acc.cum AS cum)"
-        f" ELSE struct(acc.node * 2 + 1 AS node,"
-        f" acc.cum + least({cell_lookups}) AS cum) END"
-    )
-    leaf_w = _DQ_LEAF_W if leaf_w is None else leaf_w
-    return (
-        f"aggregate(sequence({_DQ_LEVELS - 1}, 0, -1),"
-        " struct(CAST(0 AS BIGINT) AS node, CAST(0 AS BIGINT) AS cum),"
-        f" {step}).node * {leaf_w} + {leaf_w - 1} AS est_cents"
-    )
-
-
-def _dq_descend(
-    li: DataFrame, grid: DataFrame, cents_expr: str | None = None
-) -> DataFrame:
-    """Greedy root-to-leaf quantile descent over the grid: at each
-    level the left child's CM point estimate (min over the d row
-    counters; an absent cell is 0) decides left/right, carrying the
-    estimated rank below the current interval. The grid is BOUNDED
-    (<= 18 x 12,283 cells, ~90k occupied at sf0.1) so it collapses to
-    one broadcast map row and the whole 16-level descent runs as a
-    single ``aggregate`` fold expression over the 4 target rows — ONE
-    job, not 16 chained broadcast joins (measured 5.6 s -> the join-
-    per-level formulation's scheduling overhead dominated). Integer
-    arithmetic end to end, so the chosen leaf is bitwise equal to the
-    oracle's chained-CTE replay. Emits the admission record plus the
-    TRUE rank of the returned value measured against the full table
-    (the gate's verifier, one conditional aggregate)."""
-    # cell key (lvl, r, c) flattened to one BIGINT: c < 8192 = 2^13
-    gm = grid.agg(
-        F.expr(
-            "map_from_entries(collect_list(struct("
-            "(lvl * 3 + r) * 8192 + c AS k, cnt AS v))) AS gm"
-        )
-    )
-    targets = li.agg(F.count("*").alias("n")).selectExpr(
-        "n",
-        "explode(array("
-        + ", ".join(
-            f"struct({q} AS qpct, (n * {q} + 99) div 100 AS target)"
-            for q in _DQ_QS
-        )
-        + ")) AS qt",
-    ).select("n", "qt.qpct", "qt.target")
-    res = targets.crossJoin(F.broadcast(gm)).selectExpr(
-        "qpct", "n", _dq_fold_expr()
-    )
-    cents = _DQ_CENTS if cents_expr is None else cents_expr
-    chk = (
-        li.crossJoin(F.broadcast(res))
-        .groupBy("qpct")
-        .agg(
-            F.expr("min(n) AS n"),
-            F.expr("min(est_cents) AS est_cents"),
-            F.expr(
-                f"sum(CASE WHEN {cents} <= est_cents THEN 1 ELSE 0 END)"
-                " AS le"
-            ),
-        )
-    )
-    return chk.selectExpr(
-        "qpct",
-        "CAST(n AS BIGINT) AS n",
-        "CAST(est_cents AS DOUBLE) / 100.0 AS est_value",
-        "round(CAST(le AS DOUBLE) / CAST(n AS DOUBLE), 4) AS rank_frac",
-        "round(abs(CAST(le AS DOUBLE) / CAST(n AS DOUBLE)"
-        " - CAST(qpct AS DOUBLE) / 100.0), 4) AS rank_err",
-    )
+        levels.append(f"""
+p{lvl} AS (
+  SELECT {g}qpct, target, n, cum, node * 2 AS ln, {cprojs}
+  FROM s{lvl + 1}
+),
+e{lvl} AS (
+  SELECT {pg}p.qpct, p.target, p.n, p.cum, p.ln,
+         CASE WHEN count(g.cnt) < {CM_D} THEN CAST(0 AS BIGINT)
+              ELSE min(g.cnt) END AS est
+  FROM p{lvl} p LEFT JOIN grid g{on} g.lvl = {lvl} AND ({legs})
+  GROUP BY {pg}p.qpct, p.target, p.n, p.cum, p.ln
+),
+s{lvl} AS (
+  SELECT {g}qpct, target, n,
+         CASE WHEN cum + est >= target THEN ln ELSE ln + 1 END AS node,
+         CASE WHEN cum + est >= target THEN cum ELSE cum + est END AS cum
+  FROM e{lvl}
+)""")
+    return ",".join(levels)
 
 
 def _dq_sql(monthly: bool = False) -> str:
@@ -1022,7 +799,7 @@ def _dq_sql(monthly: bool = False) -> str:
     integer pipeline (leaf counts -> dyadic ancestors -> prime-row
     cells -> 16-level descent), with the rollup building per-month
     grids first and merging by cell-wise addition."""
-    h_build = _dq_node_hash_duck("CAST(lvl AS VARCHAR)", "node")
+    h_build = dq_node_hash_duck("CAST(lvl AS VARCHAR)", "node")
     mon_sel = (
         "date_trunc('month', CAST(l_shipdate AS DATE)) AS mon, "
         if monthly
@@ -1031,11 +808,11 @@ def _dq_sql(monthly: bool = False) -> str:
     mon_key = "mon, " if monthly else ""
     cells = " UNION ALL ".join(
         f"SELECT {mon_key}lvl, {i} AS r, {h_build} % {p} AS c, cnt FROM nodes"
-        for i, p in enumerate(_CM_PRIMES)
+        for i, p in enumerate(CM_PRIMES)
     )
     grid_cte = f"""
 cents AS (
-  SELECT {mon_sel}least({_DQ_CENTS} // {_DQ_LEAF_W}, {_DQ_LEAF_MAX}) AS leaf
+  SELECT {mon_sel}least({DQ_CENTS} // {DQ_LEAF_W}, {DQ_LEAF_MAX}) AS leaf
   FROM lineitem
 ),
 leafs AS (SELECT {mon_key}leaf, count(*) AS cnt FROM cents
@@ -1043,57 +820,30 @@ leafs AS (SELECT {mon_key}leaf, count(*) AS cnt FROM cents
 nodes AS (
   SELECT {mon_key}u.lvl AS lvl, u.node AS node, sum(cnt) AS cnt FROM (
     SELECT {mon_key}cnt,
-           unnest(list_transform(generate_series(0, {_DQ_LEVELS - 1}),
+           unnest(list_transform(generate_series(0, {DQ_LEVELS - 1}),
                   l -> struct_pack(lvl := l, node := leaf >> l))) AS s
     FROM leafs
   ) t, LATERAL (SELECT s.lvl AS lvl, s.node AS node) u
   GROUP BY {mon_key}u.lvl, u.node
 ),
 {"monthly_grid AS MATERIALIZED (SELECT mon, lvl, r, c, CAST(sum(cnt) AS BIGINT) AS cnt FROM (" + cells + ") GROUP BY mon, lvl, r, c), grid AS MATERIALIZED (SELECT lvl, r, c, CAST(sum(cnt) AS BIGINT) AS cnt FROM monthly_grid GROUP BY lvl, r, c)" if monthly else "grid AS MATERIALIZED (SELECT lvl, r, c, CAST(sum(cnt) AS BIGINT) AS cnt FROM (" + cells + ") GROUP BY lvl, r, c)"}"""
-    qs_vals = ", ".join(f"({q})" for q in _DQ_QS)
-    levels = []
-    for lvl in range(_DQ_LEVELS - 1, -1, -1):
-        hq = _dq_node_hash_duck(f"'{lvl}'", "ln")
-        cprojs = ", ".join(
-            f"{hq} % {p} AS c{i}" for i, p in enumerate(_CM_PRIMES)
-        )
-        legs = " OR ".join(
-            f"(g.r = {i} AND g.c = p.c{i})" for i in range(_CM_D)
-        )
-        levels.append(f"""
-p{lvl} AS (
-  SELECT qpct, target, n, cum, node * 2 AS ln, {cprojs}
-  FROM s{lvl + 1}
-),
-e{lvl} AS (
-  SELECT p.qpct, p.target, p.n, p.cum, p.ln,
-         CASE WHEN count(g.cnt) < {_CM_D} THEN CAST(0 AS BIGINT)
-              ELSE min(g.cnt) END AS est
-  FROM p{lvl} p LEFT JOIN grid g ON g.lvl = {lvl} AND ({legs})
-  GROUP BY p.qpct, p.target, p.n, p.cum, p.ln
-),
-s{lvl} AS (
-  SELECT qpct, target, n,
-         CASE WHEN cum + est >= target THEN ln ELSE ln + 1 END AS node,
-         CASE WHEN cum + est >= target THEN cum ELSE cum + est END AS cum
-  FROM e{lvl}
-)""")
+    qs_vals = ", ".join(f"({q})" for q in DQ_QS)
     return f"""
 WITH {grid_cte},
 tot AS (SELECT count(*) AS n FROM lineitem),
-s{_DQ_LEVELS} AS (
+s{DQ_LEVELS} AS (
   SELECT qpct, (n * qpct + 99) // 100 AS target, n,
          CAST(0 AS BIGINT) AS node, CAST(0 AS BIGINT) AS cum
   FROM tot, (VALUES {qs_vals}) qs(qpct)
-),{",".join(levels)},
+),{_dq_levels_duck()},
 res AS (
   SELECT qpct, n,
-         node * {_DQ_LEAF_W} + {_DQ_LEAF_W - 1} AS est_cents
+         node * {DQ_LEAF_W} + {DQ_LEAF_W - 1} AS est_cents
   FROM s0
 ),
 chk AS (
   SELECT r.qpct, min(r.n) AS n, min(r.est_cents) AS est_cents,
-         sum(CASE WHEN {_DQ_CENTS} <= r.est_cents THEN 1 ELSE 0 END) AS le
+         sum(CASE WHEN {DQ_CENTS} <= r.est_cents THEN 1 ELSE 0 END) AS le
   FROM lineitem CROSS JOIN res r
   GROUP BY r.qpct
 )
@@ -1140,12 +890,12 @@ def sketch_quantile_dyadic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # values, bitwise-identical descent (guide §1.2/§2.3: project before
     # everything, never re-derive what three consumers share).
     cents = pin(
-        li.selectExpr(f"{_DQ_CENTS} AS cents"),
+        li.selectExpr(f"{DQ_CENTS} AS cents"),
         eager=False,
         label="dq_cents",
     )
-    return _dq_descend(
-        cents, _dq_grid(cents, cents_expr="cents"), cents_expr="cents"
+    return dq_descend(
+        cents, dq_grid(cents, cents_expr="cents"), cents_expr="cents"
     )
 
 
@@ -1161,7 +911,7 @@ def sketch_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     every member of the family (NDV, theta set-ops, frequencies, and
     now quantiles) has a bounded-state merge-exact form."""
     li = load(spark, sf_dir, "lineitem")
-    monthly = _dq_grid(
+    monthly = dq_grid(
         li.withColumn(
             "mon", F.date_trunc("month", F.expr("CAST(l_shipdate AS DATE)"))
         ),
@@ -1170,7 +920,7 @@ def sketch_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = monthly.groupBy("lvl", "r", "c").agg(
         F.expr("CAST(sum(cnt) AS BIGINT) AS cnt")
     )
-    return _dq_descend(li, grid)
+    return dq_descend(li, grid)
 
 
 # ---------------------------------------------------------------------------
@@ -1189,20 +939,8 @@ _JC_YEAR_B = 1997
 _JC_PRIMES = (65521, 65519, 65497)
 
 
-def _jc_cols_duck(expr: str) -> list[str]:
-    return [
-        f"{hash60_duckdb_sql(expr)} % {_JC_PRIMES[i]}" for i in range(_CM_D)
-    ]
-
-
-def _jc_cols_spark(expr: str) -> list[str]:
-    return [
-        f"{hash60_spark_sql(expr)} % {_JC_PRIMES[i]}" for i in range(_CM_D)
-    ]
-
-
 def _jc_sql() -> str:
-    cols = _jc_cols_duck("CAST(o_custkey AS VARCHAR)")
+    cols = cm_cols(hash60_duckdb_sql, "CAST(o_custkey AS VARCHAR)", _JC_PRIMES)
     def grid(name: str, year: int) -> str:
         cells = " UNION ALL ".join(
             f"SELECT {i} AS r, {c} AS c FROM orders"
@@ -1263,19 +1001,11 @@ def sketch_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     on o_custkey (genuinely many-to-many); the exact join size emitted
     alongside is the gate's verifier."""
     o = load(spark, sf_dir, "orders")
-    cols = _jc_cols_spark("CAST(o_custkey AS STRING)")
+    cols = cm_cols(hash60_spark_sql, "CAST(o_custkey AS STRING)", _JC_PRIMES)
 
     def grid(year: int) -> DataFrame:
         yo = o.filter(F.expr(f"EXTRACT(year FROM o_orderdate) = {year}"))
-        cells = yo.select(
-            F.explode(
-                F.array(*[
-                    F.struct(F.lit(i).alias("r"), F.expr(c).alias("c"))
-                    for i, c in enumerate(cols)
-                ])
-            ).alias("rc")
-        ).select("rc.r", "rc.c")
-        return cells.groupBy("r", "c").agg(F.count("*").alias("cnt"))
+        return cm_grid(yo, cols)
 
     ip = (
         grid(_JC_YEAR_A).alias("ga")
@@ -1286,7 +1016,7 @@ def sketch_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
         # floor the min (count < d detects it)
         .agg(
             F.expr(
-                f"CASE WHEN count(*) < {_CM_D} THEN CAST(0 AS BIGINT)"
+                f"CASE WHEN count(*) < {CM_D} THEN CAST(0 AS BIGINT)"
                 " ELSE min(dot) END AS n_est"
             )
         )
@@ -1329,11 +1059,11 @@ def _dyadic_cover(lo: int, hi: int) -> list[tuple[int, int]]:
     while lo <= hi:
         lvl = 0
         # grow the block while aligned and contained; capped at the
-        # grid's top STORED level (_DQ_LEVELS - 1): the full-domain
+        # grid's top STORED level (DQ_LEVELS - 1): the full-domain
         # range would otherwise emit a level-16 root node the grid
         # never materializes, and its lookup would silently read 0
         while (
-            lvl + 1 <= _DQ_LEVELS - 1
+            lvl + 1 <= DQ_LEVELS - 1
             and lo % (1 << (lvl + 1)) == 0
             and lo + (1 << (lvl + 1)) - 1 <= hi
         ):
@@ -1349,7 +1079,7 @@ def _dyadic_cover(lo: int, hi: int) -> list[tuple[int, int]]:
 _RC_RANGES = [
     (1, 1000_00, 5000_00),
     (2, 10000_00, 50000_00),
-    (3, 90000_00, (_DQ_LEAF_MAX + 1) * _DQ_LEAF_W - 1),
+    (3, 90000_00, (DQ_LEAF_MAX + 1) * DQ_LEAF_W - 1),
 ]
 
 
@@ -1359,17 +1089,17 @@ def _rc_nodes() -> list[tuple[int, int, int]]:
         # leaf-aligned interval: the sketch answers at leaf
         # granularity, so ranges are defined as [lo_leaf, hi_leaf]
         for lvl, node in _dyadic_cover(
-            lo_c // _DQ_LEAF_W, hi_c // _DQ_LEAF_W
+            lo_c // DQ_LEAF_W, hi_c // DQ_LEAF_W
         ):
             nodes.append((rid, lvl, node))
     return nodes
 
 
 def _rc_sql() -> str:
-    h = _dq_node_hash_duck("CAST(lvl AS VARCHAR)", "node")
+    h = dq_node_hash_duck("CAST(lvl AS VARCHAR)", "node")
     cells = " UNION ALL ".join(
         f"SELECT lvl, {i} AS r, {h} % {p} AS c, cnt FROM nodes"
-        for i, p in enumerate(_CM_PRIMES)
+        for i, p in enumerate(CM_PRIMES)
     )
     probe_rows = ", ".join(
         f"({rid}, {lvl}, {node})" for rid, lvl, node in _rc_nodes()
@@ -1377,22 +1107,22 @@ def _rc_sql() -> str:
     ranges = ", ".join(
         f"({rid}, {lo}, {hi})" for rid, lo, hi in _RC_RANGES
     )
-    hp = _dq_node_hash_duck("CAST(lvl AS VARCHAR)", "node")
+    hp = dq_node_hash_duck("CAST(lvl AS VARCHAR)", "node")
     probe_cells = " UNION ALL ".join(
         f"SELECT rid, lvl, node, {i} AS r, {hp} % {p} AS c FROM probes"
-        for i, p in enumerate(_CM_PRIMES)
+        for i, p in enumerate(CM_PRIMES)
     )
     return f"""
 WITH cents AS (
-  SELECT least({_DQ_CENTS} // {_DQ_LEAF_W}, {_DQ_LEAF_MAX}) AS leaf,
-         {_DQ_CENTS} AS c_exact
+  SELECT least({DQ_CENTS} // {DQ_LEAF_W}, {DQ_LEAF_MAX}) AS leaf,
+         {DQ_CENTS} AS c_exact
   FROM lineitem
 ),
 leafs AS (SELECT leaf, count(*) AS cnt FROM cents GROUP BY leaf),
 nodes AS (
   SELECT u.lvl AS lvl, u.node AS node, sum(cnt) AS cnt FROM (
     SELECT cnt,
-           unnest(list_transform(generate_series(0, {_DQ_LEVELS - 1}),
+           unnest(list_transform(generate_series(0, {DQ_LEVELS - 1}),
                   l -> struct_pack(lvl := l, node := leaf >> l))) AS s
     FROM leafs
   ) t, LATERAL (SELECT s.lvl AS lvl, s.node AS node) u
@@ -1406,7 +1136,7 @@ probes AS (SELECT * FROM (VALUES {probe_rows}) p(rid, lvl, node)),
 pc AS ({probe_cells}),
 node_est AS (
   SELECT pc.rid, pc.lvl, pc.node,
-         CASE WHEN count(g.cnt) < {_CM_D} THEN CAST(0 AS BIGINT)
+         CASE WHEN count(g.cnt) < {CM_D} THEN CAST(0 AS BIGINT)
               ELSE min(g.cnt) END AS est
   FROM pc LEFT JOIN grid g
     ON g.lvl = pc.lvl AND g.r = pc.r AND g.c = pc.c
@@ -1418,8 +1148,8 @@ rng AS (SELECT * FROM (VALUES {ranges}) r(rid, lo_c, hi_c)),
 ex AS (
   SELECT rid, CAST(count(*) AS BIGINT) AS n_exact
   FROM rng JOIN cents
-    ON cents.leaf >= lo_c // {_DQ_LEAF_W}
-   AND cents.leaf <= hi_c // {_DQ_LEAF_W}
+    ON cents.leaf >= lo_c // {DQ_LEAF_W}
+   AND cents.leaf <= hi_c // {DQ_LEAF_W}
   GROUP BY rid
 )
 SELECT rng.rid AS range_id, rng.lo_c, rng.hi_c,
@@ -1444,23 +1174,14 @@ def sketch_range_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     granularity, so estimate and verifier state the same predicate)
     are the gate's verifier."""
     li = load(spark, sf_dir, "lineitem")
-    grid = _dq_grid(li)
-    gm = grid.agg(
-        F.expr(
-            "map_from_entries(collect_list(struct("
-            "(lvl * 3 + r) * 8192 + c AS k, cnt AS v))) AS gm"
-        )
-    )
+    gm = grid_map(dq_grid(li))
     probe_rows = ", ".join(
         f"struct({rid} AS rid, {lvl} AS lvl, CAST({node} AS BIGINT)"
         " AS node)"
         for rid, lvl, node in _rc_nodes()
     )
-    h = _dq_node_hash_spark("CAST(lvl AS STRING)", "node")
-    lookups = ", ".join(
-        f"coalesce(element_at(gm, (lvl * 3 + {i}) * 8192"
-        f" + {h} % {p}), CAST(0 AS BIGINT))"
-        for i, p in enumerate(_CM_PRIMES)
+    lookups = grid_lookups(
+        "lvl", dq_node_hash_spark("CAST(lvl AS STRING)", "node")
     )
     est = (
         spark.range(1)
@@ -1480,14 +1201,14 @@ def sketch_range_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"explode(array({ranges})) AS r"
     ).select("r.rid", "r.lo_c", "r.hi_c")
     leafs = li.selectExpr(
-        f"least({_DQ_CENTS} div {_DQ_LEAF_W}, {_DQ_LEAF_MAX}) AS leaf"
+        f"least({DQ_CENTS} div {DQ_LEAF_W}, {DQ_LEAF_MAX}) AS leaf"
     )
     ex = (
         leafs.crossJoin(F.broadcast(rng))
         .filter(
             F.expr(
-                f"leaf >= lo_c div {_DQ_LEAF_W}"
-                f" AND leaf <= hi_c div {_DQ_LEAF_W}"
+                f"leaf >= lo_c div {DQ_LEAF_W}"
+                f" AND leaf <= hi_c div {DQ_LEAF_W}"
             )
         )
         .groupBy("rid")
@@ -1511,52 +1232,24 @@ def sketch_range_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _dq_group_sql() -> str:
-    h_build = _dq_node_hash_duck("CAST(lvl AS VARCHAR)", "node")
+    h_build = dq_node_hash_duck("CAST(lvl AS VARCHAR)", "node")
     cells = " UNION ALL ".join(
         f"SELECT grp, lvl, {i} AS r, {h_build} % {p} AS c, cnt FROM nodes"
-        for i, p in enumerate(_CM_PRIMES)
+        for i, p in enumerate(CM_PRIMES)
     )
-    qs_vals = ", ".join(f"({q})" for q in _DQ_QS)
-    levels = []
-    for lvl in range(_DQ_LEVELS - 1, -1, -1):
-        hq = _dq_node_hash_duck(f"'{lvl}'", "ln")
-        cprojs = ", ".join(
-            f"{hq} % {p} AS c{i}" for i, p in enumerate(_CM_PRIMES)
-        )
-        legs = " OR ".join(
-            f"(g.r = {i} AND g.c = p.c{i})" for i in range(_CM_D)
-        )
-        levels.append(f"""
-p{lvl} AS (
-  SELECT grp, qpct, target, n, cum, node * 2 AS ln, {cprojs}
-  FROM s{lvl + 1}
-),
-e{lvl} AS (
-  SELECT p.grp, p.qpct, p.target, p.n, p.cum, p.ln,
-         CASE WHEN count(g.cnt) < {_CM_D} THEN CAST(0 AS BIGINT)
-              ELSE min(g.cnt) END AS est
-  FROM p{lvl} p LEFT JOIN grid g
-    ON g.grp = p.grp AND g.lvl = {lvl} AND ({legs})
-  GROUP BY p.grp, p.qpct, p.target, p.n, p.cum, p.ln
-),
-s{lvl} AS (
-  SELECT grp, qpct, target, n,
-         CASE WHEN cum + est >= target THEN ln ELSE ln + 1 END AS node,
-         CASE WHEN cum + est >= target THEN cum ELSE cum + est END AS cum
-  FROM e{lvl}
-)""")
+    qs_vals = ", ".join(f"({q})" for q in DQ_QS)
     return f"""
 WITH cents AS (
   SELECT l_returnflag AS grp,
-         least({_DQ_CENTS} // {_DQ_LEAF_W}, {_DQ_LEAF_MAX}) AS leaf,
-         {_DQ_CENTS} AS c_exact
+         least({DQ_CENTS} // {DQ_LEAF_W}, {DQ_LEAF_MAX}) AS leaf,
+         {DQ_CENTS} AS c_exact
   FROM lineitem
 ),
 leafs AS (SELECT grp, leaf, count(*) AS cnt FROM cents GROUP BY grp, leaf),
 nodes AS (
   SELECT grp, u.lvl AS lvl, u.node AS node, sum(cnt) AS cnt FROM (
     SELECT grp, cnt,
-           unnest(list_transform(generate_series(0, {_DQ_LEVELS - 1}),
+           unnest(list_transform(generate_series(0, {DQ_LEVELS - 1}),
                   l -> struct_pack(lvl := l, node := leaf >> l))) AS s
     FROM leafs
   ) t, LATERAL (SELECT s.lvl AS lvl, s.node AS node) u
@@ -1567,14 +1260,14 @@ grid AS MATERIALIZED (
   FROM ({cells}) GROUP BY grp, lvl, r, c
 ),
 tot AS (SELECT grp, count(*) AS n FROM cents GROUP BY grp),
-s{_DQ_LEVELS} AS (
+s{DQ_LEVELS} AS (
   SELECT grp, qpct, (n * qpct + 99) // 100 AS target, n,
          CAST(0 AS BIGINT) AS node, CAST(0 AS BIGINT) AS cum
   FROM tot, (VALUES {qs_vals}) qs(qpct)
-),{",".join(levels)},
+),{_dq_levels_duck(grouped=True)},
 res AS (
   SELECT grp, qpct, n,
-         node * {_DQ_LEAF_W} + {_DQ_LEAF_W - 1} AS est_cents
+         node * {DQ_LEAF_W} + {DQ_LEAF_W - 1} AS est_cents
   FROM s0
 ),
 chk AS (
@@ -1608,52 +1301,11 @@ def sketch_quantile_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     lig = li.select(
         F.col("l_returnflag").alias("grp"), "l_extendedprice"
     )
-    grid = _dq_grid(lig, extra_keys=["grp"])
-    gms = grid.groupBy("grp").agg(
-        F.expr(
-            "map_from_entries(collect_list(struct("
-            "(lvl * 3 + r) * 8192 + c AS k, cnt AS v))) AS gm"
-        )
-    )
-    targets = (
-        lig.groupBy("grp")
-        .agg(F.count("*").alias("n"))
-        .selectExpr(
-            "grp",
-            "n",
-            "explode(array("
-            + ", ".join(
-                f"struct({q} AS qpct, (n * {q} + 99) div 100 AS target)"
-                for q in _DQ_QS
-            )
-            + ")) AS qt",
-        )
-        .select("grp", "n", "qt.qpct", "qt.target")
-    )
-    res = targets.join(F.broadcast(gms), "grp").selectExpr(
-        "grp", "qpct", "n", _dq_fold_expr()
-    )
-    chk = (
-        lig.selectExpr("grp", f"{_DQ_CENTS} AS c_exact")
-        .join(F.broadcast(res), "grp")
-        .groupBy("grp", "qpct")
-        .agg(
-            F.expr("min(n) AS n"),
-            F.expr("min(est_cents) AS est_cents"),
-            F.expr(
-                "sum(CASE WHEN c_exact <= est_cents THEN 1 ELSE 0 END)"
-                " AS le"
-            ),
-        )
-    )
-    return chk.selectExpr(
-        "grp AS l_returnflag",
-        "qpct",
-        "CAST(n AS BIGINT) AS n",
-        "CAST(est_cents AS DOUBLE) / 100.0 AS est_value",
-        "round(CAST(le AS DOUBLE) / CAST(n AS DOUBLE), 4) AS rank_frac",
-        "round(abs(CAST(le AS DOUBLE) / CAST(n AS DOUBLE)"
-        " - CAST(qpct AS DOUBLE) / 100.0), 4) AS rank_err",
+    return dq_descend(
+        lig.selectExpr("grp", f"{DQ_CENTS} AS c_exact"),
+        dq_grid(lig, extra_keys=["grp"]),
+        cents_expr="c_exact",
+        group=("grp", "l_returnflag"),
     )
 
 
@@ -1665,15 +1317,18 @@ _WCM_DAYS = 7       # trailing window: the 7 calendar days ending at max
 _WCM_PROBE_MOD = 3  # probe every 3rd user
 
 
+def _in_window(df: DataFrame, w: DataFrame) -> DataFrame:
+    """The rows of ``df`` whose day ``d`` lies in the trailing window
+    ending at the one-row ``w``'s last day ``wd``."""
+    return df.crossJoin(F.broadcast(w)).filter(
+        F.expr(f"d >= date_sub(wd, {_WCM_DAYS - 1}) AND d <= wd")
+    )
+
+
 def _wcm_sql() -> str:
-    cols = _cm_cols_duck("CAST(user_id AS VARCHAR)")
+    cols = cm_cols(hash60_duckdb_sql, "CAST(user_id AS VARCHAR)")
     cells = " UNION ALL ".join(
         f"SELECT d, {i} AS r, {c} AS c FROM ev" for i, c in enumerate(cols)
-    )
-    probe_cols = _cm_cols_duck("CAST(k AS VARCHAR)")
-    probes = " UNION ALL ".join(
-        f"SELECT k, n_exact, {i} AS r, {c} AS c FROM ex"
-        for i, c in enumerate(probe_cols)
     )
     return f"""
 WITH ev AS (
@@ -1695,7 +1350,7 @@ ex AS (
     AND d >= wd - {_WCM_DAYS - 1} AND d <= wd
   GROUP BY user_id
 ),
-pr AS ({probes})
+pr AS ({_CM_PROBES_DUCK})
 SELECT k AS user_id, CAST(min(n_exact) AS BIGINT) AS n_exact,
        CAST(min(cnt) AS BIGINT) AS n_est
 FROM pr JOIN merged USING (r, c)
@@ -1720,25 +1375,12 @@ def sketch_countmin_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
         F.expr("CAST(date_trunc('day', ts) AS DATE)").alias("d"), "user_id"
     )
-    cols = _cm_cols_spark("CAST(user_id AS STRING)")
-    daily = (
-        e.select(
-            "d",
-            F.explode(
-                F.array(*[
-                    F.struct(F.lit(i).alias("r"), F.expr(c).alias("c"))
-                    for i, c in enumerate(cols)
-                ])
-            ).alias("rc"),
-        )
-        .select("d", "rc.r", "rc.c")
-        .groupBy("d", "r", "c")
-        .agg(F.count("*").alias("cnt"))
+    daily = cm_grid(
+        e, cm_cols(hash60_spark_sql, "CAST(user_id AS STRING)"), "d"
     )
     w = e.agg(F.max("d").alias("wd"))
     merged = (
-        daily.crossJoin(F.broadcast(w))
-        .filter(F.expr(f"d >= date_sub(wd, {_WCM_DAYS - 1}) AND d <= wd"))
+        _in_window(daily, w)
         .groupBy("r", "c")
         .agg(F.expr("CAST(sum(cnt) AS BIGINT) AS cnt"))
     )
@@ -1753,25 +1395,7 @@ def sketch_countmin_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("user_id").alias("k"))
         .agg(F.count("*").alias("n_exact"))
     )
-    probe_cols = _cm_cols_spark("CAST(k AS STRING)")
-    pr = ex.select(
-        "k",
-        "n_exact",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(i).alias("r"), F.expr(c).alias("c"))
-                for i, c in enumerate(probe_cols)
-            ])
-        ).alias("rc"),
-    ).select("k", "n_exact", "rc.r", "rc.c")
-    return (
-        pr.join(F.broadcast(merged), ["r", "c"])
-        .groupBy(F.col("k").alias("user_id"))
-        .agg(
-            F.expr("CAST(min(n_exact) AS BIGINT) AS n_exact"),
-            F.expr("CAST(min(cnt) AS BIGINT) AS n_est"),
-        )
-    )
+    return cm_probe(ex, merged, _CM_PROBE_COLS, "user_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1784,50 +1408,23 @@ _WQ_QS = (50, 90, 99)
 
 
 def _wq_sql() -> str:
-    h_build = _dq_node_hash_duck("CAST(lvl AS VARCHAR)", "node")
+    h_build = dq_node_hash_duck("CAST(lvl AS VARCHAR)", "node")
     cells = " UNION ALL ".join(
         f"SELECT d, lvl, {i} AS r, {h_build} % {p} AS c, cnt FROM nodes"
-        for i, p in enumerate(_CM_PRIMES)
+        for i, p in enumerate(CM_PRIMES)
     )
     qs_vals = ", ".join(f"({q})" for q in _WQ_QS)
-    levels = []
-    for lvl in range(_DQ_LEVELS - 1, -1, -1):
-        hq = _dq_node_hash_duck(f"'{lvl}'", "ln")
-        cprojs = ", ".join(
-            f"{hq} % {p} AS c{i}" for i, p in enumerate(_CM_PRIMES)
-        )
-        legs = " OR ".join(
-            f"(g.r = {i} AND g.c = p.c{i})" for i in range(_CM_D)
-        )
-        levels.append(f"""
-p{lvl} AS (
-  SELECT qpct, target, n, cum, node * 2 AS ln, {cprojs}
-  FROM s{lvl + 1}
-),
-e{lvl} AS (
-  SELECT p.qpct, p.target, p.n, p.cum, p.ln,
-         CASE WHEN count(g.cnt) < {_CM_D} THEN CAST(0 AS BIGINT)
-              ELSE min(g.cnt) END AS est
-  FROM p{lvl} p LEFT JOIN grid g ON g.lvl = {lvl} AND ({legs})
-  GROUP BY p.qpct, p.target, p.n, p.cum, p.ln
-),
-s{lvl} AS (
-  SELECT qpct, target, n,
-         CASE WHEN cum + est >= target THEN ln ELSE ln + 1 END AS node,
-         CASE WHEN cum + est >= target THEN cum ELSE cum + est END AS cum
-  FROM e{lvl}
-)""")
     return f"""
 WITH ev AS (
   SELECT CAST(date_trunc('day', ts) AS DATE) AS d,
-         least({_WQ_CENTS} // {_WQ_LEAF_W}, {_DQ_LEAF_MAX}) AS leaf
+         least({_WQ_CENTS} // {_WQ_LEAF_W}, {DQ_LEAF_MAX}) AS leaf
   FROM events
 ),
 leafs AS (SELECT d, leaf, count(*) AS cnt FROM ev GROUP BY d, leaf),
 nodes AS (
   SELECT d, u.lvl AS lvl, u.node AS node, sum(cnt) AS cnt FROM (
     SELECT d, cnt,
-           unnest(list_transform(generate_series(0, {_DQ_LEVELS - 1}),
+           unnest(list_transform(generate_series(0, {DQ_LEVELS - 1}),
                   l -> struct_pack(lvl := l, node := leaf >> l))) AS s
     FROM leafs
   ) t, LATERAL (SELECT s.lvl AS lvl, s.node AS node) u
@@ -1846,11 +1443,11 @@ grid AS MATERIALIZED (
 wev AS (SELECT ev.leaf FROM ev, w
         WHERE d >= wd - {_WCM_DAYS - 1} AND d <= wd),
 tot AS (SELECT count(*) AS n FROM wev),
-s{_DQ_LEVELS} AS (
+s{DQ_LEVELS} AS (
   SELECT qpct, (n * qpct + 99) // 100 AS target, n,
          CAST(0 AS BIGINT) AS node, CAST(0 AS BIGINT) AS cum
   FROM tot, (VALUES {qs_vals}) qs(qpct)
-),{",".join(levels)},
+),{_dq_levels_duck()},
 res AS (
   SELECT qpct, n,
          node * {_WQ_LEAF_W} + {_WQ_LEAF_W - 1} AS est_cents
@@ -1889,12 +1486,12 @@ def sketch_quantile_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
         F.expr("CAST(date_trunc('day', ts) AS DATE)").alias("d"),
         F.expr(
-            f"least({_WQ_CENTS} div {_WQ_LEAF_W}, {_DQ_LEAF_MAX})"
+            f"least({_WQ_CENTS} div {_WQ_LEAF_W}, {DQ_LEAF_MAX})"
         ).alias("leaf"),
     )
     # leaf is already the clamped centi-unit bucket: feed it through
     # as the "cents" expression directly (leaf_w=1), no float round trip
-    daily = _dq_grid(
+    daily = dq_grid(
         e.select("d", "leaf"),
         extra_keys=["d"],
         cents_expr="leaf",
@@ -1902,50 +1499,16 @@ def sketch_quantile_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = e.agg(F.max("d").alias("wd"))
     grid = (
-        daily.crossJoin(F.broadcast(w))
-        .filter(F.expr(f"d >= date_sub(wd, {_WCM_DAYS - 1}) AND d <= wd"))
+        _in_window(daily, w)
         .groupBy("lvl", "r", "c")
         .agg(F.expr("CAST(sum(cnt) AS BIGINT) AS cnt"))
     )
-    gm = grid.agg(
-        F.expr(
-            "map_from_entries(collect_list(struct("
-            "(lvl * 3 + r) * 8192 + c AS k, cnt AS v))) AS gm"
-        )
-    )
-    wev = e.crossJoin(F.broadcast(w)).filter(
-        F.expr(f"d >= date_sub(wd, {_WCM_DAYS - 1}) AND d <= wd")
-    ).select("leaf")
-    targets = wev.agg(F.count("*").alias("n")).selectExpr(
-        "n",
-        "explode(array("
-        + ", ".join(
-            f"struct({q} AS qpct, (n * {q} + 99) div 100 AS target)"
-            for q in _WQ_QS
-        )
-        + ")) AS qt",
-    ).select("n", "qt.qpct", "qt.target")
-    res = targets.crossJoin(F.broadcast(gm)).selectExpr(
-        "qpct", "n", _dq_fold_expr(leaf_w=_WQ_LEAF_W)
-    )
-    chk = (
-        wev.crossJoin(F.broadcast(res))
-        .groupBy("qpct")
-        .agg(
-            F.expr("min(n) AS n"),
-            F.expr("min(est_cents) AS est_cents"),
-            F.expr(
-                "sum(CASE WHEN leaf <= est_cents THEN 1 ELSE 0 END) AS le"
-            ),
-        )
-    )
-    return chk.selectExpr(
-        "qpct",
-        "CAST(n AS BIGINT) AS n",
-        "CAST(est_cents AS DOUBLE) / 100.0 AS est_value",
-        "round(CAST(le AS DOUBLE) / CAST(n AS DOUBLE), 4) AS rank_frac",
-        "round(abs(CAST(le AS DOUBLE) / CAST(n AS DOUBLE)"
-        " - CAST(qpct AS DOUBLE) / 100.0), 4) AS rank_err",
+    return dq_descend(
+        _in_window(e, w).select("leaf"),
+        grid,
+        cents_expr="leaf",
+        qs=_WQ_QS,
+        leaf_w=_WQ_LEAF_W,
     )
 
 
@@ -1953,14 +1516,8 @@ def sketch_quantile_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bloom filter rollup: the MERGEABLE membership sketch
 # ---------------------------------------------------------------------------
 
-# m = 2^17 bits stored as 32-bit words in BIGINT containers (DuckDB's
-# left shift raises on 1<<63, so the sign bit is never used); k = 4
-# hash positions per key from the shared hash60 with the hash index
-# folded into the input string.
-_BLOOM_M = 131072
-_BLOOM_K = 4
-_BLOOM_PROBE_MOD = 97
-_BLOOM_ABSENT_N = 256
+# the filter: operators/sketch (BLOOM_M bits as 32-bit words, BLOOM_K
+# positions per key)
 
 
 def _bloom_sql() -> str:
@@ -1978,8 +1535,8 @@ WITH mk AS (
   FROM orders
 ),
 pos AS (
-  SELECT mon, k, ({hx}) % {_BLOOM_M} AS p
-  FROM mk, unnest(generate_series(1, {_BLOOM_K})) AS t(j)
+  SELECT mon, k, ({hx}) % {BLOOM_M} AS p
+  FROM mk, unnest(generate_series(1, {BLOOM_K})) AS t(j)
 ),
 monthly AS (
   SELECT mon, p // 32 AS w, {mask} AS mask FROM pos GROUP BY mon, p // 32
@@ -2002,7 +1559,7 @@ stats AS (
   FROM merged
 ),
 ppos AS (
-  SELECT DISTINCT k, p FROM pos WHERE k % {_BLOOM_PROBE_MOD} = 0
+  SELECT DISTINCT k, p FROM pos WHERE k % {BLOOM_PROBE_MOD} = 0
 ),
 phit AS (
   SELECT k, {hit} AS hit
@@ -2014,11 +1571,11 @@ pstats AS (
 ),
 ab AS (
   SELECT 'a:' || CAST(i AS VARCHAR) AS k
-  FROM generate_series(1, {_BLOOM_ABSENT_N}) AS t(i)
+  FROM generate_series(1, {BLOOM_ABSENT_N}) AS t(i)
 ),
 apos AS (
-  SELECT k, ({hx}) % {_BLOOM_M} AS p
-  FROM ab, unnest(generate_series(1, {_BLOOM_K})) AS t(j)
+  SELECT k, ({hx}) % {BLOOM_M} AS p
+  FROM ab, unnest(generate_series(1, {BLOOM_K})) AS t(j)
 ),
 ahit AS (
   SELECT k, {hit} AS hit
@@ -2032,11 +1589,19 @@ SELECT s.n_words, s.bits_set,
        p.n_present, p.n_present_hits,
        a.n_absent, a.n_absent_hits,
        round(CAST(a.n_absent_hits AS DOUBLE) / a.n_absent, 6) AS fpr_measured,
-       round(power(CAST(s.bits_set AS DOUBLE) / {_BLOOM_M}, {_BLOOM_K}), 6)
+       round(power(CAST(s.bits_set AS DOUBLE) / {BLOOM_M}, {BLOOM_K}), 6)
          AS fpr_expected,
        (d.n_diff = 0) AS merged_equals_direct
 FROM stats s, pstats p, astats a, diff d
 """
+
+
+def _month_keys(o: DataFrame) -> DataFrame:
+    """(mon, k): the distinct custkeys of each order month."""
+    return o.select(
+        F.date_trunc("month", F.col("o_orderdate")).alias("mon"),
+        F.col("o_custkey").alias("k"),
+    ).distinct()
 
 
 @register("sketch_bloom_rollup", oracle=_bloom_sql())
@@ -2060,17 +1625,6 @@ def sketch_bloom_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (month x word) masks, a tiny re-aggregation to word granularity,
     and broadcast probe joins — the filter is ~16 KB however large the
     key universe, the point of membership sketching at scale."""
-    o = load(spark, sf_dir, "orders")
-    mk = o.select(
-        F.date_trunc("month", F.col("o_orderdate")).alias("mon"),
-        F.col("o_custkey").alias("k"),
-    ).distinct()
-    hx = hash60_spark_sql("concat(CAST(j AS STRING), ':', CAST(k AS STRING))")
-    mask = "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(p % 32 AS INT))) AS mask"
-    hit = (
-        "min(CASE WHEN (shiftright(COALESCE(mask, 0), CAST(p % 32 AS INT)))"
-        " & 1 = 1 THEN 1 ELSE 0 END) AS hit"
-    )
     # pinned: the monthly build, the direct build and the present-key
     # probes all read the exploded position stream. LAZY (round 14):
     # every consumer lives inside the single terminal plan, so the
@@ -2079,82 +1633,21 @@ def sketch_bloom_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sequential barriers ahead of a terminal action that AQE can
     # otherwise overlap (guide §1.2/§2.6).
     pos = pin(
-        mk.select(
-            "mon",
-            "k",
-            F.explode(F.sequence(F.lit(1), F.lit(_BLOOM_K))).alias("j"),
-        ).selectExpr("mon", "k", f"({hx}) % {_BLOOM_M} AS p"),
+        bloom_positions(
+            _month_keys(load(spark, sf_dir, "orders")), "mon", "k"
+        ),
         eager=False,
         label="bloom_pos",
     )
     monthly = pos.groupBy("mon", F.expr("p div 32").alias("w")).agg(
-        F.expr(mask)
+        F.expr(BLOOM_MASK)
     )
     merged = pin(
         monthly.groupBy("w").agg(F.expr("bit_or(mask) AS mask")),
         eager=False,
         label="bloom_merged",
     )
-    direct = (
-        pos.select("k", "p")
-        .distinct()
-        .groupBy(F.expr("p div 32").alias("w"))
-        .agg(F.expr(mask))
-    )
-    ndiff = (
-        merged.subtract(direct)
-        .unionByName(direct.subtract(merged))
-        .agg(F.expr("count(*) AS n_diff"))
-    )
-    stats = merged.agg(
-        F.expr("count(*) AS n_words"),
-        F.expr("CAST(sum(bit_count(mask)) AS BIGINT) AS bits_set"),
-    )
-
-    def probe_stats(probe_pos: DataFrame, n_col: str, hits_col: str):
-        ph = (
-            probe_pos.withColumn("pw", F.expr("p div 32"))
-            .join(merged.withColumnRenamed("w", "pw"), "pw", "left")
-            .groupBy("k")
-            .agg(F.expr(hit))
-        )
-        return ph.agg(
-            F.expr(f"count(*) AS {n_col}"),
-            F.expr(f"CAST(sum(hit) AS BIGINT) AS {hits_col}"),
-        )
-
-    pstats = probe_stats(
-        pos.filter(F.col("k") % _BLOOM_PROBE_MOD == 0)
-        .select("k", "p")
-        .distinct(),
-        "n_present",
-        "n_present_hits",
-    )
-    ab = spark.range(1, _BLOOM_ABSENT_N + 1).select(
-        F.concat(F.lit("a:"), F.col("id").cast("string")).alias("k")
-    )
-    apos = ab.select(
-        "k", F.explode(F.sequence(F.lit(1), F.lit(_BLOOM_K))).alias("j")
-    ).selectExpr("k", f"({hx}) % {_BLOOM_M} AS p")
-    astats = probe_stats(apos, "n_absent", "n_absent_hits")
-    return (
-        stats.crossJoin(F.broadcast(pstats))
-        .crossJoin(F.broadcast(astats))
-        .crossJoin(F.broadcast(ndiff))
-        .selectExpr(
-            "n_words",
-            "bits_set",
-            "n_present",
-            "n_present_hits",
-            "n_absent",
-            "n_absent_hits",
-            "round(CAST(n_absent_hits AS DOUBLE) / n_absent, 6)"
-            " AS fpr_measured",
-            f"round(power(CAST(bits_set AS DOUBLE) / {_BLOOM_M},"
-            f" {_BLOOM_K}), 6) AS fpr_expected",
-            "(n_diff = 0) AS merged_equals_direct",
-        )
-    )
+    return bloom_report(spark, merged, pos)
 
 
 # ---------------------------------------------------------------------------
@@ -2162,24 +1655,24 @@ def sketch_bloom_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _KS_LVL = 8          # probe level: 2^8 = 256 boundary nodes over the domain
-_KS_NODES = 1 << (_DQ_LEVELS - _KS_LVL)
+_KS_NODES = 1 << (DQ_LEVELS - _KS_LVL)
 
 
 def _ks_sql() -> str:
-    h_build = _dq_node_hash_duck("CAST(lvl AS VARCHAR)", "node")
-    h_probe = _dq_node_hash_duck(f"CAST({_KS_LVL} AS VARCHAR)", "node")
+    h_build = dq_node_hash_duck("CAST(lvl AS VARCHAR)", "node")
+    h_probe = dq_node_hash_duck(f"CAST({_KS_LVL} AS VARCHAR)", "node")
     build_cells = " UNION ALL ".join(
         f"SELECT side, {i} AS r, {h_build} % {p} AS c, cnt FROM nodes"
-        for i, p in enumerate(_CM_PRIMES)
+        for i, p in enumerate(CM_PRIMES)
     )
     probe_cells = " UNION ALL ".join(
         f"SELECT node, {i} AS r, ({h_probe}) % {p} AS c FROM n8"
-        for i, p in enumerate(_CM_PRIMES)
+        for i, p in enumerate(CM_PRIMES)
     )
     return f"""
 WITH cents AS (
   SELECT date_trunc('month', CAST(l_shipdate AS DATE)) AS mon,
-         least({_DQ_CENTS} // {_DQ_LEAF_W}, {_DQ_LEAF_MAX}) AS leaf
+         least({DQ_CENTS} // {DQ_LEAF_W}, {DQ_LEAF_MAX}) AS leaf
   FROM lineitem
 ),
 mm AS (SELECT max(mon) AS mx FROM cents),
@@ -2251,7 +1744,7 @@ exbest AS (
 SELECT CAST(best.n_cur AS BIGINT) AS n_cur_est,
        CAST(best.n_base AS BIGINT) AS n_base_est,
        round(best.gap, 6) AS ks_est,
-       CAST((best.node + 1) * {_DQ_LEAF_W * (1 << _KS_LVL)} - 1 AS BIGINT)
+       CAST((best.node + 1) * {DQ_LEAF_W * (1 << _KS_LVL)} - 1 AS BIGINT)
          AS ks_at_cents,
        round(exbest.ks_exact, 6) AS ks_exact,
        round(abs(best.gap - exbest.ks_exact), 6) AS ks_err
@@ -2283,11 +1776,8 @@ def profile_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("month", F.col("l_shipdate")).alias("mon"),
         "l_extendedprice",
     )
-    h_probe = _dq_node_hash_spark(f"CAST({_KS_LVL} AS STRING)", "node")
-    cell_structs = ", ".join(
-        f"struct({i} AS r, ({h_probe}) % {p} AS c)"
-        for i, p in enumerate(_CM_PRIMES)
-    )
+    h_probe = dq_node_hash_spark(f"CAST({_KS_LVL} AS STRING)", "node")
+    cells = cell_structs(f"({h_probe})")
     # the LEVEL-8 slice only: a deployment reads this slice of the
     # stored full grids with partition pruning; rebuilding all 16
     # levels here just to probe one was 4x the key's cost (bench r10)
@@ -2303,21 +1793,14 @@ def profile_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy(
             "mon",
             F.expr(
-                f"least({_DQ_CENTS} div {_DQ_LEAF_W}, {_DQ_LEAF_MAX})"
+                f"least({DQ_CENTS} div {DQ_LEAF_W}, {DQ_LEAF_MAX})"
                 f" >> {_KS_LVL}"
             ).alias("node"),
         ).agg(F.count("*").alias("cnt")),
         eager=False,
         label="ks_nodes",
     )
-    mgrid = (
-        nodes.selectExpr(
-            "mon", "cnt", f"explode(array({cell_structs})) AS rc"
-        )
-        .select("mon", "rc.r", "rc.c", "cnt")
-        .groupBy("mon", "r", "c")
-        .agg(F.expr("CAST(sum(cnt) AS BIGINT) AS cnt"))
-    )
+    mgrid = spread_counts(nodes, ["mon"], cells)
     mx = nodes.agg(F.max("mon").alias("mx"))
     sgrid = (
         mgrid.crossJoin(F.broadcast(mx))
@@ -2333,7 +1816,7 @@ def profile_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = (
         spark.range(0, _KS_NODES)
         .selectExpr("id AS node")
-        .selectExpr("node", f"explode(array({cell_structs})) AS rc")
+        .selectExpr("node", f"explode(array({cells})) AS rc")
         .select("node", "rc.r", "rc.c")
         .crossJoin(spark.range(0, 2).select(F.col("id").alias("side")))
     )
@@ -2424,7 +1907,7 @@ def profile_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(n_cur AS BIGINT) AS n_cur_est",
             "CAST(n_base AS BIGINT) AS n_base_est",
             "round(gap, 6) AS ks_est",
-            f"CAST((node + 1) * {_DQ_LEAF_W * (1 << _KS_LVL)} - 1 AS BIGINT)"
+            f"CAST((node + 1) * {DQ_LEAF_W * (1 << _KS_LVL)} - 1 AS BIGINT)"
             " AS ks_at_cents",
             "round(ks_exact, 6) AS ks_exact",
             "round(abs(gap - ks_exact), 6) AS ks_err",
@@ -2453,7 +1936,7 @@ def _dpq_sql() -> str:
     qsel = ", ".join(f"({q})" for q in _DPQ_QS)
     return f"""
 WITH cents AS (
-  SELECT least({_DQ_CENTS} // {_DQ_LEAF_W}, {_DQ_LEAF_MAX}) AS leaf
+  SELECT least({DQ_CENTS} // {DQ_LEAF_W}, {DQ_LEAF_MAX}) AS leaf
   FROM lineitem
 ),
 n8 AS (SELECT i AS node FROM generate_series(0, {_KS_NODES - 1}) AS t(i)),
@@ -2484,16 +1967,16 @@ excdf AS (
   FROM hist
 ),
 ex AS (
-  SELECT q, CAST((min(node) + 1) * {_DQ_LEAF_W * (1 << _KS_LVL)} - 1
+  SELECT q, CAST((min(node) + 1) * {DQ_LEAF_W * (1 << _KS_LVL)} - 1
                  AS BIGINT) AS exact_cents
   FROM targets JOIN excdf ON cum >= (n * q + 99) // 100
   GROUP BY q
 )
 SELECT h.q AS qpct,
-       CAST((h.node + 1) * {_DQ_LEAF_W * (1 << _KS_LVL)} - 1 AS BIGINT)
+       CAST((h.node + 1) * {DQ_LEAF_W * (1 << _KS_LVL)} - 1 AS BIGINT)
          AS dp_cents,
        e.exact_cents,
-       round(abs(CAST((h.node + 1) * {_DQ_LEAF_W * (1 << _KS_LVL)} - 1
+       round(abs(CAST((h.node + 1) * {DQ_LEAF_W * (1 << _KS_LVL)} - 1
                  AS DOUBLE) - e.exact_cents) / e.exact_cents, 4)
          AS rel_err
 FROM hit h JOIN ex e ON e.q = h.q
@@ -2527,7 +2010,7 @@ def agg_dp_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
                        hash60_spark_sql)
     li = load(spark, sf_dir, "lineitem").select(
         F.expr(
-            f"least({_DQ_CENTS} div {_DQ_LEAF_W}, {_DQ_LEAF_MAX})"
+            f"least({DQ_CENTS} div {DQ_LEAF_W}, {DQ_LEAF_MAX})"
         ).alias("leaf")
     )
     nodes = spark.range(0, _KS_NODES).selectExpr("id AS node")
@@ -2576,7 +2059,7 @@ def agg_dp_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("q")
         .agg(
             F.expr(
-                f"CAST((min(node) + 1) * {_DQ_LEAF_W * (1 << _KS_LVL)} - 1"
+                f"CAST((min(node) + 1) * {DQ_LEAF_W * (1 << _KS_LVL)} - 1"
                 " AS BIGINT) AS exact_cents"
             )
         )
@@ -2585,27 +2068,145 @@ def agg_dp_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         hit.join(ex, "q")
         .selectExpr(
             "q AS qpct",
-            f"CAST((node + 1) * {_DQ_LEAF_W * (1 << _KS_LVL)} - 1 AS BIGINT)"
+            f"CAST((node + 1) * {DQ_LEAF_W * (1 << _KS_LVL)} - 1 AS BIGINT)"
             " AS dp_cents",
             "exact_cents",
-            f"round(abs(CAST((node + 1) * {_DQ_LEAF_W * (1 << _KS_LVL)} - 1"
+            f"round(abs(CAST((node + 1) * {DQ_LEAF_W * (1 << _KS_LVL)} - 1"
             " AS DOUBLE) - exact_cents) / exact_cents, 4) AS rel_err",
         )
     )
 
 
 # ---------------------------------------------------------------------------
-# streaming Bloom membership: word masks maintained as bounded stream state
+# streaming sketches: KMV registers, the dyadic grid and Bloom word masks
+# maintained as bounded stream state
 # ---------------------------------------------------------------------------
 
-_SBL_BATCHES = 3
+_STREAM_BATCHES = 3
 
 
-def _stream_bloom_sql() -> str:
-    return _bloom_sql()
+def _stage_by_residue(df: DataFrame, key: str, *cols: str):
+    """The ``ensure_staged`` stage function that lands ``df``'s ``cols``
+    as _STREAM_BATCHES micro-batches, batch i + 1 holding the rows whose
+    ``key`` is i modulo the batch count."""
+
+    def stage(stream_dir: str) -> None:
+        for i in range(_STREAM_BATCHES):
+            stage_batch(
+                df.filter(F.col(key) % _STREAM_BATCHES == i).select(*cols),
+                stream_dir,
+                f"batch{i + 1}.parquet",
+                i + 1,
+            )
+
+    return stage
 
 
-@register("stream_sketch_bloom", oracle=_stream_bloom_sql())
+@register("stream_sketch_ndv", oracle=_KMV_SQL)
+def stream_sketch_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming NDV via the KMV register-minima sketch: the orders
+    stream arrives in 3 micro-batches and the streaming aggregation
+    maintains min(hash60(custkey)) per (group, register) — the ENTIRE
+    stream state is group_count x 64 rows FOREVER, the property that
+    makes sketch-based distinct counting the only viable continuous
+    NDV at 100 TB (exact streaming countDistinct state grows with the
+    key universe; dropDuplicates+count needs a watermark and forgets).
+    Register minima merge associatively across micro-batches by the
+    same pairwise min that merges them across partitions, so the
+    drained sketch is BATCH-EQUIVALENT: the oracle is literally
+    sketch_kmv_ndv's SQL, proving the micro-batch path changes the
+    execution, not the value (the same batch-equivalence pattern as
+    the other stream_* admission keys). The harmonic-mean estimate and
+    the exact-NDV verifier fold over the drained K-row register table
+    as batch expressions (two stateful aggregations cannot chain in
+    one streaming query)."""
+    o = load(spark, sf_dir, "orders").select(
+        F.col("o_orderpriority").alias("prio"),
+        F.col("o_custkey").alias("custkey"),
+        F.col("o_orderkey").alias("ok"),
+    )
+    # staged once per (sf_dir, source fingerprint) — the measured work is the
+    # register-minima drain, not re-writing the fixture every run
+    stream_dir = ensure_staged(
+        spark,
+        "stream_sketch_ndv",
+        sf_dir,
+        "orders",
+        _stage_by_residue(o, "ok", "prio", "custkey"),
+    )
+    stream = staged_stream(spark, stream_dir, "prio string, custkey bigint")
+    regs = kmv_registers(
+        stream.select(
+            "prio",
+            F.expr(hash60_spark_sql("CAST(custkey AS STRING)")).alias("h"),
+        ),
+        "prio",
+    )
+    # state layout sized to the feed (AQE off in streaming; the state
+    # is group_count x 64 rows — 32 near-empty stores churn per batch)
+    with stateful_layout(spark, sf_dir, "orders"):
+        final_regs = run_available_now(
+            regs, query_name="stream_sketch_ndv", output_mode="complete"
+        )
+    ex = o.groupBy("prio").agg(F.countDistinct("custkey").alias("n_exact"))
+    return ndv_report(kmv_fold(final_regs, "prio"), ex, "prio")
+
+
+@register("stream_sketch_quantile", oracle=_dq_sql())
+def stream_sketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming quantiles via the dyadic count-min grid
+    (sketch_quantile_dyadic's sibling, completing the streaming sketch
+    pair with stream_sketch_ndv): the lineitem price stream arrives in
+    3 micro-batches and ONE streaming aggregation maintains the
+    per-(level, row, cell) counters — the ENTIRE stream state is the
+    <= 16 x 12,283-cell grid FOREVER, the property that makes sketch
+    quantiles the only viable continuous percentile at 100 TB (exact
+    streaming percentile state grows with the value universe; Spark's
+    approx_percentile is not a streaming aggregate at all). Count-min
+    is linear, so micro-batch counter addition IS the merge operator —
+    the drained grid is BATCH-EQUIVALENT and the oracle is literally
+    sketch_quantile_dyadic's SQL, proving the micro-batch path changes
+    the execution, not the value. The per-row cell explosion runs
+    map-side on the stream (16 node hashes per row — the batch build's
+    leaf pre-aggregation is unavailable mid-stream because chaining a
+    leaf aggregate before the cell aggregate would need two stateful
+    operators); the descent and the true-rank verifier fold over the
+    drained grid as batch expressions."""
+    li = load(spark, sf_dir, "lineitem")
+    # staged once per (sf_dir, source fingerprint) — the measured work is the
+    # per-batch cell explosion + grid aggregation, not three fixture
+    # parquet writes of the full price column per run
+    stream_dir = ensure_staged(
+        spark,
+        "stream_sketch_quantile",
+        sf_dir,
+        "lineitem",
+        _stage_by_residue(li, "l_orderkey", "l_extendedprice"),
+    )
+    stream = staged_stream(spark, stream_dir, "l_extendedprice double")
+    h = dq_node_hash_spark("CAST(ln.lvl AS STRING)", "ln.node")
+    cells = (
+        stream.selectExpr(
+            f"least({DQ_CENTS} div {DQ_LEAF_W}, {DQ_LEAF_MAX}) AS leaf"
+        )
+        .selectExpr(
+            f"explode(transform(sequence(0, {DQ_LEVELS - 1}),"
+            " l -> struct(l AS lvl, shiftright(leaf, l) AS node))) AS ln"
+        )
+        .selectExpr("ln.lvl AS lvl", f"{h} AS h")
+        .selectExpr("lvl", f"explode(array({cell_structs('h')})) AS rc")
+        .select("lvl", "rc.r", "rc.c")
+        .groupBy("lvl", "r", "c")
+        .agg(F.count("*").alias("cnt"))
+    )
+    drained = run_available_now(
+        cells, query_name="stream_sketch_quantile", output_mode="complete"
+    )
+    grid = drained.selectExpr("lvl", "r", "c", "CAST(cnt AS BIGINT) AS cnt")
+    return dq_descend(li, grid)
+
+
+@register("stream_sketch_bloom", oracle=_bloom_sql())
 def stream_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Bloom membership — the third streaming sketch beside
     stream_sketch_ndv (KMV minima) and stream_sketch_quantile (dyadic
@@ -2622,34 +2223,22 @@ def stream_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     direct filter must match word-for-word) — the oracle is literally
     that key's SQL, proving the micro-batch path changes the
     execution, not the value."""
-    from ..functions.hashing import hash60_spark_sql
-    from ..streaming.ingest import run_available_now
-    from ..sources.staging import ensure_staged
-    from .streaming_q import _stage_batch, _staged_stream
-
     o = load(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("k"), F.col("o_orderkey").alias("ok")
     )
-
-    def _stage(stream_dir: str) -> None:
-        for i in range(_SBL_BATCHES):
-            _stage_batch(
-                o.filter(F.col("ok") % _SBL_BATCHES == i).drop("ok"),
-                stream_dir,
-                f"batch{i + 1}.parquet",
-                i + 1,
-            )
-
     stream_dir = ensure_staged(
-        spark, "stream_sketch_bloom", sf_dir, "orders", _stage
+        spark,
+        "stream_sketch_bloom",
+        sf_dir,
+        "orders",
+        _stage_by_residue(o, "ok", "k"),
     )
-    hx = hash60_spark_sql("concat(CAST(j AS STRING), ':', CAST(k AS STRING))")
-    stream = _staged_stream(spark, stream_dir, "k bigint")
+    stream = staged_stream(spark, stream_dir, "k bigint")
     masks = (
         stream.select(
-            "k", F.explode(F.sequence(F.lit(1), F.lit(_BLOOM_K))).alias("j")
+            "k", F.explode(F.sequence(F.lit(1), F.lit(BLOOM_K))).alias("j")
         )
-        .selectExpr(f"({hx}) % {_BLOOM_M} AS p")
+        .selectExpr(f"({BLOOM_HX}) % {BLOOM_M} AS p")
         .selectExpr(
             "p div 32 AS w",
             "shiftleft(CAST(1 AS BIGINT), CAST(p % 32 AS INT)) AS bit",
@@ -2662,78 +2251,8 @@ def stream_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         label="sbl_merged",
     )
     # post-drain batch layers: identical to sketch_bloom_rollup's
-    mk = o.drop("ok").distinct()
-    pos = pin(
-        mk.select(
-            "k", F.explode(F.sequence(F.lit(1), F.lit(_BLOOM_K))).alias("j")
-        ).selectExpr("k", f"({hx}) % {_BLOOM_M} AS p"),
-        label="sbl_pos",
-    )
-    mask_expr = "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(p % 32 AS INT))) AS mask"
-    hit = (
-        "min(CASE WHEN (shiftright(COALESCE(mask, 0), CAST(p % 32 AS INT)))"
-        " & 1 = 1 THEN 1 ELSE 0 END) AS hit"
-    )
-    direct = (
-        pos.select("k", "p")
-        .distinct()
-        .groupBy(F.expr("p div 32").alias("w"))
-        .agg(F.expr(mask_expr))
-    )
-    ndiff = (
-        merged.subtract(direct)
-        .unionByName(direct.subtract(merged))
-        .agg(F.expr("count(*) AS n_diff"))
-    )
-    stats = merged.agg(
-        F.expr("count(*) AS n_words"),
-        F.expr("CAST(sum(bit_count(mask)) AS BIGINT) AS bits_set"),
-    )
-
-    def probe_stats(probe_pos: DataFrame, n_col: str, hits_col: str):
-        ph = (
-            probe_pos.withColumn("pw", F.expr("p div 32"))
-            .join(merged.withColumnRenamed("w", "pw"), "pw", "left")
-            .groupBy("k")
-            .agg(F.expr(hit))
-        )
-        return ph.agg(
-            F.expr(f"count(*) AS {n_col}"),
-            F.expr(f"CAST(sum(hit) AS BIGINT) AS {hits_col}"),
-        )
-
-    pstats = probe_stats(
-        pos.filter(F.col("k") % _BLOOM_PROBE_MOD == 0)
-        .select("k", "p")
-        .distinct(),
-        "n_present",
-        "n_present_hits",
-    )
-    ab = spark.range(1, _BLOOM_ABSENT_N + 1).select(
-        F.concat(F.lit("a:"), F.col("id").cast("string")).alias("k")
-    )
-    apos = ab.select(
-        "k", F.explode(F.sequence(F.lit(1), F.lit(_BLOOM_K))).alias("j")
-    ).selectExpr("k", f"({hx}) % {_BLOOM_M} AS p")
-    astats = probe_stats(apos, "n_absent", "n_absent_hits")
-    return (
-        stats.crossJoin(F.broadcast(pstats))
-        .crossJoin(F.broadcast(astats))
-        .crossJoin(F.broadcast(ndiff))
-        .selectExpr(
-            "n_words",
-            "bits_set",
-            "n_present",
-            "n_present_hits",
-            "n_absent",
-            "n_absent_hits",
-            "round(CAST(n_absent_hits AS DOUBLE) / n_absent, 6)"
-            " AS fpr_measured",
-            f"round(power(CAST(bits_set AS DOUBLE) / {_BLOOM_M},"
-            f" {_BLOOM_K}), 6) AS fpr_expected",
-            "(n_diff = 0) AS merged_equals_direct",
-        )
-    )
+    pos = pin(bloom_positions(o.drop("ok").distinct(), "k"), label="sbl_pos")
+    return bloom_report(spark, merged, pos)
 
 
 # ---------------------------------------------------------------------------
@@ -2743,10 +2262,7 @@ def stream_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _theta_rollup_sql() -> str:
     h = hash60_duckdb_sql("CAST(k AS VARCHAR)")
-    est = (
-        f"CASE WHEN ns < {_BK_K} THEN ns"
-        f" ELSE CAST(round(({_BK_K} - 1) * ({_H} / hk)) AS BIGINT) END"
-    )
+    est = _bk_est("ns", "hk")
     return f"""
 WITH mk AS (
   SELECT DISTINCT date_trunc('month', o_orderdate) AS mon, o_custkey AS k
@@ -2805,10 +2321,7 @@ def sketch_theta_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     o = load(spark, sf_dir, "orders")
-    mk = o.select(
-        F.date_trunc("month", F.col("o_orderdate")).alias("mon"),
-        F.col("o_custkey").alias("k"),
-    ).distinct()
+    mk = _month_keys(o)
     hm = pin(
         mk.selectExpr(
             "mon", hash60_spark_sql("CAST(k AS STRING)") + " AS h"
@@ -2827,11 +2340,6 @@ def sketch_theta_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         label="theta_ru_merged",
     )
     direct = hm.select("h").distinct().orderBy("h").limit(_BK_K)
-    ndiff = (
-        merged.subtract(direct)
-        .unionByName(direct.subtract(merged))
-        .agg(F.expr("count(*) AS n_diff"))
-    )
     stats = merged.agg(
         F.expr("count(*) AS ns"),
         F.expr("CAST(max(h) AS DOUBLE) AS hk"),
@@ -2842,15 +2350,13 @@ def sketch_theta_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mc = mk.agg(
         F.expr("CAST(count(DISTINCT mon) AS BIGINT) AS n_months")
     )
-    est = (
-        f"CASE WHEN ns < {_BK_K} THEN ns"
-        f" ELSE CAST(round(({_BK_K} - 1) * ({_H} / hk)) AS BIGINT) END"
-    )
     return (
         stats.crossJoin(F.broadcast(ex))
         .crossJoin(F.broadcast(mc))
-        .crossJoin(F.broadcast(ndiff))
-        .selectExpr("n_months", "n_exact", f"{est} AS est", "n_diff")
+        .crossJoin(F.broadcast(n_diff(merged, direct)))
+        .selectExpr(
+            "n_months", "n_exact", f"{_bk_est('ns', 'hk')} AS est", "n_diff"
+        )
         .selectExpr(
             "n_months",
             "n_exact",

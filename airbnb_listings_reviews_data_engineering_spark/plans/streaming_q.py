@@ -6,10 +6,11 @@ correctness statement for Structured Streaming. The jobs share three
 pieces:
 
 - staging: a key lands its micro-batch files once, through
-  ``sources/staging.ensure_staged`` + ``_stage_batch``, into one stable
-  landing zone per key, re-staged only when the source files change;
-- reading: ``_staged_stream`` reads such a zone as one staged file per
-  micro-batch, in staging order;
+  ``sources/staging.ensure_staged`` + ``streaming/ingest.stage_batch``,
+  into one stable landing zone per key, re-staged only when the source
+  files change;
+- reading: ``streaming/ingest.staged_stream`` reads such a zone as one
+  staged file per micro-batch, in staging order;
 - draining: aggregations and stateful operators drain into a memory
   sink (``streaming/ingest.run_available_now``); keys that fold each
   micro-batch into published tables (upsert, MV maintenance,
@@ -21,103 +22,23 @@ pieces:
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checkpoint import pin
-from ..sources.parquet import row_count
 from ..sources.staging import ensure_staged, scratch_dir
 from ..streaming.ingest import (
     read_events_stream,
     run_available_now,
     session_windows,
+    stage_batch,
+    staged_stream,
+    stateful_layout,
     stateful_user_stats,
     windowed_counts,
 )
 from .registry import load, register
-
-
-@contextmanager
-def _stateful_layout(spark: SparkSession, sf_dir: str, table: str):
-    """Size the keyed-state store layout to the stream, scale-adaptively.
-
-    The number of state partitions is fixed at query start from
-    ``spark.sql.shuffle.partitions``. Each partition pays per-BATCH
-    store open/commit/snapshot churn, and each key pays the per-key
-    Python serde of applyInPandasWithState — so too many partitions is
-    store churn (32 partitions for a fixture-sized feed: +1.7 s on the
-    admission drain) and too few serializes the per-key machinery
-    (2 partitions: +4.3 s). Sizing by source rows picks the measured
-    sweet spot locally (~8 at sf0.1) and grows to the cluster's
-    parallelism as the feed grows — the same sizing rule a production
-    stream applies to its key cardinality/throughput (cf. the
-    stream_stream_join 4-stores-per-partition rationale below).
-
-    Single-threaded-session assumption (ADVICE r13): this mutates the
-    session-global ``spark.sql.shuffle.partitions`` for the drain's
-    duration, so a query PLANNED concurrently on the same session would
-    inherit the reduced count. Every harness here (bench, mirror,
-    tests) drives one query at a time per session; a concurrent caller
-    must scope the drain to its own ``SparkSession.newSession()``. A
-    stateful checkpoint must also never be reused across runs with a
-    different computed ``parts`` (state partition count pins at first
-    run) — all drains here use fresh per-run checkpoints."""
-    n_rows = row_count(os.path.join(sf_dir, f"{table}.parquet"))
-    par = spark.sparkContext.defaultParallelism
-    parts = par if n_rows is None else min(par, max(2, n_rows // 12_500))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _stage_batch(df: DataFrame, stream_dir: str, name: str, seq: int) -> None:
-    """Land one micro-batch as a single deterministically-ordered
-    parquet file: write single-file, promote the part file to ``name``,
-    then stamp mtime so BOTH mtime and lexicographic path order the
-    batches — the file source's batch assignment is then deterministic.
-
-    The promotion is os-level, so a URI zone (a dist-FS staging root:
-    hdfs://, s3a://) raises loudly here instead of corrupting local
-    state — a real deployment points readStream at its actual landing
-    zone and never stages one (the fixture exists only to make
-    stream/batch equivalence hermetically testable)."""
-    import glob
-    import shutil
-
-    from ..sources.staging import fs_delete
-
-    if "://" in stream_dir:
-        raise NotImplementedError(
-            "simulated stream landing zones are driver-local fixtures; "
-            "on a dist-FS staging root point readStream at the real "
-            "landing zone instead"
-        )
-    staged = os.path.join(stream_dir, f"_stage_{seq}")
-    df.coalesce(1).write.parquet(staged)
-    part = glob.glob(os.path.join(staged, "part-*.parquet"))[0]
-    dest = os.path.join(stream_dir, name)
-    shutil.move(part, dest)
-    fs_delete(staged)
-    os.utime(dest, (1_700_000_000 + seq * 60, 1_700_000_000 + seq * 60))
-
-
-def _staged_stream(spark: SparkSession, stream_dir: str, schema) -> DataFrame:
-    """File-source stream over a landing zone _stage_batch filled: ONE
-    staged file per micro-batch (maxFilesPerTrigger=1), taken in the
-    mtime-and-path order _stage_batch stamps — so each staged file is
-    exactly one micro-batch, in staging order, and the cross-batch
-    state (watermarks, timers, merges) the oracles replay is a pure
-    function of the staged files."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
 
 
 _WINDOW_AGG_SQL = """
@@ -137,7 +58,7 @@ def stream_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state-store layout sized to the feed: AQE is off inside streaming
     # queries, so without this the windowed agg runs 32 near-empty
     # state partitions whose per-batch store open/commit churn dominates
-    with _stateful_layout(spark, sf_dir, "events"):
+    with stateful_layout(spark, sf_dir, "events"):
         result = run_available_now(agg, query_name="stream_window_agg")
     return result.select(
         F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias("win_start"),
@@ -179,7 +100,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_events_stream(spark, f"{sf_dir}/events.parquet")
     agg = session_windows(events, gap="30 minutes", watermark="2 hours")
     # state layout sized to the feed (AQE off in streaming)
-    with _stateful_layout(spark, sf_dir, "events"):
+    with stateful_layout(spark, sf_dir, "events"):
         result = run_available_now(agg, query_name="stream_session_window")
     return result.select(
         "user_id",
@@ -205,7 +126,7 @@ def stream_stateful_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_events_stream(spark, f"{sf_dir}/events.parquet")
     stats = stateful_user_stats(events)
     # state layout sized to the feed (AQE off in streaming)
-    with _stateful_layout(spark, sf_dir, "events"):
+    with stateful_layout(spark, sf_dir, "events"):
         return run_available_now(
             stats, query_name="stream_stateful_stats", output_mode="update"
         )
@@ -339,7 +260,7 @@ def stream_stateful_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.filter(F.col("ts") >= b2).withColumn("bseq", F.lit(3)),
         ]
         for seq, b in enumerate(batches, start=1):
-            _stage_batch(b, stream_dir, f"batch{seq}.parquet", seq)
+            stage_batch(b, stream_dir, f"batch{seq}.parquet", seq)
 
     # stable landing zone, staged once per (sf_dir, source fingerprint): the
     # measured work is the keyed-state drain, not three fixture parquet
@@ -364,7 +285,7 @@ def stream_stateful_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stateful operator's child output (projecting it to a long raises
     # 'Event-time timeout not supported without watermark').
     stream = (
-        _staged_stream(
+        staged_stream(
             spark,
             stream_dir,
             "event_id bigint, ts timestamp, user_id bigint, bseq int",
@@ -390,7 +311,7 @@ def stream_stateful_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bounds, so bseq never crosses the Python boundary as a column
         derive_bseq_from_ts=True,
     )
-    with _stateful_layout(spark, sf_dir, "events"):
+    with stateful_layout(spark, sf_dir, "events"):
         result = run_available_now(
             out, query_name="stream_stateful_admission", output_mode="update"
         )
@@ -499,7 +420,7 @@ def stream_session_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.filter(F.col("ts") >= b2),
         ]
         for seq, b in enumerate(batches, start=1):
-            _stage_batch(b, stream_dir, f"batch{seq}.parquet", seq)
+            stage_batch(b, stream_dir, f"batch{seq}.parquet", seq)
 
     # stable landing zone, staged once per (sf_dir, source fingerprint) — see
     # stream_stateful_admission
@@ -509,7 +430,7 @@ def stream_session_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     # event_id staged but not read — see stream_stateful_admission
     stream = (
-        _staged_stream(
+        staged_stream(
             spark,
             stream_dir,
             "event_id bigint, ts timestamp, user_id bigint, vq bigint",
@@ -518,7 +439,7 @@ def stream_session_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "0 seconds")
     )
     out = session_finalize(stream, gap_ms=_SSA_GAP_MS)
-    with _stateful_layout(spark, sf_dir, "events"):
+    with stateful_layout(spark, sf_dir, "events"):
         result = run_available_now(
             out, query_name="stream_session_finalize", output_mode="update"
         )
@@ -698,16 +619,16 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ]
         for i, (name, df) in enumerate(batches):
-            _stage_batch(df, stream_dir, name, i)
+            stage_batch(df, stream_dir, name, i)
 
     # staged once per (sf_dir, source fingerprint) — the measured work is the
     # watermark-drop drain, not re-writing three fixture batches per run
     stream_dir = ensure_staged(spark, "stream_late_data", sf_dir, "events", _stage)
 
-    stream = _staged_stream(spark, stream_dir, EVENTS_SCHEMA)
+    stream = staged_stream(spark, stream_dir, EVENTS_SCHEMA)
     agg = windowed_counts(stream, window="1 hour", watermark="1 hour")
     # state layout sized to the feed (AQE off in streaming)
-    with _stateful_layout(spark, sf_dir, "events"):
+    with stateful_layout(spark, sf_dir, "events"):
         result = run_available_now(
             agg, query_name="stream_late_data", output_mode="append"
         )
@@ -732,7 +653,7 @@ def _stage_events_by_id_residue(spark: SparkSession, sf_dir: str) -> str:
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
         for i in range(3):
-            _stage_batch(
+            stage_batch(
                 raw.filter(F.col("event_id") % 3 == i),
                 stream_dir,
                 f"batch_{i}.parquet",
@@ -794,11 +715,11 @@ def stream_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("rn")
         )
 
-    # _stateful_layout: each per-batch per-user window + merge would
+    # stateful_layout: each per-batch per-user window + merge would
     # otherwise shuffle into 32 near-empty partitions (AQE off here)
-    with _stateful_layout(spark, sf_dir, "events"):
+    with stateful_layout(spark, sf_dir, "events"):
         fold_stream(
-            _staged_stream(spark, stream_dir, EVENTS_SCHEMA),
+            staged_stream(spark, stream_dir, EVENTS_SCHEMA),
             os.path.join(root, "ckpt"),
             latest,
             target,
@@ -871,12 +792,12 @@ def stream_mv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    # _stateful_layout: each foreachBatch delta groupBy + base merge
+    # stateful_layout: each foreachBatch delta groupBy + base merge
     # would otherwise shuffle into 32 near-empty partitions per batch
     # (AQE is off inside streaming queries); size to the feed instead
-    with _stateful_layout(spark, sf_dir, "events"):
+    with stateful_layout(spark, sf_dir, "events"):
         fold_stream(
-            _staged_stream(spark, stream_dir, EVENTS_SCHEMA),
+            staged_stream(spark, stream_dir, EVENTS_SCHEMA),
             os.path.join(root, "ckpt"),
             merge_delta,
             target,
@@ -932,7 +853,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"), F.sum("vq").alias("svq"))
     )
     # state layout sized to the feed (AQE off in streaming)
-    with _stateful_layout(spark, sf_dir, "events"):
+    with stateful_layout(spark, sf_dir, "events"):
         result = run_available_now(agg, query_name="stream_sliding_window")
     return result.select(
         F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -1021,9 +942,9 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_dedup_minhash",
         sf_dir,
         "documents",
-        lambda d: _stage_batch(incoming, d, "batch1.parquet", 1),
+        lambda d: stage_batch(incoming, d, "batch1.parquet", 1),
     )
-    stream = _staged_stream(spark, stream_dir, "doc_id bigint, text string")
+    stream = staged_stream(spark, stream_dir, "doc_id bigint, text string")
     # the SAME operator dedup_incremental runs nightly, fed a streaming
     # batch side (pin_batch=False — a streaming frame cannot pin; its
     # signature recomputes per micro-batch as map-side expressions)
@@ -1136,9 +1057,9 @@ def stream_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_dedup_embedding",
         sf_dir,
         "embeddings",
-        lambda d: _stage_batch(incoming, d, "batch1.parquet", 1),
+        lambda d: stage_batch(incoming, d, "batch1.parquet", 1),
     )
-    stream = _staged_stream(spark, stream_dir, "vec_id bigint, v array<double>")
+    stream = staged_stream(spark, stream_dir, "vec_id bigint, v array<double>")
     stream_bk = S.with_lsh_bucket(stream, "vec_id", "v", planes, "pid", 8)
     out = embedding_near_dup_join(
         stream_bk, corpus_bk, "vec_id", "v", "bucket", threshold=0.99
@@ -1280,185 +1201,13 @@ def stream_dedup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_dedup_span",
         sf_dir,
         "documents",
-        lambda d: _stage_batch(incoming, d, "batch1.parquet", 1),
+        lambda d: stage_batch(incoming, d, "batch1.parquet", 1),
     )
-    stream = _staged_stream(spark, stream_dir, "doc_id bigint, text string")
+    stream = staged_stream(spark, stream_dir, "doc_id bigint, text string")
     out = span_excise_against_index(stream, index, "doc_id", "text", n=_SDS_N)
     return run_available_now(
         out, query_name="stream_dedup_span", output_mode="complete"
     )
-
-
-# ---------------------------------------------------------------------------
-# streaming NDV sketch: register minima maintained as bounded stream state
-# ---------------------------------------------------------------------------
-
-_SKN_BATCHES = 3
-
-
-def _stream_kmv_sql() -> str:
-    from .sketch_ext import _KMV_SQL
-
-    return _KMV_SQL
-
-
-@register("stream_sketch_ndv", oracle=_stream_kmv_sql())
-def stream_sketch_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming NDV via the KMV register-minima sketch: the orders
-    stream arrives in 3 micro-batches and the streaming aggregation
-    maintains min(hash60(custkey)) per (group, register) — the ENTIRE
-    stream state is group_count x 64 rows FOREVER, the property that
-    makes sketch-based distinct counting the only viable continuous
-    NDV at 100 TB (exact streaming countDistinct state grows with the
-    key universe; dropDuplicates+count needs a watermark and forgets).
-    Register minima merge associatively across micro-batches by the
-    same pairwise min that merges them across partitions, so the
-    drained sketch is BATCH-EQUIVALENT: the oracle is literally
-    sketch_kmv_ndv's SQL, proving the micro-batch path changes the
-    execution, not the value (the same batch-equivalence pattern as
-    the other stream_* admission keys). The harmonic-mean estimate and
-    the exact-NDV verifier fold over the drained K-row register table
-    as batch expressions (two stateful aggregations cannot chain in
-    one streaming query)."""
-    from ..functions.hashing import hash60_spark_sql
-    from .sketch_ext import _KMV_EST, _KMV_K
-
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("prio"),
-        F.col("o_custkey").alias("custkey"),
-        F.col("o_orderkey").alias("ok"),
-    )
-    def _stage(stream_dir: str) -> None:
-        for i in range(_SKN_BATCHES):
-            _stage_batch(
-                o.filter(F.col("ok") % _SKN_BATCHES == i).drop("ok"),
-                stream_dir,
-                f"batch{i + 1}.parquet",
-                i + 1,
-            )
-
-    # staged once per (sf_dir, source fingerprint) — the measured work is the
-    # register-minima drain, not re-writing the fixture every run
-    stream_dir = ensure_staged(
-        spark, "stream_sketch_ndv", sf_dir, "orders", _stage
-    )
-    stream = _staged_stream(spark, stream_dir, "prio string, custkey bigint")
-    regs = (
-        stream.select(
-            "prio",
-            F.expr(hash60_spark_sql("CAST(custkey AS STRING)")).alias("h"),
-        )
-        .withColumn("reg", F.col("h") % _KMV_K)
-        .groupBy("prio", "reg")
-        .agg(F.min("h").alias("m"))
-    )
-    # state layout sized to the feed (AQE off in streaming; the state
-    # is group_count x 64 rows — 32 near-empty stores churn per batch)
-    with _stateful_layout(spark, sf_dir, "orders"):
-        final_regs = run_available_now(
-            regs, query_name="stream_sketch_ndv", output_mode="complete"
-        )
-    est = final_regs.groupBy("prio").agg(
-        F.expr(_KMV_EST.format(div="div") + " AS ndv_est")
-    )
-    ex = o.groupBy("prio").agg(F.countDistinct("custkey").alias("n_exact"))
-    return est.join(ex, "prio").select(
-        "prio",
-        "n_exact",
-        "ndv_est",
-        F.expr(
-            "round(abs(ndv_est - n_exact) / CAST(n_exact AS DOUBLE), 4)"
-            " AS rel_err"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# streaming quantiles: the dyadic CM grid maintained as bounded stream state
-# ---------------------------------------------------------------------------
-
-_SKQ_BATCHES = 3
-
-
-def _stream_dq_sql() -> str:
-    from .sketch_ext import _dq_sql
-
-    return _dq_sql()
-
-
-@register("stream_sketch_quantile", oracle=_stream_dq_sql())
-def stream_sketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming quantiles via the dyadic count-min grid
-    (sketch_quantile_dyadic's sibling, completing the streaming sketch
-    pair with stream_sketch_ndv): the lineitem price stream arrives in
-    3 micro-batches and ONE streaming aggregation maintains the
-    per-(level, row, cell) counters — the ENTIRE stream state is the
-    <= 16 x 12,283-cell grid FOREVER, the property that makes sketch
-    quantiles the only viable continuous percentile at 100 TB (exact
-    streaming percentile state grows with the value universe; Spark's
-    approx_percentile is not a streaming aggregate at all). Count-min
-    is linear, so micro-batch counter addition IS the merge operator —
-    the drained grid is BATCH-EQUIVALENT and the oracle is literally
-    sketch_quantile_dyadic's SQL, proving the micro-batch path changes
-    the execution, not the value. The per-row cell explosion runs
-    map-side on the stream (16 node hashes per row — the batch build's
-    leaf pre-aggregation is unavailable mid-stream because chaining a
-    leaf aggregate before the cell aggregate would need two stateful
-    operators); the descent and the true-rank verifier fold over the
-    drained grid as batch expressions."""
-    from .sketch_ext import (
-        _CM_PRIMES,
-        _DQ_CENTS,
-        _DQ_LEAF_MAX,
-        _DQ_LEAF_W,
-        _DQ_LEVELS,
-        _dq_descend,
-        _dq_node_hash_spark,
-    )
-
-    li = load(spark, sf_dir, "lineitem")
-
-    def _stage(stream_dir: str) -> None:
-        for i in range(_SKQ_BATCHES):
-            _stage_batch(
-                li.filter(F.col("l_orderkey") % _SKQ_BATCHES == i).select(
-                    "l_extendedprice"
-                ),
-                stream_dir,
-                f"batch{i + 1}.parquet",
-                i + 1,
-            )
-
-    # staged once per (sf_dir, source fingerprint) — the measured work is the
-    # per-batch cell explosion + grid aggregation, not three fixture
-    # parquet writes of the full price column per run
-    stream_dir = ensure_staged(
-        spark, "stream_sketch_quantile", sf_dir, "lineitem", _stage
-    )
-    stream = _staged_stream(spark, stream_dir, "l_extendedprice double")
-    h = _dq_node_hash_spark("CAST(ln.lvl AS STRING)", "ln.node")
-    cell_structs = ", ".join(
-        f"struct({i} AS r, h % {p} AS c)" for i, p in enumerate(_CM_PRIMES)
-    )
-    cells = (
-        stream.selectExpr(
-            f"least({_DQ_CENTS} div {_DQ_LEAF_W}, {_DQ_LEAF_MAX}) AS leaf"
-        )
-        .selectExpr(
-            f"explode(transform(sequence(0, {_DQ_LEVELS - 1}),"
-            " l -> struct(l AS lvl, shiftright(leaf, l) AS node))) AS ln"
-        )
-        .selectExpr("ln.lvl AS lvl", f"{h} AS h")
-        .selectExpr("lvl", f"explode(array({cell_structs})) AS rc")
-        .select("lvl", "rc.r", "rc.c")
-        .groupBy("lvl", "r", "c")
-        .agg(F.count("*").alias("cnt"))
-    )
-    drained = run_available_now(
-        cells, query_name="stream_sketch_quantile", output_mode="complete"
-    )
-    grid = drained.selectExpr("lvl", "r", "c", "CAST(cnt AS BIGINT) AS cnt")
-    return _dq_descend(li, grid)
 
 
 # ---------------------------------------------------------------------------
@@ -1662,8 +1411,8 @@ def stream_admission_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     def _stage(stream_dir: str) -> None:
-        _stage_batch(b1, stream_dir, "batch1.parquet", 1)
-        _stage_batch(b2, stream_dir, "batch2.parquet", 2)
+        stage_batch(b1, stream_dir, "batch1.parquet", 1)
+        stage_batch(b2, stream_dir, "batch2.parquet", 2)
 
     # incoming batches staged once per (sf_dir, source fingerprint); the GROWING
     # published index + decisions stay per-run (fresh uuid root below) —
@@ -1703,7 +1452,7 @@ def stream_admission_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     fold_stream(
-        _staged_stream(spark, stream_dir, "in_id bigint, text string, batch int"),
+        staged_stream(spark, stream_dir, "in_id bigint, text string, batch int"),
         os.path.join(root, "ckpt"),
         admit,
         dec_target,
@@ -1896,8 +1645,8 @@ def stream_admission_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     def _stage(stream_dir: str) -> None:
-        _stage_batch(b1, stream_dir, "batch1.parquet", 1)
-        _stage_batch(b2, stream_dir, "batch2.parquet", 2)
+        stage_batch(b1, stream_dir, "batch1.parquet", 1)
+        stage_batch(b2, stream_dir, "batch2.parquet", 2)
 
     # incoming batches staged once per (sf_dir, source fingerprint); the growing
     # published index + decisions stay per-run — see stream_admission_e2e
@@ -1940,7 +1689,7 @@ def stream_admission_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     fold_stream(
-        _staged_stream(
+        staged_stream(
             spark, stream_dir, "in_id bigint, v array<double>, batch int"
         ),
         os.path.join(root, "ckpt"),
@@ -2139,8 +1888,8 @@ def stream_admission_span(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     def _stage(stream_dir: str) -> None:
-        _stage_batch(b1, stream_dir, "batch1.parquet", 1)
-        _stage_batch(b2, stream_dir, "batch2.parquet", 2)
+        stage_batch(b1, stream_dir, "batch1.parquet", 1)
+        stage_batch(b2, stream_dir, "batch2.parquet", 2)
 
     # incoming batches staged once per (sf_dir, source fingerprint); the growing
     # published index + decisions stay per-run — see stream_admission_e2e
@@ -2179,7 +1928,7 @@ def stream_admission_span(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     fold_stream(
-        _staged_stream(spark, stream_dir, "in_id bigint, text string, batch int"),
+        staged_stream(spark, stream_dir, "in_id bigint, text string, batch int"),
         os.path.join(root, "ckpt"),
         admit,
         dec_target,
@@ -2270,7 +2019,7 @@ def stream_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"o_orderkey % {_SDP_BATCHES} + 1 AS batch",
         )
         for i in range(1, _SDP_BATCHES + 1):
-            _stage_batch(
+            stage_batch(
                 o.filter(F.col("batch") == i), stream_dir,
                 f"batch{i}.parquet", i,
             )
@@ -2291,7 +2040,7 @@ def stream_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
         return appended(rel, prev)
 
     fold_stream(
-        _staged_stream(spark, stream_dir, "prio string, batch bigint"),
+        staged_stream(spark, stream_dir, "prio string, batch bigint"),
         os.path.join(root, "ckpt"),
         release,
         led_target,

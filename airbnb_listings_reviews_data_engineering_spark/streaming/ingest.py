@@ -9,7 +9,10 @@ idempotently, and checkpointing gives exactly-once — retries come free
 foreachBatch harness in the package.
 
 Also provides a watermarked tumbling-window aggregation — the streaming
-operator a production events pipeline needs that the reference lacks.
+operator a production events pipeline needs that the reference lacks —
+and the staged-stream fixture the stream keys share: ``stage_batch``
+lands one micro-batch file, ``staged_stream`` replays a landing zone one
+file per micro-batch, ``stateful_layout`` sizes the state partitions.
 """
 
 from __future__ import annotations
@@ -17,10 +20,13 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..sources.parquet import row_count
 
 def events_schema(ts_nanos_long: bool) -> T.StructType:
     """Schema for the events table. Two physical generations exist:
@@ -634,3 +640,84 @@ def available_now_scd2_ingest(
         target_path,
     )
     return read_published(spark, target_path)
+
+
+@contextmanager
+def stateful_layout(spark: SparkSession, sf_dir: str, table: str):
+    """Size the keyed-state store layout to the stream, scale-adaptively.
+
+    The number of state partitions is fixed at query start from
+    ``spark.sql.shuffle.partitions``. Each partition pays per-BATCH
+    store open/commit/snapshot churn, and each key pays the per-key
+    Python serde of applyInPandasWithState — so too many partitions is
+    store churn (32 partitions for a fixture-sized feed: +1.7 s on the
+    admission drain) and too few serializes the per-key machinery
+    (2 partitions: +4.3 s). Sizing by source rows picks the measured
+    sweet spot locally (~8 at sf0.1) and grows to the cluster's
+    parallelism as the feed grows — the same sizing rule a production
+    stream applies to its key cardinality/throughput (cf. the
+    stream_stream_join 4-stores-per-partition rationale below).
+
+    Single-threaded-session assumption (ADVICE r13): this mutates the
+    session-global ``spark.sql.shuffle.partitions`` for the drain's
+    duration, so a query PLANNED concurrently on the same session would
+    inherit the reduced count. Every harness here (bench, mirror,
+    tests) drives one query at a time per session; a concurrent caller
+    must scope the drain to its own ``SparkSession.newSession()``. A
+    stateful checkpoint must also never be reused across runs with a
+    different computed ``parts`` (state partition count pins at first
+    run) — all drains here use fresh per-run checkpoints."""
+    n_rows = row_count(os.path.join(sf_dir, f"{table}.parquet"))
+    par = spark.sparkContext.defaultParallelism
+    parts = par if n_rows is None else min(par, max(2, n_rows // 12_500))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def stage_batch(df: DataFrame, stream_dir: str, name: str, seq: int) -> None:
+    """Land one micro-batch as a single deterministically-ordered
+    parquet file: write single-file, promote the part file to ``name``,
+    then stamp mtime so BOTH mtime and lexicographic path order the
+    batches — the file source's batch assignment is then deterministic.
+
+    The promotion is os-level, so a URI zone (a dist-FS staging root:
+    hdfs://, s3a://) raises loudly here instead of corrupting local
+    state — a real deployment points readStream at its actual landing
+    zone and never stages one (the fixture exists only to make
+    stream/batch equivalence hermetically testable)."""
+    import glob
+    import shutil
+
+    from ..sources.staging import fs_delete
+
+    if "://" in stream_dir:
+        raise NotImplementedError(
+            "simulated stream landing zones are driver-local fixtures; "
+            "on a dist-FS staging root point readStream at the real "
+            "landing zone instead"
+        )
+    staged = os.path.join(stream_dir, f"_stage_{seq}")
+    df.coalesce(1).write.parquet(staged)
+    part = glob.glob(os.path.join(staged, "part-*.parquet"))[0]
+    dest = os.path.join(stream_dir, name)
+    shutil.move(part, dest)
+    fs_delete(staged)
+    os.utime(dest, (1_700_000_000 + seq * 60, 1_700_000_000 + seq * 60))
+
+
+def staged_stream(spark: SparkSession, stream_dir: str, schema) -> DataFrame:
+    """File-source stream over a landing zone stage_batch filled: ONE
+    staged file per micro-batch (maxFilesPerTrigger=1), taken in the
+    mtime-and-path order stage_batch stamps — so each staged file is
+    exactly one micro-batch, in staging order, and the cross-batch
+    state (watermarks, timers, merges) the oracles replay is a pure
+    function of the staged files."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stream_dir)
+    )

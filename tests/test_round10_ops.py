@@ -44,18 +44,18 @@ def test_countmin_prime_rows_decorrelate_collisions():
     must break this: for pairs of keys that collide in row 0, at least
     one other row separates them (CRT: all-rows collision requires
     h1 = h2 mod p0*p1*p2 ~ 6.9e10)."""
-    from airbnb_listings_reviews_data_engineering_spark.plans.sketch_ext import (
-        _CM_D,
-        _CM_PRIMES,
+    from airbnb_listings_reviews_data_engineering_spark.operators.sketch import (
+        CM_D,
+        CM_PRIMES,
     )
 
-    assert len(set(_CM_PRIMES)) == _CM_D  # distinct widths per row
+    assert len(set(CM_PRIMES)) == CM_D  # distinct widths per row
     # find row-0 colliding pairs among a small key universe, then
     # check the other rows separate every one of them
     by_cell: dict[int, list[int]] = {}
     for k in range(20000):
         h = _hash60(str(k))
-        by_cell.setdefault(h % _CM_PRIMES[0], []).append(h)
+        by_cell.setdefault(h % CM_PRIMES[0], []).append(h)
     pairs = [
         (hs[i], hs[j])
         for hs in by_cell.values()
@@ -67,7 +67,7 @@ def test_countmin_prime_rows_decorrelate_collisions():
     fully_correlated = [
         (h1, h2)
         for h1, h2 in pairs
-        if all(h1 % p == h2 % p for p in _CM_PRIMES[1:])
+        if all(h1 % p == h2 % p for p in CM_PRIMES[1:])
     ]
     # with XOR'd power-of-two widths EVERY pair was fully correlated;
     # with distinct primes the expected count is ~len(pairs)/p1/p2 ~ 0

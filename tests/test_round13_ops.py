@@ -18,12 +18,10 @@ def _run_admission(spark, batches, gap_ms, cap, tmp_path):
     stateful-admission operator over them."""
     import pandas as pd
 
-    from airbnb_listings_reviews_data_engineering_spark.plans.streaming_q import (
-        _stage_batch,
-        _staged_stream,
-    )
     from airbnb_listings_reviews_data_engineering_spark.streaming.ingest import (
         run_available_now,
+        stage_batch,
+        staged_stream,
         stateful_admission,
     )
 
@@ -39,9 +37,9 @@ def _run_admission(spark, batches, gap_ms, cap, tmp_path):
             "user_id",
             F.lit(seq).alias("bseq"),
         )
-        _stage_batch(df, stream_dir, f"batch{seq}.parquet", seq)
+        stage_batch(df, stream_dir, f"batch{seq}.parquet", seq)
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    stream = _staged_stream(
+    stream = staged_stream(
         spark, stream_dir, "event_id bigint, ts timestamp, user_id bigint, bseq int"
     ).withWatermark("ts", "0 seconds")
     out = stateful_admission(
@@ -407,13 +405,11 @@ def test_session_finalize_gap_vs_timer_attribution(spark, tmp_path):
 
     import pandas as pd
 
-    from airbnb_listings_reviews_data_engineering_spark.plans.streaming_q import (
-        _stage_batch,
-        _staged_stream,
-    )
     from airbnb_listings_reviews_data_engineering_spark.streaming.ingest import (
         run_available_now,
         session_finalize,
+        stage_batch,
+        staged_stream,
     )
 
     stream_dir = str(tmp_path / "in")
@@ -439,9 +435,9 @@ def test_session_finalize_gap_vs_timer_attribution(spark, tmp_path):
             "user_id",
             F.col("vq").cast("long"),
         )
-        _stage_batch(df, stream_dir, f"batch{seq}.parquet", seq)
+        stage_batch(df, stream_dir, f"batch{seq}.parquet", seq)
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    stream = _staged_stream(
+    stream = staged_stream(
         spark, stream_dir, "event_id bigint, ts timestamp, user_id bigint, vq bigint"
     ).withWatermark("ts", "0 seconds")
     out = session_finalize(stream, gap_ms=3_600_000)
