@@ -32,11 +32,14 @@ textual rule: no per-vector window anywhere, and no corpus shuffle on
 vec_id inside a pinned stage.
 
 ``audit`` turns one built frame plus its drained stage plans into the
-key's plan shape (the LEDGER_FIELDS counts) and its flags. The registry
-sweep (tests/test_driver_oracle.py) audits every key from the same
-build it compares against the oracle, asserts no flags, and asserts the
-shape equals the key's entry in scripts/plan_ledger.json — any change
-to a plan's shape fails there until the ledger is regenerated.
+key's plan shape (the LEDGER_FIELDS counts) and its flags;
+``oracle_digest`` gives the ledger's last field, the md5 of the key's
+rendered oracle with whitespace runs collapsed. The registry sweep
+(tests/test_driver_oracle.py) audits every key from the same build it
+compares against the oracle, asserts no flags, and asserts the shape
+and the oracle digest equal the key's entry in scripts/plan_ledger.json
+— any change to a plan's shape or to an oracle's text fails there until
+the ledger is regenerated.
 
 Both the script and the sweep audit against an empty staging root: a
 key that serves a published artifact plans differently once the
@@ -51,6 +54,7 @@ Usage: python scripts/plan_audit.py
 
 from __future__ import annotations
 
+import hashlib
 import json
 import re
 import os
@@ -81,6 +85,7 @@ LEDGER_FIELDS = (
     "stage_exchanges",
     "stage_unpart_win",
     "stage_windows",
+    "oracle_md5",
 )
 
 # keys allowed to contain a nested-loop/cartesian join because one side is
@@ -403,8 +408,8 @@ def _max_pin_rescans(plan: str) -> int:
 def audit(key: str, df, stages) -> tuple[dict, list[str]]:
     """(plan shape, flags) of ``key``'s built frame ``df`` and the stage
     plans its pins recorded while it was built
-    (``checkpoint.drain_stage_plans``). The shape holds exactly the
-    LEDGER_FIELDS."""
+    (``checkpoint.drain_stage_plans``). The shape holds the
+    LEDGER_FIELDS but ``oracle_md5`` (``oracle_digest``)."""
     plan = formatted_plan(df)
     unpart_win = unpartitioned_windows(df)
     flags = _lint_plan_text(key, plan, unpart_win, stage=None)
@@ -447,6 +452,14 @@ def audit(key: str, df, stages) -> tuple[dict, list[str]]:
     return shape, flags
 
 
+def oracle_digest(spec, sf_dir: str) -> str:
+    """md5 of ``spec``'s oracle rendered at ``sf_dir``, whitespace runs
+    collapsed: a refactor of the builders may re-indent the SQL, but any
+    other change to its text shows."""
+    text = " ".join(spec.oracle_for(sf_dir).split())
+    return hashlib.md5(text.encode()).hexdigest()
+
+
 def load_ledger() -> dict[str, dict]:
     return json.loads(LEDGER_PATH.read_text())
 
@@ -475,6 +488,7 @@ def main() -> int:
             try:
                 df = spec.fn(spark, DEFAULT_SF_DIR)
                 ledger[key], flags = audit(key, df, _ckpt.drain_stage_plans(spark))
+                ledger[key]["oracle_md5"] = oracle_digest(spec, DEFAULT_SF_DIR)
             except Exception as e:  # noqa: BLE001 — report every key, then fail
                 flags = [f"ERROR:{e!r:.200}"]
             finally:

@@ -4,7 +4,8 @@ Each key is built once, at conftest's ``sf_dir``, with pin() recording
 its pre-materialization stage plans and an empty staging root, and
 that one build is:
 - audited by scripts/plan_audit.audit — no flags, and a plan shape
-  equal to the key's entry in scripts/plan_ledger.json;
+  plus oracle digest (plan_audit.oracle_digest) equal to the key's
+  entry in scripts/plan_ledger.json;
 - compared with its DuckDB oracle by scripts/oracle_check.check — the
   oracle type lint, the coarse Spark-vs-DuckDB type agreement, and the
   gate's column / row-count / order-insensitive value compare.
@@ -18,7 +19,7 @@ from airbnb_listings_reviews_data_engineering_spark import checkpoint
 from airbnb_listings_reviews_data_engineering_spark.plans import all_queries
 from airbnb_listings_reviews_data_engineering_spark.sources.staging import ROOT_CONF
 from scripts.oracle_check import check
-from scripts.plan_audit import audit, load_ledger
+from scripts.plan_audit import audit, load_ledger, oracle_digest
 
 QUERIES = all_queries()
 
@@ -45,6 +46,7 @@ def test_query_matches_oracle(key, spark, sf_dir, ledger):
     try:
         sdf = spec.fn(spark, sf_dir)
         shape, flags = audit(key, sdf, checkpoint.drain_stage_plans(spark))
+        shape["oracle_md5"] = oracle_digest(spec, sf_dir)
         problems = [f"{key}: plan flag {f}" for f in flags]
         problems += check(spec, sdf, sf_dir)
     finally:
@@ -55,7 +57,7 @@ def test_query_matches_oracle(key, spark, sf_dir, ledger):
     drift = {f: (want.get(f), v) for f, v in shape.items() if want.get(f) != v}
     if drift:
         problems.append(
-            f"{key}: plan shape drifted from scripts/plan_ledger.json "
+            f"{key}: plan shape or oracle drifted from scripts/plan_ledger.json "
             f"(field: (ledger, now)) {drift}"
         )
     assert not problems, "\n".join(problems)

@@ -1,6 +1,7 @@
 """Spark-free checks on the plan audit's inputs: the allowlists and the
 committed plan-shape ledger must name registered keys only, and the
-ledger must cover every key with exactly the audited fields.
+ledger must cover every key with exactly the audited fields: the ten
+plan-shape counts and the digest of the key's rendered oracle.
 
 The audit itself runs inside the registry sweep
 (tests/test_driver_oracle.py), which builds each key once and asserts
@@ -40,6 +41,7 @@ def test_ledger_covers_registry():
     registered = set(all_queries())
     assert sorted(registered - set(ledger)) == [], "keys missing from the ledger"
     assert sorted(set(ledger) - registered) == [], "ledger keys not registered"
+    assert len(LEDGER_FIELDS) == 11
     odd = {k: sorted(v) for k, v in ledger.items() if set(v) != set(LEDGER_FIELDS)}
     assert odd == {}
 
