@@ -125,7 +125,9 @@ def _session_key(spark: SparkSession) -> int:
     return id(spark.sparkContext)
 
 
-def _track(spark: SparkSession, df: DataFrame, releaser) -> None:
+def track(spark: SparkSession, df: DataFrame, releaser) -> None:
+    """Register ``releaser`` to run when ``release_pins`` frees ``df``'s
+    session pins (or ``release(df)`` frees ``df`` alone)."""
     _PINS.setdefault(_session_key(spark), []).append((weakref.ref(df), releaser))
 
 
@@ -170,7 +172,7 @@ def pin(df: DataFrame, *, eager: bool = True, label: str = "pin") -> DataFrame:
     mode = checkpoint_mode(spark)
     if mode == "local":
         out = df.localCheckpoint(eager=eager)
-        _track(spark, out, _local_releaser(out))
+        track(spark, out, _local_releaser(out))
         return out
     if mode == "reliable":
         sc = spark.sparkContext
@@ -185,7 +187,7 @@ def pin(df: DataFrame, *, eager: bool = True, label: str = "pin") -> DataFrame:
         # blocks also land in executor storage (checkpoint persists
         # before writing); free them the same way — the durable files
         # remain the recompute path.
-        _track(spark, out, _local_releaser(out))
+        track(spark, out, _local_releaser(out))
         return out
     # parquet
     from .sources.staging import fs_delete, staging_root
@@ -197,7 +199,7 @@ def pin(df: DataFrame, *, eager: bool = True, label: str = "pin") -> DataFrame:
     out = spark.read.parquet(path)
     # fs_delete, not rmtree: with a dist-FS staging root (hdfs://,
     # s3a://) rmtree silently never frees the staged pin (ADVICE r3)
-    _track(spark, out, lambda: fs_delete(path, spark))
+    track(spark, out, lambda: fs_delete(path, spark))
     return out
 
 

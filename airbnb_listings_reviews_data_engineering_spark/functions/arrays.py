@@ -49,3 +49,29 @@ def gram_positions(tok: Column | str, n: int) -> Column:
     return F.when(
         F.size(t) >= n, F.sequence(F.lit(1), F.size(t) - (n - 1))
     ).otherwise(F.array().cast("array<int>"))
+
+
+def word_trigrams(tok: str) -> Column:
+    """The space-joined word 3-grams of token array column ``tok``, in
+    position order; none under 3 tokens (gram_positions' guard)."""
+    return F.transform(
+        gram_positions(tok, 3),
+        lambda i: F.concat_ws(
+            " ",
+            F.element_at(tok, i),
+            F.element_at(tok, i + 1),
+            F.element_at(tok, i + 2),
+        ),
+    )
+
+
+def slice_trigrams(w: str) -> Column:
+    """The same 3-grams as one SQL lambda over ``slice``: each kept
+    start token is joined to the next two, and ``greatest(..., 0)``
+    keeps a doc under 3 tokens to the empty slice (a plain size - 2
+    would go negative)."""
+    return F.expr(
+        f"transform(slice({w}, 1, greatest(size({w}) - 2, 0)),"
+        f" (x, i) -> concat(x, ' ', element_at({w}, i + 2),"
+        f" ' ', element_at({w}, i + 3)))"
+    )

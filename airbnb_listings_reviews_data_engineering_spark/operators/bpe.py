@@ -59,7 +59,7 @@ def word_frequencies(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def _with_symbols(words: DataFrame) -> DataFrame:
+def with_symbols(words: DataFrame) -> DataFrame:
     """Add the space-sentineled char-level symbol string: 'abc' -> ' a b c '."""
     return words.withColumn(
         "sym", F.concat(F.lit(" "), F.regexp_replace("word", "(.)", "$1 "))
@@ -89,7 +89,7 @@ def bpe_train(words: DataFrame, merges: int) -> DataFrame:
     job per round instead of two (cf. operators/clustering.py, where
     the self-referencing centroid lineage DOES need per-round pins).
     """
-    sym = pin(_with_symbols(words), label="bpe_sym")
+    sym = pin(with_symbols(words), label="bpe_sym")
     winners = []
     for rank in range(1, merges + 1):
         best = pin(
@@ -134,7 +134,7 @@ def bpe_segmented_vocab(words: DataFrame, merges: int) -> DataFrame:
     symbol sequence — the tokenizer APPLY side over the training vocab.
     Reuses the training loop's final symbol table, so apply costs
     nothing beyond training."""
-    sym = pin(_with_symbols(words), label="bpe_sym")
+    sym = pin(with_symbols(words), label="bpe_sym")
     for _ in range(merges):
         best = pin(
             pair_counts(sym).orderBy(F.desc("cnt"), "l", "r").limit(1),
@@ -157,3 +157,61 @@ def bpe_segmented_vocab(words: DataFrame, merges: int) -> DataFrame:
         F.size(pieces).alias("n_pieces"),
         pieces.alias("pieces"),
     )
+
+
+# --- the DuckDB twin, for the oracles ----------------------------------------
+
+#: merge rounds of the one tokenizer the BPE keys train (text_bpe_*,
+#: text_tokenizer_fertility)
+BPE_MERGES = 6
+
+#: word_frequencies and with_symbols: the words table and its symbol
+#: strings (sym0)
+WORDS_CTE = """
+words AS (
+  SELECT w AS word, count(*)::BIGINT AS freq
+  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents) t
+  WHERE regexp_matches(w, '^[a-z]+$')
+  GROUP BY w
+),
+sym0 AS (
+  SELECT word, freq, ' ' || regexp_replace(word, '(.)', '\\1 ', 'g') AS sym
+  FROM words
+)"""
+
+
+def bpe_round_cte(i: int) -> str:
+    """One unrolled BPE round: pair counts over sym{i-1}, 1-row argmax
+    with the (cnt desc, l, r) tie-break, regex merge -> sym{i}."""
+    return f"""arr{i} AS (SELECT word, freq, string_split(trim(sym), ' ') AS a FROM sym{i - 1}),
+pairs{i} AS (
+  SELECT p[1] AS l, p[2] AS r, sum(freq)::BIGINT AS cnt
+  FROM (SELECT freq, unnest(list_transform(generate_series(1, len(a) - 1),
+                 i -> [a[i], a[i + 1]])) AS p
+        FROM arr{i})
+  GROUP BY p[1], p[2]
+),
+best{i} AS (SELECT l, r, cnt FROM pairs{i} ORDER BY cnt DESC, l, r LIMIT 1),
+sym{i} AS (
+  SELECT w.word, w.freq,
+         regexp_replace(w.sym, ' ' || b.l || ' ' || b.r || ' ',
+                        ' ' || b.l || b.r || ' ', 'g') AS sym
+  FROM sym{i - 1} w, best{i} b
+)"""
+
+
+def bpe_rounds_sql(merges: int) -> str:
+    """WITH words, sym0 and ``merges`` unrolled rounds, through
+    sym{merges} (bpe_train's loop)."""
+    rounds = ",\n".join(bpe_round_cte(i) for i in range(1, merges + 1))
+    return f"WITH {WORDS_CTE},\n{rounds}"
+
+
+def bpe_pieces_sql(merges: int) -> str:
+    """bpe_rounds_sql plus ``vocab`` (word, n_pieces): the pieces
+    bpe_segmented_vocab gives each word, for the keys that apply it."""
+    return f"""{bpe_rounds_sql(merges)},
+vocab AS (
+  SELECT word, len(string_split(trim(sym), ' '))::BIGINT AS n_pieces
+  FROM sym{merges}
+)"""

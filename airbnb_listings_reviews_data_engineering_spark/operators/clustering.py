@@ -23,7 +23,7 @@ from ..checkpoint import pin
 from ..functions.arrays import as_double_array
 
 
-def _sq_dist(a, b, dims: int | None = None):
+def sq_dist(a, b, dims: int | None = None):
     """Squared distance. With ``dims`` known, expand to a FLAT scalar
     sum — higher-order lambdas are interpreted (no codegen, no
     subexpression elimination), and the assignment step evaluates this
@@ -44,6 +44,15 @@ def _sq_dist(a, b, dims: int | None = None):
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
+
+
+def sq_dist_sql(dims: int) -> str:
+    """DuckDB twin of ``round(sq_dist(e.v, c.cv, dims), 6)``, the
+    rounded point-to-centroid distance every Lloyd oracle ranks by."""
+    return (
+        "round(list_sum(list_transform(generate_series(1, {dims}), "
+        "d -> (e.v[d] - c.cv[d]) * (e.v[d] - c.cv[d]))), 6)"
+    ).format(dims=dims)
 
 
 def assign_nearest(
@@ -75,7 +84,7 @@ def assign_nearest(
     scores = F.transform(
         F.col("_cents"),
         lambda c: F.struct(
-            F.round(_sq_dist(F.col(vec_col), c["cv"], dims), 6).alias("d2"),
+            F.round(sq_dist(F.col(vec_col), c["cv"], dims), 6).alias("d2"),
             c["cid"].alias("cid"),
         ),
     )
@@ -191,3 +200,102 @@ def kmeans_centroids(
     )
     cents, _ = _lloyd(v, id_col, k, iters, dims)
     return cents
+
+
+def kmeans_blocks(k: int, dims: int, iters: int) -> str:
+    """DuckDB twin of ``kmeans_centroids``: unrolled Lloyd iterations as
+    generated CTE blocks (e, c0, a1, c1, ... c{iters}) with ``_lloyd``'s
+    two rounding points — for every oracle that trains the same
+    centroids (ml_kmeans, the learned IVF, SemDedup, the balanced
+    samplers)."""
+    d2 = sq_dist_sql(dims)
+    blocks = [
+        f"""
+e AS (
+  SELECT vec_id,
+         list_transform(generate_series(1, {dims}), d -> CAST(embedding[d] AS DOUBLE)) AS v
+  FROM embeddings
+),
+c0 AS (SELECT CAST(vec_id - 1 AS INT) AS cid, v AS cv FROM e WHERE vec_id BETWEEN 1 AND {k})
+"""
+    ]
+    for it in range(1, iters + 1):
+        prev = f"c{it - 1}"
+        blocks.append(
+            f"""
+a{it} AS (
+  SELECT vec_id, v, cid FROM (
+    SELECT e.vec_id, e.v, c.cid,
+           row_number() OVER (PARTITION BY e.vec_id ORDER BY {d2}, c.cid) AS rn
+    FROM e CROSS JOIN {prev} c
+  ) WHERE rn = 1
+),
+c{it} AS (
+  SELECT cid, list(m ORDER BY pos) AS cv FROM (
+    SELECT cid, u.pos AS pos, round(avg(u.val), 6) AS m FROM (
+      SELECT cid,
+             unnest(list_transform(generate_series(1, {dims}),
+                    d -> struct_pack(pos := d, val := v[d]))) AS u
+      FROM a{it}
+    ) GROUP BY cid, u.pos
+  ) GROUP BY cid
+)
+"""
+        )
+    return ",".join(b.strip() for b in blocks)
+
+
+def pq_blocks(
+    sub: int, subdim: int, k: int, iters: int, train_n: int | None = None
+) -> str:
+    """One subspace's unrolled Lloyd chain (e{sub}, c{sub}_0, ... ),
+    mirroring kmeans_blocks above but over the dimension slice
+    [sub*subdim+1, (sub+1)*subdim] so the codebooks train
+    independently (sim_pq_quantize: 4x16x4; sim_ivfpq_topk: 8x8x16,
+    each subspace a separate call). ``train_n`` bounds the Lloyd
+    LEARNING SET to vec_id <= train_n (Jegou et al.'s practice — train
+    codebooks on a sample, code the whole corpus); the e{sub} slice CTE
+    itself stays full-corpus because coding and LUT CTEs read it."""
+    off = sub * subdim
+    t = f"s{sub}"
+    train_src = (
+        f"(SELECT * FROM e{t} WHERE vec_id <= {train_n})"
+        if train_n is not None
+        else f"e{t}"
+    )
+    d2 = sq_dist_sql(subdim)
+    blocks = [
+        f"""
+e{t} AS MATERIALIZED (
+  SELECT vec_id,
+         list_transform(generate_series({off + 1}, {off + subdim}),
+                        d -> CAST(embedding[d] AS DOUBLE)) AS v
+  FROM embeddings
+),
+c{t}0 AS (SELECT CAST(vec_id - 1 AS INT) AS cid, v AS cv
+          FROM e{t} WHERE vec_id BETWEEN 1 AND {k})
+"""
+    ]
+    for it in range(1, iters + 1):
+        prev = f"c{t}{it - 1}"
+        blocks.append(
+            f"""
+a{t}{it} AS (
+  SELECT vec_id, v, cid FROM (
+    SELECT e.vec_id, e.v, c.cid,
+           row_number() OVER (PARTITION BY e.vec_id ORDER BY {d2}, c.cid) AS rn
+    FROM {train_src} e CROSS JOIN {prev} c
+  ) WHERE rn = 1
+),
+c{t}{it} AS MATERIALIZED (
+  SELECT cid, list(m ORDER BY pos) AS cv FROM (
+    SELECT cid, u.pos AS pos, round(avg(u.val), 6) AS m FROM (
+      SELECT cid,
+             unnest(list_transform(generate_series(1, {subdim}),
+                    d -> struct_pack(pos := d, val := v[d]))) AS u
+      FROM a{t}{it}
+    ) GROUP BY cid, u.pos
+  ) GROUP BY cid
+)"""
+        )
+    return ",".join(b.strip() for b in blocks)

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import pin, release
 from ..functions.arrays import as_double_array, dot, norm
-from ..functions.hashing import hash60, hash60_spark_sql
+from ..functions.hashing import XOR_SEEDS, hash60, hash60_duckdb_sql, hash60_spark_sql
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -69,8 +69,6 @@ def minhash_signature(
     Column-expression only — the signature of a 100 TB corpus is one
     map-side pass. Returns (id_col, h0..h{k-1}).
     """
-    from ..functions.hashing import XOR_SEEDS
-
     if num_hashes > len(XOR_SEEDS):
         raise ValueError(f"at most {len(XOR_SEEDS)} permutations available")
     sh = with_shingles(df, text_col, shingle).withColumn(
@@ -83,7 +81,28 @@ def minhash_signature(
     return sh.select(F.col(id_col), *sig_cols)
 
 
-def _lsh_bands(
+def minhash_sig_sql() -> str:
+    """DuckDB twin of ``minhash_signature(corpus, "doc_id", "text")``
+    (8 hashes): CTEs tokd, shd, bhd and ``sig`` (doc_id, h0..h7) over a
+    ``corpus`` CTE the caller defines."""
+    hcols = ",\n  ".join(
+        f"list_min(list_transform(bh, h -> xor(h, {XOR_SEEDS[j]}))) AS h{j}"
+        for j in range(8)
+    )
+    return f"""
+tokd AS (SELECT doc_id, string_split(text, ' ') AS tok FROM corpus),
+shd AS (
+  SELECT doc_id,
+         list_transform(generate_series(1, len(tok) - 2),
+                        i -> tok[i] || ' ' || tok[i+1] || ' ' || tok[i+2]) AS shingles
+  FROM tokd WHERE len(tok) >= 3
+),
+bhd AS (SELECT doc_id, list_transform(shingles, s -> {hash60_duckdb_sql('s')}) AS bh FROM shd),
+sig AS (SELECT doc_id, {hcols} FROM bhd)
+"""
+
+
+def lsh_bands(
     sig: DataFrame, id_col: str, num_hashes: int = 8, bands: int = 4
 ) -> tuple[DataFrame, Column]:
     """The LSH band explode every MinHash band join shares: one row per
@@ -119,6 +138,27 @@ def _lsh_bands(
     return exploded, F.round(agree / F.lit(float(num_hashes)), 4)
 
 
+def band_match_sql(a: str, b: str, bands: int, num_hashes: int) -> tuple[str, str]:
+    """SQL twin of a band join of two lsh_bands frames aliased ``a`` and
+    ``b``: (collide, agree), where ``collide`` holds iff some band's
+    rows all agree and ``agree`` counts the agreeing hashes (the verify
+    estimate is ``agree / num_hashes``). Valid in Spark and DuckDB."""
+    rows = num_hashes // bands
+    collide = " OR ".join(
+        "("
+        + " AND ".join(
+            f"{a}.h{x * rows + r} = {b}.h{x * rows + r}" for r in range(rows)
+        )
+        + ")"
+        for x in range(bands)
+    )
+    agree = " + ".join(
+        f"(CASE WHEN {a}.h{j} = {b}.h{j} THEN 1 ELSE 0 END)"
+        for j in range(num_hashes)
+    )
+    return collide, agree
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -149,7 +189,7 @@ def minhash_lsh_pairs(
     # LSH-consuming key (guide §1.2).
     sig = pin(minhash_signature(df, id_col, text_col, num_hashes, shingle),
               eager=False, label="minhash_sig")
-    exploded, est = _lsh_bands(sig, id_col, num_hashes, bands)
+    exploded, est = lsh_bands(sig, id_col, num_hashes, bands)
     a = exploded.alias("a")
     b = exploded.alias("b")
     return (
@@ -637,7 +677,7 @@ def minhash_lsh_join(
         sig = minhash_signature(df, id_col, text_col, num_hashes, shingle)
         if do_pin:
             sig = pin(sig, label="lsh_join_sig")
-        return _lsh_bands(sig, id_col, num_hashes, bands)
+        return lsh_bands(sig, id_col, num_hashes, bands)
 
     # pin_batch=False lets a STREAMING batch side through (a streaming
     # DataFrame cannot localCheckpoint; its signature is recomputed per

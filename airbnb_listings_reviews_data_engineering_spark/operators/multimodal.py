@@ -26,7 +26,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from .ordered import ordered_scan
 
 BINARY_META_SCHEMA = "doc_id long, n_bytes long, digest string"
 DECODE_SCHEMA = "doc_id long, width int, height int, mean_intensity double"
@@ -1237,3 +1240,49 @@ def decode_png_stats(df: DataFrame) -> DataFrame:
             yield out
 
     return df.mapInPandas(batches, schema=DECODE_PNG_SCHEMA)
+
+
+# --- WebDataset-style shard manifest -----------------------------------------
+
+SHARD_BUDGET = 65536  # bytes per shard (nominal)
+
+#: DuckDB twin of shard_manifest over the documents table
+SHARD_MANIFEST_SQL = f"""
+WITH d AS (
+  SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS nb
+  FROM documents
+),
+c AS (
+  SELECT doc_id, nb,
+         sum(nb) OVER (ORDER BY doc_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - nb AS strt
+  FROM d
+),
+s AS (SELECT doc_id, nb, strt,
+             CAST(floor(strt / {SHARD_BUDGET}) AS BIGINT) AS shard FROM c)
+SELECT doc_id, shard,
+       CAST(strt - min(strt) OVER (PARTITION BY shard) AS BIGINT) AS offset, nb
+FROM s
+"""
+
+
+def shard_manifest(docs: DataFrame) -> DataFrame:
+    """(doc_id, shard, offset, nb): each document's payload packed in
+    doc_id order into ~SHARD_BUDGET-byte shards, with its byte offset
+    within the shard. The global byte cumsum comes from ``ordered_scan``;
+    the within-shard offset subtracts the shard's min start via a window
+    partitioned by shard."""
+    d = docs.select("doc_id", F.octet_length("text").cast("bigint").alias("nb"))
+    s = ordered_scan(d, ["doc_id"], ["nb"], label="mm_shard_manifest").select(
+        "doc_id", "nb", (F.col("cum_nb") - F.col("nb")).alias("strt")
+    )
+    s = s.withColumn(
+        "shard", F.floor(F.col("strt") / SHARD_BUDGET).cast("bigint")
+    )
+    w_shard = W.partitionBy("shard")
+    return s.select(
+        "doc_id",
+        "shard",
+        (F.col("strt") - F.min("strt").over(w_shard)).alias("offset"),
+        "nb",
+    )

@@ -263,3 +263,44 @@ def minimizer_selected(
     return nbr.filter(run_len("b") + run_len("f") >= w - 1).select(
         part_col, pos_col, h_col
     )
+
+
+def minimizer_lag_cols_sql(w: int) -> str:
+    """DuckDB twin of minimizer_selected's neighbor columns: lag/lead
+    b1..b{w-1}, f1..f{w-1} over WINDOW w."""
+    cols = [f"lag(h, {k}) OVER w AS b{k}" for k in range(1, w)]
+    cols += [f"lead(h, {k}) OVER w AS f{k}" for k in range(1, w)]
+    return ",\n         ".join(cols)
+
+
+def _minimizer_case_sql(prefix: str, w: int) -> str:
+    """Consecutive-non-smaller-neighbor run length on one side, capped
+    at w-1; a missing neighbor (doc boundary) blocks — so the window
+    the count certifies always holds w REAL grams."""
+    branches = [
+        f"WHEN {prefix}{k} IS NULL OR {prefix}{k} < h THEN {k - 1}"
+        for k in range(1, w)
+    ]
+    return "(CASE " + " ".join(branches) + f" ELSE {w - 1} END)"
+
+
+def minimizer_select_sql(w: int) -> str:
+    """DuckDB twin of minimizer_selected's filter.
+
+    EXACT (w, n)-minimizer membership: position p is selected iff it
+    is the minimum of SOME full w-gram window containing it, i.e. its
+    consecutive non-smaller predecessors plus consecutive non-smaller
+    successors cover a window: B + F >= w - 1. This carries the
+    winnowing guarantee (any shared run of >= w grams shares a selected
+    fingerprint: the run's leftmost minimum has only non-smaller
+    neighbors inside the run, and the two in-run runs sum to >= w - 1).
+    The cheaper trailing-window-only rule ("h = min of the window
+    ENDING at p") does NOT: a smaller doc-specific hash just before a
+    shared run shadows the run minimum in one document — measured as 5
+    missed >= 9-token pairs at sf0.1 before this fix."""
+    return (
+        _minimizer_case_sql("b", w)
+        + " + "
+        + _minimizer_case_sql("f", w)
+        + f" >= {w - 1}"
+    )

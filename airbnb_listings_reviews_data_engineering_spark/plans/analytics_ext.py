@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hash60, hash60_duckdb_sql, hash60_spark_sql
 from ..operators.ordered import ordered_scan
 from .registry import load, register
 
@@ -406,8 +407,7 @@ _TT_T = (
 _AB_TEST_SQL = f"""
 WITH assign AS (
   SELECT CAST(round(o_totalprice) AS BIGINT) AS y,
-         CAST('0x' || substr(md5('ab:' || CAST(o_orderkey AS VARCHAR)), 1, 15)
-              AS BIGINT) % 2 = 0 AS is_a
+         {hash60_duckdb_sql("'ab:' || CAST(o_orderkey AS VARCHAR)")} % 2 = 0 AS is_a
   FROM orders
 ), m AS (
   SELECT sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS na,
@@ -439,8 +439,6 @@ def ab_test_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric by construction, which is exactly the A/A sanity reading an
     experimentation platform requires."""
     o = load(spark, sf_dir, "orders")
-    from ..functions.hashing import hash60
-
     is_a = (
         F.pmod(
             hash60(F.concat(F.lit("ab:"), F.col("o_orderkey").cast("string"))),
@@ -516,8 +514,7 @@ WITH unit AS (
                         THEN o_totalprice ELSE 0 END)) AS BIGINT) AS x,
          CAST(round(sum(CASE WHEN o_orderdate >= TIMESTAMP '1998-01-01'
                         THEN o_totalprice ELSE 0 END)) AS BIGINT) AS y,
-         CAST('0x' || substr(md5('cuped:' || CAST(o_custkey AS VARCHAR)), 1, 15)
-              AS BIGINT) % 2 = 0 AS is_a
+         {hash60_duckdb_sql("'cuped:' || CAST(o_custkey AS VARCHAR)")} % 2 = 0 AS is_a
   FROM orders GROUP BY o_custkey
 ), m AS (
   SELECT count(*) AS n,
@@ -568,8 +565,6 @@ def ab_test_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     DOUBLE before any multiply so no int64 product overflows at
     scale."""
     o = load(spark, sf_dir, "orders")
-    from ..functions.hashing import hash60
-
     unit = o.groupBy("o_custkey").agg(
         F.round(
             F.sum(
@@ -675,8 +670,7 @@ WITH unit AS (
          CAST(sum(CASE WHEN event_type = 'purchase'
                   THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END)
               AS BIGINT) AS y,
-         CAST('0x' || substr(md5('rd:' || CAST(user_id AS VARCHAR)), 1, 15)
-              AS BIGINT) % 2 = 0 AS is_a
+         {hash60_duckdb_sql("'rd:' || CAST(user_id AS VARCHAR)")} % 2 = 0 AS is_a
   FROM events GROUP BY user_id
 ), m AS (
   SELECT CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS na,
@@ -713,8 +707,6 @@ def agg_ratio_delta_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments (event counts, revenue cents, squares, cross-products per
     variant) from ONE conditional-aggregation pass over the per-user
     rollup; bitwise reproducible, two shuffles total at any scale."""
-    from ..functions.hashing import hash60
-
     ev = load(spark, sf_dir, "events")
     unit = ev.groupBy("user_id").agg(
         F.count("*").alias("x"),
@@ -850,8 +842,6 @@ def _boot_weight_sql(r: int, dialect: str = "duckdb") -> str:
     """Copies of a unit in resample r: inverse-CDF of Poisson(1) on the
     md5 uniform. The hash60 value is bitwise identical across engines
     (functions/hashing.py); only the cast/concat spelling differs."""
-    from ..functions.hashing import hash60_duckdb_sql, hash60_spark_sql
-
     if dialect == "duckdb":
         h = hash60_duckdb_sql(f"'boot{r}:' || CAST(o_custkey AS VARCHAR)")
     else:

@@ -17,8 +17,13 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoint import pin
-from ..functions.arrays import as_double_array, gram_positions
+from ..functions.arrays import as_double_array, gram_positions, word_trigrams
+from ..functions.hashing import hash60, hash60_duckdb_sql, hash60_spark_sql
+from ..operators.bpe import BPE_MERGES, bpe_pieces_sql
+from ..operators.clustering import kmeans_blocks, pq_blocks, sq_dist, sq_dist_sql
+from ..operators.multimodal import SHARD_MANIFEST_SQL
 from ..operators.ordered import ordered_scan
+from ..operators.text import minimizer_lag_cols_sql, minimizer_select_sql
 from .registry import load, register
 
 # ---------------------------------------------------------------------------
@@ -102,11 +107,10 @@ def _semdedup_k(sf_dir: str) -> int:
 
 
 def _semdedup_sql(k: int = _SD_K) -> str:
-    from .pipeline_ext import _kmeans_blocks
 
     return (
         "WITH "
-        + _kmeans_blocks(k, _SD_DIMS, _SD_ITERS)
+        + kmeans_blocks(k, _SD_DIMS, _SD_ITERS)
         + f""",
 corpus AS (
   SELECT vec_id, v FROM e
@@ -777,11 +781,10 @@ _SD_PROBES = 2
 
 
 def _semdedup_mp_sql(k: int = _SD_K) -> str:
-    from .pipeline_ext import _kmeans_blocks
 
     return (
         "WITH "
-        + _kmeans_blocks(k, _SD_DIMS, _SD_ITERS)
+        + kmeans_blocks(k, _SD_DIMS, _SD_ITERS)
         + f""",
 corpus AS (
   SELECT vec_id, v FROM e
@@ -1032,17 +1035,7 @@ def text_kanon_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokd = docs.select("doc_id", F.split("text", " ").alias("tok"))
     grams = tokd.select(
         "doc_id",
-        F.explode(
-            F.transform(
-                gram_positions("tok", 3),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.element_at("tok", i),
-                    F.element_at("tok", i + 1),
-                    F.element_at("tok", i + 2),
-                ),
-            )
-        ).alias("g"),
+        F.explode(word_trigrams("tok")).alias("g"),
     )
     freq = grams.groupBy("g").agg(F.count("*").alias("corpus_c"))
     rare = F.when(F.col("corpus_c") < _KANON_K, 1).otherwise(0)
@@ -1073,8 +1066,6 @@ from ..functions.privacy import seeded_laplace_sql as _dp_noise_sql  # noqa: E40
 
 
 def _dp_sql() -> str:
-    from ..functions.hashing import hash60_duckdb_sql
-
     n_cnt = _dp_noise_sql("source || ':cnt'", f"1.0 / {_DP_EPS}",
                           hash60_duckdb_sql)
     n_tok = _dp_noise_sql("source || ':tok'", f"{_DP_CLIP} / {_DP_EPS}",
@@ -1112,8 +1103,6 @@ def agg_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     same pass; the noise is a scalar expression on the K-row aggregate
     — DP costs nothing at 100 TB. Emitted: (source, n_docs_noisy,
     n_tokens_noisy); production publishes ONLY these."""
-    from ..functions.hashing import hash60_spark_sql
-
     n_cnt = _dp_noise_sql("concat(source, ':cnt')", f"1.0 / {_DP_EPS}",
                           hash60_spark_sql)
     n_tok = _dp_noise_sql("concat(source, ':tok')", f"{_DP_CLIP} / {_DP_EPS}",
@@ -1202,15 +1191,7 @@ def eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fertility_sql() -> str:
-    from .iterative_ext import _BPE_MERGES, _WORDS_CTE, _bpe_round_cte
-
-    rounds = ",\n".join(_bpe_round_cte(i) for i in range(1, _BPE_MERGES + 1))
-    return f"""WITH {_WORDS_CTE},
-{rounds},
-vocab AS (
-  SELECT word, len(string_split(trim(sym), ' '))::BIGINT AS n_pieces
-  FROM sym{_BPE_MERGES}
-),
+    return f"""{bpe_pieces_sql(BPE_MERGES)},
 dt AS (
   SELECT lang, unnest(string_split(text, ' ')) AS w FROM documents
 )
@@ -1235,11 +1216,10 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums reduce map-side. Exact integer counts; one rounded division
     per language."""
     from ..operators.bpe import bpe_segmented_vocab, word_frequencies
-    from .iterative_ext import _BPE_MERGES
 
     docs = load(spark, sf_dir, "documents")
     words = word_frequencies(docs, "text")
-    vocab = bpe_segmented_vocab(words, merges=_BPE_MERGES).select(
+    vocab = bpe_segmented_vocab(words, merges=BPE_MERGES).select(
         "word", F.col("n_pieces").cast("bigint").alias("n_pieces")
     )
     dt = docs.select("lang", F.explode(F.split("text", " ")).alias("word"))
@@ -1359,10 +1339,8 @@ _N_READERS = 8
 
 
 def _reader_assignment_sql() -> str:
-    from .pipeline_ext import _SHARD_MANIFEST_SQL
-
     return f"""
-WITH manifest AS ({_SHARD_MANIFEST_SQL})
+WITH manifest AS ({SHARD_MANIFEST_SQL})
 SELECT CAST(shard % {_N_READERS} AS BIGINT) AS reader,
        CAST(count(DISTINCT shard) AS BIGINT) AS n_shards,
        CAST(count(*) AS BIGINT) AS n_members,
@@ -1403,24 +1381,17 @@ def mm_reader_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # product quantization: per-subspace codebooks + encoding
 # ---------------------------------------------------------------------------
 
-# PQ constants + the per-subspace Lloyd SQL chain live in
-# pipeline_ext (beside _kmeans_blocks) since round 10 — imported here
-# the same lazy way the other shared SQL builders are.
+_PQ_SUBSPACES = 4
+_PQ_SUBDIM = 16
+_PQ_K = 4
+_PQ_ITERS = 2
 
 
 def _pq_sql() -> str:
-    from .pipeline_ext import (
-        _PQ_ITERS,
-        _PQ_SUBDIM,
-        _PQ_SUBSPACES,
-        _pq_blocks,
+    d2 = sq_dist_sql(_PQ_SUBDIM)
+    chains = ",".join(
+        pq_blocks(s, _PQ_SUBDIM, _PQ_K, _PQ_ITERS) for s in range(_PQ_SUBSPACES)
     )
-
-    d2 = (
-        "round(list_sum(list_transform(generate_series(1, {dims}), "
-        "d -> (e.v[d] - c.cv[d]) * (e.v[d] - c.cv[d]))), 6)"
-    ).format(dims=_PQ_SUBDIM)
-    chains = ",".join(_pq_blocks(s) for s in range(_PQ_SUBSPACES))
     encodes = "\nUNION ALL\n".join(
         f"""SELECT {s} AS subspace, cid AS code,
        CAST(count(*) AS BIGINT) AS n_vectors,
@@ -1451,8 +1422,7 @@ def sim_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook-quality report (imbalanced codes or fat error cells =
     retrain). Distortions are fixed-pointed BEFORE summation so the
     report is order-free and bitwise reproducible."""
-    from ..operators.clustering import _sq_dist, kmeans_centroids
-    from .pipeline_ext import _PQ_ITERS, _PQ_K, _PQ_SUBDIM, _PQ_SUBSPACES
+    from ..operators.clustering import kmeans_centroids
 
     emb = load(spark, sf_dir, "embeddings")
     # encode side reads the corpus ONCE, carrying all four subspace
@@ -1495,7 +1465,7 @@ def sim_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             def f(c):
                 return F.struct(
                     F.round(
-                        _sq_dist(F.col(f"v{sub_idx}"), c["cv"], _PQ_SUBDIM), 6
+                        sq_dist(F.col(f"v{sub_idx}"), c["cv"], _PQ_SUBDIM), 6
                     ).alias("d2"),
                     c["cid"].alias("cid"),
                 )
@@ -2170,12 +2140,12 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 # watermark detection (green-list bias z-score)
 # ---------------------------------------------------------------------------
 
-_WM_SQL = """
+_WM_SQL = f"""
 WITH tokd AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
 ), flags AS (
   SELECT doc_id,
-         CASE WHEN CAST('0x' || substr(md5('wm:' || w), 1, 15) AS BIGINT)
+         CASE WHEN {hash60_duckdb_sql("'wm:' || w")}
                    % 2 = 0
               THEN 1 ELSE 0 END AS green
   FROM tokd
@@ -2206,8 +2176,6 @@ def text_watermark_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any corpus size. Expect ~no flags on natural text: the null
     holds, which is exactly the calibration property a detector must
     demonstrate before anyone trusts its positives."""
-    from ..functions.hashing import hash60
-
     tokd = load(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     )
@@ -2389,8 +2357,6 @@ _WIN_BASE = 31
 
 
 def _winnow_sql() -> str:
-    from .pipeline_ext import _minimizer_lag_cols_sql, _minimizer_select_sql
-
     h = (
         f"list_sum(list_transform(generate_series(i, i + {_WIN_K - 1}), "
         f"j -> CAST(ascii(substr(text, j, 1)) * "
@@ -2407,12 +2373,12 @@ WITH grams AS MATERIALIZED (
     FROM documents WHERE length(text) >= {_WIN_K}
   )
 ), nbr AS (
-  SELECT doc_id, pos, h, {_minimizer_lag_cols_sql(_WIN_W)}
+  SELECT doc_id, pos, h, {minimizer_lag_cols_sql(_WIN_W)}
   FROM grams
   WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
 ), selected AS (
   SELECT doc_id, h FROM nbr
-  WHERE {_minimizer_select_sql(_WIN_W)}
+  WHERE {minimizer_select_sql(_WIN_W)}
 )
 SELECT g.doc_id,
        CAST(count(*) AS BIGINT) AS n_kgrams,
@@ -2532,17 +2498,11 @@ _CBAL_CAP = 40
 
 
 def _cbal_sql() -> str:
-    from .pipeline_ext import _kmeans_blocks
-    from ..functions.hashing import hash60_duckdb_sql
-
-    d2 = (
-        "round(list_sum(list_transform(generate_series(1, {dims}), "
-        "d -> (e.v[d] - c.cv[d]) * (e.v[d] - c.cv[d]))), 6)"
-    ).format(dims=_CBAL_DIMS)
+    d2 = sq_dist_sql(_CBAL_DIMS)
     gate = hash60_duckdb_sql("CAST(vec_id AS VARCHAR) || '|cbal'")
     return (
         "WITH "
-        + _kmeans_blocks(_CBAL_K, _CBAL_DIMS, _CBAL_ITERS)
+        + kmeans_blocks(_CBAL_K, _CBAL_DIMS, _CBAL_ITERS)
         + f""",
 af AS (
   SELECT vec_id, cid FROM (
@@ -2585,7 +2545,6 @@ def sample_cluster_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell count, the one shuffle the semantics require. The md5 gate
     (hash60, bitwise cross-engine) replaces rand() so the kept set is
     retry- and partitioning-stable."""
-    from ..functions.hashing import hash60
     from ..operators.clustering import assign_nearest, kmeans_centroids
 
     emb = load(spark, sf_dir, "embeddings")
@@ -2700,15 +2659,11 @@ _PP_KEEP_NUM, _PP_KEEP_DEN = 7, 10  # keep the hardest 70 % per cluster
 
 
 def _proto_prune_sql() -> str:
-    from .pipeline_ext import _kmeans_blocks
 
-    d2 = (
-        "round(list_sum(list_transform(generate_series(1, {dims}), "
-        "d -> (e.v[d] - c.cv[d]) * (e.v[d] - c.cv[d]))), 6)"
-    ).format(dims=_CBAL_DIMS)
+    d2 = sq_dist_sql(_CBAL_DIMS)
     return (
         "WITH "
-        + _kmeans_blocks(_CBAL_K, _CBAL_DIMS, _CBAL_ITERS)
+        + kmeans_blocks(_CBAL_K, _CBAL_DIMS, _CBAL_ITERS)
         + f""",
 af AS (
   SELECT vec_id, cid, d2 FROM (

@@ -20,11 +20,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.bpe import (
+    BPE_MERGES,
+    bpe_pieces_sql,
+    bpe_rounds_sql,
     bpe_segmented_vocab,
     bpe_train,
     pair_counts,
+    with_symbols,
     word_frequencies,
-    _with_symbols,
 )
 from ..checkpoint import pin, small_pin_floor
 from ..operators.graph import pagerank_fixed
@@ -34,64 +37,26 @@ from ..operators.linalg import (
 )
 from .registry import load, register
 
-_BPE_MERGES = 6
-
 # ---------------------------------------------------------------- BPE SQL
-
-_WORDS_CTE = """
-words AS (
-  SELECT w AS word, count(*)::BIGINT AS freq
-  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents) t
-  WHERE regexp_matches(w, '^[a-z]+$')
-  GROUP BY w
-),
-sym0 AS (
-  SELECT word, freq, ' ' || regexp_replace(word, '(.)', '\\1 ', 'g') AS sym
-  FROM words
-)"""
-
-
-def _bpe_round_cte(i: int) -> str:
-    """One unrolled BPE round: pair counts over sym{i-1}, 1-row argmax
-    with the (cnt desc, l, r) tie-break, regex merge -> sym{i}."""
-    return f"""arr{i} AS (SELECT word, freq, string_split(trim(sym), ' ') AS a FROM sym{i - 1}),
-pairs{i} AS (
-  SELECT p[1] AS l, p[2] AS r, sum(freq)::BIGINT AS cnt
-  FROM (SELECT freq, unnest(list_transform(generate_series(1, len(a) - 1),
-                 i -> [a[i], a[i + 1]])) AS p
-        FROM arr{i})
-  GROUP BY p[1], p[2]
-),
-best{i} AS (SELECT l, r, cnt FROM pairs{i} ORDER BY cnt DESC, l, r LIMIT 1),
-sym{i} AS (
-  SELECT w.word, w.freq,
-         regexp_replace(w.sym, ' ' || b.l || ' ' || b.r || ' ',
-                        ' ' || b.l || b.r || ' ', 'g') AS sym
-  FROM sym{i - 1} w, best{i} b
-)"""
 
 
 def _bpe_train_sql(merges: int) -> str:
-    rounds = ",\n".join(_bpe_round_cte(i) for i in range(1, merges + 1))
     union = "\n  UNION ALL ".join(
         f"SELECT {i} AS rank, l AS lhs, r AS rhs, l || r AS merged, cnt FROM best{i}"
         for i in range(1, merges + 1)
     )
-    return f"WITH {_WORDS_CTE},\n{rounds}\nSELECT * FROM (\n  {union}\n) ORDER BY rank"
+    return f"{bpe_rounds_sql(merges)}\nSELECT * FROM (\n  {union}\n) ORDER BY rank"
 
 
 def _bpe_vocab_sql(merges: int) -> str:
-    rounds = ",\n".join(_bpe_round_cte(i) for i in range(1, merges + 1))
-    return f"""WITH {_WORDS_CTE},
-{rounds}
+    return f"""{bpe_rounds_sql(merges)}
 SELECT word, freq,
        len(string_split(trim(sym), ' '))::INT AS n_pieces,
        array_to_string(string_split(trim(sym), ' '), '|') AS piece_str
 FROM sym{merges}"""
 
 
-_PAIR_COUNTS_SQL = f"""WITH {_WORDS_CTE},
-{_bpe_round_cte(1)}
+_PAIR_COUNTS_SQL = f"""{bpe_rounds_sql(1)}
 SELECT l AS lhs, r AS rhs, cnt FROM pairs1 ORDER BY cnt DESC, l, r LIMIT 20"""
 
 
@@ -103,14 +68,14 @@ def text_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-sized shuffle."""
     words = word_frequencies(load(spark, sf_dir, "documents"), "text")
     return (
-        pair_counts(_with_symbols(words))
+        pair_counts(with_symbols(words))
         .orderBy(F.desc("cnt"), "l", "r")
         .limit(20)
         .select(F.col("l").alias("lhs"), F.col("r").alias("rhs"), "cnt")
     )
 
 
-@register("text_bpe_train", oracle=_bpe_train_sql(_BPE_MERGES))
+@register("text_bpe_train", oracle=_bpe_train_sql(BPE_MERGES))
 def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn 6 BPE merges from the documents corpus (operators/bpe.py).
     Rounds iterate over the word-frequency table only — the corpus is
@@ -118,17 +83,17 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax, and a broadcast merge apply. Oracle: the same 6 rounds
     unrolled as chained CTEs."""
     words = word_frequencies(load(spark, sf_dir, "documents"), "text")
-    return bpe_train(words, merges=_BPE_MERGES)
+    return bpe_train(words, merges=BPE_MERGES)
 
 
-@register("text_bpe_vocab", oracle=_bpe_vocab_sql(_BPE_MERGES))
+@register("text_bpe_vocab", oracle=_bpe_vocab_sql(BPE_MERGES))
 def text_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tokenizer APPLY side: the segmented vocabulary after 6 learned
     merges — (word, freq, n_pieces, piece_str). Piece order is the
     word's subword sequence, compared exactly (both engines derive it
     from the same deterministic merge semantics)."""
     words = word_frequencies(load(spark, sf_dir, "documents"), "text")
-    vocab = bpe_segmented_vocab(words, merges=_BPE_MERGES)
+    vocab = bpe_segmented_vocab(words, merges=BPE_MERGES)
     return vocab.select(
         "word",
         "freq",
@@ -310,13 +275,7 @@ def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_encode_sql(merges: int) -> str:
-    rounds = ",\n".join(_bpe_round_cte(i) for i in range(1, merges + 1))
-    return f"""WITH {_WORDS_CTE},
-{rounds},
-vocab AS (
-  SELECT word, len(string_split(trim(sym), ' '))::BIGINT AS n_pieces
-  FROM sym{merges}
-),
+    return f"""{bpe_pieces_sql(merges)},
 dt AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
 )
@@ -326,7 +285,7 @@ FROM dt JOIN vocab v ON dt.w = v.word
 GROUP BY dt.doc_id"""
 
 
-@register("text_bpe_encode_docs", oracle=_bpe_encode_sql(_BPE_MERGES))
+@register("text_bpe_encode_docs", oracle=_bpe_encode_sql(BPE_MERGES))
 def text_bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tokenizer applied to the corpus: per document, word count and
     subword count under the 6-merge BPE vocabulary — the number the
@@ -337,7 +296,7 @@ def text_bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     text_bpe_vocab, apply adds one map-side join + one doc-keyed agg."""
     docs = load(spark, sf_dir, "documents")
     words = word_frequencies(docs, "text")
-    vocab = bpe_segmented_vocab(words, merges=_BPE_MERGES).select(
+    vocab = bpe_segmented_vocab(words, merges=BPE_MERGES).select(
         "word", F.col("n_pieces").cast("long").alias("n_pieces")
     )
     toks = docs.select(

@@ -19,12 +19,19 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import pin
 
-from ..functions.arrays import as_double_array, cosine, gram_positions
-from ..functions.hashing import hash60_duckdb_sql
+from ..functions.arrays import as_double_array, cosine, slice_trigrams, word_trigrams
+from ..functions.hashing import (
+    XOR_SEEDS,
+    hash60,
+    hash60_duckdb_sql,
+    hash60_spark_sql,
+)
 from ..operators import dedup as D
 from ..operators import multimodal as MM
 from ..operators import similarity as S
 from ..operators import text as TX
+from ..operators.asof import ASOF_SQL
+from ..operators.clustering import kmeans_blocks, pq_blocks, sq_dist, sq_dist_sql
 from ..operators.ordered import ordered_scan
 from .registry import fan_out, load, register
 
@@ -58,40 +65,11 @@ _NUM_HASHES = 8
 _BANDS = 4
 
 
-def _minhash_sig_sql() -> str:
-    """DuckDB CTEs computing the same MinHash signature as
-    operators/dedup.py::minhash_signature (md5 once per shingle, XOR
-    permutation per h_j — see functions/hashing.py::XOR_SEEDS)."""
-    from ..functions.hashing import XOR_SEEDS
-
-    hcols = ",\n  ".join(
-        f"list_min(list_transform(bh, h -> xor(h, {XOR_SEEDS[j]}))) AS h{j}"
-        for j in range(_NUM_HASHES)
-    )
-    return f"""
-tokd AS (SELECT doc_id, string_split(text, ' ') AS tok FROM corpus),
-shd AS (
-  SELECT doc_id,
-         list_transform(generate_series(1, len(tok) - 2),
-                        i -> tok[i] || ' ' || tok[i+1] || ' ' || tok[i+2]) AS shingles
-  FROM tokd WHERE len(tok) >= 3
-),
-bhd AS (SELECT doc_id, list_transform(shingles, s -> {hash60_duckdb_sql('s')}) AS bh FROM shd),
-sig AS (SELECT doc_id, {hcols} FROM bhd)
-"""
-
-
 def _minhash_pairs_sql() -> str:
-    band_cond = " OR ".join(
-        "(" + " AND ".join(f"a.h{b*2+r} = b.h{b*2+r}" for r in range(2)) + ")"
-        for b in range(_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN a.h{j} = b.h{j} THEN 1 ELSE 0 END)" for j in range(_NUM_HASHES)
-    )
+    band_cond, agree = D.band_match_sql("a", "b", _BANDS, _NUM_HASHES)
     return f"""
 WITH {_VARIANT_CORPUS_SQL.strip().rstrip()},
-{_minhash_sig_sql().strip()}
+{D.minhash_sig_sql().strip()}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        round(({agree}) / {float(_NUM_HASHES)}, 4) AS est_jaccard
 FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_cond})
@@ -106,13 +84,7 @@ WHERE round(({agree}) / {float(_NUM_HASHES)}, 4) >= 0.5
 def _components_sql() -> str:
     """Recursive-CTE oracle for connected components over the MinHash
     near-dup pairs (restricted corpus slice keeps the closure tiny)."""
-    band_cond = " OR ".join(
-        "(" + " AND ".join(f"a.h{b*2+r} = b.h{b*2+r}" for r in range(2)) + ")"
-        for b in range(_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN a.h{j} = b.h{j} THEN 1 ELSE 0 END)" for j in range(_NUM_HASHES)
-    )
+    band_cond, agree = D.band_match_sql("a", "b", _BANDS, _NUM_HASHES)
     corpus = """
 corpus AS (
   SELECT doc_id, text FROM documents WHERE doc_id < 500
@@ -123,7 +95,7 @@ corpus AS (
 """
     return f"""
 WITH RECURSIVE {corpus.strip()},
-{_minhash_sig_sql().strip()},
+{D.minhash_sig_sql().strip()},
 pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_cond})
@@ -711,56 +683,11 @@ _KM_DIMS = 8
 _KM_ITERS = 2
 
 
-def _kmeans_blocks(k: int, dims: int, iters: int) -> str:
-    """Unrolled Lloyd iterations as generated CTE blocks (e, c0, a1, c1,
-    ... c{iters}), mirroring operators/clustering.py::_lloyd's two
-    rounding points — shared by the ml_kmeans oracle and the learned-IVF
-    oracle (which trains the same centroids, then probes them)."""
-    d2 = (
-        "round(list_sum(list_transform(generate_series(1, {dims}), "
-        "d -> (e.v[d] - c.cv[d]) * (e.v[d] - c.cv[d]))), 6)"
-    ).format(dims=dims)
-    blocks = [
-        f"""
-e AS (
-  SELECT vec_id,
-         list_transform(generate_series(1, {dims}), d -> CAST(embedding[d] AS DOUBLE)) AS v
-  FROM embeddings
-),
-c0 AS (SELECT CAST(vec_id - 1 AS INT) AS cid, v AS cv FROM e WHERE vec_id BETWEEN 1 AND {k})
-"""
-    ]
-    for it in range(1, iters + 1):
-        prev = f"c{it - 1}"
-        blocks.append(
-            f"""
-a{it} AS (
-  SELECT vec_id, v, cid FROM (
-    SELECT e.vec_id, e.v, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id ORDER BY {d2}, c.cid) AS rn
-    FROM e CROSS JOIN {prev} c
-  ) WHERE rn = 1
-),
-c{it} AS (
-  SELECT cid, list(m ORDER BY pos) AS cv FROM (
-    SELECT cid, u.pos AS pos, round(avg(u.val), 6) AS m FROM (
-      SELECT cid,
-             unnest(list_transform(generate_series(1, {dims}),
-                    d -> struct_pack(pos := d, val := v[d]))) AS u
-      FROM a{it}
-    ) GROUP BY cid, u.pos
-  ) GROUP BY cid
-)
-"""
-        )
-    return ",".join(b.strip() for b in blocks)
-
-
 def _kmeans_sql() -> str:
     flat = ", ".join(f"c.cv[{d}] AS c{d}" for d in range(1, _KM_DIMS + 1))
     return (
         "WITH "
-        + _kmeans_blocks(_KM_K, _KM_DIMS, _KM_ITERS)
+        + kmeans_blocks(_KM_K, _KM_DIMS, _KM_ITERS)
         + f"""
 SELECT c.cid, n.n_points, {flat}
 FROM c{_KM_ITERS} c
@@ -795,7 +722,7 @@ def _ivf_learned_sql() -> str:
     cos_vq = _EMB_COS.format(a="a.v", b="qc.qv")
     return (
         "WITH "
-        + _kmeans_blocks(_IVFL_K, _IVFL_DIMS, _KM_ITERS)
+        + kmeans_blocks(_IVFL_K, _IVFL_DIMS, _KM_ITERS)
         + f""",
 cents AS (SELECT cid AS cell, cv FROM c{_KM_ITERS}),
 q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id % 100 = 0 AND vec_id < 2005),
@@ -974,13 +901,7 @@ def grouped_pandas_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _asof_sql() -> str:
-    from .window_ext import _ASOF_SQL
-
-    return _ASOF_SQL
-
-
-@register("cogrouped_pandas_asof", oracle=_asof_sql())
+@register("cogrouped_pandas_asof", oracle=ASOF_SQL)
 def cogrouped_pandas_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cogrouped applyInPandas: events and orders cogrouped per user,
     joined inside the worker with pandas merge_asof (backward, exact
@@ -1934,62 +1855,22 @@ _SPANX_N = 6  # duplicated-span threshold in tokens (50 on real text;
 _WSPAN_W = 4        # winnowing window (gram positions per window)
 _WSPAN_DF_CAP = 50  # drop fingerprints shared by more than this many docs
 
-
-
-def _minimizer_lag_cols_sql(w: int) -> str:
-    """lag/lead neighbor columns b1..b{w-1}, f1..f{w-1} over WINDOW w."""
-    cols = [f"lag(h, {k}) OVER w AS b{k}" for k in range(1, w)]
-    cols += [f"lead(h, {k}) OVER w AS f{k}" for k in range(1, w)]
-    return ",\n         ".join(cols)
-
-
-def _minimizer_case_sql(prefix: str, w: int) -> str:
-    """Consecutive-non-smaller-neighbor run length on one side, capped
-    at w-1; a missing neighbor (doc boundary) blocks — so the window
-    the count certifies always holds w REAL grams."""
-    branches = [
-        f"WHEN {prefix}{k} IS NULL OR {prefix}{k} < h THEN {k - 1}"
-        for k in range(1, w)
-    ]
-    return "(CASE " + " ".join(branches) + f" ELSE {w - 1} END)"
-
-
-def _minimizer_select_sql(w: int) -> str:
-    """EXACT (w, n)-minimizer membership: position p is selected iff it
-    is the minimum of SOME full w-gram window containing it, i.e. its
-    consecutive non-smaller predecessors plus consecutive non-smaller
-    successors cover a window: B + F >= w - 1. This carries the
-    winnowing guarantee (any shared run of >= w grams shares a selected
-    fingerprint: the run's leftmost minimum has only non-smaller
-    neighbors inside the run, and the two in-run runs sum to >= w - 1).
-    The cheaper trailing-window-only rule ("h = min of the window
-    ENDING at p") does NOT: a smaller doc-specific hash just before a
-    shared run shadows the run minimum in one document — measured as 5
-    missed >= 9-token pairs at sf0.1 before this fix."""
-    return (
-        _minimizer_case_sql("b", w)
-        + " + "
-        + _minimizer_case_sql("f", w)
-        + f" >= {w - 1}"
-    )
-
 _WSPAN_SQL = f"""
 WITH tok AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
 grams AS (
   SELECT doc_id, i AS pos,
-         CAST('0x' || substr(md5(array_to_string(w[i:i+{_SPANX_N - 1}], ' ')),
-              1, 15) AS BIGINT) AS h
+         {hash60_duckdb_sql(f"array_to_string(w[i:i+{_SPANX_N - 1}], ' ')")} AS h
   FROM tok, unnest(generate_series(1, len(w) - {_SPANX_N - 1})) AS t(i)
   WHERE len(w) >= {_SPANX_N}
 ),
 nbr AS (
-  SELECT doc_id, pos, h, {_minimizer_lag_cols_sql(_WSPAN_W)}
+  SELECT doc_id, pos, h, {TX.minimizer_lag_cols_sql(_WSPAN_W)}
   FROM grams
   WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
 ),
 sel AS (
   SELECT DISTINCT doc_id, h FROM nbr
-  WHERE {_minimizer_select_sql(_WSPAN_W)}
+  WHERE {TX.minimizer_select_sql(_WSPAN_W)}
 ),
 keep AS (
   SELECT h FROM sel GROUP BY h
@@ -2025,8 +1906,6 @@ def dedup_span_winnowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate guard dedup_shared_spans uses), so candidate
     generation is linear in true collisions. Fingerprints are hash60 —
     bitwise cross-engine."""
-    from ..functions.hashing import hash60_spark_sql
-
     docs = load(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     gram_h = hash60_spark_sql(f"concat_ws(' ', slice(w, i + 1, {_SPANX_N}))")
     grams = docs.select(
@@ -2139,14 +2018,7 @@ _DPOL_NEAR_MOD = 5    # every 5th doc: first-word-drop near-dup
 
 
 def _dedup_policy_sql() -> str:
-    band_cond = " OR ".join(
-        "(" + " AND ".join(f"a.h{b*2+r} = b.h{b*2+r}" for r in range(2)) + ")"
-        for b in range(_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN a.h{j} = b.h{j} THEN 1 ELSE 0 END)"
-        for j in range(_NUM_HASHES)
-    )
+    band_cond, agree = D.band_match_sql("a", "b", _BANDS, _NUM_HASHES)
     return f"""
 WITH RECURSIVE corpus0 AS (
   SELECT doc_id, text FROM documents WHERE doc_id < {_DPOL_MAX_ID}
@@ -2175,7 +2047,7 @@ corpus AS (
   SELECT min(doc_id) AS doc_id, arg_min(text, doc_id) AS text
   FROM canon0 GROUP BY ch
 ),
-{_minhash_sig_sql().strip()},
+{D.minhash_sig_sql().strip()},
 pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ({band_cond})
@@ -2373,7 +2245,7 @@ sp AS (
   SELECT DISTINCT doc_id, h FROM (
     SELECT doc_id,
            unnest(list_transform(generate_series(1, len(tok) - {_SPAN_W - 1}),
-             i -> CAST('0x' || substr(md5(array_to_string(tok[i:i+{_SPAN_W - 1}], ' ')), 1, 15) AS BIGINT))) AS h
+             i -> {hash60_duckdb_sql(f"array_to_string(tok[i:i+{_SPAN_W - 1}], ' ')")})) AS h
     FROM tokd WHERE len(tok) >= {_SPAN_W})
 ),
 keep AS (
@@ -2414,8 +2286,8 @@ def dedup_shared_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(
                 F.expr(
                     f"transform(sequence(0, size(tok) - {_SPAN_W}), i -> "
-                    "cast(conv(substr(md5(concat_ws(' ', "
-                    f"slice(tok, i + 1, {_SPAN_W}))), 1, 15), 16, 10) as bigint))"
+                    + hash60_spark_sql(f"concat_ws(' ', slice(tok, i + 1, {_SPAN_W}))")
+                    + ")"
                 )
             ).alias("h"),
         )
@@ -2456,8 +2328,7 @@ def _span_excise_sql(keep_first: bool) -> str:
 WITH tok AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
 grams AS (
   SELECT doc_id, i AS pos,
-         CAST('0x' || substr(md5(array_to_string(w[i:i+{_SPANX_N - 1}], ' ')),
-              1, 15) AS BIGINT) AS h
+         {hash60_duckdb_sql(f"array_to_string(w[i:i+{_SPANX_N - 1}], ' ')")} AS h
   FROM tok, unnest(generate_series(1, len(w) - {_SPANX_N - 1})) AS t(i)
   WHERE len(w) >= {_SPANX_N}
 ),
@@ -2547,8 +2418,6 @@ def dedup_span_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _batch_sig_sql(src: str, name: str) -> str:
     """DuckDB signature CTE chain for an arbitrary (doc_id, text) source
     — same MinHash parameters as the Spark side."""
-    from ..functions.hashing import XOR_SEEDS
-
     hcols = ",\n  ".join(
         f"list_min(list_transform(bh_{name}, h -> xor(h, {XOR_SEEDS[j]}))) AS h{j}"
         for j in range(_NUM_HASHES)
@@ -2567,13 +2436,7 @@ sig_{name} AS (SELECT doc_id, {hcols} FROM b_{name})
 
 
 def _incremental_sql() -> str:
-    band_cond = " OR ".join(
-        "(" + " AND ".join(f"b.h{bd*2+r} = c.h{bd*2+r}" for r in range(2)) + ")"
-        for bd in range(_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN b.h{j} = c.h{j} THEN 1 ELSE 0 END)" for j in range(_NUM_HASHES)
-    )
+    band_cond, agree = D.band_match_sql("b", "c", _BANDS, _NUM_HASHES)
     return f"""
 WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id < 400),
 batch AS (
@@ -2943,28 +2806,7 @@ def text_perplexity_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- WebDataset-style shard manifest -----------------------------------------
 
-_SHARD_BUDGET = 65536  # bytes per shard (nominal)
-
-_SHARD_MANIFEST_SQL = f"""
-WITH d AS (
-  SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS nb
-  FROM documents
-),
-c AS (
-  SELECT doc_id, nb,
-         sum(nb) OVER (ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - nb AS strt
-  FROM d
-),
-s AS (SELECT doc_id, nb, strt,
-             CAST(floor(strt / {_SHARD_BUDGET}) AS BIGINT) AS shard FROM c)
-SELECT doc_id, shard,
-       CAST(strt - min(strt) OVER (PARTITION BY shard) AS BIGINT) AS offset, nb
-FROM s
-"""
-
-
-@register("mm_shard_manifest", oracle=_SHARD_MANIFEST_SQL)
+@register("mm_shard_manifest", oracle=MM.SHARD_MANIFEST_SQL)
 def mm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seekable shard manifest for binary payloads (the WebDataset /
     tar-shard layout of multimodal training data): blobs in doc_id order
@@ -2977,24 +2819,7 @@ def mm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard's min start via a window PARTITIONED by shard (per-shard
     state, scale safe; shard count grows with bytes so it is never
     broadcast)."""
-    from pyspark.sql import Window as W
-
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id", F.octet_length("text").cast("bigint").alias("nb")
-    )
-    s = ordered_scan(d, ["doc_id"], ["nb"], label="mm_shard_manifest").select(
-        "doc_id", "nb", (F.col("cum_nb") - F.col("nb")).alias("strt")
-    )
-    s = s.withColumn(
-        "shard", F.floor(F.col("strt") / _SHARD_BUDGET).cast("bigint")
-    )
-    w_shard = W.partitionBy("shard")
-    return s.select(
-        "doc_id",
-        "shard",
-        (F.col("strt") - F.min("strt").over(w_shard)).alias("offset"),
-        "nb",
-    )
+    return MM.shard_manifest(load(spark, sf_dir, "documents"))
 
 
 # --- distinctive-shingle containment (sub-document duplication) --------------
@@ -3088,8 +2913,6 @@ def xform_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparable without map-type hashing differences). Collisions are
     the accepted semantics of the trick; hash60 makes them IDENTICAL
     collisions on both engines."""
-    from ..functions.hashing import hash60
-
     tok = load(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     )
@@ -3156,8 +2979,6 @@ def sample_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair's cosine and a same-label marker (hard-negative diagnostics:
     same-label draws are the ones curriculum miners re-sample)."""
     from ..functions.arrays import as_double_array, cosine
-    from ..functions.hashing import hash60
-
     # pinned: the count, the anchor side and the negative side all read
     # this decoded projection — unpinned, 3 full embeddings scans in
     # the final plan (max_rescan audit, round 7)
@@ -3617,8 +3438,6 @@ def pipeline_rag_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     min chunk id; bucket counts prove the routing is balanced."""
     from pyspark.sql import Window as W
 
-    from ..functions.hashing import hash60 as _h60
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.size(F.split("text", " ")).between(20, 1000))
     chunks = TX.chunk_tokens(corpus, "doc_id", "text", chunk=50, stride=25)
@@ -3629,7 +3448,7 @@ def pipeline_rag_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         canon.select(
-            F.pmod(_h60(F.col("chunk_text")), F.lit(16)).alias("bucket"),
+            F.pmod(hash60(F.col("chunk_text")), F.lit(16)).alias("bucket"),
             "doc_id",
             F.md5("chunk_text").alias("chunk_id"),
         )
@@ -4590,17 +4409,7 @@ def text_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokd = df.select("doc_id", F.split("text", " ").alias("tok"))
         return tokd.select(
             "doc_id",
-            F.explode(
-                F.transform(
-                    gram_positions("tok", 3),
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.element_at("tok", i),
-                        F.element_at("tok", i + 1),
-                        F.element_at("tok", i + 2),
-                    ),
-                )
-            ).alias("g"),
+            F.explode(word_trigrams("tok")).alias("g"),
         )
 
     # pinned: the distinct gram set and the final probe join both read
@@ -5138,13 +4947,7 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = tok.select(
         "doc_id",
         "source",
-        F.explode_outer(
-            F.expr(
-                f"transform(slice(w, 1, greatest(size(w) - {_DECON_N - 1}, 0)),"
-                " (x, i) -> concat(x, ' ', element_at(w, i + 2),"
-                " ' ', element_at(w, i + 3)))"
-            )
-        ).alias("g"),
+        F.explode_outer(slice_trigrams("w")).alias("g"),
     )
     ev = pin(
         grams.filter(
@@ -5206,13 +5009,7 @@ def text_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = tok.select(
         "doc_id",
         "source",
-        F.explode(
-            F.expr(
-                f"transform(slice(w, 1, greatest(size(w) - {_DECON_N - 1}, 0)),"
-                " (x, i) -> concat(x, ' ', element_at(w, i + 2),"
-                " ' ', element_at(w, i + 3)))"
-            )
-        ).alias("g"),
+        F.explode(slice_trigrams("w")).alias("g"),
     )
     ev = pin(
         grams.filter(F.col("doc_id") % _DECON_EVAL_MOD == 0)
@@ -5321,13 +5118,7 @@ def pipeline_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = base.filter(F.col("doc_id") % _DECON_EVAL_MOD != 0)
     grams = base.select(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(slice(w, 1, greatest(size(w) - {_DECON_N - 1}, 0)),"
-                " (x, i) -> concat(x, ' ', element_at(w, i + 2),"
-                " ' ', element_at(w, i + 3)))"
-            )
-        ).alias("g"),
+        F.explode(slice_trigrams("w")).alias("g"),
     )
     ev = pin(
         grams.filter(F.col("doc_id") % _DECON_EVAL_MOD == 0)
@@ -5517,18 +5308,11 @@ _LEAK_TEST_MOD = 7  # doc_id % 7 == 0 -> test split (100000 % 7 != 0, so a
 
 
 def _leakage_sql() -> str:
-    band_cond = " OR ".join(
-        "(" + " AND ".join(f"a.h{b*2+r} = b.h{b*2+r}" for r in range(2)) + ")"
-        for b in range(_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN a.h{j} = b.h{j} THEN 1 ELSE 0 END)"
-        for j in range(_NUM_HASHES)
-    )
+    band_cond, agree = D.band_match_sql("a", "b", _BANDS, _NUM_HASHES)
     m = _LEAK_TEST_MOD
     return f"""
 WITH {_VARIANT_CORPUS_SQL.strip().rstrip()},
-{_minhash_sig_sql().strip()},
+{D.minhash_sig_sql().strip()},
 pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          round(({agree}) / {float(_NUM_HASHES)}, 4) AS est
@@ -5778,13 +5562,7 @@ def _mm_pair_sql() -> str:
         f"THEN ({_PH_PX_DUCK} + 128) % 256 ELSE {_PH_PX_DUCK} END"
     )
     chunk = "(h >> (16 * ck)) & 65535"
-    band_cond = " OR ".join(
-        "(" + " AND ".join(f"a.h{b*2+r} = b.h{b*2+r}" for r in range(2)) + ")"
-        for b in range(_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN a.h{j} = b.h{j} THEN 1 ELSE 0 END)" for j in range(_NUM_HASHES)
-    )
+    band_cond, agree = D.band_match_sql("a", "b", _BANDS, _NUM_HASHES)
     return f"""
 WITH pairs_c AS (
   SELECT doc_id * 2 AS pair_id, text AS caption FROM documents
@@ -5796,7 +5574,7 @@ WITH pairs_c AS (
   FROM documents
 ),
 corpus AS (SELECT pair_id AS doc_id, caption AS text FROM pairs_c),
-{_minhash_sig_sql().strip()},
+{D.minhash_sig_sql().strip()},
 cap AS (
   SELECT a.doc_id AS pair_a, b.doc_id AS pair_b,
          round(({agree}) / {float(_NUM_HASHES)}, 4) AS est_jaccard
@@ -5943,20 +5721,7 @@ def mm_pair_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=False,  # lazy — see mm_pair_corpus
         label="mm_pair_cap_sig",
     )
-    rows_per_band = _NUM_HASHES // _BANDS
-    band_collide = " OR ".join(
-        "("
-        + " AND ".join(
-            f"a.h{b * rows_per_band + r} = b.h{b * rows_per_band + r}"
-            for r in range(rows_per_band)
-        )
-        + ")"
-        for b in range(_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN a.h{j} = b.h{j} THEN 1 ELSE 0 END)"
-        for j in range(_NUM_HASHES)
-    )
+    band_collide, agree = D.band_match_sql("a", "b", _BANDS, _NUM_HASHES)
     a = sig.alias("a")
     b = sig.alias("b")
     return (
@@ -6111,14 +5876,7 @@ def _adm_sql() -> str:
                 cc="concat", seq="generate_series")
     junk = _ADM_JUNK.format(**duck)
     good = _ADM_GOOD.format(**duck)
-    band_cond = " OR ".join(
-        "(" + " AND ".join(f"a.h{b*2+r} = b.h{b*2+r}" for r in range(2)) + ")"
-        for b in range(_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN a.h{j} = b.h{j} THEN 1 ELSE 0 END)"
-        for j in range(_NUM_HASHES)
-    )
+    band_cond, agree = D.band_match_sql("a", "b", _BANDS, _NUM_HASHES)
     return f"""
 WITH inc AS (
   SELECT doc_id + 300000 AS in_id, text FROM documents WHERE doc_id % 13 = 0
@@ -6144,7 +5902,7 @@ corpus AS (
   UNION ALL
   SELECT in_id AS doc_id, text FROM surv
 ),
-{_minhash_sig_sql().strip()},
+{D.minhash_sig_sql().strip()},
 nd AS (
   SELECT DISTINCT a.doc_id AS in_id
   FROM sig a JOIN sig b
@@ -6314,78 +6072,6 @@ def pipeline_admission_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_SUBSPACES = 4
-_PQ_SUBDIM = 16
-_PQ_K = 4
-_PQ_ITERS = 2
-
-
-def _pq_blocks(
-    sub: int,
-    subdim: int | None = None,
-    k: int | None = None,
-    iters: int | None = None,
-    train_n: int | None = None,
-) -> str:
-    """One subspace's unrolled Lloyd chain (e{sub}, c{sub}_0, ... ),
-    mirroring _kmeans_blocks above but over the dimension slice
-    [sub*subdim+1, (sub+1)*subdim] so the codebooks train
-    independently. Defaults are sim_pq_quantize's 4x16x4 layout;
-    sim_ivfpq_topk passes its own 8x8x16. ``train_n`` bounds the Lloyd
-    LEARNING SET to vec_id <= train_n (Jegou et al.'s practice — train
-    codebooks on a sample, code the whole corpus); the e{sub} slice CTE
-    itself stays full-corpus because coding and LUT CTEs read it."""
-    subdim = _PQ_SUBDIM if subdim is None else subdim
-    k = _PQ_K if k is None else k
-    iters = _PQ_ITERS if iters is None else iters
-    off = sub * subdim
-    t = f"s{sub}"
-    train_src = (
-        f"(SELECT * FROM e{t} WHERE vec_id <= {train_n})"
-        if train_n is not None
-        else f"e{t}"
-    )
-    d2 = (
-        "round(list_sum(list_transform(generate_series(1, {dims}), "
-        "d -> (e.v[d] - c.cv[d]) * (e.v[d] - c.cv[d]))), 6)"
-    ).format(dims=subdim)
-    blocks = [
-        f"""
-e{t} AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(generate_series({off + 1}, {off + subdim}),
-                        d -> CAST(embedding[d] AS DOUBLE)) AS v
-  FROM embeddings
-),
-c{t}0 AS (SELECT CAST(vec_id - 1 AS INT) AS cid, v AS cv
-          FROM e{t} WHERE vec_id BETWEEN 1 AND {k})
-"""
-    ]
-    for it in range(1, iters + 1):
-        prev = f"c{t}{it - 1}"
-        blocks.append(
-            f"""
-a{t}{it} AS (
-  SELECT vec_id, v, cid FROM (
-    SELECT e.vec_id, e.v, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id ORDER BY {d2}, c.cid) AS rn
-    FROM {train_src} e CROSS JOIN {prev} c
-  ) WHERE rn = 1
-),
-c{t}{it} AS MATERIALIZED (
-  SELECT cid, list(m ORDER BY pos) AS cv FROM (
-    SELECT cid, u.pos AS pos, round(avg(u.val), 6) AS m FROM (
-      SELECT cid,
-             unnest(list_transform(generate_series(1, {subdim}),
-                    d -> struct_pack(pos := d, val := v[d]))) AS u
-      FROM a{t}{it}
-    ) GROUP BY cid, u.pos
-  ) GROUP BY cid
-)"""
-        )
-    return ",".join(b.strip() for b in blocks)
-
-
 # ---------------------------------------------------------------------------
 # IVF-PQ composite ANN: coded candidates, exact re-rank (VERDICT r9 #4)
 # ---------------------------------------------------------------------------
@@ -6411,12 +6097,9 @@ _IVFPQ_TRAIN_N = 512
 
 
 def _ivfpq_sql() -> str:
-    d2 = (
-        "round(list_sum(list_transform(generate_series(1, {dims}), "
-        "d -> (e.v[d] - c.cv[d]) * (e.v[d] - c.cv[d]))), 6)"
-    ).format(dims=_IVFPQ_SUBDIM)
+    d2 = sq_dist_sql(_IVFPQ_SUBDIM)
     chains = ",".join(
-        _pq_blocks(
+        pq_blocks(
             s,
             subdim=_IVFPQ_SUBDIM,
             k=_IVFPQ_CODES,
@@ -6533,7 +6216,6 @@ def _ivfpq_train_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Lloyd jobs. No per-round pins: the re-executed subtree inside
     the next round's broadcast is model-sized, and dropping the round
     pins removed two checkpoint jobs (5.3 s -> 1.7 s warm at sf0.1)."""
-    from ..operators.clustering import _sq_dist
 
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_array("embedding").alias("v")
@@ -6576,7 +6258,7 @@ def _ivfpq_train_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ),
                     lambda c: F.struct(
                         F.round(
-                            _sq_dist(F.col("sv"), c["cv"], _IVFPQ_SUBDIM), 6
+                            sq_dist(F.col("sv"), c["cv"], _IVFPQ_SUBDIM), 6
                         ).alias("d2"),
                         c["cid"].alias("cid"),
                     ),
@@ -6707,7 +6389,6 @@ def _ivfpq_code_corpus(
     map side. This is the index-BUILD pass — at 100 TB it runs once per
     corpus (then incrementally per ingest batch), and everything the
     search shuffles afterwards is the ~8-byte coded row."""
-    from ..operators.clustering import _sq_dist
 
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_array("embedding").alias("v")
@@ -6721,7 +6402,7 @@ def _ivfpq_code_corpus(
         def f(c):
             return F.struct(
                 F.round(
-                    _sq_dist(F.col(vcol), c["cv"], _IVFPQ_SUBDIM), 6
+                    sq_dist(F.col(vcol), c["cv"], _IVFPQ_SUBDIM), 6
                 ).alias("d2"),
                 c["cid"].alias("cid"),
             )
@@ -6761,7 +6442,6 @@ def _ivfpq_search(
     candidates)."""
     from pyspark.sql import Window as W
 
-    from ..operators.clustering import _sq_dist
 
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_array("embedding").alias("v")
@@ -6797,7 +6477,7 @@ def _ivfpq_search(
             return F.struct(
                 c["cid"].alias("k"),
                 F.round(
-                    _sq_dist(F.col(f"q{sub_idx}"), c["cv"], _IVFPQ_SUBDIM), 6
+                    sq_dist(F.col(f"q{sub_idx}"), c["cv"], _IVFPQ_SUBDIM), 6
                 ).alias("d"),
             )
 
@@ -6982,8 +6662,6 @@ def pipeline_privacy_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate keyed on per-doc-only statistics). Emitted:
     (source, n_docs_noisy, n_tokens_noisy) — production publishes ONLY
     these; the exact intermediates stay inside the trusted curator."""
-    from ..functions.hashing import hash60_spark_sql
-
     n_cnt = _pvr_noise("concat('pv:', source, ':cnt')", "1.0",
                        hash60_spark_sql)
     n_tok = _pvr_noise("concat('pv:', source, ':tok')", "64.0",
@@ -7004,17 +6682,7 @@ def pipeline_privacy_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokd = scrub.select("doc_id", F.split("text", " ").alias("tok"))
     grams = tokd.select(
         "doc_id",
-        F.explode(
-            F.transform(
-                gram_positions("tok", 3),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.element_at("tok", i),
-                    F.element_at("tok", i + 1),
-                    F.element_at("tok", i + 2),
-                ),
-            )
-        ).alias("g"),
+        F.explode(word_trigrams("tok")).alias("g"),
     )
     freq = grams.groupBy("g").agg(F.count("*").alias("corpus_c"))
     rare = F.when(F.col("corpus_c") < _PVR_KANON_K, 1).otherwise(0)
@@ -7108,8 +6776,6 @@ def text_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions, so the whole transform lives in one WholeStageCodegen
     span at corpus scale. Emitted: (doc_id, n_tok, p1, p2, fim_applied,
     fim_text)."""
-    from ..functions.hashing import hash60
-
     tok = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.split("text", " ").alias("w"),

@@ -11,8 +11,9 @@ Determinism rules used throughout (verified cross-engine, see tests):
 - floats produced by arithmetic are ``round(x, 4)`` on both sides
   (Spark ROUND and DuckDB round are both half-up for positives);
 - parquet-sourced doubles passed through untouched are compared exactly;
-- md5-derived 60-bit integer hashes (`conv(substr(md5(s),1,15),16,10)` ==
-  DuckDB `CAST('0x'||substr(md5(s),1,15) AS BIGINT)`) are bitwise equal;
+- md5-derived 60-bit integer hashes are bitwise equal across engines;
+  write them through functions/hashing (``hash60`` and its SQL-text
+  forms ``hash60_spark_sql`` / ``hash60_duckdb_sql``), never inline;
 - arrays are sorted (`sort_array` / `list_sort`) before comparison;
 - timestamps are emitted as formatted strings (session TZ pinned UTC).
 """

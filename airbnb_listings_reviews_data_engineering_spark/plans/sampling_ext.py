@@ -905,7 +905,7 @@ WITH tok AS (
 ),
 grams AS (
   SELECT doc_id, source,
-         CAST('0x' || substr(md5(g), 1, 15) AS BIGINT) % {_DSIR_B} AS b
+         {hash60_duckdb_sql("g")} % {_DSIR_B} AS b
   FROM (SELECT doc_id, source,
                unnest(list_transform(generate_series(1, len(w) - 1),
                       i -> w[i] || ' ' || w[i + 1])) AS g

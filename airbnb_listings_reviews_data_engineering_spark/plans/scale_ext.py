@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checkpoint import pin
+from ..functions.hashing import hash60_duckdb_sql
 from ..sources.parquet import fingerprint
 from ..sources.staging import ensure_staged, fs_delete, staging_root
 from .registry import load, register
@@ -689,9 +690,9 @@ _PYDS_PARTS = 8
 
 _PYDS_SQL = f"""
 SELECT i AS id,
-       CAST('0x' || substr(md5('pyds:' || CAST(i AS VARCHAR)), 1, 15) AS BIGINT)
+       {hash60_duckdb_sql("'pyds:' || CAST(i AS VARCHAR)")}
          AS h,
-       CAST(CAST('0x' || substr(md5('pyds:' || CAST(i AS VARCHAR)), 1, 15) AS BIGINT)
+       CAST({hash60_duckdb_sql("'pyds:' || CAST(i AS VARCHAR)")}
             % 10 AS INT) AS bucket
 FROM generate_series(0, {_PYDS_N - 1}) g(i)
 """

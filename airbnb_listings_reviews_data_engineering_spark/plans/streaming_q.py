@@ -15,8 +15,11 @@ pieces:
   sink (``streaming/ingest.run_available_now``); keys that fold each
   micro-batch into published tables (upsert, MV maintenance,
   admission with index append-back, DP release ledgers) drain through
-  ``streaming/ingest.fold_stream``, the one foreachBatch harness, into
-  a fresh per-run root deleted before they return.
+  ``streaming/ingest.fold_stream``, the one foreachBatch harness, under
+  ``streaming/ingest.run_root``: the per-run root lifecycle, a fresh
+  root deleted when the drain ends, also when a step raises. The three
+  admission keys share the whole drain,
+  ``streaming/ingest.admission_ledger``.
 """
 
 from __future__ import annotations
@@ -27,12 +30,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checkpoint import pin
+from ..functions.hashing import XOR_SEEDS, hash60_duckdb_sql, hash60_spark_sql
+from ..operators.dedup import band_match_sql, minhash_sig_sql
 from ..sources.staging import ensure_staged, scratch_dir
 from ..streaming.ingest import (
+    EVENTS_SCHEMA,
+    admission_ledger,
+    admission_rows,
+    appended,
+    fold_stream,
+    modulo_batch,
     read_events_stream,
     run_available_now,
+    run_root,
     session_windows,
     stage_batch,
+    stage_batches,
     staged_stream,
     stateful_layout,
     stateful_user_stats,
@@ -259,8 +272,7 @@ def stream_stateful_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             ev.filter(F.col("ts") >= b2).withColumn("bseq", F.lit(3)),
         ]
-        for seq, b in enumerate(batches, start=1):
-            stage_batch(b, stream_dir, f"batch{seq}.parquet", seq)
+        stage_batches(stream_dir, batches)
 
     # stable landing zone, staged once per (sf_dir, source fingerprint): the
     # measured work is the keyed-state drain, not three fixture parquet
@@ -419,8 +431,7 @@ def stream_session_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.filter((F.col("ts") >= b1) & (F.col("ts") < b2)),
             ev.filter(F.col("ts") >= b2),
         ]
-        for seq, b in enumerate(batches, start=1):
-            stage_batch(b, stream_dir, f"batch{seq}.parquet", seq)
+        stage_batches(stream_dir, batches)
 
     # stable landing zone, staged once per (sf_dir, source fingerprint) — see
     # stream_stateful_admission
@@ -597,8 +608,6 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     — either way a gate mismatch, so the hash-match IS the
     drop-semantics proof.
     """
-    from ..streaming.ingest import EVENTS_SCHEMA
-
     # load() normalizes ts to a session-TZ TIMESTAMP regardless of the
     # testdata generation (nanos-long vs micros-timestamp), so the staged
     # batches always carry proper timestamps and the stream schema below
@@ -688,20 +697,11 @@ def stream_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources/atomic.publish_parquet, so a crash between batches leaves a
     readable previous version (exactly-once evidence:
     tests/test_streaming_ingest.py)."""
-    import os
-
     from pyspark.sql import Window as W
 
     from ..sources.atomic import read_published
-    from ..sources.staging import fs_delete
-    from ..streaming.ingest import EVENTS_SCHEMA, fold_stream
 
-    # the state table + checkpoint are per-run (fresh uuid root, deleted
-    # below) so every invocation re-runs the merge path from empty state
     stream_dir = _stage_events_by_id_residue(spark, sf_dir)
-    root = scratch_dir(spark, "upsert")
-    target = os.path.join(root, "state")
-
     state_cols = ["user_id", "event_id", "event_type", "value", "ts"]
     w = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
 
@@ -715,21 +715,23 @@ def stream_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("rn")
         )
 
-    # stateful_layout: each per-batch per-user window + merge would
-    # otherwise shuffle into 32 near-empty partitions (AQE off here)
-    with stateful_layout(spark, sf_dir, "events"):
-        fold_stream(
-            staged_stream(spark, stream_dir, EVENTS_SCHEMA),
-            os.path.join(root, "ckpt"),
-            latest,
-            target,
+    # the state table + checkpoint are per-run, so every invocation
+    # re-runs the merge path from empty state
+    with run_root(spark, "upsert") as root:
+        target = os.path.join(root, "state")
+        # stateful_layout: each per-batch per-user window + merge would
+        # otherwise shuffle into 32 near-empty partitions (AQE off here)
+        with stateful_layout(spark, sf_dir, "events"):
+            fold_stream(
+                staged_stream(spark, stream_dir, EVENTS_SCHEMA),
+                os.path.join(root, "ckpt"),
+                latest,
+                target,
+            )
+        final = read_published(spark, target).select(
+            "user_id", "event_id", "event_type", F.round("value", 4).alias("value")
         )
-    final = read_published(spark, target).select(
-        "user_id", "event_id", "event_type", F.round("value", 4).alias("value")
-    )
-    final = pin(final, label="stream_upsert_merge")
-    fs_delete(root, spark)
-    return final
+        return pin(final, label="stream_upsert_merge")
 
 
 _STREAM_MV_SQL = """
@@ -756,19 +758,9 @@ def stream_mv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     crash between batches leaves the previous MV version readable and
     the checkpoint replays the missed batch (same exactly-once layer as
     stream_upsert_merge)."""
-    import os
-
     from ..sources.atomic import read_published
-    from ..sources.staging import fs_delete
-    from ..streaming.ingest import EVENTS_SCHEMA, fold_stream
 
-    # the MV + checkpoint are per-run (fresh uuid root, deleted below),
-    # so every invocation replays the SAME three micro-batches from an
-    # empty MV
     stream_dir = _stage_events_by_id_residue(spark, sf_dir)
-    root = scratch_dir(spark, "mv")
-    target = os.path.join(root, "mv")
-
     unit = F.round(F.col("value") * 10000).cast("bigint")
 
     def merge_delta(batch_df, base):
@@ -792,24 +784,26 @@ def stream_mv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    # stateful_layout: each foreachBatch delta groupBy + base merge
-    # would otherwise shuffle into 32 near-empty partitions per batch
-    # (AQE is off inside streaming queries); size to the feed instead
-    with stateful_layout(spark, sf_dir, "events"):
-        fold_stream(
-            staged_stream(spark, stream_dir, EVENTS_SCHEMA),
-            os.path.join(root, "ckpt"),
-            merge_delta,
-            target,
+    # the MV + checkpoint are per-run, so every invocation replays the
+    # SAME three micro-batches from an empty MV
+    with run_root(spark, "mv") as root:
+        target = os.path.join(root, "mv")
+        # stateful_layout: each foreachBatch delta groupBy + base merge
+        # would otherwise shuffle into 32 near-empty partitions per batch
+        # (AQE is off inside streaming queries); size to the feed instead
+        with stateful_layout(spark, sf_dir, "events"):
+            fold_stream(
+                staged_stream(spark, stream_dir, EVENTS_SCHEMA),
+                os.path.join(root, "ckpt"),
+                merge_delta,
+                target,
+            )
+        final = read_published(spark, target).select(
+            "event_type",
+            F.col("n").alias("n_events"),
+            F.round(F.col("s") / 10000.0, 4).alias("sum_value"),
         )
-    final = read_published(spark, target).select(
-        "event_type",
-        F.col("n").alias("n_events"),
-        F.round(F.col("s") / 10000.0, 4).alias("sum_value"),
-    )
-    final = pin(final, label="stream_mv_merge")
-    fs_delete(root, spark)
-    return final
+        return pin(final, label="stream_mv_merge")
 
 
 _SLIDING_SQL = """
@@ -877,16 +871,7 @@ _SDM_THRESHOLD = 0.5
 
 
 def _stream_minhash_sql() -> str:
-    from .pipeline_ext import _minhash_sig_sql
-
-    band_cond = " OR ".join(
-        "(" + " AND ".join(f"a.h{b*2+r} = b.h{b*2+r}" for r in range(2)) + ")"
-        for b in range(_SDM_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN a.h{j} = b.h{j} THEN 1 ELSE 0 END)"
-        for j in range(_SDM_HASHES)
-    )
+    band_cond, agree = band_match_sql("a", "b", _SDM_BANDS, _SDM_HASHES)
     return f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
@@ -895,7 +880,7 @@ WITH corpus AS (
          regexp_replace(text, '^[a-z]+ ', '') AS text
   FROM documents WHERE doc_id % {_SDM_MOD} = 0
 ),
-{_minhash_sig_sql().strip()}
+{minhash_sig_sql().strip()}
 SELECT DISTINCT a.doc_id AS in_doc, b.doc_id AS corpus_doc,
        round(({agree}) / {float(_SDM_HASHES)}, 4) AS est_jaccard
 FROM sig a JOIN sig b
@@ -942,7 +927,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_dedup_minhash",
         sf_dir,
         "documents",
-        lambda d: stage_batch(incoming, d, "batch1.parquet", 1),
+        lambda d: stage_batches(d, [incoming]),
     )
     stream = staged_stream(spark, stream_dir, "doc_id bigint, text string")
     # the SAME operator dedup_incremental runs nightly, fed a streaming
@@ -1057,7 +1042,7 @@ def stream_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_dedup_embedding",
         sf_dir,
         "embeddings",
-        lambda d: stage_batch(incoming, d, "batch1.parquet", 1),
+        lambda d: stage_batches(d, [incoming]),
     )
     stream = staged_stream(spark, stream_dir, "vec_id bigint, v array<double>")
     stream_bk = S.with_lsh_bucket(stream, "vec_id", "v", planes, "pid", 8)
@@ -1091,8 +1076,6 @@ def _sds_fresh_duck(m: int) -> str:
 
 
 def _stream_span_sql() -> str:
-    from ..functions.hashing import hash60_duckdb_sql
-
     gram = hash60_duckdb_sql(f"array_to_string(w[i:i+{_SDS_N - 1}], ' ')")
     return f"""
 WITH tok AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
@@ -1201,7 +1184,7 @@ def stream_dedup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_dedup_span",
         sf_dir,
         "documents",
-        lambda d: stage_batch(incoming, d, "batch1.parquet", 1),
+        lambda d: stage_batches(d, [incoming]),
     )
     stream = staged_stream(spark, stream_dir, "doc_id bigint, text string")
     out = span_excise_against_index(stream, index, "doc_id", "text", n=_SDS_N)
@@ -1241,8 +1224,6 @@ _SAE_DUCK_FMT = dict(aj="array_to_string", tf="list_transform",
 
 
 def _sae_sql() -> str:
-    from ..functions.hashing import XOR_SEEDS, hash60_duckdb_sql
-
     def sig_cte(src: str, name: str, idc: str) -> str:
         hcols = ",\n         ".join(
             f"list_min(list_transform(bh, h -> xor(h, {XOR_SEEDS[j]})))"
@@ -1267,13 +1248,7 @@ sig_{name} AS (
   FROM bh_{name}
 )"""
 
-    band_cond = " OR ".join(
-        "(" + " AND ".join(f"a.h{b*2+r} = b.h{b*2+r}" for r in range(2)) + ")"
-        for b in range(4)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN a.h{j} = b.h{j} THEN 1 ELSE 0 END)" for j in range(8)
-    )
+    band_cond, agree = band_match_sql("a", "b", 4, 8)
     hs = ", ".join(f"h{j}" for j in range(8))
     nov1 = _SAE_NOVEL.format(lo=1, pfx="nv", **_SAE_DUCK_FMT)
     nov1v = _SAE_NOVEL.format(lo=2, pfx="nv", **_SAE_DUCK_FMT)
@@ -1327,18 +1302,6 @@ FROM b2 LEFT JOIN hits2 USING (in_id)
 """
 
 
-def _admission_rows(batch_df: DataFrame, hits: DataFrame) -> DataFrame:
-    """One batch's (in_id, batch, admitted) ledger rows: a doc is
-    rejected (0) iff it is in ``hits``, else admitted (1)."""
-    return batch_df.join(hits, "in_id", "left_anti").select(
-        "in_id", "batch", F.lit(1).alias("admitted")
-    ).unionByName(
-        batch_df.join(hits, "in_id", "left_semi").select(
-            "in_id", "batch", F.lit(0).alias("admitted")
-        )
-    )
-
-
 @register("stream_admission_e2e", oracle=_sae_sql())
 def stream_admission_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming admission with INDEX APPEND-BACK — the loop the
@@ -1364,76 +1327,30 @@ def stream_admission_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     publishes go through sources/atomic.publish_parquet so a crash
     between batches leaves a readable previous index version. Emitted:
     (in_id, batch, admitted) — the per-batch admission ledger."""
-    import os
-
-    from ..operators.dedup import _lsh_bands, minhash_signature
-    from ..sources.atomic import publish_parquet, read_published
-    from ..sources.staging import fs_delete
-    from ..streaming.ingest import appended, fold_stream
+    from ..operators.dedup import lsh_bands, minhash_signature
 
     # spread=True: the standing index is a full-corpus minhash
     # signature (md5 per shingle) built off this scan each run (§2.5)
     docs = load(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
-    nov1 = _SAE_NOVEL.format(lo=1, pfx="nv", **_SAE_SPARK_FMT)
-    nov1v = _SAE_NOVEL.format(lo=2, pfx="nv", **_SAE_SPARK_FMT)
-    nov2 = _SAE_NOVEL.format(lo=1, pfx="fz", **_SAE_SPARK_FMT)
-    b1 = docs.filter(F.col("doc_id") % _SAE_CORP1 == 0).selectExpr(
-        f"doc_id + {_SAE_OFF['corp1']} AS in_id",
-        "regexp_replace(text, '^[a-z]+ ', '') AS text",
-        "CAST(1 AS INT) AS batch",
-    ).unionByName(
-        docs.filter(F.col("doc_id") % _SAE_NOV1 == 0).selectExpr(
-            f"doc_id + {_SAE_OFF['nov1']} AS in_id",
-            f"{nov1} AS text",
-            "CAST(1 AS INT) AS batch",
-        )
-    )
-    b2 = (
-        docs.filter(F.col("doc_id") % _SAE_NOV1 == 0)
-        .selectExpr(
-            f"doc_id + {_SAE_OFF['nov1v']} AS in_id",
-            f"{nov1v} AS text",
-            "CAST(2 AS INT) AS batch",
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % _SAE_CORP2 == 0).selectExpr(
-                f"doc_id + {_SAE_OFF['corp2']} AS in_id",
-                "regexp_replace(text, '^[a-z]+ ', '') AS text",
-                "CAST(2 AS INT) AS batch",
-            )
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % _SAE_NOV2 == 0).selectExpr(
-                f"doc_id + {_SAE_OFF['nov2']} AS in_id",
-                f"{nov2} AS text",
-                "CAST(2 AS INT) AS batch",
-            )
-        )
-    )
-    def _stage(stream_dir: str) -> None:
-        stage_batch(b1, stream_dir, "batch1.parquet", 1)
-        stage_batch(b2, stream_dir, "batch2.parquet", 2)
-
-    # incoming batches staged once per (sf_dir, source fingerprint); the GROWING
-    # published index + decisions stay per-run (fresh uuid root below) —
-    # the index growth IS the computation being measured
-    stream_dir = ensure_staged(
-        spark, "stream_admission_e2e", sf_dir, "documents", _stage
-    )
-    root = scratch_dir(spark, "stream_admission_e2e")
-    idx_target = os.path.join(root, "index")
-    dec_target = os.path.join(root, "decisions")
-    # the standing index starts as the corpus's signature table
-    publish_parquet(
-        minhash_signature(docs, "doc_id", "text"), idx_target
-    )
-
+    variant = "regexp_replace(text, '^[a-z]+ ', '')"
+    b1 = modulo_batch(docs, "doc_id", 1, [
+        (_SAE_CORP1, _SAE_OFF["corp1"], variant),
+        (_SAE_NOV1, _SAE_OFF["nov1"],
+         _SAE_NOVEL.format(lo=1, pfx="nv", **_SAE_SPARK_FMT)),
+    ])
+    b2 = modulo_batch(docs, "doc_id", 2, [
+        (_SAE_NOV1, _SAE_OFF["nov1v"],
+         _SAE_NOVEL.format(lo=2, pfx="nv", **_SAE_SPARK_FMT)),
+        (_SAE_CORP2, _SAE_OFF["corp2"], variant),
+        (_SAE_NOV2, _SAE_OFF["nov2"],
+         _SAE_NOVEL.format(lo=1, pfx="fz", **_SAE_SPARK_FMT)),
+    ])
     hcols = [f"h{j}" for j in range(8)]
 
     def admit(batch_df, prev, idx):
         sig = minhash_signature(batch_df, "in_id", "text")
-        a, est = _lsh_bands(sig, "in_id")
-        b, _ = _lsh_bands(idx, "doc_id")
+        a, est = lsh_bands(sig, "in_id")
+        b, _ = lsh_bands(idx, "doc_id")
         hits = (
             a.alias("a").join(b.alias("b"), F.col("a.bk") == F.col("b.bk"))
             .select(F.col("a.in_id").alias("in_id"), est.alias("est"))
@@ -1447,23 +1364,21 @@ def stream_admission_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             hits, sig.in_id == hits.in_id, "left_anti"
         ).select(F.col("in_id").alias("doc_id"), *hcols)
         return (
-            appended(_admission_rows(batch_df, hits), prev),
+            appended(admission_rows(batch_df, hits), prev),
             idx.unionByName(admitted_sigs),
         )
 
-    fold_stream(
-        staged_stream(spark, stream_dir, "in_id bigint, text string, batch int"),
-        os.path.join(root, "ckpt"),
+    # the incoming batches are staged once per (sf_dir, source
+    # fingerprint); the GROWING published index (it starts as the
+    # corpus's signature table) and the decisions stay per-run — the
+    # index growth IS the computation being measured
+    return admission_ledger(
+        spark, "stream_admission_e2e", sf_dir, "documents", [b1, b2],
+        "in_id bigint, text string, batch int",
+        minhash_signature(docs, "doc_id", "text"),
         admit,
-        dec_target,
-        idx_target,
+        ["in_id", "batch", "admitted"],
     )
-    final = pin(
-        read_published(spark, dec_target).select("in_id", "batch", "admitted"),
-        label="stream_admission_e2e",
-    )
-    fs_delete(root, spark)
-    return final
 
 
 # ---------------------------------------------------------------------------
@@ -1582,14 +1497,9 @@ def stream_admission_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish_parquet, so a crash between batches leaves a readable
     previous index version. Emitted: (in_id, batch, admitted) — the
     per-batch admission ledger."""
-    import os
-
     from ..functions.arrays import as_double_array
     from ..operators import similarity as S
     from ..operators.dedup import embedding_near_dup_join
-    from ..sources.atomic import publish_parquet, read_published
-    from ..sources.staging import fs_delete
-    from ..streaming.ingest import appended, fold_stream
 
     base = pin(
         load(spark, sf_dir, "embeddings").select(
@@ -1600,69 +1510,25 @@ def stream_admission_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = base.filter(F.col("vec_id").between(1, 8)).select(
         F.col("vec_id").cast("int").alias("pid"), "v"
     )
-    perturb1 = F.concat(
-        F.array(F.element_at("v", 1) + 0.01), F.slice("v", 2, 63)
-    )
-    negate = F.transform("v", lambda x: -x)
+
+    def perturbed(eps: float):
+        return F.concat(
+            F.array(F.element_at("v", 1) + eps), F.slice("v", 2, 63)
+        )
+
     nov1v = F.concat(
         F.array(-F.element_at("v", 1) + 0.001),
         F.transform(F.slice("v", 2, 63), lambda x: -x),
     )
-    perturb2 = F.concat(
-        F.array(F.element_at("v", 1) + 0.02), F.slice("v", 2, 63)
-    )
-    b1 = base.filter(F.col("vec_id") % _SAEE_CORP1 == 0).select(
-        (F.col("vec_id") + _SAEE_OFF["corp1"]).alias("in_id"),
-        perturb1.alias("v"),
-        F.lit(1).cast("int").alias("batch"),
-    ).unionByName(
-        base.filter(F.col("vec_id") % _SAEE_NOV1 == 0).select(
-            (F.col("vec_id") + _SAEE_OFF["nov1"]).alias("in_id"),
-            negate.alias("v"),
-            F.lit(1).cast("int").alias("batch"),
-        )
-    )
-    b2 = (
-        base.filter(F.col("vec_id") % _SAEE_NOV1 == 0)
-        .select(
-            (F.col("vec_id") + _SAEE_OFF["nov1v"]).alias("in_id"),
-            nov1v.alias("v"),
-            F.lit(2).cast("int").alias("batch"),
-        )
-        .unionByName(
-            base.filter(F.col("vec_id") % _SAEE_CORP2 == 0).select(
-                (F.col("vec_id") + _SAEE_OFF["corp2"]).alias("in_id"),
-                perturb2.alias("v"),
-                F.lit(2).cast("int").alias("batch"),
-            )
-        )
-        .unionByName(
-            base.filter(F.col("vec_id") % _SAEE_NOV2 == 0).select(
-                (F.col("vec_id") + _SAEE_OFF["nov2"]).alias("in_id"),
-                F.reverse("v").alias("v"),
-                F.lit(2).cast("int").alias("batch"),
-            )
-        )
-    )
-    def _stage(stream_dir: str) -> None:
-        stage_batch(b1, stream_dir, "batch1.parquet", 1)
-        stage_batch(b2, stream_dir, "batch2.parquet", 2)
-
-    # incoming batches staged once per (sf_dir, source fingerprint); the growing
-    # published index + decisions stay per-run — see stream_admission_e2e
-    stream_dir = ensure_staged(
-        spark, "stream_admission_embedding", sf_dir, "embeddings", _stage
-    )
-    root = scratch_dir(spark, "stream_admission_embedding")
-    idx_target = os.path.join(root, "index")
-    dec_target = os.path.join(root, "decisions")
-    # the standing index starts as the corpus's (id, vector, bucket) table
-    publish_parquet(
-        S.with_lsh_bucket(base, "vec_id", "v", planes, "pid", 8).select(
-            "vec_id", "v", "bucket"
-        ),
-        idx_target,
-    )
+    b1 = modulo_batch(base, "vec_id", 1, [
+        (_SAEE_CORP1, _SAEE_OFF["corp1"], perturbed(0.01)),
+        (_SAEE_NOV1, _SAEE_OFF["nov1"], F.transform("v", lambda x: -x)),
+    ], col="v")
+    b2 = modulo_batch(base, "vec_id", 2, [
+        (_SAEE_NOV1, _SAEE_OFF["nov1v"], nov1v),
+        (_SAEE_CORP2, _SAEE_OFF["corp2"], perturbed(0.02)),
+        (_SAEE_NOV2, _SAEE_OFF["nov2"], F.reverse("v")),
+    ], col="v")
 
     def admit(batch_df, prev, idx):
         bk = S.with_lsh_bucket(batch_df, "in_id", "v", planes, "pid", 8)
@@ -1684,25 +1550,21 @@ def stream_admission_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("in_id").alias("vec_id"), "v", "bucket"
         )
         return (
-            appended(_admission_rows(batch_df, hits), prev),
+            appended(admission_rows(batch_df, hits), prev),
             idx.unionByName(admitted),
         )
 
-    fold_stream(
-        staged_stream(
-            spark, stream_dir, "in_id bigint, v array<double>, batch int"
+    # the standing index starts as the corpus's (id, vector, bucket)
+    # table — see stream_admission_e2e
+    return admission_ledger(
+        spark, "stream_admission_embedding", sf_dir, "embeddings", [b1, b2],
+        "in_id bigint, v array<double>, batch int",
+        S.with_lsh_bucket(base, "vec_id", "v", planes, "pid", 8).select(
+            "vec_id", "v", "bucket"
         ),
-        os.path.join(root, "ckpt"),
         admit,
-        dec_target,
-        idx_target,
+        ["in_id", "batch", "admitted"],
     )
-    final = pin(
-        read_published(spark, dec_target).select("in_id", "batch", "admitted"),
-        label="stream_admission_embedding",
-    )
-    fs_delete(root, spark)
-    return final
 
 
 # ---------------------------------------------------------------------------
@@ -1738,8 +1600,6 @@ def _sas_fresh_spark(pfx: str, m: int) -> str:
 
 
 def _sas_sql() -> str:
-    from ..functions.hashing import hash60_duckdb_sql
-
     gram = hash60_duckdb_sql(
         f"array_to_string(w[i:i+{_SAS_N - 1}], ' ')"
     )
@@ -1841,67 +1701,26 @@ def stream_admission_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-back is a distinct-union MERGE (bucketed parquet in
     production). Publishes go through sources/atomic.publish_parquet.
     Emitted: (in_id, batch, n_tok, n_removed, admitted)."""
-    import os
-
     from ..operators.dedup import (
         positional_gram_index,
         span_excise_against_index,
     )
-    from ..sources.atomic import publish_parquet, read_published
-    from ..sources.staging import fs_delete
-    from ..streaming.ingest import appended, fold_stream
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     copy14 = f"array_join(slice(split(text, ' '), 1, {_SAS_COPY}), ' ')"
-    b1 = docs.filter(F.col("doc_id") % _SAS_CORP1 == 0).selectExpr(
-        f"doc_id + {_SAS_OFF['corp1']} AS in_id",
-        f"concat({_sas_fresh_spark('sf', 4)}, ' ', {copy14}) AS text",
-        "CAST(1 AS INT) AS batch",
-    ).unionByName(
-        docs.filter(F.col("doc_id") % _SAS_NOV1 == 0).selectExpr(
-            f"doc_id + {_SAS_OFF['nov1']} AS in_id",
-            f"{_sas_fresh_spark('sa', 16)} AS text",
-            "CAST(1 AS INT) AS batch",
-        )
-    )
-    b2 = (
-        docs.filter(F.col("doc_id") % _SAS_NOV1 == 0)
-        .selectExpr(
-            f"doc_id + {_SAS_OFF['ret']} AS in_id",
-            f"concat({_sas_fresh_spark('sa', _SAS_RET)}, ' ',"
-            f" {_sas_fresh_spark('sb', 4)}) AS text",
-            "CAST(2 AS INT) AS batch",
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % _SAS_CORP2 == 0).selectExpr(
-                f"doc_id + {_SAS_OFF['corp2']} AS in_id",
-                f"concat({_sas_fresh_spark('sg', 4)}, ' ', {copy14}) AS text",
-                "CAST(2 AS INT) AS batch",
-            )
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % _SAS_NOV2 == 0).selectExpr(
-                f"doc_id + {_SAS_OFF['nov2']} AS in_id",
-                f"{_sas_fresh_spark('sc', 16)} AS text",
-                "CAST(2 AS INT) AS batch",
-            )
-        )
-    )
-    def _stage(stream_dir: str) -> None:
-        stage_batch(b1, stream_dir, "batch1.parquet", 1)
-        stage_batch(b2, stream_dir, "batch2.parquet", 2)
-
-    # incoming batches staged once per (sf_dir, source fingerprint); the growing
-    # published index + decisions stay per-run — see stream_admission_e2e
-    stream_dir = ensure_staged(
-        spark, "stream_admission_span", sf_dir, "documents", _stage
-    )
-    root = scratch_dir(spark, "stream_admission_span")
-    idx_target = os.path.join(root, "index")
-    dec_target = os.path.join(root, "decisions")
-    publish_parquet(
-        positional_gram_index(docs, "text", n=_SAS_N), idx_target
-    )
+    b1 = modulo_batch(docs, "doc_id", 1, [
+        (_SAS_CORP1, _SAS_OFF["corp1"],
+         f"concat({_sas_fresh_spark('sf', 4)}, ' ', {copy14})"),
+        (_SAS_NOV1, _SAS_OFF["nov1"], _sas_fresh_spark("sa", 16)),
+    ])
+    b2 = modulo_batch(docs, "doc_id", 2, [
+        (_SAS_NOV1, _SAS_OFF["ret"],
+         f"concat({_sas_fresh_spark('sa', _SAS_RET)}, ' ',"
+         f" {_sas_fresh_spark('sb', 4)})"),
+        (_SAS_CORP2, _SAS_OFF["corp2"],
+         f"concat({_sas_fresh_spark('sg', 4)}, ' ', {copy14})"),
+        (_SAS_NOV2, _SAS_OFF["nov2"], _sas_fresh_spark("sc", 16)),
+    ])
 
     def admit(batch_df, prev, idx):
         exc = span_excise_against_index(
@@ -1927,21 +1746,15 @@ def stream_admission_span(spark: SparkSession, sf_dir: str) -> DataFrame:
             idx.unionByName(adm_grams).distinct(),
         )
 
-    fold_stream(
-        staged_stream(spark, stream_dir, "in_id bigint, text string, batch int"),
-        os.path.join(root, "ckpt"),
+    # the standing index starts as the corpus's gram hashes — see
+    # stream_admission_e2e
+    return admission_ledger(
+        spark, "stream_admission_span", sf_dir, "documents", [b1, b2],
+        "in_id bigint, text string, batch int",
+        positional_gram_index(docs, "text", n=_SAS_N),
         admit,
-        dec_target,
-        idx_target,
+        ["in_id", "batch", "n_tok", "n_removed", "admitted"],
     )
-    final = pin(
-        read_published(spark, dec_target).select(
-            "in_id", "batch", "n_tok", "n_removed", "admitted"
-        ),
-        label="stream_admission_span",
-    )
-    fs_delete(root, spark)
-    return final
 
 
 # ---------------------------------------------------------------------------
@@ -1961,8 +1774,6 @@ def _sdp_noise(seed_expr: str, hash_fn) -> str:
 
 
 def _sdp_sql() -> str:
-    from ..functions.hashing import hash60_duckdb_sql
-
     noise = _sdp_noise(
         "'sdp:' || o_orderpriority || ':' || CAST(b AS VARCHAR)",
         hash60_duckdb_sql,
@@ -2001,12 +1812,7 @@ def stream_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a GROUP BY, proving the micro-batch path changes execution, not
     values: per-batch foreachBatch releases, appended through the
     atomic publish layer, equal the batch-computed ledger."""
-    import os
-
-    from ..functions.hashing import hash60_spark_sql
     from ..sources.atomic import read_published
-    from ..sources.staging import fs_delete
-    from ..streaming.ingest import appended, fold_stream
 
     noise = _sdp_noise(
         "concat('sdp:', prio, ':', CAST(batch AS STRING))",
@@ -2018,19 +1824,16 @@ def stream_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderpriority AS prio",
             f"o_orderkey % {_SDP_BATCHES} + 1 AS batch",
         )
-        for i in range(1, _SDP_BATCHES + 1):
-            stage_batch(
-                o.filter(F.col("batch") == i), stream_dir,
-                f"batch{i}.parquet", i,
-            )
+        stage_batches(
+            stream_dir,
+            [o.filter(F.col("batch") == i) for i in range(1, _SDP_BATCHES + 1)],
+        )
 
     # incoming batches staged once per (sf_dir, source fingerprint); the budget
     # ledger stays per-run — the cumulative release IS the computation
     stream_dir = ensure_staged(
         spark, "stream_dp_release", sf_dir, "orders", _stage
     )
-    root = scratch_dir(spark, "stream_dp_release")
-    led_target = os.path.join(root, "ledger")
 
     def release(batch_df, prev):
         rel = batch_df.groupBy("batch", "prio").agg(
@@ -2039,20 +1842,20 @@ def stream_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return appended(rel, prev)
 
-    fold_stream(
-        staged_stream(spark, stream_dir, "prio string, batch bigint"),
-        os.path.join(root, "ckpt"),
-        release,
-        led_target,
-    )
-    final = pin(
-        read_published(spark, led_target).select(
-            "batch", "prio", "n_noisy", "eps_spent"
-        ),
-        label="stream_dp_release",
-    )
-    fs_delete(root, spark)
-    return final
+    with run_root(spark, "stream_dp_release") as root:
+        led_target = os.path.join(root, "ledger")
+        fold_stream(
+            staged_stream(spark, stream_dir, "prio string, batch bigint"),
+            os.path.join(root, "ckpt"),
+            release,
+            led_target,
+        )
+        return pin(
+            read_published(spark, led_target).select(
+                "batch", "prio", "n_noisy", "eps_spent"
+            ),
+            label="stream_dp_release",
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -2065,8 +1868,7 @@ _SPYDS_PAGES = 3
 _SPYDS_SQL = f"""
 WITH rows_all AS (
   SELECT i AS id,
-         CAST(CAST('0x' || substr(md5('spyds:' || CAST(i AS VARCHAR)), 1, 15)
-              AS BIGINT) % 10 AS INT) AS bucket
+         CAST({hash60_duckdb_sql("'spyds:' || CAST(i AS VARCHAR)")} % 10 AS INT) AS bucket
   FROM generate_series(0, {_SPYDS_PAGE * _SPYDS_PAGES - 1}) g(i)
 )
 SELECT CAST(id // {_SPYDS_PAGE} AS INT) AS page, count(*) AS n_rows,

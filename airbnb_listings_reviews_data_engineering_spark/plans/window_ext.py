@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..operators.asof import ASOF_SQL, last_order_price
 from .registry import load, register
 
 # ---------------------------------------------------------------------------
@@ -628,64 +629,14 @@ def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.crossJoin(b)
 
 
-_ASOF_SQL = """
-WITH u AS (
-  SELECT o_custkey AS user_id, o_orderdate AS t, 0 AS kind,
-         o_orderkey AS seq, o_totalprice AS price, NULL::BIGINT AS event_id
-  FROM orders
-  UNION ALL
-  SELECT user_id, ts AS t, 1 AS kind, event_id AS seq,
-         NULL::DOUBLE AS price, event_id
-  FROM events
-),
-marked AS (
-  SELECT event_id, user_id, kind,
-         last_value(price IGNORE NULLS) OVER (
-           PARTITION BY user_id ORDER BY t, kind, seq
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_order_price
-  FROM u
-)
-SELECT event_id, user_id, last_order_price FROM marked WHERE kind = 1
-"""
-
-
-@register("join_asof", oracle=_ASOF_SQL)
+@register("join_asof", oracle=ASOF_SQL)
 def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of (backward) join: each event picks the price of the user's most
-    recent order at-or-before the event timestamp.
-
-    Union-window formulation — the scale path: one shuffle on user_id and
-    a linear window pass, instead of joining every event to every prior
-    order and arg-maxing (quadratic in orders-per-user). Orders sort before
-    events at equal timestamps (kind 0 < 1), so `<=` semantics hold; seq
-    (orderkey / event_id) makes the order total and deterministic.
-    """
-    orders = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderdate").alias("t"),
-        F.lit(0).alias("kind"),
-        F.col("o_orderkey").alias("seq"),
-        F.col("o_totalprice").alias("price"),
-        F.lit(None).cast("long").alias("event_id"),
-    )
-    events = load(spark, sf_dir, "events").select(
-        "user_id",
-        F.col("ts").alias("t"),
-        F.lit(1).alias("kind"),
-        F.col("event_id").alias("seq"),
-        F.lit(None).cast("double").alias("price"),
-        "event_id",
-    )
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("t", "kind", "seq")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return (
-        orders.unionByName(events)
-        .withColumn("last_order_price", F.last("price", ignorenulls=True).over(w))
-        .filter(F.col("kind") == 1)
-        .select("event_id", "user_id", "last_order_price")
+    recent order at-or-before the event timestamp — the union-window
+    formulation of operators/asof (one shuffle on user_id, one linear
+    window pass)."""
+    return last_order_price(
+        load(spark, sf_dir, "orders"), load(spark, sf_dir, "events")
     )
 
 

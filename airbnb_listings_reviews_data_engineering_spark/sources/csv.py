@@ -41,7 +41,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..checkpoint import _track
+from ..checkpoint import track
 from .staging import fs_delete, staging_dir
 
 BLOCK_BYTES = 1 << 20  # scan window: memory stays flat as files grow
@@ -94,7 +94,7 @@ def read_multiline_csv(
     except BaseException:
         fs_delete(chunks, spark)
         raise
-    _track(spark, df, lambda: fs_delete(chunks, spark))
+    track(spark, df, lambda: fs_delete(chunks, spark))
     return df
 
 

@@ -11,8 +11,13 @@ foreachBatch harness in the package.
 Also provides a watermarked tumbling-window aggregation — the streaming
 operator a production events pipeline needs that the reference lacks —
 and the staged-stream fixture the stream keys share: ``stage_batch``
-lands one micro-batch file, ``staged_stream`` replays a landing zone one
-file per micro-batch, ``stateful_layout`` sizes the state partitions.
+lands one micro-batch file (``stage_batches`` a numbered sequence of
+them), ``staged_stream`` replays a landing zone one file per
+micro-batch, ``stateful_layout`` sizes the state partitions. The
+folding keys keep their published tables and checkpoint under
+``run_root``, a fresh per-run directory deleted however the run ends;
+``modulo_batch`` and ``admission_ledger`` are the fixture and the drain
+of the three admission keys.
 """
 
 from __future__ import annotations
@@ -21,12 +26,15 @@ import os
 import tempfile
 import uuid
 from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..checkpoint import pin
 from ..sources.parquet import row_count
+from ..sources.staging import ensure_staged, fs_delete, scratch_dir
 
 def events_schema(ts_nanos_long: bool) -> T.StructType:
     """Schema for the events table. Two physical generations exist:
@@ -692,8 +700,6 @@ def stage_batch(df: DataFrame, stream_dir: str, name: str, seq: int) -> None:
     import glob
     import shutil
 
-    from ..sources.staging import fs_delete
-
     if "://" in stream_dir:
         raise NotImplementedError(
             "simulated stream landing zones are driver-local fixtures; "
@@ -721,3 +727,93 @@ def staged_stream(spark: SparkSession, stream_dir: str, schema) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(stream_dir)
     )
+
+
+def stage_batches(stream_dir: str, batches) -> None:
+    """Land ``batches`` in order as batch1.parquet, batch2.parquet, ...
+    (stage_batch), so staged_stream replays them in that order."""
+    for seq, b in enumerate(batches, start=1):
+        stage_batch(b, stream_dir, f"batch{seq}.parquet", seq)
+
+
+@contextmanager
+def run_root(spark: SparkSession, key: str):
+    """A fresh per-run root ``<staging root>/scratch/<key>_<uuid>`` for a
+    fold's published tables and checkpoint, deleted when the block exits,
+    also when a step raises: a failed run is discarded whole (see
+    fold_stream's replay contract), and leaves no directory behind. Pin
+    what the caller returns inside the block."""
+    root = scratch_dir(spark, key)
+    try:
+        yield root
+    finally:
+        fs_delete(root, spark)
+
+
+def modulo_batch(
+    src: DataFrame, id_col: str, batch: int, classes, col: str = "text"
+) -> DataFrame:
+    """One admission micro-batch built from fixture classes: for each
+    ``(mod, offset, value)``, the rows of ``src`` whose ``id_col`` is a
+    multiple of ``mod``, as (in_id = id + offset, ``col`` = value,
+    batch). ``value`` is a Column or a SQL expression over ``src``."""
+    return reduce(
+        DataFrame.unionByName,
+        [
+            src.filter(F.col(id_col) % mod == 0).select(
+                (F.col(id_col) + off).alias("in_id"),
+                (F.expr(v) if isinstance(v, str) else v).alias(col),
+                F.lit(batch).cast("int").alias("batch"),
+            )
+            for mod, off, v in classes
+        ],
+    )
+
+
+def admission_rows(batch_df: DataFrame, hits: DataFrame) -> DataFrame:
+    """One batch's (in_id, batch, admitted) ledger rows: a doc is
+    rejected (0) iff it is in ``hits``, else admitted (1)."""
+    return batch_df.join(hits, "in_id", "left_anti").select(
+        "in_id", "batch", F.lit(1).alias("admitted")
+    ).unionByName(
+        batch_df.join(hits, "in_id", "left_semi").select(
+            "in_id", "batch", F.lit(0).alias("admitted")
+        )
+    )
+
+
+def admission_ledger(
+    spark: SparkSession,
+    key: str,
+    sf_dir: str,
+    table: str,
+    batches,
+    schema: str,
+    index: DataFrame,
+    admit,
+    cols,
+) -> DataFrame:
+    """The admission drain with index append-back that the three
+    stream_admission_* keys share. ``batches`` are staged once per
+    (sf_dir, source ``table`` fingerprint) and replayed as a stream of
+    ``schema``; under a run_root, ``index`` is published as the standing
+    index, and each micro-batch's ``admit(batch, ledger, index)``
+    returns the next (ledger, index), published through fold_stream.
+    Returns the drained ledger's ``cols``, pinned under label ``key``."""
+    from ..sources.atomic import publish_parquet, read_published
+
+    stream_dir = ensure_staged(
+        spark, key, sf_dir, table, lambda d: stage_batches(d, batches)
+    )
+    with run_root(spark, key) as root:
+        idx_target = os.path.join(root, "index")
+        dec_target = os.path.join(root, "decisions")
+        publish_parquet(index, idx_target)
+        fold_stream(
+            staged_stream(spark, stream_dir, schema),
+            os.path.join(root, "ckpt"),
+            admit,
+            dec_target,
+            idx_target,
+        )
+        return pin(read_published(spark, dec_target).select(*cols), label=key)

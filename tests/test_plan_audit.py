@@ -6,10 +6,18 @@ plan-shape counts and the digest of the key's rendered oracle.
 The audit itself runs inside the registry sweep
 (tests/test_driver_oracle.py), which builds each key once and asserts
 no flags and a shape equal to the key's ledger entry. Regenerate the
-ledger with `python scripts/plan_audit.py`."""
+ledger with `python scripts/plan_audit.py`.
+
+The layering checks walk the package's ASTs: plan modules are leaves,
+so a shape two of them share lives below plans/ (operators/,
+functions/, streaming/) under a public name."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
+import airbnb_listings_reviews_data_engineering_spark as pkg
 from airbnb_listings_reviews_data_engineering_spark.plans import all_queries
 from scripts.plan_audit import (
     LEDGER_FIELDS,
@@ -62,3 +70,58 @@ def test_rule_battery_flags_each_anti_pattern():
     assert _lint_plan_text("ml_kmeans", shuffle, 0, None) == []
     assert _lint_plan_text("ml_kmeans", shuffle, 0, "a") == ["PIN[a]:CORPUS_ID_SHUFFLE"]
     assert _lint_plan_text("join_eq3", per_vec, 0, None) == []
+
+
+PKG = Path(pkg.__file__).parent
+# registry.py is the plans' infrastructure, not a plan module
+NOT_PLAN_MODULES = {"plans.registry", "plans.__init__"}
+
+
+def _relative_imports():
+    """(importing module, imported module, names) for every relative
+    import in the package, module paths relative to the package."""
+    for path in sorted(PKG.rglob("*.py")):
+        here = path.relative_to(PKG).with_suffix("").parts
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom) and node.level:
+                base = here[: len(here) - node.level]
+                target = ".".join(base + tuple(filter(None, [node.module])))
+                yield ".".join(here), target, [a.name for a in node.names]
+
+
+def _is_plan_module(name: str) -> bool:
+    return name.startswith("plans.") and name not in NOT_PLAN_MODULES
+
+
+def test_no_module_imports_a_private_name():
+    private = [
+        f"{src} imports {n} from {dst or 'the package'}"
+        for src, dst, names in _relative_imports()
+        for n in names
+        if n.startswith("_")
+    ]
+    assert private == []
+
+
+def test_plan_modules_import_only_key_functions_from_each_other():
+    # a composite key may reuse another module's registered key
+    # function (mm_reader_assignment, ml_quality_distill); any
+    # other shared piece belongs below plans/
+    keys = {
+        (spec.fn.__module__.removeprefix(pkg.__name__ + "."), spec.fn.__name__)
+        for spec in all_queries().values()
+    }
+    coupled = [
+        f"{src} imports {n} from {dst}"
+        for src, dst, names in _relative_imports()
+        if _is_plan_module(src) and _is_plan_module(dst)
+        for n in names
+        if (dst, n) not in keys
+    ]
+    coupled += [
+        f"{src} imports the plan module {n}"
+        for src, dst, names in _relative_imports()
+        if _is_plan_module(src) and dst == "plans"
+        for n in names
+    ]
+    assert coupled == []

@@ -298,3 +298,43 @@ def test_stream_sketch_bloom_stages_once(spark, sf_dir):
     staged = run()  # the first call may create the stable zone
     assert run() == staged
     assert run() == staged
+
+
+@pytest.mark.parametrize(
+    "key, table", [("stream_mv_merge", "mv"), ("stream_admission_span", "decisions")]
+)
+def test_failed_fold_leaves_no_run_root(spark, sf_dir, tmp_path, monkeypatch, key, table):
+    """A step that raises inside the fold propagates, and the key's
+    per-run root (checkpoint, published tables) is deleted all the same:
+    failed runs must not pile up under ``<staging root>/scratch/``. Only
+    the stable landing zones, which later runs reuse, may remain."""
+    from airbnb_listings_reviews_data_engineering_spark.checkpoint import (
+        release_pins,
+    )
+    from airbnb_listings_reviews_data_engineering_spark.plans import all_queries
+    from airbnb_listings_reviews_data_engineering_spark.sources import atomic
+    from airbnb_listings_reviews_data_engineering_spark.sources.staging import (
+        ROOT_CONF,
+    )
+
+    real_publish = atomic.publish_parquet
+
+    def publish(df, target):
+        if os.path.basename(target) == table:
+            raise RuntimeError("planted step failure")
+        real_publish(df, target)
+
+    monkeypatch.setattr(atomic, "publish_parquet", publish)
+    prior = spark.conf.get(ROOT_CONF, None)
+    spark.conf.set(ROOT_CONF, str(tmp_path))
+    try:
+        with pytest.raises(Exception, match="planted step failure"):
+            all_queries()[key].fn(spark, sf_dir)
+    finally:
+        release_pins(spark)
+        if prior is None:
+            spark.conf.unset(ROOT_CONF)
+        else:
+            spark.conf.set(ROOT_CONF, prior)
+    left = os.listdir(tmp_path / "scratch")
+    assert [d for d in left if not d.endswith("_stable")] == []
