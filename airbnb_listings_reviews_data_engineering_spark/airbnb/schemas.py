@@ -144,12 +144,3 @@ DOC_TEXT_COLUMNS = [
     "id", "listing_url", "name", "summary", "space", "description",
     "neighborhood_overview", "notes", "transit", "host_id", "host_about",
 ]
-
-REVIEW_STRUCT = T.StructType(
-    [
-        T.StructField("date", _STR),
-        T.StructField("reviewer_id", _LONG),
-        T.StructField("reviewer_name", _STR),
-        T.StructField("comments", _STR),
-    ]
-)

@@ -96,13 +96,12 @@ class small_pin_floor:
 
     _KEY = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
-    def __init__(self, spark: SparkSession, size: str = "16k"):
+    def __init__(self, spark: SparkSession):
         self._spark = spark
-        self._size = size
 
     def __enter__(self):
         self._prev = self._spark.conf.get(self._KEY, None)
-        self._spark.conf.set(self._KEY, self._size)
+        self._spark.conf.set(self._KEY, "16k")
         return self
 
     def __exit__(self, *exc):

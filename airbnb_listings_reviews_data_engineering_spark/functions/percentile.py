@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 
 GUARD_CONF = "spark.airbnb.percentile.maxExactGroupRows"
 DEFAULT_MAX_EXACT_GROUP_ROWS = 10_000_000
+# the GK sketch's accuracy when the guard picks approx_percentile
+APPROX_ACCURACY = 10_000
 
 # (cache_key, threshold) -> probe verdict. When ``stats_path`` is given
 # the key also carries the table's fingerprint (sources/parquet.py), so
@@ -148,11 +150,11 @@ def exact_fits(
     return fits
 
 
-def percentile_expr(p: float, value_col: str, exact: bool, accuracy: int = 10000) -> Column:
+def percentile_expr(p: float, value_col: str, exact: bool) -> Column:
     """The percentile aggregate for one quantile, exact or sketched."""
     if exact:
         return F.expr(f"percentile({value_col}, {p!r})")
-    return F.percentile_approx(value_col, p, accuracy)
+    return F.percentile_approx(value_col, p, APPROX_ACCURACY)
 
 
 def guarded_percentile(
@@ -160,25 +162,24 @@ def guarded_percentile(
     group_cols: list[str],
     value_col: str,
     quantiles: dict[str, float],
-    threshold: int | None = None,
-    accuracy: int = 10000,
-    decimals: int = 4,
     exact: bool | None = None,
     cache_key: tuple | None = None,
     stats_path: str | None = None,
 ) -> tuple[DataFrame, bool]:
     """Grouped percentile(s) with the exact/approx choice made from the
-    data. ``quantiles`` maps output alias -> quantile. Returns
-    (aggregated DataFrame, chose_exact). Pass ``exact`` to reuse an
+    data. ``quantiles`` maps output alias -> quantile; each is rounded
+    to 4 decimals. The guard's threshold is the ``GUARD_CONF`` session
+    conf (:func:`exact_fits`). Returns (aggregated DataFrame,
+    chose_exact). Pass ``exact`` to reuse an
     already-computed probe verdict (one probe can guard several
     aggregations over the same grouping); ``stats_path`` lets the
     verdict come from parquet footer statistics without any scan."""
     if exact is None:
         exact = exact_fits(
-            df, group_cols, value_col, threshold, cache_key, stats_path
+            df, group_cols, value_col, cache_key=cache_key, stats_path=stats_path
         )
     aggs = [
-        F.round(percentile_expr(p, value_col, exact, accuracy), decimals).alias(a)
+        F.round(percentile_expr(p, value_col, exact), 4).alias(a)
         for a, p in quantiles.items()
     ]
     return df.groupBy(*group_cols).agg(*aggs), exact

@@ -20,8 +20,9 @@ materialized key sets, or a key set reused across many queries):
   with the exact semi-join restores exact semantics — which is why the
   registered query's oracle is the plain ``IN``-subquery SQL.
 
-Sizing: false-positive rate ≈ (1 - e^(-k·n/m))^k; the defaults
-(m = 2^16 bits, k = 5) give < 1 % at n = 5 000 keys. At a 100 TB SF,
+Sizing: false-positive rate ≈ (1 - e^(-k·n/m))^k; the prefilter's
+m = 2^16 bits and k = 5 (``BLOOM_M_BITS``, ``BLOOM_K``) give < 1 % at
+n = 5 000 keys. At a 100 TB SF,
 size m from an ``approx_count_distinct`` of the dim keys and keep
 bits/key ≈ 10 — the map stays kilobytes while pruning terabytes of
 shuffle input.
@@ -34,13 +35,18 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import pin
 
+BLOOM_M_BITS = 1 << 16
+BLOOM_K = 5
+
 
 def _position_sql(key_expr: str, m_bits: int, i: int) -> str:
     """SQL text for the i-th bit position of ``key_expr`` in [0, m_bits)."""
     return f"pmod(xxhash64({key_expr}, {i}), {m_bits})"
 
 
-def build_bloom(dim: DataFrame, key: str, m_bits: int = 1 << 16, k: int = 5) -> DataFrame:
+def build_bloom(
+    dim: DataFrame, key: str, m_bits: int = BLOOM_M_BITS, k: int = BLOOM_K
+) -> DataFrame:
     """Aggregate the distinct ``key`` values of ``dim`` into a single-row
     DataFrame ``[bloom: map<int, bigint>]`` of set 64-bit words.
 
@@ -87,41 +93,33 @@ def might_contain(bloom_col: str, key_expr: str, m_bits: int, k: int) -> Column:
 
 
 def bloom_prefilter_semi_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    m_bits: int = 1 << 16,
-    k: int = 5,
-    barrier: bool = True,
+    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str
 ) -> DataFrame:
     """Semi-join ``fact`` to ``dim`` with a Bloom prefilter ahead of the
     exact join: fact rows failing the bit test never reach the exchange.
 
-    ``barrier`` pins the probe-then-join order with a lazy
-    ``pin`` (checkpoint.py) on the pruned side. Without it, Catalyst's
+    A lazy ``pin`` (checkpoint.py) on the pruned side is the barrier
+    that keeps the probe-then-join order. Without it, Catalyst's
     ``PushDownLeftSemiAntiJoin`` rule (cost-independent) hoists the
     exact semi-join BELOW the probe — legal, and harmless when the dim
     broadcasts, but at a shuffle-sized dim it re-creates the full-fact
     exchange the bloom exists to avoid. The checkpoint materializes
     only the already-pruned survivors (the selective case is why the
     bloom is there at all), which is the same trade a persisted
-    candidate table makes. Set ``barrier=False`` for broadcast-sized
-    dims where the reorder is free.
+    candidate table makes.
 
     The exact semi-join strategy is left to Catalyst/AQE (no broadcast
     hint: the dim grows with SF — the join_eq3 lesson).
     """
-    bloom = build_bloom(dim, dim_key, m_bits, k)
+    bloom = build_bloom(dim, dim_key)
     pruned = (
         fact.crossJoin(F.broadcast(bloom))
-        .filter(might_contain("bloom", fact_key, m_bits, k))
+        .filter(might_contain("bloom", fact_key, BLOOM_M_BITS, BLOOM_K))
         .drop("bloom")
     )
-    if barrier:
-        # lazy pin: truncates the logical plan (the reorder barrier)
-        # without forcing materialization before the first action; the
-        # durability mode comes from checkpoint.py's session conf.
-        pruned = pin(pruned, eager=False, label="bloom_pruned")
+    # lazy pin: truncates the logical plan (the reorder barrier) without
+    # forcing materialization before the first action; the durability
+    # mode comes from checkpoint.py's session conf.
+    pruned = pin(pruned, eager=False, label="bloom_pruned")
     keys = dim.select(F.col(dim_key).alias(fact_key)).distinct()
     return pruned.join(keys, fact_key, "left_semi")

@@ -204,15 +204,20 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash_signature(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 60
-) -> DataFrame:
+# SimHash shape: a 60-bit signature in 4 chunks of 15 bits; pairs within
+# hamming distance 3 are near-dups
+SIMHASH_BITS = 60
+SIMHASH_CHUNKS = 4
+SIMHASH_MAX_HAMMING = 3
+
+
+def simhash_signature(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """SimHash over distinct tokens: bit b is the sign of the sum of
     (+1/-1) votes from each token's hash bit b. Pure column expression."""
     votes = " + ".join(
         f"(CASE WHEN aggregate(transform(th, h -> CASE WHEN (shiftright(h, {b}) & 1) = 1 "
         f"THEN 1 ELSE -1 END), 0, (a, x) -> a + x) > 0 THEN {1 << b} ELSE 0 END)"
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     )
     return (
         df.withColumn("tok", F.array_distinct(tokens_col(text_col)))
@@ -223,30 +228,23 @@ def simhash_signature(
     )
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bits: int = 60,
-    chunks: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """SimHash near-dup pairs. Pigeonhole blocking: with 4 chunks of a
     60-bit hash, any pair at hamming distance <= 3 shares a chunk — so an
     equi-join on (chunk_idx, chunk_value) finds all candidates without a
     cross join; exact hamming verify runs on candidates only. Chunk width
     (bits/chunks = 15) sets the random-collision rate: ~n^2/2^15 spurious
     candidates per chunk, linear in practice for uniform hashes."""
-    chunk_bits = bits // chunks
+    chunk_bits = SIMHASH_BITS // SIMHASH_CHUNKS
     mask = (1 << chunk_bits) - 1
-    sig = pin(simhash_signature(df, id_col, text_col, bits),
+    sig = pin(simhash_signature(df, id_col, text_col),
               eager=False, label="simhash_sig")  # lazy — see minhash_lsh_pairs
     chunk_structs = [
         F.struct(
             F.lit(i).alias("ci"),
             (F.shiftright("simhash", i * chunk_bits).bitwiseAND(F.lit(mask))).alias("cv"),
         )
-        for i in range(chunks)
+        for i in range(SIMHASH_CHUNKS)
     ]
     exploded = sig.select(
         F.col(id_col), "simhash", F.explode(F.array(*chunk_structs)).alias("ck")
@@ -266,7 +264,7 @@ def simhash_pairs(
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return (
         cand.withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
     )
 
@@ -426,9 +424,7 @@ def connected_components_labelprop(
     return labels.select(F.col("node"), F.col("lbl").alias("component"))
 
 
-def connected_components(
-    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b", max_iter: int = 15
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 15) -> DataFrame:
     """Connected components over near-dup pairs — the cluster-assignment
     step that turns pairwise matches into dedup groups (keep one doc
     per component). Alternating large-star / small-star contraction
@@ -474,13 +470,14 @@ def connected_components(
     too: the eager nodes/edges pins each re-executed the whole upstream
     pair-generation subtree (band joins etc.) — now it runs once.
     Nodes appearing only in self-pairs keep their own label (the node
-    universe is taken from ``pairs`` before dropping loops).
+    universe is taken from ``pairs``' (doc_a, doc_b) before dropping
+    loops).
     Returns (node, component) with component = min doc id in the group.
     """
     global LAST_CC_ROUNDS
     LAST_CC_ROUNDS = 0
     raw = pin(
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")),
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")),
         eager=False,
         label="cc_raw",
     )
@@ -659,7 +656,6 @@ def minhash_lsh_join(
     num_hashes: int = 8,
     bands: int = 4,
     threshold: float = 0.5,
-    shingle: int = 3,
     pin_batch: bool = True,
 ) -> DataFrame:
     """Near-dup matches of a NEW batch against an EXISTING corpus — the
@@ -674,7 +670,7 @@ def minhash_lsh_join(
     Returns (batch_id, corpus_id, est_jaccard) with est >= threshold.
     """
     def exploded(df: DataFrame, do_pin: bool) -> tuple[DataFrame, Column]:
-        sig = minhash_signature(df, id_col, text_col, num_hashes, shingle)
+        sig = minhash_signature(df, id_col, text_col, num_hashes)
         if do_pin:
             sig = pin(sig, label="lsh_join_sig")
         return lsh_bands(sig, id_col, num_hashes, bands)
@@ -697,14 +693,10 @@ def minhash_lsh_join(
 
 
 def containment_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    df_cap: int | None = 10,
-    threshold: float = 0.8,
+    docs: DataFrame, df_cap: int | None = 10, threshold: float = 0.8
 ) -> DataFrame:
     """Directed containment pairs |sh(A) ∩ sh(B)| / |sh(A)| >= threshold
-    over distinct 3-gram shingles.
+    over the distinct 3-gram shingles of ``docs``' (doc_id, text).
 
     ``df_cap`` restricts BOTH numerator and denominator to shingles with
     document frequency <= cap ("distinctive containment"): every posting
@@ -713,8 +705,8 @@ def containment_pairs(
     (quadratic in boilerplate df — ground truth for quality
     measurement, never a production path). Returns (doc_a, doc_b,
     n_shared, n_rare, containment)."""
-    sh = with_shingles(docs.select(id_col, text_col), text_col).select(
-        F.col(id_col).alias("doc_id"),
+    sh = with_shingles(docs.select("doc_id", "text"), "text").select(
+        "doc_id",
         F.explode(F.array_distinct("shingles")).alias("g"),
     )
     sh = pin(sh, label="containment_postings")
@@ -791,25 +783,20 @@ def _excised(df: DataFrame, id_col: str, n: int) -> DataFrame:
 
 
 def duplicated_span_excise(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 6,
-    min_count: int = 2,
-    keep_first: bool = False,
+    docs: DataFrame, n: int = 6, keep_first: bool = False
 ) -> DataFrame:
     """Exact duplicated-SPAN detection and excision ("Deduplicating
     Training Data Makes Language Models Better", Lee et al.,
     arXiv:2107.06499 ExactSubstr) — remove every token covered by a
-    token span of length >= ``n`` that occurs at least ``min_count``
-    times corpus-wide, counting position-distinct occurrences (a
+    token span of length >= ``n`` that occurs at least twice
+    corpus-wide, counting position-distinct occurrences (a
     within-document repeat is a duplicate too, exactly as a suffix
     array would see it).
 
     The suffix-array-free reformulation that makes this a pure
     DataFrame plan: a token lies inside SOME duplicated span of length
     >= n iff it is covered by an n-token window whose n-gram occurs
-    >= min_count times. (=> : any window of the duplicated span around
+    at least twice. (=> : any window of the duplicated span around
     the token recurs wherever the span recurs. <= : a recurring n-gram
     IS a duplicated span of length n covering the token.) So exact
     span-level dedup is: positional n-gram postings -> occurrence
@@ -817,7 +804,7 @@ def duplicated_span_excise(
     position excision. No suffix array, no global order — the corpus
     sort Lee et al. build becomes Spark's gram-keyed shuffle.
 
-    Returns one row per input doc: (id, n_tok, n_removed, n_spans,
+    Returns one row per input doc: (doc_id, n_tok, n_removed, n_spans,
     clean_text) where n_spans counts MAXIMAL merged duplicated spans
     (windows closer than n tokens fuse into one span) and clean docs
     pass through with n_removed = n_spans = 0.
@@ -841,10 +828,10 @@ def duplicated_span_excise(
     text_span_excise array rebuild: per-doc start positions
     collect_list (bounded by hits per doc), then a pure column
     expression filters covered positions — no window, no Python."""
-    tok = docs.select(id_col, F.split(text_col, " ").alias("w"))
+    tok = docs.select("doc_id", F.split("text", " ").alias("w"))
     grams = pin(
-        tok.select(id_col, F.explode(_window_grams(n)).alias("pg")).select(
-            id_col, F.col("pg.pos").alias("pos"), F.col("pg.h").alias("h")
+        tok.select("doc_id", F.explode(_window_grams(n)).alias("pg")).select(
+            "doc_id", F.col("pg.pos").alias("pos"), F.col("pg.h").alias("h")
         ),
         eager=False,  # lazy: df-cap filter + both join sides share the
         # terminal plan (round 14 — see minhash_lsh_pairs)
@@ -853,43 +840,41 @@ def duplicated_span_excise(
     # composite occurrence key (id * 2^20 + pos): min() of it names the
     # canonical occurrence identically in Spark and DuckDB without
     # struct-ordering semantics (pos < 2^20 always: it is a token index)
-    mkey = (F.col(id_col) * (1 << 20) + F.col("pos")).alias("mk")
+    mkey = (F.col("doc_id") * (1 << 20) + F.col("pos")).alias("mk")
     dup = (
         grams.groupBy("h")
         .agg(F.count("*").alias("occ"), F.min(mkey).alias("kk"))
-        .filter(F.col("occ") >= min_count)
+        .filter(F.col("occ") >= 2)
         .select("h", "kk")
     )
     covered = grams.join(dup, "h")
     if keep_first:
         covered = covered.filter(
-            F.col(id_col) * (1 << 20) + F.col("pos") != F.col("kk")
+            F.col("doc_id") * (1 << 20) + F.col("pos") != F.col("kk")
         )
-    hits = covered.groupBy(id_col).agg(
+    hits = covered.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("pos")).alias("st")
     )
     return _excised(
-        tok.join(hits, id_col, "left").withColumn(
+        tok.join(hits, "doc_id", "left").withColumn(
             "st", F.coalesce("st", F.expr("CAST(array() AS array<int>)"))
         ),
-        id_col,
+        "doc_id",
         n,
     )
 
 
-def positional_gram_index(
-    docs: DataFrame, text_col: str = "text", n: int = 6
-) -> DataFrame:
+def positional_gram_index(docs: DataFrame, n: int = 6) -> DataFrame:
     """The STANDING side of span-level admission control: the distinct
     n-gram hash set of a corpus — one ``h`` (hash60) row per distinct
     n-token window text. Occurrence counts are irrelevant here (unlike
-    duplicated_span_excise's >= min_count gate): a span that exists
+    duplicated_span_excise's twice-or-more gate): a span that exists
     ANYWHERE in the admitted corpus is a duplicate the moment it
     arrives again, so membership is the whole index. ~one row per
     distinct corpus n-gram; callers pin() it (bucketed parquet on a
     cluster) and reuse it across micro-batches."""
     return (
-        docs.select(F.split(text_col, " ").alias("w"))
+        docs.select(F.split("text", " ").alias("w"))
         .select(F.explode(_window_grams(n, positions=False)).alias("h"))
         .distinct()
     )
@@ -899,7 +884,6 @@ def span_excise_against_index(
     batch: DataFrame,
     index: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 6,
 ) -> DataFrame:
     """Span-level ADMISSION dedup: excise from each incoming document
@@ -923,25 +907,21 @@ def span_excise_against_index(
     Returns (id, n_tok, n_removed, n_spans, clean_text) — the same
     shape as duplicated_span_excise; n_spans counts MAXIMAL merged
     excised spans."""
-    tok = batch.select(id_col, text_col, F.split(text_col, " ").alias("w"))
+    tok = batch.select(id_col, "text", F.split("text", " ").alias("w"))
     g = tok.select(
-        id_col, text_col, F.explode_outer(_window_grams(n)).alias("pg")
-    ).select(id_col, text_col, F.col("pg.pos").alias("pos"), F.col("pg.h").alias("h"))
+        id_col, "text", F.explode_outer(_window_grams(n)).alias("pg")
+    ).select(id_col, "text", F.col("pg.pos").alias("pos"), F.col("pg.h").alias("h"))
     m = g.join(index.select("h", F.lit(1).alias("hit")), "h", "left")
-    agg = m.groupBy(id_col, text_col).agg(
+    agg = m.groupBy(id_col, "text").agg(
         F.sort_array(
             F.collect_list(F.when(F.col("hit") == 1, F.col("pos")))
         ).alias("st")
     )
-    return _excised(agg.withColumn("w", F.split(text_col, " ")), id_col, n)
+    return _excised(agg.withColumn("w", F.split("text", " ")), id_col, n)
 
 
 def connected_components_incremental(
-    standing: DataFrame,
-    new_pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 15,
+    standing: DataFrame, new_pairs: DataFrame
 ) -> DataFrame:
     """Merge a NEW batch of near-dup edges into a standing component
     assignment at O(batch) cost — the clustering step of daily dedup
@@ -968,7 +948,7 @@ def connected_components_incremental(
     for new nodes. The corpus-scale frames are touched only by keyed
     joins — no corpus-wide iteration, which is the entire point at
     100 TB: daily growth costs O(new batch), not O(corpus)."""
-    e = new_pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+    e = new_pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     lu = standing.select(
         F.col("node").alias("u"), F.col("component").alias("cu")
     )
@@ -985,7 +965,7 @@ def connected_components_incremental(
         .distinct()
     )
     sub = pin(
-        connected_components(comp_edges, max_iter=max_iter),
+        connected_components(comp_edges),
         label="cc_inc_sub",
     )
     remap = sub.select(

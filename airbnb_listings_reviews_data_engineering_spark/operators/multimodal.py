@@ -12,11 +12,10 @@ Decode honesty map (round 12 — VERDICT r11 #3):
   RMS (``audio_window_rms``).
 - Lossy codecs (JPEG entropy decode, video) remain header-only
   (``probe_media``) — no DCT/codec library ships in this container;
-  ``decode_image(fake=True)`` keeps the deterministic fake for those
-  environments and payload types, exercising the identical Arrow
-  plumbing (schema, batching, partitioning). Swap the per-payload
-  decode function for a real codec on a cluster that has one; nothing
-  else changes.
+  ``decode_image`` is a deterministic fake for those payload types,
+  exercising the identical Arrow plumbing (schema, batching,
+  partitioning). Swap its per-payload decode function for a real codec
+  on a cluster that has one; nothing else changes.
 """
 
 from __future__ import annotations
@@ -33,10 +32,12 @@ from .ordered import ordered_scan
 
 BINARY_META_SCHEMA = "doc_id long, n_bytes long, digest string"
 DECODE_SCHEMA = "doc_id long, width int, height int, mean_intensity double"
+FRAME_BYTES = 64  # frame_sample's fixed byte-run length
 
 
-def pack_binary(df: DataFrame, id_col: str, text_col: str, media_type: str = "text/plain") -> DataFrame:
-    """Wrap a column as an opaque binary payload with a media_type tag.
+def pack_binary(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Wrap a text column as an opaque binary payload tagged
+    ``text/plain``.
 
     (Test stand-in for reading real image/audio bytes; the downstream
     operators only see `binary`.)
@@ -44,7 +45,7 @@ def pack_binary(df: DataFrame, id_col: str, text_col: str, media_type: str = "te
     return df.select(
         F.col(id_col).alias("doc_id"),
         F.encode(F.col(text_col), "utf-8").alias("payload"),
-        F.lit(media_type).alias("media_type"),
+        F.lit("text/plain").alias("media_type"),
     )
 
 
@@ -75,23 +76,17 @@ def _fake_decode(payload: bytes) -> tuple[int, int, float]:
     return width, height, mean_intensity
 
 
-def decode_image(df: DataFrame, fake: bool = False) -> DataFrame:
-    """Decode image payloads to (width, height, mean_intensity).
+def decode_image(df: DataFrame) -> DataFrame:
+    """Deterministic fake decode of image payloads to (width, height,
+    mean_intensity), derived from each payload's md5 (``_fake_decode``).
 
     For PNG payloads the REAL stdlib decoder exists — use
     ``decode_png_stats`` (inflate + unfilter, exact integer stats).
-    This entry point covers the OTHER image codecs (JPEG/WebP entropy
-    decode), which need a codec library this container lacks — without
-    ``fake=True`` it raises NotImplementedError at plan build time.
-    The Spark-side plumbing (Arrow batch shape, schema, partition
+    This entry point stands in for the OTHER image codecs (JPEG/WebP
+    entropy decode), which need a codec library the package does not
+    ship. The Spark-side plumbing (Arrow batch shape, schema, partition
     parallelism) is identical for a real codec.
     """
-    if not fake:
-        raise NotImplementedError(
-            "no lossy-image codec in this environment; use "
-            "decode_png_stats for real PNG decode, or pass fake=True "
-            "for the deterministic fake decode (plumbing test)"
-        )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -108,8 +103,9 @@ def decode_image(df: DataFrame, fake: bool = False) -> DataFrame:
     return df.mapInPandas(batches, schema=DECODE_SCHEMA)
 
 
-def frame_sample(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
-    """'Frame sampling' for the opaque payload: slice every n-th byte run.
+def frame_sample(df: DataFrame) -> DataFrame:
+    """'Frame sampling' for the opaque payload: slice it into
+    ``FRAME_BYTES``-long runs (the last one may be shorter).
 
     Stands in for video frame-sampling; demonstrates producing multiple
     rows per input row from a binary column inside mapInPandas.
@@ -120,8 +116,8 @@ def frame_sample(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = bytes(payload)
-                for frame_idx, off in enumerate(range(0, len(b), every_n_bytes)):
-                    chunk = b[off : off + every_n_bytes]
+                for frame_idx, off in enumerate(range(0, len(b), FRAME_BYTES)):
+                    chunk = b[off : off + FRAME_BYTES]
                     rows.append((doc_id, frame_idx, len(chunk)))
             yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_bytes"])
 
@@ -405,6 +401,7 @@ SPEC_BANDS = SPEC_FRAME // 2 + 1     # 9 one-sided bins
 SPEC_HANN_SCALE = 128                # 2^7
 SPEC_TWIDDLE_SCALE = 256             # 2^8
 SPEC_ENERGY_DIV = 1 << 20            # per-frame energy rescale (int DIV)
+SPEC_TONE_AMP = 1000                 # planted tone amplitude (tone_cycle)
 
 SPECTROGRAM_SCHEMA = "doc_id long, frame_idx int, band int, energy long"
 
@@ -426,19 +423,19 @@ def _spec_tables():
     return hann, tc, ts
 
 
-def tone_cycle(k0: int, amp: int = 1000) -> list[int]:
+def tone_cycle(k0: int) -> list[int]:
     """One 16-sample cycle of a bin-aligned tone: sample i is
-    round(amp * sin(2*pi*((k0*i) mod 16)/16)). The sine magnitudes
-    {0, .38268, .70711, .92388, 1} scaled by amp=1000 sit far from .5,
-    so numpy and DuckDB round identically (same reason the twiddle
-    tables are cross-engine safe)."""
+    round(SPEC_TONE_AMP * sin(2*pi*((k0*i) mod 16)/16)). The sine
+    magnitudes {0, .38268, .70711, .92388, 1} scaled by 1000 sit far
+    from .5, so numpy and DuckDB round identically (same reason the
+    twiddle tables are cross-engine safe)."""
     import numpy as np
 
     i = np.arange(SPEC_FRAME)
     return [
         int(v)
         for v in np.round(
-            amp * np.sin(2 * np.pi * ((k0 * i) % SPEC_FRAME) / SPEC_FRAME)
+            SPEC_TONE_AMP * np.sin(2 * np.pi * ((k0 * i) % SPEC_FRAME) / SPEC_FRAME)
         ).astype(np.int64)
     ]
 
@@ -486,11 +483,9 @@ def synthesize_tone_pcm(
     return df.mapInPandas(batches, schema="doc_id long, payload binary")
 
 
-def audio_spectrogram_bands(
-    df: DataFrame, frame: int = SPEC_FRAME, hop: int = 8
-) -> DataFrame:
+def audio_spectrogram_bands(df: DataFrame, hop: int = 8) -> DataFrame:
     """REAL STFT over PCM bytes with exact integer arithmetic: RIFF
-    walk -> int16 samples -> framed (length ``frame``, stride ``hop``)
+    walk -> int16 samples -> framed (length ``SPEC_FRAME``, stride ``hop``)
     -> integer-quantized Hann window -> integer-quantized one-sided
     DFT (matmul against the 2^8-scaled twiddle tables) -> per-band
     energy re^2 + im^2, rescaled by an exact integer DIV 2^20 so a
@@ -505,8 +500,6 @@ def audio_spectrogram_bands(
     import struct
 
     import numpy as np
-
-    assert frame == SPEC_FRAME  # tables are built for N=16
 
     def _pcm(b: bytes) -> "np.ndarray":
         off = 12
@@ -526,9 +519,11 @@ def audio_spectrogram_bands(
             out_id, out_f, out_b, out_e = [], [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 s = _pcm(bytes(payload)).astype(np.int64)
-                n_frames = (len(s) - frame) // hop + 1 if len(s) >= frame else 0
+                n_frames = (
+                    (len(s) - SPEC_FRAME) // hop + 1 if len(s) >= SPEC_FRAME else 0
+                )
                 for fi in range(n_frames):
-                    w = s[fi * hop : fi * hop + frame] * hann
+                    w = s[fi * hop : fi * hop + SPEC_FRAME] * hann
                     re = tc @ w
                     im = ts @ w
                     e = (re * re + im * im) // SPEC_ENERGY_DIV
@@ -675,14 +670,17 @@ def _png_decode_gray(b: bytes) -> tuple[int, int, bytearray]:
 
 # --- real GIF decode (pure-Python LZW — no codec library) --------------------
 
+# LZW minimum code size of the 8-bit palettes every synthesized GIF uses
+GIF_MIN_CODE_SIZE = 8
 
-def _gif_lzw_encode(data: bytes, min_code_size: int = 8) -> bytes:
+
+def _gif_lzw_encode(data: bytes) -> bytes:
     """GIF-flavor LZW compression (spec appendix F): variable code
     width starting min+1, LSB-first bit packing, CLEAR emitted when the
     table reaches 4096 entries. The encoder bumps its code width one
     entry AFTER crossing 2^width (next_code == 2^width + 1) because the
     decoder's table lags the encoder's by exactly one entry."""
-    clear = 1 << min_code_size
+    clear = 1 << GIF_MIN_CODE_SIZE
     eoi = clear + 1
     out = bytearray()
     bitbuf = nbits = 0
@@ -697,7 +695,7 @@ def _gif_lzw_encode(data: bytes, min_code_size: int = 8) -> bytes:
             nbits -= 8
 
     def fresh():
-        return {bytes([i]): i for i in range(clear)}, eoi + 1, min_code_size + 1
+        return {bytes([i]): i for i in range(clear)}, eoi + 1, GIF_MIN_CODE_SIZE + 1
 
     table, next_code, width = fresh()
     emit(clear, width)
@@ -725,7 +723,9 @@ def _gif_lzw_encode(data: bytes, min_code_size: int = 8) -> bytes:
     return bytes(out)
 
 
-def _gif_lzw_decode(data: bytes, min_code_size: int = 8) -> bytearray:
+def _gif_lzw_decode(
+    data: bytes, min_code_size: int = GIF_MIN_CODE_SIZE
+) -> bytearray:
     """GIF LZW decompression: variable width LSB-first codes, the
     KwKwK case (code == next unassigned entry), CLEAR resets, width
     bump when next_code reaches 2^width (cap 12)."""
@@ -805,7 +805,7 @@ def _gif_bytes(
     for i in range(256):
         out += bytes([i, i, i])
     out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, 0)
-    out.append(8)  # LZW min code size
+    out.append(GIF_MIN_CODE_SIZE)
     for i in range(0, len(lzw), 255):
         blk = lzw[i : i + 255]
         out += bytes([len(blk)]) + blk
@@ -911,7 +911,7 @@ def _gif_animation_bytes(
     for f in range(n_frames):
         out += b"\x21\xf9\x04\x00\x0a\x00\x00\x00"  # GCE: 100ms delay
         out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, 0)
-        out.append(8)
+        out.append(GIF_MIN_CODE_SIZE)
         px = bytes(
             (x * 7 + y * 13 + seed + f * 31) % 256
             for y in range(height)
@@ -926,15 +926,20 @@ def _gif_animation_bytes(
     return bytes(out)
 
 
-def synthesize_gif_animation(
-    df: DataFrame, *, frames_expr: str = "2 + doc_id % 3"
-) -> DataFrame:
+# frames per synthesized animation: a pandas expression here, the same
+# text in the oracle's SQL
+GIF_FRAMES_EXPR = "2 + doc_id % 3"
+# gif_frame_stats keeps every GIF_FRAME_STRIDE-th decoded frame
+GIF_FRAME_STRIDE = 2
+
+
+def synthesize_gif_animation(df: DataFrame) -> DataFrame:
     """One animated GIF per (doc_id, w, h, seed) spec row with
-    ``frames_expr``-many frames (evaluated per doc in pandas)."""
+    ``GIF_FRAMES_EXPR``-many frames (evaluated per doc in pandas)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            nf = pdf.eval(frames_expr)
+            nf = pdf.eval(GIF_FRAMES_EXPR)
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].astype("int64"),
@@ -958,13 +963,13 @@ GIF_FRAME_SCHEMA = (
 )
 
 
-def gif_frame_stats(df: DataFrame, every: int = 1) -> DataFrame:
+def gif_frame_stats(df: DataFrame) -> DataFrame:
     """REAL frame extraction from animated GIFs: decode every frame
-    (full LZW per frame), keep every ``every``-th, emit exact integer
-    stats per kept frame — the video-pipeline frame-sampling shape
-    (decode -> temporal subsample -> per-frame features) on a
-    container the stdlib can genuinely decode. Malformed payloads
-    yield a single NULL-fields row."""
+    (full LZW per frame), keep every ``GIF_FRAME_STRIDE``-th, emit
+    exact integer stats per kept frame — the video-pipeline
+    frame-sampling shape (decode -> temporal subsample -> per-frame
+    features) on a container the stdlib can genuinely decode.
+    Malformed payloads yield a single NULL-fields row."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -973,7 +978,7 @@ def gif_frame_stats(df: DataFrame, every: int = 1) -> DataFrame:
                 try:
                     frames = _gif_decode_frames(bytes(payload))
                     for fi, (w, h, px) in enumerate(frames):
-                        if fi % every:
+                        if fi % GIF_FRAME_STRIDE:
                             continue
                         rows.append((doc_id, fi, w, h, sum(px)))
                 except Exception:  # noqa: BLE001 — malformed object

@@ -20,11 +20,16 @@ from ..checkpoint import pin
 
 from ..functions.arrays import as_double_array, cosine, dot, norm
 
+# rows the brute-force top-k keeps
+TOPK = 10
+# salt buckets of the batch ANN joins' first-stage top-k (_salted_topk)
+_TOPK_SALTS = 8
+
 
 def brute_force_topk(
-    df: DataFrame, id_col: str, vec_col: str, query: DataFrame, k: int = 10
+    df: DataFrame, id_col: str, vec_col: str, query: DataFrame
 ) -> DataFrame:
-    """Exact top-k by cosine to the (single-row) query vector.
+    """Exact top-``TOPK`` by cosine to the (single-row) query vector.
 
     The query side is broadcast; scores round to 6 dp for cross-engine
     determinism; ties break on id. Norms are hoisted to each join side
@@ -51,11 +56,11 @@ def brute_force_topk(
             ).alias("cos_sim"),
         )
     )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(TOPK)
 
 
 def brute_force_topk_pandas(
-    df: DataFrame, id_col: str, vec_col: str, query: DataFrame, k: int = 10
+    df: DataFrame, id_col: str, vec_col: str, query: DataFrame
 ) -> DataFrame:
     """Same exact top-k as :func:`brute_force_topk`, scored by an
     Arrow-vectorized Pandas UDF (numpy matmul per batch) instead of the
@@ -82,7 +87,7 @@ def brute_force_topk_pandas(
     scored = df.select(
         F.col(id_col), cos(as_double_array(vec_col)).alias("cos_sim")
     )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(TOPK)
 
 
 def with_lsh_bucket(
@@ -163,16 +168,15 @@ def lsh_probe(
     )
 
 
-def _salted_topk(
-    scored: DataFrame, id_col: str, k: int, n_salt: int
-) -> DataFrame:
+def _salted_topk(scored: DataFrame, id_col: str, k: int) -> DataFrame:
     """Two-stage salted top-k per q_id over (q_id, id, cos_sim) rows —
     the distributed top-k-per-group pattern (see knn_join docstring):
-    per-(q_id, salt) heaps first, then a trivially small global rank."""
+    per-(q_id, salt) heaps over ``_TOPK_SALTS`` salts first, then a
+    trivially small global rank."""
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     salted = scored.withColumn(
-        "salt", F.crc32(F.col(id_col).cast("string")) % n_salt
+        "salt", F.crc32(F.col(id_col).cast("string")) % _TOPK_SALTS
     )
     w_local = Window.partitionBy("q_id", "salt").orderBy(F.desc("cos_sim"), id_col)
     w_global = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), id_col)
@@ -262,7 +266,6 @@ def ivf_topk_join(
     centroids: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    n_salt: int = 8,
 ) -> DataFrame:
     """Batch IVF ANN: exact top-k within each query's ``nprobe`` nearest
     cells, for EVERY query row at once.
@@ -304,7 +307,7 @@ def ivf_topk_join(
             dot(F.col("v"), F.col("qv")) / (F.col("_nv") * F.col("_nq")), 6
         ).alias("cos_sim"),
     )
-    return _salted_topk(scored, id_col, k, n_salt)
+    return _salted_topk(scored, id_col, k)
 
 
 def lsh_topk_join(
@@ -317,7 +320,6 @@ def lsh_topk_join(
     n_planes: int,
     k: int = 10,
     flips: int = 1,
-    n_salt: int = 8,
 ) -> DataFrame:
     """Batch multiprobe LSH ANN: top-k within each query's own hyperplane
     bucket plus every bucket within ``flips`` bit flips (multiprobe — the
@@ -384,7 +386,7 @@ def lsh_topk_join(
             ).alias("cos_sim"),
         )
     )
-    return _salted_topk(scored, id_col, k, n_salt)
+    return _salted_topk(scored, id_col, k)
 
 
 def knn_join(

@@ -11,10 +11,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EN_STOPWORDS = ("the", "a", "of", "and", "to")
+# lang_id's cut: a doc is English when at least this share of its
+# tokens are EN_STOPWORDS
+EN_MIN_STOP_RATIO = 0.05
 
 
-def lang_id(df: DataFrame, id_col: str, text_col: str, min_ratio: float = 0.05) -> DataFrame:
-    """N-gram-free language ID heuristic: English stopword token ratio.
+def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """N-gram-free language ID heuristic: English stopword token ratio
+    against ``EN_MIN_STOP_RATIO``.
 
     The token array is materialized in its own projection: a split
     inlined into every reference re-runs per access inside interpreted
@@ -27,7 +31,7 @@ def lang_id(df: DataFrame, id_col: str, text_col: str, min_ratio: float = 0.05) 
     return tokd.select(
         F.col(id_col),
         ratio.alias("stop_ratio"),
-        F.when(ratio >= min_ratio, "en").otherwise("unk").alias("lang_pred"),
+        F.when(ratio >= EN_MIN_STOP_RATIO, "en").otherwise("unk").alias("lang_pred"),
     )
 
 
@@ -124,11 +128,10 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 ROLLING_HASH_MOD = 1_000_000_007
 ROLLING_HASH_BASE = 31
+ROLLING_HASH_K = 8  # char-gram length of min_kgram_hash
 
 
-def rolling_hash_fingerprint(
-    df: DataFrame, id_col: str, text_col: str, k: int = 8
-) -> DataFrame:
+def rolling_hash_fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Rabin-Karp rolling-hash document fingerprints (pure column exprs).
 
     ``doc_hash`` folds the whole character stream through h = (h*B + c)
@@ -142,7 +145,7 @@ def rolling_hash_fingerprint(
     sequence: whole-stage codegen, zero shuffles, zero Python — runs at
     scan speed. Work is O(len·k) per document, constant memory.
     """
-    m, b = ROLLING_HASH_MOD, ROLLING_HASH_BASE
+    m, b, k = ROLLING_HASH_MOD, ROLLING_HASH_BASE, ROLLING_HASH_K
     doc_hash = (
         f"aggregate(transform(sequence(1, length({text_col})), "
         f"j -> ascii(substring({text_col}, j, 1))), 0L, (h, c) -> (h * {b} + c) % {m})"

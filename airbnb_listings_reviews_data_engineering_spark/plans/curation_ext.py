@@ -23,7 +23,11 @@ from ..operators.bpe import BPE_MERGES, bpe_pieces_sql
 from ..operators.clustering import kmeans_blocks, pq_blocks, sq_dist, sq_dist_sql
 from ..operators.multimodal import SHARD_MANIFEST_SQL
 from ..operators.ordered import ordered_scan
-from ..operators.text import minimizer_lag_cols_sql, minimizer_select_sql
+from ..operators.text import (
+    EN_MIN_STOP_RATIO,
+    minimizer_lag_cols_sql,
+    minimizer_select_sql,
+)
 from .registry import load, register
 
 # ---------------------------------------------------------------------------
@@ -2444,7 +2448,7 @@ heur AS (
   SELECT doc_id,
          CASE WHEN len(list_filter(string_split(text, ' '),
                     w -> w IN ('the', 'a', 'of', 'and', 'to')))
-                   / CAST(len(string_split(text, ' ')) AS DOUBLE) >= 0.05
+                   / CAST(len(string_split(text, ' ')) AS DOUBLE) >= {EN_MIN_STOP_RATIO}
               THEN 'en' ELSE 'unk' END AS heur_pred
   FROM documents WHERE doc_id % 5 = 0
 )

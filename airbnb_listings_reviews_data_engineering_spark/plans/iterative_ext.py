@@ -426,8 +426,8 @@ def ml_linreg_normal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # batch model inference (linear scorer apply)
 # ---------------------------------------------------------------------------
 
-_APPLY_W = (-1.2, 0.8, 2.5, -0.3)  # intercept, n_tok/100, stop_ratio, mean_len
-
+# weights (w0..w3) = (-1.2, 0.8, 2.5, -0.3) on (intercept, n_tok/100,
+# stop_ratio, mean_len):
 # logit = w0 + w1*n_tok/100 + w2*(n_stop/n_tok) + w3*(mean_len)
 #       = (8*n_tok^2 - 1200*n_tok + 2500*n_stop - 300*(chars - n_tok + 1))
 #         / (1000 * n_tok)
@@ -1339,7 +1339,7 @@ def _order_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return f.join(o, f.l_orderkey == o.o_orderkey)
 
 
-def _logreg_feats(spark: SparkSession, sf_dir: str, label: str = "lr_feats"):
+def _logreg_feats(spark: SparkSession, sf_dir: str):
     """The pinned 3-double feature projection ml_logreg_gd trains on.
     Precondition: the (lineitem x orders) join is non-empty — with
     n = 0 the weight update divides by zero and min() returns NULL,
@@ -1351,7 +1351,7 @@ def _logreg_feats(spark: SparkSession, sf_dir: str, label: str = "lr_feats"):
     with small_pin_floor(spark):
         return pin(
             _order_features(spark, sf_dir).selectExpr(*_LOGREG_FEATS),
-            label=label,
+            label="lr_feats",
         )
 
 

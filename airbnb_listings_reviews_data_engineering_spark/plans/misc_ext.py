@@ -716,7 +716,7 @@ def agg_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual data value), flipping to `approx_percentile` beyond it — the
     GK sketch emits observed values, so it is the approx analog of the
     disc form as well."""
-    from ..functions.percentile import exact_fits, guarded_percentile
+    from ..functions.percentile import APPROX_ACCURACY, exact_fits, guarded_percentile
 
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_mktsegment").alias("segment"), "c_acctbal"
@@ -739,7 +739,7 @@ def agg_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     disc = (
         F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY c_acctbal)")
         if exact
-        else F.percentile_approx("c_acctbal", F.lit(0.5), 10000)
+        else F.percentile_approx("c_acctbal", F.lit(0.5), APPROX_ACCURACY)
     )
     disc_df = cust.groupBy("segment").agg(disc.alias("median_disc"))
     return out.join(disc_df, "segment")

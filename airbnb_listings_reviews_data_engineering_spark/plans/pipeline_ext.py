@@ -198,9 +198,6 @@ def pipeline_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SIMHASH_BITS = 60
-
-
 def _simhash_sql() -> str:
     th = (
         "list_transform(list_distinct(string_split(text, ' ')), "
@@ -209,7 +206,7 @@ def _simhash_sql() -> str:
     votes = " + ".join(
         f"(CASE WHEN list_sum(list_transform(th, h -> CASE WHEN (h >> {b}) & 1 = 1 "
         f"THEN 1 ELSE -1 END)) > 0 THEN {1 << b} ELSE 0 END)"
-        for b in range(_SIMHASH_BITS)
+        for b in range(D.SIMHASH_BITS)
     )
     return f"""
 WITH {_VARIANT_CORPUS_SQL.strip()},
@@ -218,7 +215,7 @@ sig AS (SELECT doc_id, CAST({votes} AS BIGINT) AS simhash FROM hashed)
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
 FROM sig a JOIN sig b
-  ON a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 3
+  ON a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= {D.SIMHASH_MAX_HAMMING}
 """
 
 
@@ -265,7 +262,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs with pigeonhole chunk blocking."""
     corpus = _variant_corpus(spark, sf_dir)
-    return D.simhash_pairs(corpus, "doc_id", "text", bits=_SIMHASH_BITS)
+    return D.simhash_pairs(corpus, "doc_id", "text")
 
 
 _NGRAM_JACCARD_SQL = """
@@ -429,7 +426,7 @@ q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
 SELECT vec_id, round({_EMB_COS.format(a='v', b='qv')}, 6) AS cos_sim
 FROM e, q
 ORDER BY round({_EMB_COS.format(a='v', b='qv')}, 6) DESC, vec_id
-LIMIT 10
+LIMIT {S.TOPK}
 """
 
 
@@ -442,7 +439,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == 0)
-    return S.brute_force_topk(emb, "vec_id", "embedding", query, k=10)
+    return S.brute_force_topk(emb, "vec_id", "embedding", query)
 
 
 _LSH_PROBE_SQL = f"""
@@ -675,7 +672,7 @@ def sim_cosine_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python path for scoring the JVM built-ins can't express. Same oracle."""
     emb = load(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == 0)
-    return S.brute_force_topk_pandas(emb, "vec_id", "embedding", query, k=10)
+    return S.brute_force_topk_pandas(emb, "vec_id", "embedding", query)
 
 
 _KM_K = 4
@@ -788,14 +785,14 @@ def sim_ivf_join_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- text analysis ------------------------------------------------------------
 
-_LANG_ID_SQL = """
+_LANG_ID_SQL = f"""
 SELECT doc_id,
   round(CAST(len(list_filter(string_split(text, ' '),
         t -> t IN ('the','a','of','and','to'))) AS DOUBLE)
         / len(string_split(text, ' ')), 4) AS stop_ratio,
   CASE WHEN round(CAST(len(list_filter(string_split(text, ' '),
         t -> t IN ('the','a','of','and','to'))) AS DOUBLE)
-        / len(string_split(text, ' ')), 4) >= 0.05
+        / len(string_split(text, ' ')), 4) >= {TX.EN_MIN_STOP_RATIO}
        THEN 'en' ELSE 'unk' END AS lang_pred
 FROM documents
 """
@@ -1224,18 +1221,18 @@ def mm_decode_fake(spark: SparkSession, sf_dir: str) -> DataFrame:
     real codec on a cluster that has one — schema and batching identical."""
     docs = load(spark, sf_dir, "documents")
     packed = MM.pack_binary(docs, "doc_id", "text")
-    return MM.decode_image(packed, fake=True)
+    return MM.decode_image(packed)
 
 
-_FRAME_SAMPLE_SQL = """
+_FRAME_SAMPLE_SQL = f"""
 WITH d AS (SELECT doc_id, octet_length(encode(text)) AS nb FROM documents),
 f AS (
   SELECT doc_id, nb,
-         unnest(generate_series(0, CAST(ceil(nb / 64.0) AS INT) - 1)) AS fi
+         unnest(generate_series(0, CAST(ceil(nb / {MM.FRAME_BYTES}.0) AS INT) - 1)) AS fi
   FROM d WHERE nb > 0
 )
 SELECT doc_id, CAST(fi AS INT) AS frame_idx,
-       CAST(least(64, nb - fi * 64) AS INT) AS frame_bytes
+       CAST(least({MM.FRAME_BYTES}, nb - fi * {MM.FRAME_BYTES}) AS INT) AS frame_bytes
 FROM f
 """
 
@@ -1246,7 +1243,7 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     N-rows-out inside mapInPandas): 64-byte frames with tail size."""
     docs = load(spark, sf_dir, "documents")
     packed = MM.pack_binary(docs, "doc_id", "text")
-    return MM.frame_sample(packed, every_n_bytes=64)
+    return MM.frame_sample(packed)
 
 
 # --- benchmark decontamination ----------------------------------------------
@@ -1420,9 +1417,9 @@ SELECT doc_id,
   list_reduce(list_prepend(CAST(0 AS BIGINT),
       list_transform(range(1, len(text)+1), j -> ascii(text[j]))),
     (h, c) -> (h*{TX.ROLLING_HASH_BASE} + c) % {TX.ROLLING_HASH_MOD}) AS doc_hash,
-  list_min(list_transform(range(1, greatest(len(text)-7, 1)+1), i ->
+  list_min(list_transform(range(1, greatest(len(text)-{TX.ROLLING_HASH_K - 1}, 1)+1), i ->
     list_reduce(list_prepend(CAST(0 AS BIGINT),
-        list_transform(range(i, least(i+7, len(text))+1), j -> ascii(text[j]))),
+        list_transform(range(i, least(i+{TX.ROLLING_HASH_K - 1}, len(text))+1), j -> ascii(text[j]))),
       (h, c) -> (h*{TX.ROLLING_HASH_BASE} + c) % {TX.ROLLING_HASH_MOD}))) AS min_kgram_hash
 FROM documents
 """
@@ -1462,9 +1459,7 @@ def text_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, no UDF; the integer mod arithmetic is bitwise identical
     cross-engine (the oracle folds the same recurrence with DuckDB list
     lambdas)."""
-    return TX.rolling_hash_fingerprint(
-        load(spark, sf_dir, "documents"), "doc_id", "text", k=8
-    )
+    return TX.rolling_hash_fingerprint(load(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 _EMB_QUANTIZE_SQL = """
@@ -2386,9 +2381,7 @@ def dedup_span_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned once. Span hashes are hash60 (md5-derived), bitwise-equal
     cross-engine; n_spans counts MAXIMAL merged spans."""
     docs = load(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
-    return D.duplicated_span_excise(
-        docs, "doc_id", "text", n=_SPANX_N, min_count=2
-    )
+    return D.duplicated_span_excise(docs, n=_SPANX_N)
 
 
 @register("dedup_span_keep_first", oracle=_span_excise_sql(keep_first=True))
@@ -2407,9 +2400,7 @@ def dedup_span_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a min() over a composite (doc * 2^20 + pos) key — no extra
     shuffle, one filter more than the aggressive form."""
     docs = load(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
-    return D.duplicated_span_excise(
-        docs, "doc_id", "text", n=_SPANX_N, min_count=2, keep_first=True
-    )
+    return D.duplicated_span_excise(docs, n=_SPANX_N, keep_first=True)
 
 
 # --- incremental dedup (batch vs corpus index) ------------------------------
@@ -2495,7 +2486,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cand = D.minhash_lsh_join(
-        batch, corpus, "doc_id", "text", _NUM_HASHES, _BANDS, 0.5, 3
+        batch, corpus, "doc_id", "text", _NUM_HASHES, _BANDS, 0.5
     )
     matches = cand.groupBy("batch_id").agg(
         F.count("*").alias("n_matches"),
@@ -3998,12 +3989,12 @@ _GFS_MAX_ID = 100
 _GIF_FRAMES_SQL = f"""
 WITH ids AS (
   SELECT doc_id, 16 + doc_id % 24 AS w, 16 + (doc_id * 5) % 24 AS h,
-         2 + doc_id % 3 AS nf
+         {MM.GIF_FRAMES_EXPR} AS nf
   FROM documents WHERE doc_id < {_GFS_MAX_ID}
 ), fr AS (
   SELECT doc_id, w, h, f
   FROM ids, unnest(range(0, nf)) t(f)
-  WHERE f % 2 = 0
+  WHERE f % {MM.GIF_FRAME_STRIDE} = 0
 ), px AS (
   SELECT doc_id, f, w, h,
          list_sum(flatten(list_transform(generate_series(0, h - 1),
@@ -4049,9 +4040,7 @@ def mm_gif_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         (16 + (F.col("doc_id") * 5) % 24).alias("h"),
         F.col("doc_id").alias("seed"),
     )
-    frames = MM.gif_frame_stats(
-        MM.synthesize_gif_animation(spec), every=2
-    )
+    frames = MM.gif_frame_stats(MM.synthesize_gif_animation(spec))
     return frames.select(
         "doc_id",
         "frame_idx",
@@ -4077,7 +4066,8 @@ _SPEC_HANN = "(128 - CAST(round(cos(2*pi()*{j}/16.0)*128) AS BIGINT))"
 _SPEC_COS = "CAST(round(cos(2*pi()*(({k}*{j})%16)/16.0)*256) AS BIGINT)"
 _SPEC_SIN = "CAST(round(sin(2*pi()*(({k}*{j})%16)/16.0)*256) AS BIGINT)"
 _SPEC_TONE = (
-    "CAST(round(1000*sin(2*pi()*(({k0}*{i})%16)/16.0)) AS BIGINT)"
+    f"CAST(round({MM.SPEC_TONE_AMP}*sin(2*pi()*(({{k0}}*{{i}})%16)/16.0))"
+    " AS BIGINT)"
 )
 
 _SPG_MAX_ID = 100
@@ -4748,7 +4738,7 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scene-cut detection over sampled frames (video curation plumbing)
 # ---------------------------------------------------------------------------
 
-_SCENE_FRAME = 64  # bytes per pseudo-frame (mm_frame_sample's grid)
+_SCENE_FRAME = MM.FRAME_BYTES  # bytes per pseudo-frame (mm_frame_sample's grid)
 _SCENE_THRESH = 300_000_000  # intensity-delta cut threshold (of ~1e9 range)
 
 _H60_FRAME = (

@@ -1072,7 +1072,10 @@ def src_date_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly when a calendar day has no facts (a fact-only GROUP BY
     silently drops them). The dimension derives from the fact's own
     min/max (one 1-row aggregate, broadcast into the generator) and
-    is ~days-sized — always broadcastable; the join key is a date
+    is ~days-sized, but it is the PRESERVED side of the LEFT join, and
+    a hash join cannot build the preserved side of an outer join, so no
+    broadcast hint applies here (Spark drops one with a HintErrorLogger
+    warning); the join strategy is Catalyst's. The join key is a date
     equality the fact side computes map-side."""
     o = load(spark, sf_dir, "orders")
     span = o.agg(
@@ -1099,8 +1102,7 @@ def src_date_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("is_weekend", F.col("dow") >= 6)
     fact = o.select("o_orderkey", F.to_date("o_orderdate").alias("d"))
     return (
-        F.broadcast(attrs)
-        .join(fact, "d", "left")
+        attrs.join(fact, "d", "left")
         .groupBy("quarter", "is_weekend")
         .agg(
             F.count("o_orderkey").alias("n_orders"),

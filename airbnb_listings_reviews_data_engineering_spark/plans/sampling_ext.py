@@ -1036,8 +1036,6 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DoReMi: excess-loss domain reweighting
 # ---------------------------------------------------------------------------
 
-_DRM_TAU = 1.0  # excess-loss temperature
-
 _DRM_SQL = """
 WITH terms AS (
   SELECT source, unnest(string_split(text, ' ')) AS term FROM documents

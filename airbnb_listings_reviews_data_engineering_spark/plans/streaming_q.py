@@ -16,7 +16,7 @@ pieces:
   micro-batch into published tables (upsert, MV maintenance,
   admission with index append-back, DP release ledgers) drain through
   ``streaming/ingest.fold_stream``, the one foreachBatch harness, under
-  ``streaming/ingest.run_root``: the per-run root lifecycle, a fresh
+  ``sources/staging.run_root``: the per-run root lifecycle, a fresh
   root deleted when the drain ends, also when a step raises. The three
   admission keys share the whole drain,
   ``streaming/ingest.admission_ledger``.
@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..checkpoint import pin
 from ..functions.hashing import XOR_SEEDS, hash60_duckdb_sql, hash60_spark_sql
 from ..operators.dedup import band_match_sql, minhash_sig_sql
-from ..sources.staging import ensure_staged, scratch_dir
+from ..sources.staging import ensure_staged, run_root, scratch_dir
 from ..streaming.ingest import (
     EVENTS_SCHEMA,
     admission_ledger,
@@ -42,7 +42,6 @@ from ..streaming.ingest import (
     modulo_batch,
     read_events_stream,
     run_available_now,
-    run_root,
     session_windows,
     stage_batch,
     stage_batches,
@@ -67,7 +66,7 @@ def stream_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window aggregation over the events stream,
     drained with trigger(availableNow=True) — equals the batch result."""
     events = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    agg = windowed_counts(events, window="1 hour", watermark="2 hours")
+    agg = windowed_counts(events, watermark="2 hours")
     # state-store layout sized to the feed: AQE is off inside streaming
     # queries, so without this the windowed agg runs 32 near-empty
     # state partitions whose per-batch store open/commit churn dominates
@@ -111,7 +110,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same half-open boundary (new session when gap >= 30 min) — the
     stream/batch equivalence statement for session windows."""
     events = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    agg = session_windows(events, gap="30 minutes", watermark="2 hours")
+    agg = session_windows(events)
     # state layout sized to the feed (AQE off in streaming)
     with stateful_layout(spark, sf_dir, "events"):
         result = run_available_now(agg, query_name="stream_session_window")
@@ -635,7 +634,7 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_dir = ensure_staged(spark, "stream_late_data", sf_dir, "events", _stage)
 
     stream = staged_stream(spark, stream_dir, EVENTS_SCHEMA)
-    agg = windowed_counts(stream, window="1 hour", watermark="1 hour")
+    agg = windowed_counts(stream, watermark="1 hour")
     # state layout sized to the feed (AQE off in streaming)
     with stateful_layout(spark, sf_dir, "events"):
         result = run_available_now(
@@ -1174,7 +1173,7 @@ def stream_dedup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
         " AS text",
     )
     index = pin(
-        positional_gram_index(docs, "text", n=_SDS_N),
+        positional_gram_index(docs, n=_SDS_N),
         eager=False,  # lazy — standing index materializes in batch 1
         label="sds_gram_index",
     )
@@ -1187,7 +1186,7 @@ def stream_dedup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda d: stage_batches(d, [incoming]),
     )
     stream = staged_stream(spark, stream_dir, "doc_id bigint, text string")
-    out = span_excise_against_index(stream, index, "doc_id", "text", n=_SDS_N)
+    out = span_excise_against_index(stream, index, "doc_id", n=_SDS_N)
     return run_available_now(
         out, query_name="stream_dedup_span", output_mode="complete"
     )
@@ -1724,7 +1723,7 @@ def stream_admission_span(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def admit(batch_df, prev, idx):
         exc = span_excise_against_index(
-            batch_df.select("in_id", "text"), idx, "in_id", "text", n=_SAS_N
+            batch_df.select("in_id", "text"), idx, "in_id", n=_SAS_N
         )
         dec_this = exc.join(
             batch_df.select("in_id", "batch"), "in_id"
@@ -1739,7 +1738,7 @@ def stream_admission_span(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the append-back batch 2's return-class rejections depend on
         adm = dec_this.filter("admitted = 1").select("in_id")
         adm_grams = positional_gram_index(
-            batch_df.join(adm, "in_id", "left_semi"), "text", n=_SAS_N
+            batch_df.join(adm, "in_id", "left_semi"), n=_SAS_N
         )
         return (
             appended(dec_this, prev),
@@ -1751,7 +1750,7 @@ def stream_admission_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     return admission_ledger(
         spark, "stream_admission_span", sf_dir, "documents", [b1, b2],
         "in_id bigint, text string, batch int",
-        positional_gram_index(docs, "text", n=_SAS_N),
+        positional_gram_index(docs, n=_SAS_N),
         admit,
         ["in_id", "batch", "n_tok", "n_removed", "admitted"],
     )

@@ -78,16 +78,18 @@ def fingerprint(path: str) -> tuple[tuple[str, int, int], ...] | None:
     return tuple(out) or None
 
 
-def compact_published(
-    spark: SparkSession, target_path: str, target_file_bytes: int = 128 * 1024 * 1024
-) -> tuple[int, int]:
+# compact_published's output file size: one HDFS block
+COMPACT_FILE_BYTES = 128 * 1024 * 1024
+
+
+def compact_published(spark: SparkSession, target_path: str) -> tuple[int, int]:
     """Small-files compaction for an atomically-published table.
 
     The operational reality of incremental ingest at scale: every
     micro-batch/daily merge leaves another wave of files, and a 100 TB
     table read through 10-million 1 MB files is NameNode/S3-listing- and
     task-scheduling-bound, not IO-bound. Compaction rewrites the current
-    version into ceil(bytes / target_file_bytes) files of ~HDFS-block
+    version into ceil(bytes / COMPACT_FILE_BYTES) files of ~HDFS-block
     size — as a NEW atomic version (sources/atomic.py), so concurrent
     readers of the old version are untouched and a mid-compaction crash
     publishes nothing.
@@ -105,7 +107,7 @@ def compact_published(
         raise ValueError(f"nothing published at {target_path}")
     files = data_files(version)
     total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / target_file_bytes))
+    n_out = max(1, math.ceil(total / COMPACT_FILE_BYTES))
     df = read_published(spark, target_path)
     publish_parquet(df.coalesce(n_out), target_path)
     return len(files), len(data_files(current_version(target_path)))

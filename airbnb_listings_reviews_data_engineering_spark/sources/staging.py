@@ -14,7 +14,9 @@ Root selection (first match wins):
   3. ``<tempdir>/airbnb_spark_stage``
 
 :func:`scratch_dir` holds the one local ``os.makedirs`` of a scratch
-path (skipped for URI roots); :func:`fs_delete` the one delete.
+path (skipped for URI roots); :func:`fs_delete` the one delete;
+:func:`run_root` the one per-run scratch lifecycle, a fresh directory
+deleted however the run ends.
 :func:`ensure_staged` is the one cache of staged fixtures: a copy
 derived from a source table is reused only while the table's
 fingerprint (``sources/parquet.fingerprint``) and the staging code's
@@ -27,6 +29,7 @@ import json
 import os
 import tempfile
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -104,6 +107,21 @@ def scratch_dir(spark, key: str, stable: bool = False) -> str:
     if "://" not in d:
         os.makedirs(d, exist_ok=True)
     return d
+
+
+@contextmanager
+def run_root(spark: SparkSession, key: str):
+    """A fresh per-run root ``<staging root>/scratch/<key>_<uuid>`` for a
+    run's published tables, staged versions and checkpoint, deleted when
+    the block exits, also when a step raises: a failed run is discarded
+    whole (see streaming/ingest.fold_stream's replay contract) and
+    leaves no directory behind. Pin what the caller returns inside the
+    block."""
+    root = scratch_dir(spark, key)
+    try:
+        yield root
+    finally:
+        fs_delete(root, spark)
 
 
 def ensure_staged(

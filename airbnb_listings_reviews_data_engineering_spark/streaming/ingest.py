@@ -15,9 +15,9 @@ lands one micro-batch file (``stage_batches`` a numbered sequence of
 them), ``staged_stream`` replays a landing zone one file per
 micro-batch, ``stateful_layout`` sizes the state partitions. The
 folding keys keep their published tables and checkpoint under
-``run_root``, a fresh per-run directory deleted however the run ends;
-``modulo_batch`` and ``admission_ledger`` are the fixture and the drain
-of the three admission keys.
+``sources/staging.run_root``, a fresh per-run directory deleted
+however the run ends; ``modulo_batch`` and ``admission_ledger`` are
+the fixture and the drain of the three admission keys.
 """
 
 from __future__ import annotations
@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 
 from ..checkpoint import pin
 from ..sources.parquet import row_count
-from ..sources.staging import ensure_staged, fs_delete, scratch_dir
+from ..sources.staging import ensure_staged, fs_delete, run_root
 
 def events_schema(ts_nanos_long: bool) -> T.StructType:
     """Schema for the events table. Two physical generations exist:
@@ -120,11 +120,11 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     return stream
 
 
-def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window count+sum per event_type."""
+def windowed_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+    """Watermarked 1-hour tumbling-window count+sum per event_type."""
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), F.col("event_type"))
+        .groupBy(F.window("ts", "1 hour").alias("win"), F.col("event_type"))
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
     )
 
@@ -177,13 +177,9 @@ def appended(rows: DataFrame, base: DataFrame | None) -> DataFrame:
     return rows if base is None else rows.unionByName(base)
 
 
-def _file_stream(
-    spark: SparkSession, source_dir: str, schema: T.StructType, fmt: str
-) -> DataFrame:
-    reader = spark.readStream.schema(schema)
-    if fmt == "csv":
-        return reader.option("header", True).csv(source_dir)
-    return reader.parquet(source_dir)
+def _csv_stream(spark: SparkSession, source_dir: str, schema: T.StructType) -> DataFrame:
+    """File-source stream over the headered CSV drops in ``source_dir``."""
+    return spark.readStream.schema(schema).option("header", True).csv(source_dir)
 
 
 def available_now_merge_ingest(
@@ -193,9 +189,8 @@ def available_now_merge_ingest(
     target_path: str,
     keys: list[str],
     checkpoint: str,
-    fmt: str = "csv",
 ) -> DataFrame:
-    """Incremental file ingest with upsert semantics — the Structured
+    """Incremental CSV ingest with upsert semantics — the Structured
     Streaming form of the reference's daily re-run (inc_daily_snapshot,
     SURVEY.md §2.8): each micro-batch MERGEs into the parquet target
     (updates win on key collision); retries and daily re-triggers are
@@ -210,7 +205,7 @@ def available_now_merge_ingest(
         return batch if base is None else upsert_snapshot(base, batch, keys)
 
     fold_stream(
-        _file_stream(spark, source_dir, schema, fmt),
+        _csv_stream(spark, source_dir, schema),
         checkpoint,
         merge_batch,
         target_path,
@@ -218,15 +213,14 @@ def available_now_merge_ingest(
     return read_published(spark, target_path)
 
 
-def session_windows(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Gap-based session windows per user (session_window merges events
-    whose [ts, ts+gap) intervals overlap; an event at exactly prev+gap
-    starts a new session — half-open semantics)."""
+def session_windows(events: DataFrame) -> DataFrame:
+    """30-minute-gap session windows per user under a 2-hour watermark
+    (session_window merges events whose [ts, ts+30 min) intervals
+    overlap; an event at exactly prev+30 min starts a new session —
+    half-open semantics)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), F.col("user_id"))
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes").alias("win"), F.col("user_id"))
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("sum_value"))
     )
 
@@ -614,7 +608,6 @@ def available_now_scd2_ingest(
     tracked: list[str],
     effective: str,
     checkpoint: str,
-    fmt: str = "csv",
 ) -> DataFrame:
     """Streaming SCD2: each availableNow drain folds the micro-batch
     into a type-2 history table (operators/merge.merge_scd2) and
@@ -642,7 +635,7 @@ def available_now_scd2_ingest(
         return merge_scd2(base, batch, keys, tracked, effective)
 
     fold_stream(
-        _file_stream(spark, source_dir, schema, fmt),
+        _csv_stream(spark, source_dir, schema),
         checkpoint,
         scd2_batch,
         target_path,
@@ -734,20 +727,6 @@ def stage_batches(stream_dir: str, batches) -> None:
     (stage_batch), so staged_stream replays them in that order."""
     for seq, b in enumerate(batches, start=1):
         stage_batch(b, stream_dir, f"batch{seq}.parquet", seq)
-
-
-@contextmanager
-def run_root(spark: SparkSession, key: str):
-    """A fresh per-run root ``<staging root>/scratch/<key>_<uuid>`` for a
-    fold's published tables and checkpoint, deleted when the block exits,
-    also when a step raises: a failed run is discarded whole (see
-    fold_stream's replay contract), and leaves no directory behind. Pin
-    what the caller returns inside the block."""
-    root = scratch_dir(spark, key)
-    try:
-        yield root
-    finally:
-        fs_delete(root, spark)
 
 
 def modulo_batch(

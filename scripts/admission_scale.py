@@ -114,7 +114,7 @@ def _probe_embedding(spark, idx_path: str, batch, planes) -> float:
 def _probe_span(spark, idx_path: str, batch) -> float:
     idx = spark.read.parquet(idx_path)
     exc = span_excise_against_index(
-        batch.select("in_id", "text"), idx, "in_id", "text", n=6
+        batch.select("in_id", "text"), idx, "in_id", n=6
     )
     t0 = time.perf_counter()
     exc.write.format("noop").mode("overwrite").save()
@@ -180,7 +180,7 @@ def main() -> int:
             ),
             f"eb_{k}x",
         )
-        sp_path = _stage(positional_gram_index(docs_k, "text", n=6), f"sp_{k}x")
+        sp_path = _stage(positional_gram_index(docs_k, n=6), f"sp_{k}x")
         sizes = {
             "minhash": spark.read.parquet(mh_path).count(),
             "embedding": spark.read.parquet(eb_path).count(),

@@ -133,7 +133,7 @@ def mh_append(admitted_sig, idx_path: str) -> None:
 
 
 def span_build_index(docs, path: str) -> None:
-    positional_gram_index(docs, "text", n=6).write.mode(
+    positional_gram_index(docs, n=6).write.mode(
         "overwrite"
     ).parquet(path)
 

@@ -138,7 +138,7 @@ def main() -> None:
         pairs = cand.filter(F.col("est_jaccard") >= 0.5)
 
         t0 = time.perf_counter()
-        comp = D.connected_components(pairs, "doc_a", "doc_b")
+        comp = D.connected_components(pairs)
         doomed = comp.filter(F.col("node") != F.col("component"))
         survivors = corpus.join(
             doomed, corpus.doc_id == F.col("node"), "left_anti"
@@ -149,7 +149,7 @@ def main() -> None:
         n_vecs = emb.count()
         query = emb.filter(F.col("vec_id") == 0).select("embedding")
         t0 = time.perf_counter()
-        S.brute_force_topk(emb, "vec_id", "embedding", query, k=10).collect()
+        S.brute_force_topk(emb, "vec_id", "embedding", query).collect()
         t_bf = time.perf_counter() - t0
 
         planes = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").filter(

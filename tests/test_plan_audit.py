@@ -125,3 +125,79 @@ def test_plan_modules_import_only_key_functions_from_each_other():
         for n in names
     ]
     assert coupled == []
+
+
+# every caller of a package function lives under one of these
+CALLER_PATHS = (
+    PKG,
+    PKG.parent / "tests",
+    PKG.parent / "scripts",
+    PKG.parent / "airbnb_bench",
+    PKG.parent / "bench.py",
+    PKG.parent / "__spark_entry__.py",
+)
+
+
+def _literal(node: ast.expr) -> str | None:
+    try:
+        return repr(ast.literal_eval(node))
+    except (TypeError, ValueError):
+        return None
+
+
+def _defaulted(fn: ast.FunctionDef):
+    """(positional index or None for keyword-only, name, default) of
+    each parameter with a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    yield from ((first + i, p.arg, d) for i, (p, d) in enumerate(zip(pos[first:], a.defaults)))
+    yield from ((None, p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None)
+
+
+def _unvaried_options() -> list[str]:
+    """Defaulted parameters of package functions whose call sites all
+    omit them or pass the same literal: an option no caller varies.
+    Calls match a function by name (``f(...)`` or ``x.f(...)``); names
+    defined more than once in the package, uncalled functions and
+    calls through ``*args``/``**kwargs`` are left out, so a function
+    reached only by ``getattr`` is not seen."""
+    defs: dict[str, list[tuple[Path, ast.FunctionDef]]] = {}
+    calls: dict[str, list[ast.Call]] = {}
+    for root in CALLER_PATHS:
+        for path in [root] if root.is_file() else sorted(root.rglob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text())):
+                if root == PKG and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    defs.setdefault(node.name, []).append((path, node))
+                elif isinstance(node, ast.Call):
+                    f = node.func
+                    name = getattr(f, "id", None) or getattr(f, "attr", None)
+                    calls.setdefault(name, []).append(node)
+    found = []
+    for name, [(path, fn)] in ((n, d) for n, d in defs.items() if len(d) == 1):
+        sites = calls.get(name, [])
+        if not sites or any(
+            any(isinstance(a, ast.Starred) for a in c.args)
+            or any(k.arg is None for k in c.keywords)
+            for c in sites
+        ):
+            continue
+        bound = int(bool(fn.args.args) and fn.args.args[0].arg in ("self", "cls"))
+        for idx, param, default in _defaulted(fn):
+            values = set()
+            for c in sites:
+                passed = [k.value for k in c.keywords if k.arg == param]
+                if not passed and idx is not None and idx - bound < len(c.args):
+                    passed = [c.args[idx - bound]]
+                values.add(_literal(passed[0]) if passed else _literal(default) or "default")
+            if len(values) == 1 and None not in values:
+                rel = path.relative_to(PKG.parent)
+                found.append(f"{rel}:{fn.lineno} {name}({param}) = {values.pop()}")
+    return sorted(found)
+
+
+def test_every_option_is_varied_by_a_caller():
+    # a parameter every caller leaves at one value is a constant with
+    # an interface around it: write the value in, name it as a module
+    # constant where an oracle or a second function also needs it
+    assert _unvaried_options() == []

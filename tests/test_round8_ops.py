@@ -30,7 +30,7 @@ def _excise(spark, docs, n=6):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     out = {
         r["doc_id"]: r
-        for r in duplicated_span_excise(df, "doc_id", "text", n=n).collect()
+        for r in duplicated_span_excise(df, n=n).collect()
     }
     release_pins(spark)
     return out
@@ -414,7 +414,7 @@ def test_span_keep_first_preserves_one_copy(spark):
     out = {
         r["doc_id"]: r
         for r in duplicated_span_excise(
-            df, "doc_id", "text", n=6, keep_first=True
+            df, n=6, keep_first=True
         ).collect()
     }
     release_pins(spark)
@@ -583,7 +583,7 @@ def test_span_excise_matches_bruteforce_on_random_corpora(spark):
                         r["clean_text"]
                     )
                     for r in duplicated_span_excise(
-                        df, "doc_id", "text", n=n, keep_first=keep_first
+                        df, n=n, keep_first=keep_first
                     ).collect()
                 }
             finally:

@@ -301,13 +301,20 @@ def test_stream_sketch_bloom_stages_once(spark, sf_dir):
 
 
 @pytest.mark.parametrize(
-    "key, table", [("stream_mv_merge", "mv"), ("stream_admission_span", "decisions")]
+    "key, table",
+    [
+        ("stream_mv_merge", "mv"),
+        ("stream_admission_span", "decisions"),
+        ("src_time_travel", "customers"),
+        ("sink_wap_publish", "orders_wap"),
+    ],
 )
 def test_failed_fold_leaves_no_run_root(spark, sf_dir, tmp_path, monkeypatch, key, table):
-    """A step that raises inside the fold propagates, and the key's
-    per-run root (checkpoint, published tables) is deleted all the same:
-    failed runs must not pile up under ``<staging root>/scratch/``. Only
-    the stable landing zones, which later runs reuse, may remain."""
+    """A publish that raises inside a key's run (a fold step, or a
+    batch key's staged versions) propagates, and the key's per-run root
+    (checkpoint, published tables) is deleted all the same: failed runs
+    must not pile up under ``<staging root>/scratch/``. Only the stable
+    landing zones, which later runs reuse, may remain."""
     from airbnb_listings_reviews_data_engineering_spark.checkpoint import (
         release_pins,
     )
